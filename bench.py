@@ -90,7 +90,9 @@ def _host_probe() -> dict:
     is 32-wide, so the BASELINE.md bands stay comparable."""
     import multiprocessing as mp
 
-    lanes = min(32, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    from hh_rumors_presto_spark.session import default_parallelism
+
+    lanes = min(32, default_parallelism())
     t0 = time.time()
     _probe_burn()
     single = time.time() - t0

@@ -1,48 +1,43 @@
-"""Blocked all-pairs set-overlap counting (r12 optimization, guide §4.2).
+"""Blocked all-pairs set-overlap counting.
 
 The inverted-index self-join — ``inv a JOIN inv b ON a.key = b.key AND
-a.id < b.id`` followed by ``GROUP BY (id_a, id_b)`` — is the standard
-exact way to count set intersections (Jaccard truth tables, Adamic–Adar
-common-neighbor sums).  Its cost is the POSTING-LIST PAIR MASS: at sf0.1
-the bigram-Jaccard truth join emits 36.5M pair rows that aggregate into
-10.3M groups to keep 256 survivors, and graph_adamic_adar emits 172M
-rows into 82.9M groups to keep 20.  Measured (r12): the time is NOT a
-hot key (sf0.1 bigram df: max 338 vs mean 275 over 931 shingles) — it
-is the per-row cost of the join fan-out plus a near-1:1 partial/final
-hash aggregation whose exchange carries the whole group space.
-
-This module computes the same intersection counts as dense block
-matmuls inside per-(block-pair) ``applyInPandas`` workers instead:
+a.id < b.id`` followed by ``GROUP BY (id_a, id_b)`` — counts set
+intersections exactly, but it emits one row per shared key per pair and
+aggregates the whole pair space through an exchange.  This module
+computes the same counts as dense block matmuls inside per-(block-pair)
+``applyInPandas`` workers instead:
 
 - every item (document, customer) is hash-assigned to one of B blocks;
-- each item row — (id, sorted vocab-id array[, aligned weight array]) —
-  is replicated to the B block-pairs its block participates in (side A
-  for (b, j>=b), side B for (i<b, b)), so each unordered item pair
-  meets in EXACTLY ONE worker and no cross-worker dedup is needed;
-- the worker builds binary item x local-vocab matrices and computes
-  C = A @ B.T — C[i, j] IS ``count(*)`` of the equi-join group for that
-  pair (each shared vocab id contributes exactly 1.0);
+- each item row — (id, vids[, aligned ws]), ``vids`` an array of the
+  item's distinct keys — is replicated to the B block-pairs its block
+  participates in (side A for (b, j>=b), side B for (i<b, b)), so each
+  unordered item pair meets in EXACTLY ONE worker and no cross-worker
+  dedup is needed;
+- the worker gives the keys group-local column ids with
+  ``pd.factorize`` (any hashable key: ints, strings), builds binary item x
+  local-vocab matrices and computes C = A @ B.T — C[i, j] IS
+  ``count(*)`` of the equi-join group for that pair;
 - only survivors of the caller's threshold (or per-block top-k) leave
-  the worker, so the pair-sized aggregate, its exchange, and the final
-  aggregation all disappear from the plan.
+  the worker, so the pair-sized aggregate and its exchange disappear
+  from the plan.
 
-EXACTNESS (why no bit-parity contract is needed here, unlike the cosine
-workers in ann_round3): every accumulated value is an INTEGER.  Counts
-are bounded by the local vocab size (guarded < 2^24, so float32 partial
-sums are exact; float64 otherwise), and Adamic–Adar micro-weight sums
-are bounded by |suppliers| * floor(1e6/ln 2 + .5) < 2^53, so float64
-sums are exact integers under ANY summation order — BLAS reordering,
+EXACTNESS: every accumulated value is an INTEGER.  Counts are bounded
+by the local vocab size (guarded < 2^24, so float32 partial sums are
+exact; float64 otherwise), and Adamic–Adar micro-weight sums are
+bounded by |suppliers| * floor(1e6/ln 2 + .5) < 2^53, so float64 sums
+are exact integers under ANY summation order — BLAS reordering,
 chunking and block count cannot change a single bit.  Float thresholds
 (jaccard >= t) are applied by replaying the engines' own operation:
 float64(C) / float64(union) compared to the float64 literal — the same
 IEEE division on the same exact operands.
 
-Scale posture: the worker is the map side of a Σ block-pair
-decomposition — rows are replicated B ~ sqrt(2 * cores) times as thin
-(id, int-array) rows, the ONE exchange carries those rows instead of
-the pair mass, and the live C matrix is bounded by row-chunking exactly
-like ann_round3's workers (§5 memory).  B is a pure load-balance knob:
-results are provably identical under any B.
+MEMORY: a worker holds its group's two side matrices DENSE — (side-A
+rows x group-local vocab) and (side-B rows x group-local vocab), 4 or 8
+bytes a cell; on the diagonal pair they are one matrix (the weighted
+worker also stacks a weighted copy of side B).  ``_ROW_CHUNK`` bounds
+only the live product C (chunk x side-B rows).  So worker memory
+grows with the group's vocabulary, not just its rows.  B only balances
+load: results are identical under any B.
 """
 
 from __future__ import annotations
@@ -51,7 +46,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _ROW_CHUNK = 2048  # bounds the live C matrix at chunk x |B-side| floats
@@ -89,43 +84,26 @@ def replicate_block_pairs(df: DataFrame, block_col: str, n_blocks: int) -> DataF
     return a_side.unionByName(b_side)
 
 
-def blocked_pairs(
-    items: DataFrame,
-    worker,
-    schema: str,
-    parts_per_group: int = 1,
-) -> DataFrame:
+def blocked_pairs(items: DataFrame, worker, schema: str) -> DataFrame:
     """Wire an item DataFrame — one row per item: (id, vids[, ws]) with
-    ``vids`` the item's vocab-id array — through block-pair replication
-    and the given worker.  The repartition is EXPLICIT (user
-    repartitions are AQE-coalescing-exempt — the r11 class find): the
-    shuffle input is thin array rows but the worker compute is
-    pair-mass-sized, which AQE cannot see."""
+    ``vids`` an array of the item's distinct keys, of any hashable
+    type — through block-pair replication and the given
+    worker.  The repartition is EXPLICIT (user repartitions are exempt
+    from AQE coalescing): the shuffle input is thin array rows but the
+    worker compute is pair-mass-sized, which AQE cannot see."""
     bcount = block_count()
     blocked = items.withColumn(
         "__blk", F.pmod(F.xxhash64(F.col("id")), F.lit(bcount)).cast("int")
     )
     rep = replicate_block_pairs(blocked, "__blk", bcount)
-    # ship ONLY what the worker reads (§4.2: opaque functions defeat
-    # column pruning — project explicitly before the exchange)
+    # ship ONLY what the worker reads (opaque functions defeat column
+    # pruning — project explicitly before the exchange)
     thin = rep.select("__bp_i", "__bp_j", "__side", *items.columns)
     n_groups = bcount * (bcount + 1) // 2
     return (
-        thin.repartition(parts_per_group * n_groups, "__bp_i", "__bp_j")
+        thin.repartition(n_groups, "__bp_i", "__bp_j")
         .groupBy("__bp_i", "__bp_j")
         .applyInPandas(worker, schema)
-    )
-
-
-def vocab_ids(inv: DataFrame, key_cols: list[str], out: str = "vid") -> DataFrame:
-    """Deterministic integer ids for the distinct vocab keys.  The rank
-    window is VOCABULARY-bounded (the dedup_ppjoin posture) — never
-    fact-sized; collision-free by construction, unlike hashing the key."""
-    w = Window.orderBy(*key_cols)
-    return (
-        inv.select(*key_cols)
-        .distinct()
-        .select(*key_cols, F.row_number().over(w).cast("long").alias(out))
     )
 
 
@@ -143,11 +121,15 @@ def _group_matrices(pdf: pd.DataFrame, weighted: bool):
     """Parse one block-pair group into per-side (ids, matrix, set sizes)
     plus the per-local-vocab weight vector when ``weighted``.  The B
     side aliases the A side on the diagonal pair (each row arrives
-    once; the worker takes the in-block upper triangle)."""
+    once; the worker takes the in-block upper triangle).  Diagonal means
+    the group key i == j: an off-diagonal group whose rows all happen to
+    be side A (its side-B block is empty) pairs nothing."""
     side = pdf["__side"].to_numpy()
     ids = pdf["id"].to_numpy()
     flat, lens = _concat_lists(pdf["vids"])
-    vocab, cols = np.unique(flat, return_inverse=True)
+    # hash-based, so string keys cost about what ints do (np.unique's
+    # comparison sort of object arrays measured ~20x slower)
+    cols, vocab = pd.factorize(flat, use_na_sentinel=False)
     dt = np.float64 if weighted or len(vocab) >= (1 << 24) else np.float32
     wvec = None
     if weighted:
@@ -166,7 +148,7 @@ def _group_matrices(pdf: pd.DataFrame, weighted: bool):
         m[remap[rows[rmask]], cols[rmask]] = 1.0
         return ids[sel], m, lens[sel]
 
-    diag = bool((side == 0).all())
+    diag = bool(pdf["__bp_i"].iat[0] == pdf["__bp_j"].iat[0])
     ida, ma, na = build(0)
     if diag:
         idb, mb, nb = ida, ma, na
@@ -195,7 +177,13 @@ def overlap_pairs_fn(
       >= t — the engines' own float comparison replayed on the same
       exact operands (NOT a rational rewrite: the boundary rounds the
       way the engines round it).
+
+    Exactly one of ``rational`` and ``float_threshold`` must be given.
     """
+    if (rational is None) == (float_threshold is None):
+        raise ValueError(
+            "overlap_pairs_fn needs exactly one of rational and float_threshold"
+        )
 
     cols = ["id_a", "id_b"]
     empty_types = {"id_a": "int64", "id_b": "int64"}

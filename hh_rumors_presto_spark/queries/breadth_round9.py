@@ -100,34 +100,24 @@ _PP_TOKS_SQL = """
     """,
 )
 def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Jaccard>=0.7 set-similarity self-join over bigram shingles
-    via prefix filtering: rank the vocabulary rarest-first, keep only
-    each doc's first p = n - ceil(0.7n) + 1 tokens as its candidate
-    prefix (two sets with Jaccard >= t MUST collide inside these
-    prefixes), prune further with the length bound t*nb <= na <= nb/t
-    and the PPJoin positional bound (remaining-suffix overlap must
-    still reach the ceil(t/(1+t)*(na+nb)) requirement), then count the
-    true intersection only for survivors. All-integer rational
-    comparisons; the one float is the reported jaccard itself.
+    """Exact Jaccard>=0.7 set-similarity self-join over bigram shingles,
+    with each surviving pair's exact (inter, uni) counts. All-integer
+    rational comparison (10*inter >= 7*uni); the one float is the
+    reported jaccard itself.
 
-    The prefix machinery is result-INVISIBLE: the PPJoin bounds only
-    prune candidates (no false negatives — a theorem, brute-force
-    tested at sf0.001) and the final rational filter is the exact
-    predicate, so the output is precisely the Jaccard >= 7/10 pair set
-    with its exact (inter, uni) counts.
+    The oracle is the classic PPJoin: rank the vocabulary rarest-first,
+    keep each doc's first p = n - ceil(0.7n) + 1 tokens as its candidate
+    prefix, prune with the length and positional bounds, then verify the
+    survivors. Those bounds only prune candidates (no false negatives),
+    so its output is precisely the Jaccard >= 7/10 pair set.
 
-    r12 OPTIMIZATION (guide §4.2, operators/pairblocks.py): r11 fixed
-    the single-task prefix-collision explosion with an explicit rnk
-    repartition, but the candidate join + per-pair verification joins
-    (4 plan legs over the checkpointed rank table) still cost ~12-19 s
-    at sf0.1 — and one stop-bigram's posting list is a single
-    unsplittable hash key (the skew VERDICT flagged at 100 TB).  The
-    same intersection counts are now exact-integer block matmuls
-    inside per-(block-pair) workers (items partitioned by doc hash, so
-    NO key is ever a shuffle unit), sharing doc_bigram_items with
-    _bigram_jaccard_truth; only threshold survivors leave the workers,
-    and the rank windows, both self-join legs, and both verification
-    joins disappear from the plan."""
+    The Spark side needs no prefixes: doc_bigram_items (shared with
+    _bigram_jaccard_truth) feeds each doc's distinct shingles to the
+    blocked pair workers of operators/pairblocks.py, which count every
+    intersection as exact-integer block matmuls (items partitioned by
+    doc hash, so NO shingle is ever a shuffle unit) and emit only the
+    pairs passing the rational threshold. The plan has no rank window,
+    self-join or pair-sized aggregate."""
     from hh_rumors_presto_spark.operators.pairblocks import (
         blocked_pairs,
         overlap_pairs_fn,

@@ -111,13 +111,14 @@ _BIGRAM_SQL = """
 
 # Corpus size (total document rows, parquet footer stat) above which
 # dedup_ngram_jaccard switches from the inverted-index self-join to the
-# blocked dense-GEMM workers. Measured crossover (sf0.1 = 5k rows/1k
-# admitted docs: join 2.0-2.4 s inside dedup_clusters vs worker 3.6 s —
-# the worker's ~1.3 s fixed floor of extra small stages + Python worker
-# dispatch dominates tiny corpora; sf1 = 50k rows/10k admitted docs:
-# join ~35 s of posting-list pair mass vs worker ~a few s). Both paths
-# are result-identical (same oracle at all SFs + the branch-equivalence
-# unit test), so this constant is purely a cost-model knob.
+# blocked dense-GEMM workers. The join stays for small corpora because it
+# is faster there: median warm collect of each branch on a 4-core host
+# (SPARK_GRAFT_CPUS=4) was join 0.41-0.65 s vs blocked 0.89-1.04 s at
+# sf0.001, join 0.69-0.71 s vs blocked 1.07-1.12 s at sf0.1 (5k rows),
+# but join 44.5-47.4 s vs blocked 21.1-21.8 s on the 50k-row sf1 replica
+# (tools/make_sf1.py), where the 10x exact-dup cliques make posting lists
+# deep. Both paths are result-identical (same oracle at all SFs + the
+# branch-equivalence unit test), so this constant only picks the cost.
 _NGRAM_DENSE_MIN_DOCS = 20_000
 
 
@@ -146,22 +147,20 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, |A∪B| by inclusion-exclusion, the one float being the
     engines' own double division at the threshold compare.
 
-    r12 OPTIMIZATION (guide §3/§4.2, operators/pairblocks.py): COST-BASED
-    physical choice, decided from the parquet footer row count the way
-    Spark's own broadcast threshold reads table stats. Small corpora keep
-    the inverted-index self-join (pair mass is tiny; the blocked workers'
-    fixed floor — vocab rank, collect_list, Arrow worker dispatch — is
-    the larger cost). Large corpora — where the 10x exact-dup cliques
-    make per-shingle posting lists deep and the join's pair mass
-    dominated dedup_clusters' 39.9 s at sf1 — run the blocked dense-GEMM
-    worker: items are docs, vocab ids range over (lang, shingle) so
-    sharing a vid implies SAME lang AND same shingle (the old join's two
-    equi-keys), and only pairs passing the exact float64(C)/float64(union)
-    >= 0.05 compare (the engines' division replayed on the same exact
-    integers) leave the workers. Docs with NULL lang could never satisfy
-    a.lang = b.lang — the vocab equi-join drops them, like the self-join
-    does. Both branches produce identical rows (oracle-verified at all
-    SFs; branch-equivalence pinned by a unit test)."""
+    The physical plan is chosen from the parquet footer row count, the
+    way Spark's own broadcast threshold reads table stats (see
+    _NGRAM_DENSE_MIN_DOCS). Small corpora keep the inverted-index
+    self-join. Large corpora — where the 10x exact-dup cliques make
+    per-shingle posting lists deep and the join's pair mass dominates —
+    run the blocked dense-GEMM workers of operators/pairblocks.py: items
+    are docs, each shingle keyed as (lang, shingle) so sharing a key
+    implies SAME lang AND same shingle (the join's two equi-keys), and
+    only pairs passing the exact float64(C)/float64(union) >= 0.05
+    compare (the engines' division replayed on the same exact integers)
+    leave the workers. Docs with NULL lang could never satisfy
+    a.lang = b.lang, so both branches drop them. Both branches produce
+    identical rows (oracle-verified at all SFs; branch-equivalence
+    pinned by a unit test)."""
     docs = io.load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 == 0
     )
@@ -215,25 +214,27 @@ def _ngram_jaccard_join(docs: DataFrame) -> DataFrame:
 
 def _ngram_jaccard_blocked(docs: DataFrame) -> DataFrame:
     """Blocked dense-GEMM branch (large corpora): intersection counts as
-    exact-integer block matmuls; no pair-sized exchange or aggregate."""
+    exact-integer block matmuls; no pair-sized exchange or aggregate.
+    Each shingle is prefixed with ``len(lang):lang:`` — collision-free,
+    so a shared key implies the same lang and the same shingle."""
     from hh_rumors_presto_spark.operators.pairblocks import (
         blocked_pairs,
         overlap_pairs_fn,
-        vocab_ids,
     )
 
-    inv = (
+    lang = F.col("lang")
+    prefix = F.concat(F.length(lang).cast("string"), F.lit(":"), lang, F.lit(":"))
+    items = (
         # bind split() into a named column first — the bigram_shingles
         # perf contract (inline split re-evaluates inside the lambdas)
-        docs.select("doc_id", "lang", F.split("text", " ").alias("toks"))
-        .select("doc_id", "lang", bigram_shingles(F.col("toks")).alias("shingles"))
-        .select("doc_id", "lang", F.explode("shingles").alias("shingle"))
-        .localCheckpoint(eager=False)
-    )
-    items = (
-        inv.join(F.broadcast(vocab_ids(inv, ["lang", "shingle"])), ["lang", "shingle"])
-        .groupBy(F.col("doc_id").alias("id"))
-        .agg(F.sort_array(F.collect_list(F.col("vid").cast("int"))).alias("vids"))
+        docs.filter(lang.isNotNull())
+        .select("doc_id", "lang", F.split("text", " ").alias("toks"))
+        .select(
+            F.col("doc_id").alias("id"),
+            F.transform(
+                bigram_shingles(F.col("toks")), lambda sh: F.concat(prefix, sh)
+            ).alias("vids"),
+        )
     )
     return blocked_pairs(
         items,
@@ -888,17 +889,10 @@ def _bigram_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold form 2*|A∩B| >= |A∪B| — no float compare on the boundary).
     At corpus scale the recall keys run this on a sample.
 
-    r12 OPTIMIZATION (guide §4.2, operators/pairblocks.py): the old
-    inverted-index self-join emitted 36.5M pair rows at sf0.1 that a
-    near-1:1 partial/final hash aggregate collapsed into 10.3M
-    (doc_a, doc_b) groups to keep 256 survivors — measured ~5-10 s with
-    the time in the join fan-out and the group-space exchange, NOT in a
-    hot key (df spread 931 shingles, max 338 vs mean 275; the r11 skew
-    framing was wrong, this is per-row cost).  The same intersection
-    counts are now exact-integer block matmuls inside per-(block-pair)
-    workers; only the 256 survivors leave the workers, and the pair-mass
-    exchange + aggregation disappear from the plan.  Shingle ids come
-    from a vocabulary-bounded rank (collision-free, unlike hashing)."""
+    The intersection counts are exact-integer block matmuls inside the
+    per-(block-pair) workers of operators/pairblocks.py; only threshold
+    survivors leave the workers, so no pair-sized exchange or aggregate
+    appears in the plan."""
     from hh_rumors_presto_spark.operators.pairblocks import (
         blocked_pairs,
         overlap_pairs_fn,
@@ -912,26 +906,18 @@ def _bigram_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def doc_bigram_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per document: (id, sorted distinct bigram-shingle vocab
-    ids) — the item form the blocked pair workers consume.  Shared by
-    _bigram_jaccard_truth (Jaccard >= 1/2) and dedup_ppjoin (>= 7/10).
-    Shingle ids come from a vocabulary-bounded rank (collision-free,
-    unlike hashing)."""
-    from hh_rumors_presto_spark.operators.pairblocks import vocab_ids
-
-    docs = io.load_table(spark, sf_dir, "documents")
-    inv = (
+    """One row per document: (id, vids = its distinct bigram shingles) —
+    the item form the blocked pair workers consume.  Shared by
+    _bigram_jaccard_truth (Jaccard >= 1/2) and dedup_ppjoin (>= 7/10)."""
+    return (
+        io.load_table(spark, sf_dir, "documents")
         # bind split() into a named column first — the bigram_shingles
         # perf contract (inline split re-evaluates inside the lambdas)
-        docs.select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", bigram_shingles(F.col("toks")).alias("shingles"))
-        .select("doc_id", F.explode("shingles").alias("shingle"))
-        .localCheckpoint(eager=False)
-    )
-    return (
-        inv.join(F.broadcast(vocab_ids(inv, ["shingle"])), "shingle")
-        .groupBy(F.col("doc_id").alias("id"))
-        .agg(F.sort_array(F.collect_list(F.col("vid").cast("int"))).alias("vids"))
+        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select(
+            F.col("doc_id").alias("id"),
+            bigram_shingles(F.col("toks")).alias("vids"),
+        )
     )
 
 

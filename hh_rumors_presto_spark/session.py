@@ -14,7 +14,13 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Core count from $SPARK_GRAFT_CPUS (32 when unset).  An empty,
+    non-integer or non-positive value raises here, where the harness
+    starts, instead of deep inside a query."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not raw.isdecimal() or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer >= 1, got {raw!r}")
+    return int(raw)
 
 
 # Keys whose result values depend on the SESSION TIMEZONE — the inherent

@@ -1,5 +1,5 @@
 """Spark-free property tests for the blocked pair-overlap workers
-(operators/pairblocks.py, r12 optimization).
+(operators/pairblocks.py).
 
 The end-to-end oracles (dedup_minhash_recall / dedup_simhash_recall /
 graph_adamic_adar) hash-verify the pipelines; these pin the claims the
@@ -9,8 +9,9 @@ rewrite's correctness rests on, directly against brute force:
    self-join + threshold exactly, for both the rational form
    (k*C >= union, boundary-safe integers) and the float form
    (float64(C)/float64(union) >= t, the engines' own compare replayed),
-   on diagonal (self-join) and two-sided block-pair groups.  The f32
-   mask fast path and the biased superset prefilter must not change a
+   on diagonal (self-join), two-sided and one-sided off-diagonal
+   block-pair groups, with integer or raw string keys.  The f32 mask
+   fast path and the biased superset prefilter must not change a
    single surviving pair.
 2. EXACT WEIGHTED TOP-K — weighted_topk_fn's per-worker top-k under
    (aa DESC, id_a ASC, id_b ASC) equals brute force, including the
@@ -28,6 +29,7 @@ import random
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from hh_rumors_presto_spark.operators.pairblocks import (
     overlap_pairs_fn,
@@ -37,20 +39,44 @@ from hh_rumors_presto_spark.operators.pairblocks import (
 COLS = ["__bp_i", "__bp_j", "__side", "id", "vids"]
 
 
-def _group(n: int, two_sided: bool, seed: int, vocab: int = 40) -> pd.DataFrame:
+# Group shapes a worker can receive: the diagonal (0, 0) group (side A
+# only, in-block triangle), a two-sided (0, 1) group, and a (0, 1) group
+# whose side-B block is empty — side-A rows only, yet NOT diagonal, so
+# it must pair nothing (its pairs belong to the (0, 0) group).
+SHAPES = ("diag", "two_sided", "one_sided_off")
+
+
+def _layout(shape: str, i: int) -> tuple[int, int, int]:
+    """(__bp_i, __bp_j, __side) of row ``i`` in a group of ``shape``."""
+    if shape == "diag":
+        return 0, 0, 0
+    return 0, 1, (i % 2) if shape == "two_sided" else 0
+
+
+def _keys(vids, key):
+    """The item's keys as ``key`` (int) or raw strings (shingle-like)."""
+    return [v if key is int else f"w {v}" for v in vids]
+
+
+def _group(
+    n: int, shape: str, seed: int, vocab: int = 40, key=int
+) -> pd.DataFrame:
     rng = random.Random(seed)
     rows = []
     for i in range(n):
         vids = sorted(rng.sample(range(vocab), rng.randint(1, 12)))
-        side = (i % 2) if two_sided else 0
-        rows.append((0, int(two_sided), side, i, vids))
+        rows.append((*_layout(shape, i), i, _keys(vids, key)))
     return pd.DataFrame(rows, columns=COLS)
+
+
+def _is_diag(pdf) -> bool:
+    return bool(pdf["__bp_i"].iat[0] == pdf["__bp_j"].iat[0])
 
 
 def _brute_pairs(pdf, rat=None, thr=None):
     sets = {r["id"]: set(r["vids"]) for _, r in pdf.iterrows()}
     sides = {r["id"]: r["__side"] for _, r in pdf.iterrows()}
-    diag = all(s == 0 for s in sides.values())
+    diag = _is_diag(pdf)
     out = set()
     for a, b in itertools.combinations(sorted(sets), 2):
         if not diag and sides[a] == sides[b]:
@@ -67,25 +93,20 @@ def _brute_pairs(pdf, rat=None, thr=None):
 
 
 def test_overlap_pairs_matches_bruteforce():
-    for seed in range(6):
-        for two_sided in (False, True):
-            pdf = _group(60, two_sided, seed)
-            for rat, thr in [
-                ((1, 2), None),
-                ((7, 10), None),
-                (None, 0.5),
-                (None, 1.0 / 3.0),
-            ]:
-                fn = overlap_pairs_fn(rational=rat, float_threshold=thr)
-                got = set(
-                    map(tuple, fn(pdf)[["id_a", "id_b"]].to_numpy().tolist())
-                )
-                assert got == _brute_pairs(pdf, rat=rat, thr=thr), (
-                    seed,
-                    two_sided,
-                    rat,
-                    thr,
-                )
+    for seed, shape, key in itertools.product(range(6), SHAPES, (int, str)):
+        pdf = _group(60, shape, seed, key=key)
+        for rat, thr in [
+            ((1, 2), None),
+            ((7, 10), None),
+            (None, 0.5),
+            (None, 1.0 / 3.0),
+        ]:
+            fn = overlap_pairs_fn(rational=rat, float_threshold=thr)
+            got = set(map(tuple, fn(pdf)[["id_a", "id_b"]].to_numpy().tolist()))
+            want = _brute_pairs(pdf, rat=rat, thr=thr)
+            assert got == want, (seed, shape, key, rat, thr)
+            if shape == "one_sided_off":
+                assert not got
 
 
 def test_overlap_pairs_counts_and_jaccard_exact():
@@ -93,8 +114,9 @@ def test_overlap_pairs_counts_and_jaccard_exact():
     # counts must be the exact set cardinalities and jaccard their
     # float64 quotient.
     fn = overlap_pairs_fn(rational=(7, 10), emit_counts=True, emit_jaccard=True)
-    for seed in range(4):
-        pdf = _group(50, False, seed, vocab=12)  # tiny vocab => dense overlaps
+    for seed, key in itertools.product(range(4), (int, str)):
+        # tiny vocab => dense overlaps
+        pdf = _group(50, "diag", seed, vocab=12, key=key)
         sets = {r["id"]: set(r["vids"]) for _, r in pdf.iterrows()}
         got = {
             (r["id_a"], r["id_b"]): (r["inter"], r["uni"], r["jaccard"])
@@ -106,7 +128,7 @@ def test_overlap_pairs_counts_and_jaccard_exact():
             u = len(sets[a] | sets[b])
             if c >= 1 and 10 * c >= 7 * u:
                 want[(a, b)] = (c, u, float(c) / float(u))
-        assert got == want, seed
+        assert got == want, (seed, key)
 
 
 def test_overlap_pairs_float_boundary_exact():
@@ -114,14 +136,26 @@ def test_overlap_pairs_float_boundary_exact():
     # jac = 1/3 exactly — the float compare must include it at t=1/3
     # (same IEEE division both engines run) and exclude it at the next
     # float up.
-    pdf = pd.DataFrame(
-        [(0, 0, 0, 1, [10, 11]), (0, 0, 0, 2, [10, 12])], columns=COLS
-    )
     t = 1.0 / 3.0
-    keep = overlap_pairs_fn(float_threshold=t)(pdf)
-    assert keep[["id_a", "id_b"]].to_numpy().tolist() == [[1, 2]]
-    drop = overlap_pairs_fn(float_threshold=np.nextafter(t, 1.0))(pdf)
-    assert len(drop) == 0
+    for key in (int, str):
+        pdf = pd.DataFrame(
+            [
+                (0, 0, 0, 1, _keys([10, 11], key)),
+                (0, 0, 0, 2, _keys([10, 12], key)),
+            ],
+            columns=COLS,
+        )
+        keep = overlap_pairs_fn(float_threshold=t)(pdf)
+        assert keep[["id_a", "id_b"]].to_numpy().tolist() == [[1, 2]], key
+        drop = overlap_pairs_fn(float_threshold=np.nextafter(t, 1.0))(pdf)
+        assert len(drop) == 0, key
+
+
+def test_overlap_pairs_needs_exactly_one_threshold():
+    # checked when the worker is built, not inside the Arrow worker
+    for kwargs in ({}, {"rational": (1, 2), "float_threshold": 0.5}):
+        with pytest.raises(ValueError, match="exactly one"):
+            overlap_pairs_fn(**kwargs)
 
 
 def test_overlap_pairs_empty_and_degenerate_typed():
@@ -146,7 +180,7 @@ def _brute_weighted_topk(pdf, k):
     vids = {r["id"]: list(r["vids"]) for _, r in pdf.iterrows()}
     ws = {r["id"]: dict(zip(r["vids"], r["ws"])) for _, r in pdf.iterrows()}
     sides = {r["id"]: r["__side"] for _, r in pdf.iterrows()}
-    diag = all(s == 0 for s in sides.values())
+    diag = _is_diag(pdf)
     cand = []
     for a, b in itertools.combinations(sorted(vids), 2):
         if not diag and sides[a] == sides[b]:
@@ -163,14 +197,11 @@ def _brute_weighted_topk(pdf, k):
 def test_weighted_topk_matches_bruteforce():
     rng = random.Random(11)
     wmap = {v: rng.randint(1, 1_400_000) for v in range(40)}
-    for two_sided in (False, True):
+    for shape in SHAPES:
         rows = []
         for i in range(80):
             vv = sorted(rng.sample(range(40), rng.randint(1, 12)))
-            side = (i % 2) if two_sided else 0
-            rows.append(
-                (0, int(two_sided), side, i, vv, [wmap[v] for v in vv])
-            )
+            rows.append((*_layout(shape, i), i, vv, [wmap[v] for v in vv]))
         pdf = pd.DataFrame(rows, columns=COLS + ["ws"])
         for k in (5, 20, 10_000):
             fn = weighted_topk_fn(k)
@@ -180,7 +211,9 @@ def test_weighted_topk_matches_bruteforce():
                 .to_numpy()
                 .tolist()
             ]
-            assert got == _brute_weighted_topk(pdf, k), (two_sided, k)
+            assert got == _brute_weighted_topk(pdf, k), (shape, k)
+            if shape == "one_sided_off":
+                assert not got
 
 
 def test_weighted_topk_tie_pruning_keeps_all_boundary_candidates():

@@ -116,11 +116,6 @@ LEDGER: dict[str, str] = {
     "queries/breadth_round62.py:agg_backlog_curve": "domain",      # calendar
     "queries/breadth_round62.py:pipeline_early_stopping": "domain",  # calendar
     "queries/breadth_round8.py:dq_ks_test": "domain",              # distinct cents
-    # r12: dedup_ppjoin's rank window moved (with the whole prefix
-    # machinery) into the blocked pair workers; the one surviving rank
-    # site is the shared vocab-id assignment, vocabulary-bounded as the
-    # old ppjoin window was
-    "operators/pairblocks.py:vocab_ids": "domain",                 # token vocab
     # --- topk: rank immediately cut to constant k (WindowGroupLimit) ---
     "queries/breadth_round20.py:text_zipf_fit": "topk",            # top-100 vocab
     "queries/breadth_round22.py:emb_kcenter_init": "topk",         # 1-row argmax
