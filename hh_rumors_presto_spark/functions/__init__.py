@@ -19,6 +19,7 @@ from hh_rumors_presto_spark.functions.dates import (
 )
 from hh_rumors_presto_spark.functions.vectors import (
     cosine_similarity,
+    cosine_sql,
     dot,
     l2_norm,
 )
@@ -27,6 +28,7 @@ __all__ = [
     "body_already_has_source",
     "clean",
     "cosine_similarity",
+    "cosine_sql",
     "dedup_key",
     "dot",
     "extract_iso_date",

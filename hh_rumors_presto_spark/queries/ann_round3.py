@@ -1,11 +1,4 @@
-"""Bucketed (IVF-cell-blocked) kNN-graph construction — the scale-safe
-replacement for ``emb_knn_graph``'s label-blocked exact build.
-
-Round-10's sf1 bench measured the exact key at 321.7 s of a 394.3 s
-total (~100x time for 10x rows): labels are LOW-cardinality, so label
-blocks grow linearly with the corpus and the within-block pair join is
-quadratic. This module makes the crossover routing real instead of a
-prose note (VERDICT r10 item 2):
+"""IVF-cell-blocked kNN graph: the scale path for ``emb_knn_graph``.
 
 - ``emb_knn_graph_ann`` — same output contract as the exact key
   (vec_a, vec_b, cos_sim; per-node top-k by cosine), built from
@@ -15,27 +8,26 @@ prose note (VERDICT r10 item 2):
   cells, candidate pairs form only where BOTH label and cell match,
   and a per-(label, cell) participant cap bounds any skewed block.
   With C ~ sqrt(n) both the assignment scan (n x C) and the blocked
-  pair join (C*L blocks of ~P*n/(C*L) rows) are O(n^1.5) — against
-  the exact key's O(n^2/L). Fully deterministic, so it carries a
-  complete value-hash oracle.
+  pair work (C*L blocks of ~P*n/(C*L) rows) are O(n^1.5) — against
+  the exact key's O(n^2/L), which grows quadratically because labels
+  are low-cardinality. Fully deterministic, so it carries a complete
+  value-hash oracle.
 - ``emb_knn_graph_ann_recall`` — the measured-quality twin (the
   pattern of sim_ivfpq_recall / dedup_minhash_recall): per-label
   recall@k of the ANN edge set against the exact key's truth edges,
   at TWO probe settings (P=2 and P=4), so the probe knob's effect is
   itself an oracle-checked number. The fixture embeddings are
-  near-random (same-label mean cosine 0.0016 vs 0.0003 cross-label —
-  see the sim_ann_lsh note: single-table 8-bit LSH recalls ~0.04
-  here), which bounds ANY geometric blocker; measured on sf0.01 the
-  cell-blocked builds reach 0.319 (P=2) / 0.762 (P=4) overall, where
-  clustered production embeddings would sit far higher. The P=4 rung
-  IS the construction key's setting, so the production path's recall
-  is itself the pinned number. At corpus scale this key runs on a
-  query SAMPLE (the exact side is the quadratic); the construction
-  key is the production path unchanged.
+  near-random (same-label mean cosine 0.0016 vs 0.0003 cross-label),
+  which bounds ANY geometric blocker; clustered production embeddings
+  would recall far higher. The P=4 rung IS the construction key's
+  setting, so the production path's recall is itself the pinned
+  number. At corpus scale this key runs on a query SAMPLE (the exact
+  side is the quadratic); the construction key is the production path
+  unchanged.
 
-Reference scope note: the reference (fetchRumors.js) has no vector
-ops at all; this extends the mandated LLM-pipeline surface
-(SURVEY.md SS2.B similarity family).
+Every cosine here is the bit-parity kernel of
+``operators/cosblocks.py`` on the Spark side and
+``functions.vectors.cosine_sql`` in the oracle.
 """
 
 from __future__ import annotations
@@ -48,20 +40,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions import cosine_sql
+from hh_rumors_presto_spark.operators.cosblocks import (
+    block_topk_fn,
+    cosine_chunks,
+    rank_desc,
+    stack,
+)
 from hh_rumors_presto_spark.registry import query
 
 _ANN_K = 3  # must match breadth_round5._KNN_K: same output contract
 _ANN_PROBES = 4  # construction-key probe count (= the ladder's top rung)
 _ANN_LADDER = (2, 4)  # recall-key probe ladder
 _ANN_CAP = 512  # per-(label, cell) participant cap — skew insurance
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_inner_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-        f" / nullif(sqrt(list_inner_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"
-        f" * sqrt(list_inner_product(CAST({b} AS DOUBLE[]), CAST({b} AS DOUBLE[]))), 0.0)"
-    )
 
 
 def _ann_ctes(probes: int, tag: str = "") -> str:
@@ -83,7 +74,7 @@ def _ann_ctes(probes: int, tag: str = "") -> str:
                 SELECT e.vec_id, e.label, e.embedding, c.cent_id AS cell,
                        row_number() OVER (
                            PARTITION BY e.vec_id
-                           ORDER BY {_cos_sql("e.embedding", "c.c_emb")}
+                           ORDER BY {cosine_sql("e.embedding", "c.c_emb")}
                                     DESC NULLS LAST, c.cent_id
                        ) AS rn
                 FROM embeddings e CROSS JOIN cents{tag} c
@@ -93,7 +84,7 @@ def _ann_ctes(probes: int, tag: str = "") -> str:
     scored{tag} AS (
         SELECT vec_a, vec_b, max(cos_sim) AS cos_sim FROM (
             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   {_cos_sql("a.embedding", "b.embedding")} AS cos_sim
+                   {cosine_sql("a.embedding", "b.embedding")} AS cos_sim
             FROM assigned{tag} a JOIN assigned{tag} b
               ON a.cell = b.cell AND a.label = b.label
              AND a.vec_id <> b.vec_id
@@ -115,7 +106,7 @@ _TRUTH_CTE = f"""
             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS la,
                    row_number() OVER (
                        PARTITION BY a.vec_id
-                       ORDER BY {_cos_sql("a.embedding", "b.embedding")}
+                       ORDER BY {cosine_sql("a.embedding", "b.embedding")}
                                 DESC NULLS LAST, b.vec_id
                    ) AS rn
             FROM embeddings a JOIN embeddings b
@@ -129,14 +120,6 @@ def _top_cells_udf(cent_rows: list, probes: int):
     the top-``probes`` centroid ids by (cosine DESC NULLS LAST,
     cent_id ASC) — exactly the oracle's row_number order.
 
-    BIT-PARITY CONTRACT: every float op replays the engines' sequence.
-    Spark's HOF fold, DuckDB's list_inner_product, and the dim-loop
-    below all accumulate ``acc = acc + a[d]*c[d]`` left-to-right in
-    float64, so dot products, norms, and the final divide are
-    bit-identical across all three — near-tie rankings cannot diverge.
-    (A BLAS matmul would sum pairwise and break this; that is why the
-    loop is over DIMS with vectorized row ops, not np.dot.)
-
     The centroid matrix rides the closure (driver-collected once:
     C = ceil(sqrt(n)) rows — the bounded model-state fetch every
     k-means-style operator makes; ~16 MB at n=10^9)."""
@@ -144,185 +127,19 @@ def _top_cells_udf(cent_rows: list, probes: int):
 
     cent_rows = sorted(cent_rows)  # (cent_id asc) for deterministic ties
     cent_ids = np.array([c[0] for c in cent_rows], dtype="int64")
-    cmat = (
-        np.array([c[1] for c in cent_rows], dtype="float64")
-        if cent_rows
-        else np.zeros((0, 0))
-    )
-    cnorm2 = np.zeros(len(cent_rows))
-    for d in range(cmat.shape[1]):
-        cnorm2 = cnorm2 + cmat[:, d] * cmat[:, d]
-    cnorm = np.sqrt(cnorm2)
+    cmat = stack(c[1] for c in cent_rows) if cent_rows else None
 
     @pandas_udf("array<bigint>")
     def top_cells(embs: pd.Series) -> pd.Series:
-        if len(embs) == 0 or len(cent_ids) == 0:
+        if len(embs) == 0 or cmat is None:
             return pd.Series([[] for _ in range(len(embs))])
-        emat = np.vstack([np.asarray(e, dtype="float64") for e in embs])
-        acc = np.zeros((emat.shape[0], cmat.shape[0]))
-        en2 = np.zeros(emat.shape[0])
-        for d in range(emat.shape[1]):
-            acc = acc + emat[:, d : d + 1] * cmat[None, :, d]
-            en2 = en2 + emat[:, d] * emat[:, d]
-        denom = np.sqrt(en2)[:, None] * cnorm[None, :]
-        invalid = denom == 0.0  # nullif(na*nc, 0) -> NULL -> sorts LAST
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cs = acc / denom
         out = []
-        for i in range(emat.shape[0]):
-            # order: valid before NULL, cos DESC, cent_id ASC — lexsort
-            # is last-key-primary, so keys are (cell, -cs, invalid)
-            key_cs = np.where(invalid[i], 0.0, -cs[i])
-            # NaN cosine (NaN data element) ranks FIRST: both engines
-            # treat NaN as greater than every value under DESC
-            key_cs = np.where(
-                np.isnan(key_cs) & ~invalid[i], -np.inf, key_cs
-            )
-            order = np.lexsort((cent_ids, key_cs, invalid[i]))
-            out.append([int(c) for c in cent_ids[order[:probes]]])
+        for _, cos, invalid in cosine_chunks(stack(embs), cmat):
+            for row, inv in zip(cos, invalid):
+                out.append(cent_ids[rank_desc(row, inv, cent_ids)[:probes]].tolist())
         return pd.Series(out)
 
     return top_cells
-
-
-def _block_topk_fn(k: int, emit_label: bool = False, row_chunk: int = 512):
-    """Per-block all-pairs cosine + per-node block-local top-``k`` for
-    applyInPandas, under the same sequential-dim bit-parity contract as
-    :func:`_top_cells_udf`. Used with (label, cell) blocks by the ANN
-    path and (r11 optimization) with whole label blocks by the exact
-    ``emb_knn_graph`` key, whose per-pair JVM HOF fold this replaces.
-
-    Emitting only each node's block-local top-k is EXACT: a node's
-    global candidate set is the union of its blocks, and top-k of a
-    union equals top-k over the union of per-block top-k's (the
-    standard distributive top-k reduction) — the total order
-    (cos DESC NULLS LAST, vec_b ASC) is replayed identically here, in
-    the final window, and in the oracle. NULL cosines (zero vectors)
-    are kept as candidates: with < k valid neighbors the engines rank
-    them in, so the block emits them too (None, not NaN — the object
-    column maps to a true SQL NULL through Arrow).
-
-    ``row_chunk`` bounds the live cosine matrix at chunk x m doubles
-    (r11): the dim accumulation runs per row-chunk, which leaves every
-    acc[i][j] element's left-to-right add order — and therefore the
-    bits — unchanged. ``emit_label`` adds the block's label column
-    (the recall key's truth side needs it)."""
-
-    def block_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        cols = {"vec_a": [], "vec_b": [], "cos_sim": []}
-        if emit_label:
-            cols["label"] = []
-        if m < 2:
-            # r12 (ADVICE): type EVERY column of the degenerate frame —
-            # untyped empty object columns leaned on Arrow's lenient
-            # empty cast to the declared schema
-            dtypes = {"vec_a": "int64", "vec_b": "int64", "cos_sim": "float64"}
-            if emit_label:
-                dtypes["label"] = "int32"
-            return pd.DataFrame(cols).astype(dtypes)
-        ids = pdf["vec_id"].to_numpy()
-        emat = np.vstack(
-            [np.asarray(e, dtype="float64") for e in pdf["embedding"]]
-        )
-        en2 = np.zeros(m)
-        for d in range(emat.shape[1]):
-            en2 = en2 + emat[:, d] * emat[:, d]
-        nrm = np.sqrt(en2)
-        va, vb, cs_out = [], [], []
-        for lo in range(0, m, row_chunk):
-            hi = min(lo + row_chunk, m)
-            acc = np.zeros((hi - lo, m))
-            for d in range(emat.shape[1]):
-                acc = acc + emat[lo:hi, d : d + 1] * emat[None, :, d]
-            denom = nrm[lo:hi, None] * nrm[None, :]
-            invalid = denom == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / denom
-            for ci in range(hi - lo):
-                i = lo + ci
-                key_cs = np.where(invalid[ci], 0.0, -cos[ci])
-                key_cs = np.where(
-                    np.isnan(key_cs) & ~invalid[ci], -np.inf, key_cs
-                )
-                key_cs[i] = np.inf  # self-pair: sort dead last, slice off
-                inv = invalid[ci].copy()
-                inv[i] = True
-                order = np.lexsort((ids, key_cs, inv))
-                for j in order[:k]:
-                    if j == i:
-                        continue
-                    va.append(int(ids[i]))
-                    vb.append(int(ids[j]))
-                    cs_out.append(
-                        None if invalid[ci][j] else float(cos[ci][j])
-                    )
-        out = {
-            "vec_a": pd.array(va, dtype="int64"),
-            "vec_b": pd.array(vb, dtype="int64"),
-            "cos_sim": pd.array(cs_out, dtype="object"),
-        }
-        if emit_label:
-            out["label"] = pd.array(
-                [pdf["label"].iloc[0]] * len(va), dtype="int32"
-            )
-        return pd.DataFrame(out)
-
-    return block_topk
-
-
-def _block_thresh_pairs_fn(threshold: float, row_chunk: int = 512):
-    """Per-block all-pairs cosine THRESHOLD filter for applyInPandas
-    (r11) — the vectorized twin of :func:`_block_topk_fn` for
-    pair-emitting dedup keys (dedup_embedding): emit (vec_a, vec_b,
-    cos_sim) for every in-block pair with vec_a < vec_b and
-    cos_sim > threshold, under the same sequential-dim bit-parity
-    contract. NULL cosines (zero-norm vectors) are dropped exactly as
-    the engines drop them (NULL > t is not true); NaN cosines (NaN
-    data elements) are KEPT because both Spark and DuckDB order NaN
-    above every number, so NaN > t holds there — np.isnan is the
-    explicit replay of that rule."""
-
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame(
-                {"vec_a": [], "vec_b": [], "cos_sim": []}
-            ).astype({"vec_a": "int64", "vec_b": "int64", "cos_sim": "float64"})
-        ids = pdf["vec_id"].to_numpy()
-        emat = np.vstack(
-            [np.asarray(e, dtype="float64") for e in pdf["embedding"]]
-        )
-        en2 = np.zeros(m)
-        for d in range(emat.shape[1]):
-            en2 = en2 + emat[:, d] * emat[:, d]
-        nrm = np.sqrt(en2)
-        va, vb, cs_out = [], [], []
-        for lo in range(0, m, row_chunk):
-            hi = min(lo + row_chunk, m)
-            acc = np.zeros((hi - lo, m))
-            for d in range(emat.shape[1]):
-                acc = acc + emat[lo:hi, d : d + 1] * emat[None, :, d]
-            denom = nrm[lo:hi, None] * nrm[None, :]
-            invalid = denom == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / denom
-            keep = ~invalid & ((cos > threshold) | np.isnan(cos))
-            # upper triangle by ID, not index: vec_a < vec_b
-            keep &= ids[lo:hi, None] < ids[None, :]
-            for ci, j in zip(*np.nonzero(keep)):
-                va.append(int(ids[lo + ci]))
-                vb.append(int(ids[j]))
-                cs_out.append(float(cos[ci, j]))
-        return pd.DataFrame(
-            {
-                "vec_a": pd.array(va, dtype="int64"),
-                "vec_b": pd.array(vb, dtype="int64"),
-                "cos_sim": pd.array(cs_out, dtype="float64"),
-            }
-        )
-
-    return block_pairs
 
 
 def _ann_model(emb: DataFrame) -> list:
@@ -382,7 +199,7 @@ def _ann_edges(
     )
     blocks = capped.join(emb.select("vec_id", "embedding"), "vec_id")
     partial = blocks.groupBy("label", "cell").applyInPandas(
-        _block_topk_fn(_ANN_K),
+        block_topk_fn(_ANN_K),
         "vec_a long, vec_b long, cos_sim double",
     )
     # a pair sharing 2+ cells appears once per shared cell with the
@@ -411,12 +228,10 @@ def _ann_edges(
 def emb_knn_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-cell-blocked kNN graph (k=3 [_ANN_K], P=4 probes
     [_ANN_PROBES], C=ceil(sqrt(n)) centroids, per-block cap 512
-    [_ANN_CAP]) — the routed
-    scale path for emb_knn_graph (see module docstring; exact key:
+    [_ANN_CAP]) — the routed scale path for emb_knn_graph (exact key:
     breadth_round5.py emb_knn_graph). Same output contract; candidate
     pairs only where label AND cell agree, so cost is O(n^1.5) against
-    the exact key's O(n^2/L) — sf1 measured 321.7 s exact vs
-    single-digit seconds here (BASELINE.md round-11 notes)."""
+    the exact key's O(n^2/L)."""
     return _ann_edges(spark, sf_dir, _ANN_PROBES)
 
 
@@ -456,22 +271,20 @@ def emb_knn_graph_ann_recall(
     this key runs on a node sample to monitor the index, while the
     construction key is the production path unchanged."""
     emb = io.load_table(spark, sf_dir, "embeddings")
-    # r11: the exact truth side rides the same vectorized per-label
-    # block worker as emb_knn_graph (bit-parity contract, see
-    # _block_topk_fn) instead of duplicating the quadratic pair JOIN +
-    # HOF fold — emit_label keeps the per-label grouping column.
+    # the exact truth side is emb_knn_graph's per-label block worker;
+    # emit_label keeps the per-label grouping column
     truth = (
         emb.filter(F.col("label").isNotNull())
         .select("vec_id", "label", "embedding")
         .groupBy("label")
         .applyInPandas(
-            _block_topk_fn(_ANN_K, emit_label=True),
+            block_topk_fn(_ANN_K, emit_label=True),
             "vec_a long, vec_b long, cos_sim double, label int",
         )
         .select("vec_a", "vec_b", "label")
     )
     # one count + one centroid collect shared by every ladder rung —
-    # the model is probe-independent (r11 review finding)
+    # the model is probe-independent
     cent_rows = _ann_model(emb)
     parts = []
     for p in _ANN_LADDER:

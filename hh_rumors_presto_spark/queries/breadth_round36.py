@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions import cosine_sql
+from hh_rumors_presto_spark.operators.cosblocks import block_topk_fn
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -31,15 +33,6 @@ from hh_rumors_presto_spark.registry import query
 
 _KNN_K = 5
 _KNN_BLOCKS = 16
-
-_COS_AB = (
-    "list_inner_product(CAST(a.embedding AS DOUBLE[]),"
-    " CAST(b.embedding AS DOUBLE[]))"
-    " / nullif(sqrt(list_inner_product(CAST(a.embedding AS DOUBLE[]),"
-    " CAST(a.embedding AS DOUBLE[])))"
-    " * sqrt(list_inner_product(CAST(b.embedding AS DOUBLE[]),"
-    " CAST(b.embedding AS DOUBLE[]))), 0.0)"
-)
 
 
 @query(
@@ -51,7 +44,8 @@ _COS_AB = (
             SELECT a.vec_id, a.label, b.vec_id AS nb_id, b.label AS blabel,
                    row_number() OVER (
                        PARTITION BY a.vec_id
-                       ORDER BY {_COS_AB} DESC, b.vec_id) AS rn
+                       ORDER BY {cosine_sql("a.embedding", "b.embedding")} DESC,
+                                b.vec_id) AS rn
             FROM embeddings a JOIN embeddings b
               ON a.vec_id % {_KNN_BLOCKS} = b.vec_id % {_KNN_BLOCKS}
              AND a.vec_id <> b.vec_id
@@ -99,15 +93,9 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     here; real deployments block by IVF cell so blocks stay O(n/k)),
     per-node top-k is a keyed group-limited window, voting and
     accuracy are node- then label-sized folds."""
-    # r11 OPTIMIZATION (guide §4.2, same move as emb_knn_graph): the
-    # hash-block self-join scored every in-block pair with the
-    # aggregate() HOF cosine; the per-block top-k now runs inside the
-    # vectorized block worker (ann_round3._block_topk_fn — sequential-dim
-    # bit-parity, identical (cos DESC NULLS LAST, id ASC) order), one
-    # thin blk-keyed shuffle, labels re-attached to the k*n edge list by
-    # key. Warm sf0.1: 4.9 -> ~1.4 s, same rows.
-    from hh_rumors_presto_spark.queries.ann_round3 import _block_topk_fn
-
+    # the per-block top-k runs inside the block worker
+    # (operators/cosblocks.py ``block_topk_fn``) behind one thin
+    # blk-keyed shuffle; labels re-attach to the k*n edge list by key
     emb = io.load_table(spark, sf_dir, "embeddings")
     edges = (
         emb.select(
@@ -115,7 +103,7 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("blk")
         .applyInPandas(
-            _block_topk_fn(_KNN_K), "vec_a long, vec_b long, cos_sim double"
+            block_topk_fn(_KNN_K), "vec_a long, vec_b long, cos_sim double"
         )
     )
     la = emb.select("vec_id", F.col("label").alias("true_label"))

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions import cosine_sql
+from hh_rumors_presto_spark.operators.cosblocks import block_topk_fn
 from hh_rumors_presto_spark.registry import query
 
 
@@ -101,6 +103,7 @@ def win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KNN_K = 3
+_COS_AB = cosine_sql("a.embedding", "b.embedding")
 
 
 @query(
@@ -109,14 +112,10 @@ _KNN_K = 3
     SELECT vec_a, vec_b, cos_sim
     FROM (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-               / nullif(sqrt(list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-                        * sqrt(list_inner_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))), 0.0) AS cos_sim,
+               {_COS_AB} AS cos_sim,
                row_number() OVER (
                    PARTITION BY a.vec_id
-                   ORDER BY list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-                            / nullif(sqrt(list_inner_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-                                     * sqrt(list_inner_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))), 0.0) DESC,
+                   ORDER BY {_COS_AB} DESC,
                             b.vec_id
                ) AS rn
         FROM embeddings a JOIN embeddings b
@@ -132,32 +131,19 @@ def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     input to graph-based near-dup clustering and kNN-graph ANN indexes
     (NN-descent seeds). Cost is sum(block^2), never n^2.
 
-    r11 OPTIMIZATION (guide §4.2: hand whole batches to vectorized
-    native code): the pair stream used to be a label-keyed self-JOIN
-    whose per-pair cosine ran Spark's aggregate() HOF fold — ~400k
-    64-dim folds at sf0.1 (2.8-4.2 s), 321.7 s at sf1. Pairs are now
-    born and reduced inside a per-label applyInPandas worker
-    (ann_round3._block_topk_fn, the same worker the ANN path certified):
-    one (label) shuffle of n thin rows, zero pair-sized exchanges, and
-    the Σblock² cosines run as chunked NumPy row ops under the module's
-    sequential-dim BIT-PARITY contract — acc accumulates a[d]*b[d]
-    left-to-right in float64 exactly like the old zip_with/aggregate
-    fold and DuckDB's list_inner_product, so every cos_sim bit and
-    every (cos DESC NULLS LAST, vec_b) tie-break is unchanged (verified
-    with VERIFY_EXACT_FLOATS=1). The null-label filter reproduces the
-    old join-on-equality semantics (null labels never matched). This
-    stays the QUADRATIC exact key — its scale route is still
-    emb_knn_graph_ann; the rewrite moves the constant, not the
-    exponent (sf1: 321.7 s -> see OPTIMIZATION_r11.md)."""
-    from hh_rumors_presto_spark.queries.ann_round3 import _block_topk_fn
-
+    Pairs are born and reduced inside a per-label worker
+    (operators/cosblocks.py ``block_topk_fn``, shared with the ANN
+    path): one (label) shuffle of n thin rows and no pair-sized
+    exchange. Null labels never join on equality, so they are filtered
+    out. This is the QUADRATIC exact key; its scale route is
+    emb_knn_graph_ann."""
     emb = io.load_table(spark, sf_dir, "embeddings")
     return (
         emb.filter(F.col("label").isNotNull())
         .select("vec_id", "label", "embedding")
         .groupBy("label")
         .applyInPandas(
-            _block_topk_fn(_KNN_K),
+            block_topk_fn(_KNN_K),
             "vec_a long, vec_b long, cos_sim double",
         )
     )

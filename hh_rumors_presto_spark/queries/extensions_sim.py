@@ -14,22 +14,29 @@ k-means centroids as buckets.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
-from hh_rumors_presto_spark.functions import cosine_similarity, dot, l2_norm
+from hh_rumors_presto_spark.functions import (
+    cosine_similarity,
+    cosine_sql,
+    dot,
+    l2_norm,
+)
+from hh_rumors_presto_spark.operators.cosblocks import (
+    block_thresh_pairs_fn,
+    cosine_chunks,
+    dots,
+    stack,
+)
 from hh_rumors_presto_spark.registry import query
 
 N_QUERIES = 10
 TOP_K = 5
-
-_COS_SQL = (
-    "list_inner_product(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))"
-    " / nullif(sqrt(list_inner_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))"
-    " * sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))), 0.0)"
-)
+_COS_QE = cosine_sql("q.embedding", "e.embedding")
 
 
 @query(
@@ -38,10 +45,10 @@ _COS_SQL = (
     SELECT query_id, neighbor_id, cos_sim
     FROM (
         SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-               {_COS_SQL} AS cos_sim,
+               {_COS_QE} AS cos_sim,
                row_number() OVER (
                    PARTITION BY q.vec_id
-                   ORDER BY {_COS_SQL} DESC, e.vec_id
+                   ORDER BY {_COS_QE} DESC, e.vec_id
                ) AS rn
         FROM embeddings q JOIN embeddings e ON q.vec_id <> e.vec_id
         WHERE q.vec_id < {N_QUERIES}
@@ -97,10 +104,10 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_embedding",
     oracle=f"""
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           {_COS_SQL.replace('q.', 'a.').replace('e.', 'b.')} AS cos_sim
+           {cosine_sql("a.embedding", "b.embedding")} AS cos_sim
     FROM embeddings a JOIN embeddings b
       ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_COS_SQL.replace('q.', 'a.').replace('e.', 'b.')} > 0.3
+    WHERE {cosine_sql("a.embedding", "b.embedding")} > 0.3
     """,
 )
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,24 +115,18 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     for an LSH/IVF bucket): pairs only form within a block, so cost is
     sum(block²), not n².
 
-    r11 OPTIMIZATION (guide §4.2, same move as emb_knn_graph): the
-    label-keyed self-JOIN whose per-pair cosine ran the aggregate() HOF
-    fold is replaced by a per-label applyInPandas worker
-    (ann_round3._block_thresh_pairs_fn) — one thin label shuffle, the
-    Σblock² cosines run as chunked NumPy row ops under the sequential-dim
-    bit-parity contract, and the >0.3 filter replays the engines'
-    NULL-drop / NaN-keep comparison rules exactly. Null labels never
-    formed pairs under the old join-on-equality; the explicit filter
-    reproduces that."""
-    from hh_rumors_presto_spark.queries.ann_round3 import _block_thresh_pairs_fn
-
+    The pairs are born inside a per-label worker
+    (operators/cosblocks.py ``block_thresh_pairs_fn``), so one thin
+    label shuffle is the only exchange; the >0.3 filter replays the
+    engines' NULL-drop / NaN-keep comparison rules. Null labels never
+    join on equality, so they are filtered out."""
     emb = io.load_table(spark, sf_dir, "embeddings")
     return (
         emb.filter(F.col("label").isNotNull())
         .select("vec_id", "label", "embedding")
         .groupBy("label")
         .applyInPandas(
-            _block_thresh_pairs_fn(0.3),
+            block_thresh_pairs_fn(0.3),
             "vec_a long, vec_b long, cos_sim double",
         )
     )
@@ -137,8 +138,6 @@ N_PLANES = 8
 def _hyperplanes(dim: int = 64) -> list[list[float]]:
     """Deterministic random hyperplanes (fixed seed, generated once on the
     driver and shipped as literals — no state, no files)."""
-    import numpy as np
-
     rng = np.random.RandomState(7)
     return rng.standard_normal((N_PLANES, dim)).round(6).tolist()
 
@@ -156,11 +155,7 @@ def _ann_lsh_oracle() -> str:
         + "]) >= 0 THEN '1' ELSE '0' END"
         for plane in planes
     )
-    cos = (
-        "list_inner_product(CAST(q.q_emb AS DOUBLE[]), CAST(s.embedding AS DOUBLE[]))"
-        " / nullif(sqrt(list_inner_product(CAST(q.q_emb AS DOUBLE[]), CAST(q.q_emb AS DOUBLE[])))"
-        " * sqrt(list_inner_product(CAST(s.embedding AS DOUBLE[]), CAST(s.embedding AS DOUBLE[]))), 0.0)"
-    )
+    cos = cosine_sql("q.q_emb", "s.embedding")
     return f"""
     WITH sig AS (
         SELECT vec_id, embedding, concat({sign_bits}) AS bucket
@@ -270,14 +265,6 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CENTROIDS = 16
 
 
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_inner_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-        f" / nullif(sqrt(list_inner_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"
-        f" * sqrt(list_inner_product(CAST({b} AS DOUBLE[]), CAST({b} AS DOUBLE[]))), 0.0)"
-    )
-
-
 @query(
     "sim_ivf",
     oracle=f"""
@@ -289,7 +276,7 @@ def _cos_sql(a: str, b: str) -> str:
         SELECT e.vec_id, e.embedding, c.cent_id,
                row_number() OVER (
                    PARTITION BY e.vec_id
-                   ORDER BY {_cos_sql("e.embedding", "c.c_emb")} DESC, c.cent_id
+                   ORDER BY {cosine_sql("e.embedding", "c.c_emb")} DESC, c.cent_id
                ) AS rn
         FROM embeddings e CROSS JOIN cents c
     ),
@@ -302,7 +289,7 @@ def _cos_sql(a: str, b: str) -> str:
     ),
     cand AS (
         SELECT q.query_id, a.vec_id AS neighbor_id,
-               {_cos_sql("q.q_emb", "a.embedding")} AS cos_sim
+               {cosine_sql("q.q_emb", "a.embedding")} AS cos_sim
         FROM assigned a JOIN q ON a.cell = q.cell AND a.vec_id <> q.query_id
     )
     SELECT query_id, neighbor_id, cos_sim
@@ -476,8 +463,6 @@ _MT_BITS = 5
 
 
 def _mt_planes() -> list[list[float]]:
-    import numpy as np
-
     rng = np.random.RandomState(11)
     return rng.standard_normal((_MT_TABLES * _MT_BITS, 64)).round(6).tolist()
 
@@ -493,39 +478,27 @@ def _mt_sig_sql(planes: list[list[float]], t: int) -> str:
 
 
 def _plane_sigs_udf(planes: list[list[float]], n_tables: int, n_bits: int):
-    """Vectorized (Arrow) hyperplane-signature generator (r11): per input
+    """Vectorized (Arrow) hyperplane-signature generator: per input
     vector, the ``n_tables`` bucket signatures (``n_bits`` chars each).
-    BIT-PARITY: the dim loop accumulates acc += emb[d] * plane[d]
-    left-to-right in float64 — identical to the old per-plane
-    aggregate() HOF fold and to DuckDB's list_inner_product, so the
-    >= 0 sign bits (and therefore every bucket) match exactly. Only the
-    first 64 dims participate, mirroring the engines' embedding[1:64]
-    slice."""
-    import numpy as np
+    The projections are ``cosblocks.dots``, bit-identical to the
+    engines' folds, so the >= 0 sign bits (and therefore every bucket)
+    match exactly. Only the first 64 dims participate, mirroring the
+    engines' embedding[1:64] slice."""
     from pyspark.sql.functions import pandas_udf
 
-    pmat = np.array(planes, dtype="float64")  # (n_tables*n_bits, 64)
+    pmat = stack(planes)  # (n_tables*n_bits, 64)
 
     @pandas_udf("array<string>")
     def plane_sigs(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:
             return pd.Series([], dtype="object")
-        emat = np.vstack(
-            [np.asarray(e, dtype="float64")[:64] for e in embs]
+        bits = np.where(dots(stack(e[:64] for e in embs), pmat) >= 0, "1", "0")
+        return pd.Series(
+            [
+                ["".join(row[t * n_bits : (t + 1) * n_bits]) for t in range(n_tables)]
+                for row in bits
+            ]
         )
-        acc = np.zeros((emat.shape[0], pmat.shape[0]))
-        for d in range(emat.shape[1]):
-            acc = acc + emat[:, d : d + 1] * pmat[None, :, d]
-        bits = np.where(acc >= 0, "1", "0")
-        out = []
-        for i in range(emat.shape[0]):
-            out.append(
-                [
-                    "".join(bits[i, t * n_bits : (t + 1) * n_bits])
-                    for t in range(n_tables)
-                ]
-            )
-        return pd.Series(out)
 
     return plane_sigs
 
@@ -535,11 +508,7 @@ def _ann_multitable_oracle() -> str:
     sig_union = " UNION ALL ".join(
         _mt_sig_sql(planes, t) for t in range(_MT_TABLES)
     )
-    cos = (
-        "list_inner_product(CAST(q_emb AS DOUBLE[]), CAST(n_emb AS DOUBLE[]))"
-        " / nullif(sqrt(list_inner_product(CAST(q_emb AS DOUBLE[]), CAST(q_emb AS DOUBLE[])))"
-        " * sqrt(list_inner_product(CAST(n_emb AS DOUBLE[]), CAST(n_emb AS DOUBLE[]))), 0.0)"
-    )
+    cos = cosine_sql("q_emb", "n_emb")
     return f"""
     WITH sig AS ({sig_union}),
     q AS (
@@ -579,19 +548,12 @@ def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = io.load_table(spark, sf_dir, "embeddings")
     planes = _mt_planes()
 
-    # r11 OPTIMIZATION (guide §4.2 + §2.3 + §2.4): (a) the 80-plane
-    # signature pass — formerly 80 aggregate() HOF folds PER ROW — runs
-    # as ONE vectorized Arrow UDF whose dim loop accumulates
-    # acc += emb[d] * plane[d] left-to-right in float64, bit-identical
-    # to the old fold and to DuckDB's list_inner_product (the module's
-    # established bit-parity contract), so every sign bit matches; it is
-    # computed ONCE and checkpointed as THIN (vec_id, t, sig) rows — the
-    # old plan recomputed the whole signature subtree per join leg;
-    # (b) the cross-table candidate dedup shuffles only (query_id,
-    # neighbor_id) id pairs — the old dropDuplicates dragged BOTH
-    # embedding arrays through the exchange; embeddings re-attach by
+    # The 80-plane signature pass is ONE vectorized Arrow UDF, computed
+    # once and checkpointed as THIN (vec_id, t, sig) rows so the join
+    # legs do not recompute it. The cross-table candidate dedup shuffles
+    # only (query_id, neighbor_id) id pairs; embeddings re-attach by
     # vec_id afterwards and only surviving distinct pairs pay the exact
-    # cosine fold. Measured: 12.1 -> 2.4 s warm at sf0.1, same rows.
+    # cosine fold.
     sig_udf = _plane_sigs_udf(planes, _MT_TABLES, _MT_BITS)
     sigs = emb.select(
         "vec_id",
@@ -606,10 +568,9 @@ def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    # r12 (ADVICE): broadcast ONLY the N_QUERIES-row query side — the
-    # r11 shape force-broadcast the ENTIRE corpus on both re-attach
-    # legs (the hint bypasses autoBroadcastJoinThreshold), pinning the
-    # full embedding table on every executor at scale. The neighbor
+    # broadcast ONLY the N_QUERIES-row query side: a broadcast hint
+    # bypasses autoBroadcastJoinThreshold, so hinting the corpus would
+    # pin the whole embedding table on every executor. The neighbor
     # re-attach stays a keyed equi-join the planner sizes itself.
     qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -645,7 +606,7 @@ def _ann_recall_oracle() -> str:
             SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
                    row_number() OVER (
                        PARTITION BY q.vec_id
-                       ORDER BY {_COS_SQL} DESC, e.vec_id
+                       ORDER BY {_COS_QE} DESC, e.vec_id
                    ) AS rn
             FROM embeddings q JOIN embeddings e ON q.vec_id <> e.vec_id
             WHERE q.vec_id < {N_QUERIES}
@@ -720,7 +681,7 @@ def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pairs AS (
         SELECT a.label,
-               {_cos_sql("a.embedding", "b.embedding")} AS cos
+               {cosine_sql("a.embedding", "b.embedding")} AS cos
         FROM embeddings a JOIN embeddings b
           ON a.label = b.label AND a.vec_id < b.vec_id
     )
@@ -743,58 +704,29 @@ def emb_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the thing that justifies the production threshold, and pinning it as
     oracle rows regression-gates the embedding + cosine path end to
     end."""
-    # r11 OPTIMIZATION (guide §4.2, same move as emb_knn_graph /
-    # dedup_embedding): the label-keyed self-join + per-pair HOF cosine
-    # is replaced by a per-label worker that computes the chunked
-    # all-pairs cosine matrix under the sequential-dim bit-parity
-    # contract and emits the FINISHED per-bin counts — one thin label
-    # shuffle, a few histogram rows out per block, no pair-sized
-    # exchange. bin = floor(cos * 10) replays the engines' float64
-    # multiply+floor bit-for-bit; NULL cosines (zero-norm vectors) keep
-    # their NULL-bin group exactly as the old groupBy did. Warm sf0.1:
-    # 3.3 -> ~0.7 s, same rows.
-    import numpy as np
+    # A per-label worker emits the finished per-bin counts, so one thin
+    # label shuffle is the only exchange and no pair-sized row leaves the
+    # worker. bin = floor(cos * 10) replays the engines' float64
+    # multiply+floor bit-for-bit; NULL cosines (zero-norm vectors) and
+    # NaN cosines (Spark's non-ANSI floor(NaN) cast int) land in the
+    # NULL bin.
 
     def bin_hist(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
+        if len(pdf) < 2:
             return pd.DataFrame({"label": [], "bin": [], "n_pairs": []}).astype(
                 {"label": "int32", "n_pairs": "int64"}
             )
         label = pdf["label"].iloc[0]
         ids = pdf["vec_id"].to_numpy()
-        emat = np.vstack(
-            [np.asarray(e, dtype="float64") for e in pdf["embedding"]]
-        )
-        en2 = np.zeros(m)
-        for d in range(emat.shape[1]):
-            en2 = en2 + emat[:, d] * emat[:, d]
-        nrm = np.sqrt(en2)
         counts: dict = {}
-        chunk = 512
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            acc = np.zeros((hi - lo, m))
-            for d in range(emat.shape[1]):
-                acc = acc + emat[lo:hi, d : d + 1] * emat[None, :, d]
-            denom = nrm[lo:hi, None] * nrm[None, :]
-            invalid = denom == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / denom
-            upper = ids[lo:hi, None] < ids[None, :]
-            n_null = int(np.count_nonzero(upper & invalid))
+        for lo, cos, invalid in cosine_chunks(stack(pdf["embedding"])):
+            upper = ids[lo : lo + len(cos), None] < ids[None, :]
+            bins = np.floor(cos[upper & ~invalid] * 10)
+            nan = np.isnan(bins)
+            n_null = int(np.count_nonzero(upper & invalid)) + int(nan.sum())
             if n_null:
                 counts[None] = counts.get(None, 0) + n_null
-            valid = upper & ~invalid
-            bins = np.floor(cos[valid] * 10)
-            # NaN cosine -> NULL bin, matching Spark's non-ANSI
-            # floor(NaN) cast int (fixtures carry none; defensive)
-            nan_n = int(np.count_nonzero(np.isnan(bins)))
-            if nan_n:
-                counts[None] = counts.get(None, 0) + nan_n
-            uniq, cnt = np.unique(
-                bins[~np.isnan(bins)].astype("int64"), return_counts=True
-            )
+            uniq, cnt = np.unique(bins[~nan].astype("int64"), return_counts=True)
             for bv, n in zip(uniq, cnt):
                 counts[int(bv)] = counts.get(int(bv), 0) + int(n)
         rows = sorted(counts.items(), key=lambda kv: (kv[0] is None, kv[0]))

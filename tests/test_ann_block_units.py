@@ -1,13 +1,16 @@
-"""Spark-free property tests for the ann_round3 block worker.
+"""Property tests for the cosine block workers (operators/cosblocks.py)
+and the ANN coarse-quantizer scorer.
 
-The end-to-end oracle (emb_knn_graph_ann / _recall) hash-verifies the
-full pipeline; these pin the two claims the pipeline's correctness
-rests on, directly against brute force on adversarial inputs:
+The end-to-end oracles (emb_knn_graph, emb_knn_graph_ann / _recall,
+dedup_embedding) hash-verify the full pipelines; these pin the claims
+their correctness rests on, directly against a brute force that folds
+each cosine in the engines' sequential float64 order, comparing the
+cosines as exact floats:
 
 1. DISTRIBUTIVE EXACTNESS — per-node top-k over the union of a node's
    per-block top-k emissions equals top-k over the union of the raw
    blocks, under the exact total order (cos DESC NULLS LAST, NaN
-   first, vec_b ASC). This is why _block_topk_fn may emit only k
+   first, vec_b ASC). This is why block_topk_fn may emit only k
    neighbors per block without losing an edge.
 2. ORDER SEMANTICS — the numpy lexsort keys reproduce the engines'
    ordering on the degenerate inputs: zero vectors (NULL cosine →
@@ -22,69 +25,63 @@ import random
 
 import numpy as np
 import pandas as pd
-import pytest
 
-from hh_rumors_presto_spark.queries.ann_round3 import (
-    _ANN_K,
-    _block_topk_fn,
+from hh_rumors_presto_spark.operators.cosblocks import (
+    block_thresh_pairs_fn,
+    block_topk_fn,
+    dots,
 )
+from hh_rumors_presto_spark.queries.ann_round3 import _ANN_K, _top_cells_udf
+
+
+def _seq_cos(a: list, b: list) -> float | None:
+    """One cosine folded left to right in float64, the engines' order;
+    None where the engines return NULL (zero denominator)."""
+    acc = na = nb = 0.0
+    for d in range(len(a)):
+        acc = acc + a[d] * b[d]
+        na = na + a[d] * a[d]
+        nb = nb + b[d] * b[d]
+    denom = math.sqrt(na) * math.sqrt(nb)
+    return None if denom == 0.0 else acc / denom
+
+
+def _rep(cos: float | None):
+    """The exact float, or a "null"/"nan" tag so sets compare."""
+    if cos is None:
+        return "null"
+    return "nan" if math.isnan(cos) else cos
+
+
+def _rank_key(vid: int, rep) -> tuple:
+    """(cos DESC NULLS LAST, NaN first, id ASC) over _rep values."""
+    if rep == "null":
+        return (1, 0.0, vid)
+    if rep == "nan":
+        return (0, -math.inf, vid)
+    return (0, -rep, vid)
 
 
 def _brute_topk(pdf: pd.DataFrame, k: int) -> set[tuple]:
-    """Reference: all-pairs cosine in the engines' sequential-fold
-    float64 order, per-node top-k under (cos DESC NULLS LAST / NaN
-    first, vec_b ASC). Returns {(vec_a, vec_b, cos_repr)}."""
+    """Reference: all-pairs sequential-fold cosine, per-node top-k
+    under _rank_key. Returns {(vec_a, vec_b, _rep(cos))}."""
     ids = pdf["vec_id"].tolist()
     embs = [list(map(float, e)) for e in pdf["embedding"]]
     out = set()
     for i, a in enumerate(embs):
-        cands = []
-        for j, b in enumerate(embs):
-            if i == j:
-                continue
-            acc = 0.0
-            na = 0.0
-            nb = 0.0
-            for d in range(len(a)):
-                acc = acc + a[d] * b[d]
-                na = na + a[d] * a[d]
-                nb = nb + b[d] * b[d]
-            denom = math.sqrt(na) * math.sqrt(nb)
-            cos = None if denom == 0.0 else acc / denom
-            cands.append((ids[j], cos))
-        # sort: NULL last; NaN first among valids; cos DESC; id ASC
-        def sort_key(t):
-            vid, cos = t
-            if cos is None:
-                return (1, 0.0, vid)
-            if isinstance(cos, float) and math.isnan(cos):
-                return (0, -math.inf, vid)
-            return (0, -cos, vid)
-
-        cands.sort(key=sort_key)
-        for vid, cos in cands[:k]:
-            rep = (
-                "null"
-                if cos is None
-                else ("nan" if math.isnan(cos) else round(cos, 9))
-            )
-            out.add((ids[i], vid, rep))
+        cands = [
+            (ids[j], _rep(_seq_cos(a, b))) for j, b in enumerate(embs) if j != i
+        ]
+        cands.sort(key=lambda t: _rank_key(*t))
+        out.update((ids[i], vid, rep) for vid, rep in cands[:k])
     return out
 
 
 def _worker_edges(pdf: pd.DataFrame, k: int) -> set[tuple]:
-    res = _block_topk_fn(k)(pdf)
-    out = set()
-    for r in res.itertuples(index=False):
-        cos = r.cos_sim
-        if cos is None:
-            rep = "null"
-        elif math.isnan(cos):
-            rep = "nan"
-        else:
-            rep = round(cos, 9)
-        out.add((r.vec_a, r.vec_b, rep))
-    return out
+    res = block_topk_fn(k)(pdf)
+    return {
+        (r.vec_a, r.vec_b, _rep(r.cos_sim)) for r in res.itertuples(index=False)
+    }
 
 
 def _mk_pdf(rows):
@@ -100,8 +97,8 @@ def _mk_pdf(rows):
 def test_worker_matches_brute_force_random():
     rng = random.Random(11)
     for trial in range(25):
-        m = rng.randint(2, 14)
-        dim = rng.choice([2, 3, 8])
+        m = rng.randint(2, 40)
+        dim = rng.choice([2, 3, 8, 64])
         rows = []
         for i in range(m):
             if rng.random() < 0.15:
@@ -168,17 +165,9 @@ def test_distributive_topk_across_blocks():
     for a, b, rep in partial:
         per_node.setdefault(a, {})[b] = rep
 
-    def sort_key(item):
-        b, rep = item
-        if rep == "null":
-            return (1, 0.0, b)
-        if rep == "nan":
-            return (0, -math.inf, b)
-        return (0, -rep, b)
-
     reduced = set()
     for a, nbrs in per_node.items():
-        for b, rep in sorted(nbrs.items(), key=sort_key)[:_ANN_K]:
+        for b, rep in sorted(nbrs.items(), key=lambda t: _rank_key(*t))[:_ANN_K]:
             reduced.add((a, b, rep))
 
     # the reduced set must contain every truth edge whose pair was
@@ -197,8 +186,8 @@ def test_distributive_topk_across_blocks():
 
 
 # ---------------------------------------------------------------------------
-# r11 additions: row-chunking invariance, label emission, the threshold-pair
-# worker, and the vectorized hyperplane-signature dim loop
+# row-chunking invariance, label emission, the threshold-pair worker, the
+# hyperplane-signature projections and the coarse-quantizer scorer
 # ---------------------------------------------------------------------------
 
 
@@ -212,15 +201,13 @@ def test_worker_chunking_is_bit_invariant():
     ]
     rows[5] = (205, [0.0] * 8)
     pdf = _mk_pdf(rows)
-    base = _block_topk_fn(_ANN_K, row_chunk=10**6)(pdf)
+    base = block_topk_fn(_ANN_K, row_chunk=10**6)(pdf)
     for chunk in (1, 2, 3, 7, 23):
-        got = _block_topk_fn(_ANN_K, row_chunk=chunk)(pdf)
+        got = block_topk_fn(_ANN_K, row_chunk=chunk)(pdf)
         assert got.values.tolist() == base.values.tolist(), chunk
 
 
 def test_worker_emit_label_carries_block_label():
-    from hh_rumors_presto_spark.queries.ann_round3 import _block_topk_fn
-
     pdf = pd.DataFrame(
         {
             "vec_id": pd.array([1, 2, 3], dtype="int64"),
@@ -228,11 +215,11 @@ def test_worker_emit_label_carries_block_label():
             "embedding": [[1.0, 0.0], [0.9, 0.1], [0.0, 1.0]],
         }
     )
-    res = _block_topk_fn(2, emit_label=True)(pdf)
+    res = block_topk_fn(2, emit_label=True)(pdf)
     assert set(res.columns) == {"vec_a", "vec_b", "cos_sim", "label"}
     assert set(res["label"]) == {7}
     # same edges as the label-less worker
-    plain = _block_topk_fn(2)(pdf)
+    plain = block_topk_fn(2)(pdf)
     assert res[["vec_a", "vec_b"]].values.tolist() == (
         plain[["vec_a", "vec_b"]].values.tolist()
     )
@@ -242,10 +229,6 @@ def test_thresh_pairs_matches_brute_force():
     """dedup_embedding's worker: every in-block pair with vec_a < vec_b
     and cos > t, NULL dropped (NULL > t is not true), NaN kept (both
     engines order NaN above every number)."""
-    from hh_rumors_presto_spark.queries.ann_round3 import (
-        _block_thresh_pairs_fn,
-    )
-
     rng = random.Random(7)
     for trial in range(20):
         m = rng.randint(2, 12)
@@ -262,8 +245,8 @@ def test_thresh_pairs_matches_brute_force():
         pdf = _mk_pdf(rows)
         t = 0.3
         got = {
-            (r.vec_a, r.vec_b)
-            for r in _block_thresh_pairs_fn(t, row_chunk=rng.choice([2, 64]))(
+            (r.vec_a, r.vec_b, _rep(r.cos_sim))
+            for r in block_thresh_pairs_fn(t, row_chunk=rng.choice([2, 64]))(
                 pdf
             ).itertuples(index=False)
         }
@@ -274,24 +257,18 @@ def test_thresh_pairs_matches_brute_force():
             for j in range(m):
                 if ids[i] >= ids[j]:
                     continue
-                acc = na = nb = 0.0
-                for d in range(3):
-                    acc += embs[i][d] * embs[j][d]
-                    na += embs[i][d] * embs[i][d]
-                    nb += embs[j][d] * embs[j][d]
-                denom = math.sqrt(na) * math.sqrt(nb)
-                if denom == 0.0:
+                cos = _seq_cos(embs[i], embs[j])
+                if cos is None:
                     continue  # NULL cosine: NULL > t is not true
-                cos = acc / denom
                 if math.isnan(cos) or cos > t:
-                    want.add((ids[i], ids[j]))
+                    want.add((ids[i], ids[j], _rep(cos)))
         assert got == want, f"trial {trial}"
 
 
 def test_plane_sigs_dim_loop_matches_sequential_fold():
-    """The vectorized signature generator's dim loop must reproduce the
-    sequential left-to-right float64 fold bit-for-bit — the >= 0 sign
-    bits AND the raw accumulators."""
+    """The signature generator's projections (cosblocks.dots) must
+    reproduce the sequential left-to-right float64 fold bit-for-bit —
+    the >= 0 sign bits AND the raw accumulators."""
     rng = random.Random(3)
     n_tables, n_bits, dim = 4, 5, 16
     planes = [
@@ -299,14 +276,37 @@ def test_plane_sigs_dim_loop_matches_sequential_fold():
         for _ in range(n_tables * n_bits)
     ]
     embs = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(40)]
-    pmat = np.array(planes, dtype="float64")
-    emat = np.vstack([np.asarray(e, dtype="float64") for e in embs])
-    acc = np.zeros((emat.shape[0], pmat.shape[0]))
-    for d in range(dim):
-        acc = acc + emat[:, d : d + 1] * pmat[None, :, d]
+    acc = dots(np.array(embs), np.array(planes))
     for i, e in enumerate(embs):
         for p, plane in enumerate(planes):
             ref = 0.0
             for d in range(dim):
                 ref = ref + e[d] * plane[d]
             assert acc[i, p] == ref, (i, p)  # bit-exact, not approx
+
+
+def test_top_cells_matches_brute_force(spark):
+    """emb_knn_graph_ann's scorer: per vector, the top-``probes``
+    centroid ids by (cos DESC NULLS LAST, NaN first, cent_id ASC), over
+    a batch larger than the kernel's row chunk, with zero vectors on
+    both sides, a NaN element and exactly tied centroids.  ``spark``
+    parses the UDF's DDL return type."""
+    rng = random.Random(5)
+    dim, probes = 4, 3
+    cents = [(c, [rng.uniform(-1, 1) for _ in range(dim)]) for c in range(8)]
+    cents[2] = (2, [0.0] * dim)  # NULL cosine against every vector
+    cents[5] = (5, list(cents[1][1]))  # exact tie with centroid 1
+    cents[7] = (7, [2 * x for x in cents[3][1]])  # same direction as 3
+    embs = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(700)]
+    embs[10] = [0.0] * dim  # every cosine NULL: ids ascending
+    embs[600] = [float("nan")] + [0.5] * (dim - 1)  # every cosine NaN
+    embs[650] = list(cents[1][1])  # ties centroids 1 and 5 at the top
+    top_cells = _top_cells_udf(list(reversed(cents)), probes).func
+    got = top_cells(pd.Series([np.array(e) for e in embs])).tolist()
+    assert len(got) == len(embs)
+    for i, e in enumerate(embs):
+        ranked = sorted(_rank_key(cid, _rep(_seq_cos(e, c))) for cid, c in cents)
+        assert got[i] == [key[2] for key in ranked[:probes]], i
+    # all NULL, and all NaN (a NaN norm times 0 is NaN, not 0): ids ASC
+    assert got[10] == got[600] == [0, 1, 2]
+    assert got[650][:2] == [1, 5]

@@ -14,15 +14,18 @@ No Spark needed; pure duckdb/python.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 import duckdb
 import pytest
 
 from type_parity_scan import diff_types, duck_family, spark_family
-from verify_local import arrow_rows, value_hash
+from verify_local import arrow_rows, duckdb_memory_limit, value_hash
 
 
 # ---------------------------------------------------------------- item 1
@@ -110,3 +113,14 @@ def test_diff_types_clean():
 )
 def test_family_helpers_agree(spark_t, duck_t):
     assert spark_family(spark_t) == duck_family(duck_t)
+
+
+# ------------------------------------------------------- DuckDB memory cap
+def test_duckdb_memory_limit_is_half_of_memtotal():
+    """verify_local caps DuckDB so a large oracle spills, not OOMs."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    limit = duckdb_memory_limit()
+    assert limit == f"{total_kb // 2048}MB"
+    duckdb.connect().execute(f"SET memory_limit = '{limit}'")
+

@@ -12,7 +12,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -30,7 +31,7 @@ def main() -> None:
     spark = get_spark("capture_plans")
     qs = ent.queries()
     keys = args.keys or bench.HEADLINE
-    outdir = os.path.join("/root/repo/plans", args.tag)
+    outdir = os.path.join(ROOT, "plans", args.tag)
     os.makedirs(outdir, exist_ok=True)
     for k in keys:
         df = qs[k](spark, args.sf)

@@ -13,10 +13,11 @@ Prints PASS/WARN per assertion plus the formatted plan on WARN.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 
@@ -290,9 +291,9 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"hashpartitioning\(__bp_i",
          "single thin shuffle keyed by block-pair, no pair-sized exchange"),
     ],
-    # r11 optimization: the exact key's pair stream moved inside a
-    # per-label vectorized block worker (ann_round3._block_topk_fn) —
-    # one thin label-keyed shuffle, no pair-sized exchange, no window.
+    # the exact key's pair stream lives inside a per-label block worker
+    # (operators/cosblocks.py block_topk_fn) — one thin label-keyed
+    # shuffle, no pair-sized exchange, no window.
     "emb_knn_graph": [
         (r"FlatMapGroupsInPandas", "all-pairs cosine confined to the label-block worker"),
         (r"hashpartitioning\(label", "single thin shuffle keyed by label"),

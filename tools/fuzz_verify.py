@@ -31,7 +31,7 @@ import tempfile
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE_SF = "/root/testdata/sf0.001"
 COPY_TABLES = "region nation customer supplier part".split()

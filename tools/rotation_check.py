@@ -21,9 +21,11 @@ from __future__ import annotations
 import argparse
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -36,7 +38,7 @@ def main() -> int:
 
     registry = list(ent.queries())
     evaluated: dict[str, str] = {}  # key -> latest status
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rows = json.load(open(path))
         counts = {"green": 0, "rows_only": 0, "red": 0}
         fails = []

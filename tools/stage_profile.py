@@ -1,13 +1,12 @@
-"""Per-query job/stage timing profiler (guide §1.1/§1.5): runs one or more
-headline queries through the noop sink with job descriptions set, then dumps
-per-job wall times from the status tracker listener data.
+"""Per-query wall-time profiler: warms the session with one ``agg_basic``
+run, then runs each key ``--repeat`` times through the noop sink, each
+run's Spark jobs tagged with the description ``key#i``.
 
 Usage:
     python tools/stage_profile.py [--sf DIR] [--repeat N] key [key ...]
 
-Prints per-run wall seconds and, with --jobs, a breakdown of Spark job
-(group, description, duration) rows so the expensive round of an iterative
-query is visible without the UI (spark.ui.enabled=false in this rig).
+Prints, per run, the seconds spent building the DataFrame and the total
+seconds including the noop write.
 """
 
 from __future__ import annotations
@@ -17,7 +16,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -15,12 +15,13 @@ import os
 import hashlib
 import math
 import sys
+import tempfile
 import time
 import traceback
 from datetime import date, datetime
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -55,6 +56,16 @@ def _norm_cell(v):
     if isinstance(v, dict):
         return "{" + ",".join(f"{k}:{_norm_cell(v[k])}" for k in sorted(v)) + "}"
     return str(v)
+
+
+def duckdb_memory_limit() -> str:
+    """Half of the host's MemTotal: a large oracle spills to the temp
+    directory instead of growing until the kernel kills it."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 2048}MB"
+    raise RuntimeError("no MemTotal line in /proc/meminfo")
 
 
 def arrow_rows(rel) -> list[tuple]:
@@ -97,7 +108,12 @@ def main() -> int:
     )
     ap.add_argument("keys", nargs="*")
     args = ap.parse_args()
+    with tempfile.TemporaryDirectory(prefix="verify_local_duckdb_") as spill:
+        return _verify(args, spill)
 
+
+def _verify(args: argparse.Namespace, spill: str) -> int:
+    """Compare every requested key; DuckDB spills to ``spill``."""
     import duckdb
 
     import __spark_entry__ as ent
@@ -108,6 +124,8 @@ def main() -> int:
     oracles = ent.oracle_sql()
 
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{duckdb_memory_limit()}'")
+    con.execute(f"SET temp_directory = '{spill}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
