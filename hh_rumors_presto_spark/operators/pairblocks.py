@@ -37,7 +37,11 @@ bytes a cell; on the diagonal pair they are one matrix (the weighted
 worker also stacks a weighted copy of side B).  ``_ROW_CHUNK`` bounds
 only the live product C (chunk x side-B rows).  So worker memory
 grows with the group's vocabulary, not just its rows.  B only balances
-load: results are identical under any B.
+load: results are identical under any B.  Row bound: a side matrix
+has one row per item of its block, and items are hash-assigned, so a
+block holds n_items / B items on average.  B is one block per
+``_ROWS_PER_BLOCK`` items up to its core-derived cap, so that average
+is at most ``_ROWS_PER_BLOCK`` below the cap and n_items / cap above it.
 """
 
 from __future__ import annotations
@@ -51,15 +55,27 @@ from pyspark.sql import functions as F
 
 _ROW_CHUNK = 2048  # bounds the live C matrix at chunk x |B-side| floats
 
+# Items per block.  Every block-pair group is one more applyInPandas
+# task feeding a Python worker, a fixed cost that dominates small
+# inputs.  dedup_ppjoin medians on a 4-core host at B=1/2/4: 500
+# documents 0.66/0.67/1.06 s, 1000 documents 0.67/0.76/1.11 s, 2000
+# documents 0.98/0.88/1.31 s, 5000 documents 3.52/2.14/2.15 s.  So one
+# block holds up to 1000 items; the 5000-document and 15000-customer
+# sf0.1 inputs still reach the cap.
+_ROWS_PER_BLOCK = 1000
 
-def block_count() -> int:
-    """Number of item blocks B: B(B+1)/2 block-pair workers should
-    comfortably exceed the core count (load balance) while replication
-    (B copies of each item row) stays modest; ceil(sqrt(2 * cores))
-    gives ~cores workers.  Results are identical under ANY B."""
-    from hh_rumors_presto_spark.session import default_parallelism
 
-    return max(4, int(math.ceil(math.sqrt(2.0 * default_parallelism()))))
+def block_count(n_items: int) -> int:
+    """Number of item blocks B for at most ``n_items`` item rows: one
+    block per ``_ROWS_PER_BLOCK`` items, capped where B(B+1)/2
+    block-pair workers comfortably exceed the core count (load balance)
+    while replication (B copies of each item row) stays modest;
+    ceil(sqrt(2 * cores)) gives ~cores workers.  Results are identical
+    under ANY B."""
+    from hh_rumors_presto_spark.session import default_parallelism, tasks_for_rows
+
+    cap = max(4, int(math.ceil(math.sqrt(2.0 * default_parallelism()))))
+    return tasks_for_rows(n_items, _ROWS_PER_BLOCK, cap)
 
 
 def replicate_block_pairs(df: DataFrame, block_col: str, n_blocks: int) -> DataFrame:
@@ -84,14 +100,19 @@ def replicate_block_pairs(df: DataFrame, block_col: str, n_blocks: int) -> DataF
     return a_side.unionByName(b_side)
 
 
-def blocked_pairs(items: DataFrame, worker, schema: str) -> DataFrame:
+def blocked_pairs(items: DataFrame, worker, schema: str, n_items: int) -> DataFrame:
     """Wire an item DataFrame — one row per item: (id, vids[, ws]) with
     ``vids`` an array of the item's distinct keys, of any hashable
     type — through block-pair replication and the given
-    worker.  The repartition is EXPLICIT (user repartitions are exempt
-    from AQE coalescing): the shuffle input is thin array rows but the
-    worker compute is pair-mass-sized, which AQE cannot see."""
-    bcount = block_count()
+    worker.  ``n_items`` is an upper bound on the item rows (the footer
+    row count of their source table); it sizes B.  With more than one
+    group the repartition is EXPLICIT (user repartitions are exempt from
+    AQE coalescing): the shuffle input is thin array rows but the worker
+    compute is pair-mass-sized, which AQE cannot see.  One group is left
+    to the grouping's own hash exchange, which AQE coalesces to one
+    task; a repartition to one partition would plan as SinglePartition,
+    so the plan would no longer be keyed by block pair."""
+    bcount = block_count(n_items)
     blocked = items.withColumn(
         "__blk", F.pmod(F.xxhash64(F.col("id")), F.lit(bcount)).cast("int")
     )
@@ -100,11 +121,9 @@ def blocked_pairs(items: DataFrame, worker, schema: str) -> DataFrame:
     # pruning — project explicitly before the exchange)
     thin = rep.select("__bp_i", "__bp_j", "__side", *items.columns)
     n_groups = bcount * (bcount + 1) // 2
-    return (
-        thin.repartition(n_groups, "__bp_i", "__bp_j")
-        .groupBy("__bp_i", "__bp_j")
-        .applyInPandas(worker, schema)
-    )
+    if n_groups > 1:
+        thin = thin.repartition(n_groups, "__bp_i", "__bp_j")
+    return thin.groupBy("__bp_i", "__bp_j").applyInPandas(worker, schema)
 
 
 def _concat_lists(cells) -> tuple[np.ndarray, np.ndarray]:

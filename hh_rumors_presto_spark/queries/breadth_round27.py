@@ -130,6 +130,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         items,
         weighted_topk_fn(_AA_TOP),
         "id_a long, id_b long, aa_micro long, n_shared long",
+        io.table_num_rows(sf_dir, "customer"),
     )
     w = Window.orderBy(F.col("aa_micro").desc(), "id_a", "id_b")
     return (

@@ -132,6 +132,7 @@ def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
             rational=(_PP_NUM, _PP_DEN), emit_counts=True, emit_jaccard=True
         ),
         "id_a long, id_b long, inter long, uni long, jaccard double",
+        io.table_num_rows(sf_dir, "documents"),
     ).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),

@@ -164,9 +164,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = io.load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 == 0
     )
-    if io.table_num_rows(sf_dir, "documents") < _NGRAM_DENSE_MIN_DOCS:
+    n_docs = io.table_num_rows(sf_dir, "documents")
+    if n_docs < _NGRAM_DENSE_MIN_DOCS:
         return _ngram_jaccard_join(docs)
-    return _ngram_jaccard_blocked(docs)
+    return _ngram_jaccard_blocked(docs, n_docs)
 
 
 def _ngram_jaccard_join(docs: DataFrame) -> DataFrame:
@@ -212,11 +213,12 @@ def _ngram_jaccard_join(docs: DataFrame) -> DataFrame:
     )
 
 
-def _ngram_jaccard_blocked(docs: DataFrame) -> DataFrame:
+def _ngram_jaccard_blocked(docs: DataFrame, n_docs: int) -> DataFrame:
     """Blocked dense-GEMM branch (large corpora): intersection counts as
     exact-integer block matmuls; no pair-sized exchange or aggregate.
     Each shingle is prefixed with ``len(lang):lang:`` — collision-free,
-    so a shared key implies the same lang and the same shingle."""
+    so a shared key implies the same lang and the same shingle.
+    ``n_docs`` bounds the rows of ``docs``."""
     from hh_rumors_presto_spark.operators.pairblocks import (
         blocked_pairs,
         overlap_pairs_fn,
@@ -240,6 +242,7 @@ def _ngram_jaccard_blocked(docs: DataFrame) -> DataFrame:
         items,
         overlap_pairs_fn(float_threshold=0.05, emit_jaccard=True),
         "id_a long, id_b long, jaccard double",
+        n_docs,
     ).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
@@ -902,6 +905,7 @@ def _bigram_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_bigram_items(spark, sf_dir),
         overlap_pairs_fn(rational=(1, 2)),
         "id_a long, id_b long",
+        io.table_num_rows(sf_dir, "documents"),
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from hh_rumors_presto_spark import io
 from hh_rumors_presto_spark.registry import query
 from hh_rumors_presto_spark.streaming import (
     read_events_stream,
@@ -53,7 +54,9 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(28,2)")).alias("total_value"),
         )
     )
-    out = run_stream_to_df(agg, output_mode="complete")
+    out = run_stream_to_df(
+        agg, output_mode="complete", n_rows=io.table_num_rows(sf_dir, "events")
+    )
     return out.select(
         F.col("window.start").alias("window_start"),
         "event_type",
@@ -86,7 +89,9 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum(F.col("value").cast("decimal(28,2)")).alias("total_value"),
     )
-    out = run_stream_to_df(agg, output_mode="complete")
+    out = run_stream_to_df(
+        agg, output_mode="complete", n_rows=io.table_num_rows(sf_dir, "events")
+    )
     return out.select(
         F.col("window.start").alias("window_start"),
         "n",
@@ -133,7 +138,9 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(
         F.session_window("ts", "30 minutes"), "user_id"
     ).agg(F.count("*").alias("n_events"))
-    out = run_stream_to_df(agg, output_mode="complete")
+    out = run_stream_to_df(
+        agg, output_mode="complete", n_rows=io.table_num_rows(sf_dir, "events")
+    )
     return out.select(
         "user_id",
         F.col("session_window.start").alias("session_start"),
@@ -160,7 +167,9 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return run_stream_to_df(dedup, output_mode="append")
+    return run_stream_to_df(
+        dedup, output_mode="append", n_rows=io.table_num_rows(sf_dir, "events")
+    )
 
 
 @query(
@@ -209,7 +218,9 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_stream_to_df(agg, output_mode="append")
+    out = run_stream_to_df(
+        agg, output_mode="append", n_rows=io.table_num_rows(sf_dir, "events")
+    )
     return out.select(F.col("window.start").alias("window_start"), "n")
 
 
@@ -225,8 +236,6 @@ def _mod5_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical source."""
     import os
     import shutil
-
-    from hh_rumors_presto_spark import io
 
     ev = io.load_events(spark, sf_dir)
     d = io.scoped_tmp_dir(spark, "mod5", sf_dir)
@@ -345,11 +354,12 @@ def stream_watermark_latedrop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count("*").alias("n"))
     )
-    emitted = run_stream_to_df(agg, output_mode="append").select(
+    emitted = run_stream_to_df(
+        agg, output_mode="append", n_rows=io.table_num_rows(sf_dir, "events")
+    ).select(
         F.unix_timestamp(F.col("window.start")).alias("window_start_epoch_s"),
         F.col("n").alias("n_emitted"),
     )
-    from hh_rumors_presto_spark import io
 
     totals = (
         io.load_events(spark, sf_dir)
@@ -648,7 +658,9 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("low"),
         F.max_by("value", tie).alias("close"),
     )
-    out = run_stream_to_df(agg, output_mode="complete")
+    out = run_stream_to_df(
+        agg, output_mode="complete", n_rows=io.table_num_rows(sf_dir, "events")
+    )
     return out.select(
         "user_id",
         F.col("window.start").alias("window_start"),
@@ -787,7 +799,9 @@ def stream_session_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = run_stream_to_df(out, output_mode="update")
+    sink = run_stream_to_df(
+        out, output_mode="update", n_rows=io.table_num_rows(sf_dir, "events")
+    )
     w = W.partitionBy("user_id")
     return (
         sink.withColumn("_mx", F.max("n_events_total").over(w))

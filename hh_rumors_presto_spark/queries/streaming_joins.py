@@ -13,6 +13,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hh_rumors_presto_spark import io
 from hh_rumors_presto_spark.registry import query
 from hh_rumors_presto_spark.streaming import read_events_stream
 
@@ -72,7 +73,9 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only mode for stream-stream inner joins)
     from hh_rumors_presto_spark.streaming import run_stream_to_df
 
-    return run_stream_to_df(joined, output_mode="append")
+    return run_stream_to_df(
+        joined, output_mode="append", n_rows=io.table_num_rows(sf_dir, "events")
+    )
 
 
 @query(
@@ -359,7 +362,9 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("click_id", "purchase_id", "user_id")
     from hh_rumors_presto_spark.streaming import run_stream_to_df
 
-    return run_stream_to_df(joined, output_mode="append")
+    return run_stream_to_df(
+        joined, output_mode="append", n_rows=io.table_num_rows(sf_dir, "events")
+    )
 
 
 @query(

@@ -149,7 +149,10 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_users")
     )
     return run_stream_to_df(
-        agg, output_mode="complete", state_store="rocksdb"
+        agg,
+        output_mode="complete",
+        state_store="rocksdb",
+        n_rows=io.table_num_rows(sf_dir, "events"),
     ).select("event_type", F.col("n_users").cast("long"))
 
 

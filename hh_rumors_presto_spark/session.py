@@ -23,6 +23,20 @@ def default_parallelism() -> int:
     return int(raw)
 
 
+def tasks_for_rows(rows: int, rows_per_task: int, cap: int) -> int:
+    """Task fan-out for an input of ``rows`` rows: one task per
+    ``rows_per_task`` rows, at least 1 and at most ``cap``.  ``rows`` is
+    an input statistic (a parquet footer row count, io.table_num_rows),
+    so small inputs pay one task's fixed start-up cost instead of
+    ``cap`` of them."""
+    if rows < 0 or rows_per_task < 1 or cap < 1:
+        raise ValueError(
+            f"tasks_for_rows needs rows >= 0, rows_per_task >= 1, cap >= 1; "
+            f"got {rows}, {rows_per_task}, {cap}"
+        )
+    return max(1, min(cap, -(-rows // rows_per_task)))
+
+
 # Keys whose result values depend on the SESSION TIMEZONE — the inherent
 # LTZ wall-clock interpretation of event timestamps (windowing, day/hour
 # bucketing, sessionization boundaries all shift with the zone). The list

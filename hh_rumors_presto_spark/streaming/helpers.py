@@ -15,6 +15,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hh_rumors_presto_spark.session import default_parallelism, tasks_for_rows
+
+# Source rows per state-store partition.  Each partition is one more
+# state store to load and commit per micro-batch.  Medians of 4-5 warm
+# runs on a 4-core host, 1/2/4/8 partitions: at 100k events
+# stream_tumbling 0.75/0.87/0.85/0.98 s, stream_dedup 0.76/0.79/0.86/
+# 0.98 s, stream_join 1.85/1.76/1.91/2.88 s; at 1M events stream_join
+# 6.5/4.1/3.2/3.9 s and stream_dedup 1.62/1.48/1.34/1.51 s.  So 100k
+# rows run on one partition and 1M rows on four.
+_ROWS_PER_STATE_PARTITION = 250_000
+
+
 def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """Stream-source schema for the events fixture.
 
@@ -166,18 +178,21 @@ def read_events_stream(
 def run_stream_to_df(
     stream_df: DataFrame,
     output_mode: str = "complete",
-    state_partitions: int | None = 8,
+    state_partitions: int | None = None,
     state_store: str | None = None,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Drive a streaming DataFrame to completion (availableNow) into a
     memory sink; return the sink contents as a batch DataFrame.
 
     ``state_partitions`` sizes the state store (streaming shuffles have no
     AQE, so the session's batch-oriented shuffle.partitions is wrong for
-    them): the count is fixed at first planning and should track stateful
-    key cardinality / executor cores — 8 suits the local fixtures, a
-    cluster job would pass cores-proportional values. Set around the
-    synchronous run and restored after.
+    them); the count is fixed at first planning.  When it is not given,
+    it is one partition per ``_ROWS_PER_STATE_PARTITION`` source rows,
+    capped at the core count (session.tasks_for_rows), where ``n_rows``
+    bounds the stream's source rows (the footer row count of the source
+    table).  One of the two must be given.  Set around the synchronous
+    run and restored after.
 
     ``state_store="rocksdb"`` forces the RocksDB provider for THIS query
     regardless of HH_STATE_STORE — the stream_rocksdb_state key uses it
@@ -185,11 +200,16 @@ def run_stream_to_df(
     """
     import os
 
+    if state_partitions is None:
+        if n_rows is None:
+            raise ValueError("run_stream_to_df needs state_partitions or n_rows")
+        state_partitions = tasks_for_rows(
+            n_rows, _ROWS_PER_STATE_PARTITION, default_parallelism()
+        )
     spark = stream_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # HH_STATE_STORE=rocksdb flips every stateful operator in this query
     # to the RocksDB state store (spill-to-disk state, the provider a
     # production cluster runs for large keyed state; rocksdbjni ships in
@@ -224,4 +244,8 @@ def run_stream_to_df(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
         spark.conf.set(prov_conf, old_prov)
-    return spark.table(name)
+    # the resolved plan reads the sink itself, so the catalog entry can
+    # go: otherwise every run keeps its result for the session's life
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out

@@ -23,7 +23,9 @@ def test_ngram_jaccard_branches_bit_identical(spark, sf_dir):
         F.col("doc_id") % 5 == 0
     )
     join_rows = _rows(xd._ngram_jaccard_join(docs))
-    blocked_rows = _rows(xd._ngram_jaccard_blocked(docs))
+    blocked_rows = _rows(
+        xd._ngram_jaccard_blocked(docs, io.table_num_rows(sf_dir, "documents"))
+    )
     assert len(join_rows) > 0  # fixture must actually exercise the pairs
     assert join_rows == blocked_rows
 
@@ -48,7 +50,7 @@ def test_ngram_jaccard_branches_agree_on_lang_edges(spark):
     )
     join_rows = _rows(xd._ngram_jaccard_join(docs))
     assert [r[:2] for r in join_rows] == [(1, 5), (7, 8)]
-    assert _rows(xd._ngram_jaccard_blocked(docs)) == join_rows
+    assert _rows(xd._ngram_jaccard_blocked(docs, 8)) == join_rows
 
 
 def test_ngram_jaccard_switch_reads_footer_stat(sf_dir):

@@ -233,7 +233,7 @@ def test_replication_covers_each_pair_exactly_once():
     # block b is side A of (b, j>=b) and side B of (i<b, b).  Every
     # unordered block pair must meet in exactly one group with
     # opposite sides (or the diagonal group once).
-    for bcount in (2, 3, 5, 8):
+    for bcount in (1, 2, 3, 5, 8):
         for ba, bb in itertools.product(range(bcount), repeat=2):
             meets = []
             for i, j in itertools.product(range(bcount), repeat=2):

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from hh_rumors_presto_spark.queries.breadth_round9 import (
     _HB_N,
     _HB_TABLE,
@@ -110,10 +112,16 @@ def _bigrams(text: str) -> frozenset:
     )
 
 
-def test_ppjoin_no_false_negatives_vs_brute_force(spark):
+@pytest.mark.parametrize("bcount", [1, 4])
+def test_ppjoin_no_false_negatives_vs_brute_force(spark, monkeypatch, bcount):
     """The prefix-collision guarantee is a theorem; prove it holds on
     the fixture by brute-forcing ALL pairs at sf0.001 and comparing the
-    exact survivor set (pairs AND counts) with the query's output."""
+    exact survivor set (pairs AND counts) with the query's output.  The
+    500-document fixture sizes to one block, so B is also forced to 4:
+    both the single-group and the off-diagonal worker paths run."""
+    from hh_rumors_presto_spark.operators import pairblocks
+
+    monkeypatch.setattr(pairblocks, "block_count", lambda n_items: bcount)
     sf = "/root/testdata/sf0.001"
     docs = {
         r.doc_id: _bigrams(r.text)

@@ -24,6 +24,7 @@ def test_tumbling_batch_equivalence(spark, sf_dir):
     streamed = run_stream_to_df(
         ev_s.groupBy(F.window("ts", "1 hour")).agg(F.count("*").alias("n")),
         output_mode="complete",
+        n_rows=io.table_num_rows(sf_dir, "events"),
     ).select(F.col("window.start").alias("ws"), "n")
 
     ev_b = io.load_events(spark, sf_dir)
@@ -239,7 +240,9 @@ def test_stream_stateful_multibatch_invariant(spark, sf_dir, tmp_path):
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    sink = run_stream_to_df(out, output_mode="update")
+    sink = run_stream_to_df(
+        out, output_mode="update", n_rows=io.table_num_rows(sf_dir, "events")
+    )
     n_users = ev.select("user_id").distinct().count()
     assert sink.count() > n_users, (
         "sink holds one row per user — the run collapsed to a single "
@@ -308,7 +311,9 @@ def test_stream_session_state_out_of_order_batches(spark, sf_dir, tmp_path):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = run_stream_to_df(out, output_mode="update")
+    sink = run_stream_to_df(
+        out, output_mode="update", n_rows=io.table_num_rows(sf_dir, "events")
+    )
     n_users = ev.select("user_id").distinct().count()
     assert (
         sink.select("user_id", "n_events_total").distinct().count() > n_users

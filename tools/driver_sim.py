@@ -22,11 +22,13 @@ rounds of local-green/driver-red rows: it re-runs each key under the
 session variations the external driver plausibly differs in — a fresh
 DEFAULT-conf session (200 shuffle partitions, default AQE), a forced
 multi-file/out-of-order micro-batch streaming source (HH_STREAM_SPLIT),
-and a non-UTC session timezone — and diffs every variant's value hash
+a non-UTC session timezone, and sessions at SPARK_GRAFT_CPUS=1 and =8
+(local[1] and local[8]; the pair-block count and the streaming state
+partitions follow the core count) — and diffs every variant's value hash
 against the canonical session's. Library versions are printed alongside.
-A key is staging-ready only when canonical == defaults == splitstream;
-the tz variant is reported separately (informational: a tz-divergent key
-is fragile only if the driver ever runs non-UTC).
+A key is staging-ready only when canonical == defaults == splitstream ==
+cores1 == cores8; the tz variant is reported separately (informational: a
+tz-divergent key is fragile only if the driver ever runs non-UTC).
 
 Usage:
     python tools/driver_sim.py                 # first 50 (the live window)
@@ -58,10 +60,10 @@ def value_hash(df) -> str:
     return m.hexdigest()
 
 
-def _session(partitions: int | None, tz: str | None = "UTC"):
+def _session(partitions: int | None, tz: str | None = "UTC", cpus: int = 32):
     from pyspark.sql import SparkSession
 
-    b = SparkSession.builder.master("local[32]").config(
+    b = SparkSession.builder.master(f"local[{cpus}]").config(
         "spark.ui.enabled", "false"
     )
     if partitions is not None:
@@ -77,13 +79,18 @@ def _session(partitions: int | None, tz: str | None = "UTC"):
 # "defaults" leaves shuffle.partitions and AQE at Spark's own defaults
 # (what a bare getOrCreate() in the driver gives); "splitstream" forces
 # the streaming file source through 5 interleaved files at one file per
-# micro-batch; "tz" runs the whole surface in a non-UTC session zone.
+# micro-batch; "tz" runs the whole surface in a non-UTC session zone;
+# "cores1"/"cores8" run on 1 and 8 local cores with SPARK_GRAFT_CPUS set
+# to match, which moves every fan-out sized from the core count.
 _ENV_VARIANTS = [
     ("canonical", {"partitions": 32, "tz": "UTC"}, {}),
     ("defaults", {"partitions": None, "tz": "UTC"}, {}),
     ("splitstream", {"partitions": 32, "tz": "UTC"}, {"HH_STREAM_SPLIT": "5"}),
     ("tz", {"partitions": 32, "tz": "America/New_York"}, {}),
+    ("cores1", {"partitions": 32, "tz": "UTC", "cpus": 1}, {"SPARK_GRAFT_CPUS": "1"}),
+    ("cores8", {"partitions": 32, "tz": "UTC", "cpus": 8}, {"SPARK_GRAFT_CPUS": "8"}),
 ]
+_HARD_VARIANTS = ("defaults", "splitstream", "cores1", "cores8")
 
 
 def _env_parity(ent, sf: str, keys_arg: list[str], window: int) -> int:
@@ -98,9 +105,9 @@ def _env_parity(ent, sf: str, keys_arg: list[str], window: int) -> int:
     hashes: dict[str, dict[str, str]] = {}
     keys: list[str] = []
     for name, conf, env in _ENV_VARIANTS:
-        for k, v in env.items():
-            os.environ[k] = v
-        spark = _session(conf["partitions"], conf["tz"])
+        saved = {k: os.environ.get(k) for k in env}
+        os.environ.update(env)
+        spark = _session(conf["partitions"], conf["tz"], conf.get("cpus", 32))
         try:
             q = ent.queries()
             keys = keys_arg or list(q)[:window]
@@ -114,12 +121,15 @@ def _env_parity(ent, sf: str, keys_arg: list[str], window: int) -> int:
             print(f"[{name}] {len(row)} keys hashed", flush=True)
         finally:
             spark.stop()
-            for k in env:
-                os.environ.pop(k, None)
+            for k, v in saved.items():
+                if v is None:
+                    os.environ.pop(k, None)
+                else:
+                    os.environ[k] = v
 
     base = hashes["canonical"]
     hard_bad: list[str] = []
-    for name in ("defaults", "splitstream"):
+    for name in _HARD_VARIANTS:
         diff = [k for k in keys if hashes[name][k] != base[k]]
         hard_bad.extend(d for d in diff if d not in hard_bad)
         print(f"{name} vs canonical: " + (str(diff) if diff else "identical"))
@@ -133,7 +143,7 @@ def _env_parity(ent, sf: str, keys_arg: list[str], window: int) -> int:
         print(f"errors under canonical: {errs}")
     print(
         f"\nenv-parity: {len(keys) - len(hard_bad)}/{len(keys)} stable "
-        f"across defaults+splitstream; {len(tz_diff)} tz-sensitive"
+        f"across {'+'.join(_HARD_VARIANTS)}; {len(tz_diff)} tz-sensitive"
     )
     return 1 if hard_bad or errs else 0
 
