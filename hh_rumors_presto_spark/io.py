@@ -4,13 +4,21 @@ Analog of the reference's paginated HTTP scan stage
 (/root/reference/netlify/functions/fetchRumors.js:14-30,126-151) generalized
 to columnar sources: ``spark.read.parquet`` gives predicate pushdown, column
 pruning and partition-parallel scans for free — see SURVEY.md §2.A row 5.
+
+Footer rule: every fixture scan passes the schema of the table's parquet
+footer (:func:`read_footer`), so no schema-inference job runs while a
+query is built.  The footer is a planner statistic read at every load,
+not a result cache.  Directories that Spark wrote are still inferred.
 """
 
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -25,67 +33,93 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SMOKE_SF_DIR = "/root/testdata/sf0.001"
+
+class Footer(NamedTuple):
+    schema: T.StructType
+    num_rows: int
+    num_row_groups: int
 
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def table_num_rows(sf_dir: str, name: str) -> int:
-    """Exact row count of a fixture table from parquet FOOTER metadata —
-    no Spark job, no data read. A planner statistic (r12, guide §3: pick
-    the strategy from input size, the way Spark's own broadcast
-    threshold does), used to choose between result-identical physical
-    shapes; it is not a result cache."""
-    import pyarrow.dataset as ds
+def read_footer(path: str) -> Footer:
+    """Spark schema, row count and row-group count of a parquet file, or
+    of a directory of part files that share one schema (counts summed),
+    from footer metadata alone.  Types map as Spark infers them: a
+    timestamp not adjusted to UTC is TIMESTAMP_NTZ, and TIMESTAMP(NANOS)
+    is LONG, as ``spark.sql.legacy.parquet.nanosAsLong`` reads it.  INT96
+    timestamps (Spark's default output for TIMESTAMP) would map to LONG
+    too, which is one reason directories Spark wrote keep inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    return ds.dataset(table_path(sf_dir, name)).count_rows()
+    files = sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ) if os.path.isdir(path) else [path]
+    if not files:
+        raise FileNotFoundError(f"no parquet part files in {path}")
+    metas = [pq.read_metadata(f) for f in files]
+    arrow = metas[0].schema.to_arrow_schema()
+    for f, m in zip(files[1:], metas[1:]):
+        if not m.schema.to_arrow_schema().equals(arrow):
+            raise ValueError(f"{f}: schema differs from {files[0]}")
+    arrow = pa.schema(
+        f.with_type(pa.int64())
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        else f
+        for f in arrow
+    )
+    return Footer(
+        from_arrow_schema(arrow, prefer_timestamp_ntz=True),
+        sum(m.num_rows for m in metas),
+        sum(m.num_row_groups for m in metas),
+    )
+
+
+def table_num_rows(sf_dir: str, name: str) -> int:
+    """Exact row count of a fixture table from its parquet footer: a
+    planner statistic that picks between result-identical plan shapes."""
+    return read_footer(table_path(sf_dir, name)).num_rows
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table. Lazy: no data is read until an action.
-
-    ``events`` is routed through :func:`load_events` (ns-timestamp
-    normalization); everything else is a plain parquet scan.
-    """
+    """Scan one fixture table with its footer schema; ``events`` goes
+    through :func:`load_events`. Lazy: no Spark job runs here."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    return spark.read.schema(read_footer(path).schema).parquet(path)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load the events table with ``ts`` as a proper TimestampType.
-
-    The fixture generation has shipped ``ts`` two ways across rounds:
-
-    - parquet TIMESTAMP(NANOS), which Spark's parquet reader rejects
-      outright ([PARQUET_TYPE_ILLEGAL]). The supported path is
-      ``spark.sql.legacy.parquet.nanosAsLong`` (public Spark conf,
-      SPARK-40819): read nanos as LONG, then integer-div to micros —
-      truncation, exactly what DuckDB's TIMESTAMP_NS -> TIMESTAMP cast
-      does, so oracle SQL can use ``CAST(ts AS TIMESTAMP)``.
-    - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads
-      as TIMESTAMP_NTZ; normalize to TIMESTAMP (session tz is UTC) so
-      downstream ``unix_micros``/range frames see one type either way.
-
-    Branch on the loaded dtype so both fixture vintages work unchanged.
-    """
-    from pyspark.sql import functions as F
-
+    """Scan the events table with ``ts`` as a microsecond TimestampType."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
-    ts_type = dict(df.dtypes)["ts"]
-    if ts_type == "bigint":
+    path = table_path(sf_dir, "events")
+    schema = read_footer(path).schema
+    return events_ts_micros(spark.read.schema(schema).parquet(path), schema)
+
+
+def events_ts_micros(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Normalize ``ts`` of events rows read with footer ``schema`` to a
+    microsecond TimestampType.  The fixture ships ``ts`` two ways:
+
+    - parquet TIMESTAMP(NANOS), which Spark reads only as LONG, under
+      ``spark.sql.legacy.parquet.nanosAsLong`` (SPARK-40819); integer-div
+      to micros truncates, exactly as DuckDB's TIMESTAMP_NS -> TIMESTAMP
+      cast does, so oracle SQL can use ``CAST(ts AS TIMESTAMP)``;
+    - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false), read as
+      TIMESTAMP_NTZ and cast to TIMESTAMP (the session tz is UTC).
+    """
+    if isinstance(schema["ts"].dataType, T.LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

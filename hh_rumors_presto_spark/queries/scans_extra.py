@@ -422,9 +422,7 @@ def scan_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_metadata.file_path`` (the mechanics under test). The metadata
     column is generated per-split at scan time — no extra I/O, no
     shuffle beyond the per-file aggregate."""
-    import os
-
-    df = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
+    df = io.load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("_metadata.file_path").alias("fp")
     )
     return (

@@ -233,7 +233,8 @@ def _mod5_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     modification time, then path) serves them in m-order, one per
     trigger. Rebuilt per call under an applicationId-scoped dir —
     pennies at fixture scale, and a driver double-run gets a fresh,
-    identical source."""
+    identical source. The files are ``ev`` written back, so the stream
+    reads them with ``ev.schema``."""
     import os
     import shutil
 
@@ -266,14 +267,12 @@ def _mod5_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.move(os.path.join(part_dir, part), dest)
         shutil.rmtree(part_dir)
         os.utime(dest, (1_700_000_000 + m, 1_700_000_000 + m))
-    schema = spark.read.parquet(d).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(ev.schema)
         .format("parquet")
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", "1")
         .load(d)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
     )
 
 

@@ -185,7 +185,7 @@ class TxnLogDataSource(DataSource):
         # read-side schema comes from the first planned file's parquet
         # footer (option-aware: a time-travel read infers from the
         # pinned snapshot); an empty plan has no schema to offer
-        import pyarrow.parquet as pq
+        from hh_rumors_presto_spark import io
 
         files = _read_plan(self.options)
         if not files:
@@ -193,10 +193,7 @@ class TxnLogDataSource(DataSource):
                 "hh_txnlog: cannot infer schema from an empty table "
                 "or empty version range"
             )
-        arrow = pq.read_schema(files[0])
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        return from_arrow_schema(arrow)
+        return io.read_footer(files[0]).schema
 
     def reader(self, schema) -> "TxnLogReader":
         return TxnLogReader(self.options, schema)

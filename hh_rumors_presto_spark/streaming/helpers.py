@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hh_rumors_presto_spark import io
 from hh_rumors_presto_spark.session import default_parallelism, tasks_for_rows
 
 # Source rows per state-store partition.  Each partition is one more
@@ -27,38 +28,25 @@ from hh_rumors_presto_spark.session import default_parallelism, tasks_for_rows
 _ROWS_PER_STATE_PARTITION = 250_000
 
 
-def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Stream-source schema for the events fixture.
-
-    ``readStream`` needs an explicit schema; derive it from the batch
-    reader's footer inference so both fixture vintages work (``ts`` as
-    nanos-as-long in older fixtures, TIMESTAMP_NTZ micros in newer ones —
-    see io.load_events).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import os
-
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-
-
-def _split_events_dir(spark: SparkSession, sf_dir: str, n: int) -> str:
+def _split_events_dir(
+    spark: SparkSession, sf_dir: str, n: int, schema: T.StructType
+) -> str:
     """Materialize the events fixture as ``n`` interleaved parquet files
     (keyed by event_id % n) under a deterministic temp dir, so a stream
     with maxFilesPerTrigger=1 is forced through n out-of-order
     micro-batches — the environment-parity knob driver_sim --env-parity
     turns (the driver's micro-batching is outside our control; every
-    streaming key must be invariant to it). Idempotent per (sf_dir, n)."""
+    streaming key must be invariant to it). The copy is written with the
+    fixture's footer ``schema``, so it reads back with that schema too.
+    Idempotent per (sf_dir, n)."""
     import hashlib
     import os
     import tempfile
 
-    # Cache tag includes the fixture's (mtime, size): a regenerated
-    # events.parquet at the same path must invalidate the split copy, or
-    # every HH_STREAM_SPLIT run would silently reuse stale data
-    # (round-5 ADVICE item). If the source is a DIRECTORY of part files
-    # (not the single-file fixture), stat the newest data file instead —
-    # os.stat on the directory itself would not reflect content rewrites
-    # (round-6 ADVICE item).
+    # Cache tag includes the fixture's (mtime, size), so a regenerated
+    # events.parquet invalidates the split copy.  For a directory of part
+    # files, stat the newest part: the directory's own stat does not
+    # change when a part is rewritten.
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     if os.path.isdir(src):
@@ -80,26 +68,16 @@ def _split_events_dir(spark: SparkSession, sf_dir: str, n: int) -> str:
     tmp = tempfile.gettempdir()
     out = os.path.join(tmp, f"{prefix}{tag}_{n}")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        # best-effort prune of older split copies for this fixture (other
-        # tags = superseded content; same tag other n values stay valid).
-        # AGE-GATED (round-8, ADVICE item): only dirs untouched for >1h
-        # are removed, so a concurrent session still streaming from an
-        # older-tag copy (fixture regenerated mid-run) keeps its source —
-        # a just-superseded dir survives until every plausible reader is
-        # done. Legacy-format dirs (pre-round-6 `hh_evsplit_<tag8>_<n>`,
-        # no sf_dir prefix — never matched by any current prefix and so
-        # never pruned before) are swept under the same age gate.
-        import re
+        # Best-effort prune of superseded split copies of this fixture
+        # (other tags; the same tag at other n stays valid).  Only dirs
+        # untouched for over an hour go, so a session still streaming
+        # from an older copy keeps its source.
         import shutil
         import time
 
         cutoff = time.time() - 3600
-        legacy = re.compile(r"^hh_evsplit_[0-9a-f]{8}_\d+$")
         for d in os.listdir(tmp):
-            superseded = d.startswith(prefix) and not d.startswith(
-                f"{prefix}{tag}_"
-            )
-            if not (superseded or legacy.match(d)):
+            if not d.startswith(prefix) or d.startswith(f"{prefix}{tag}_"):
                 continue
             p = os.path.join(tmp, d)
             try:
@@ -107,7 +85,7 @@ def _split_events_dir(spark: SparkSession, sf_dir: str, n: int) -> str:
                     shutil.rmtree(p, ignore_errors=True)
             except OSError:
                 pass
-        ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        ev = spark.read.schema(schema).parquet(src)
         ev.repartition(n, F.col("event_id") % n).write.mode(
             "overwrite"
         ).parquet(out)
@@ -121,8 +99,9 @@ def read_events_stream(
     single_batch: bool = False,
     force_split: int | None = None,
 ) -> DataFrame:
-    """File-source stream over the events fixture with ``ts`` normalized to
-    a microsecond TimestampType (same truncation as io.load_events).
+    """File-source stream over the events fixture, read with the fixture's
+    footer schema, with ``ts`` normalized to a microsecond TimestampType
+    (io.events_ts_micros, as in io.load_events).
 
     HH_STREAM_SPLIT=<n> (env var, harness-only) reroutes the source
     through n interleaved files at one file per micro-batch, forcing the
@@ -151,17 +130,17 @@ def read_events_stream(
         force_split
         or int(os.environ.get("HH_STREAM_SPLIT", "0") or 0)
     )
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = io.read_footer(io.table_path(sf_dir, "events")).schema
     if split_n > 1:
         src_dir, glob_filter = (
-            _split_events_dir(spark, sf_dir, split_n),
+            _split_events_dir(spark, sf_dir, split_n, schema),
             "*.parquet",
         )
-        schema = spark.read.parquet(src_dir).schema
         if max_files_per_trigger is None:
             max_files_per_trigger = 1
     else:
         src_dir, glob_filter = sf_dir, "events.parquet"
-        schema = _events_schema(spark, sf_dir)
     reader = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -169,10 +148,7 @@ def read_events_stream(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.load(src_dir)
-    if dict(df.dtypes)["ts"] == "bigint":
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return io.events_ts_micros(reader.load(src_dir), schema)
 
 
 def run_stream_to_df(
