@@ -1,5 +1,5 @@
 """Round-17 breadth batch: personalized PageRank, a streaming
-leaderboard on the persisted-state merge pattern, and generalized-ESD
+leaderboard on a persisted-state fold, and generalized-ESD
 outlier peeling.
 
 - ``graph_ppr_seeded`` — personalized PageRank (random walk with
@@ -8,9 +8,8 @@ outlier peeling.
   (graph.py module docstring) so 3 unrolled rounds are bit-identical
   to the SQL oracle.
 - ``stream_topk_merge`` — a continuously-maintained per-key top-3
-  leaderboard built on the foreachBatch → persisted-state merge
-  pattern that ``stream_rollup_merge`` proved out: each micro-batch's
-  group-limited top-k merges with the stored top-k (insert-only
+  leaderboard folded by ``fold_stream_state``: each micro-batch merges
+  with the stored top-k and is cut back to the top-k (insert-only
   streams make this exact), oracle = the from-scratch batch top-k.
 - ``ts_esd_outliers`` — 3 rounds of generalized-ESD outlier peeling
   (Rosner 1983) per series: argmax |deviation| by EXACT integer
@@ -19,11 +18,6 @@ outlier peeling.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,7 +31,10 @@ from hh_rumors_presto_spark.queries.graph import (
     _edges_by_dst,
 )
 from hh_rumors_presto_spark.registry import query
-from hh_rumors_presto_spark.streaming import read_events_stream
+from hh_rumors_presto_spark.streaming import (
+    fold_stream_state,
+    read_events_stream,
+)
 
 # --------------------------------------------------------------------------
 # graph_ppr_seeded
@@ -218,22 +215,17 @@ _STK_K = 3
 )
 def stream_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuously-maintained per-key top-3 leaderboard over the event
-    stream, built on the foreachBatch → persisted-state merge pattern
-    (stream_rollup_merge's proven shape, not memory-sink semantics):
-    each micro-batch reduces to its own group-limited top-3, merges
-    with the stored top-3, and re-ranks — k + |batch topk| rows per
-    key per refresh. Insert-only streams make this EXACT (a new event
-    can displace but never resurrect), so the final state equals the
-    from-scratch batch top-3 the oracle computes. Two separate stream
-    runs feed disjoint halves, proving the state really is merged.
+    stream, folded by ``fold_stream_state`` (never memory-sink rows):
+    each micro-batch merges with the stored top-3 and is re-ranked —
+    k + |batch| rows per key per refresh. Insert-only streams make this
+    EXACT (a new event can displace but never resurrect), so the final
+    state equals the from-scratch batch top-3 the oracle computes. Two
+    separate stream runs feed disjoint halves, proving the state really
+    is merged.
 
     Scale: per refresh the merge touches O(k·|keys| + |batch|) rows;
     state is a keyed parquet rewrite that would be a partition-scoped
     MERGE on a lakehouse table."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_stk_{uuid.uuid4().hex[:8]}"
-    )
-    state = {"path": None, "version": 0}
     w = Window.partitionBy("event_type").orderBy(
         F.col("cents").desc(), "event_id"
     )
@@ -245,52 +237,19 @@ def stream_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rnk")
         )
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = topk(
-            batch_df.filter(F.col("value").isNotNull()).select(
-                "event_type",
-                "event_id",
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
-                .alias("cents"),
-            )
+    halves = [
+        read_events_stream(spark, sf_dir)
+        .filter((F.col("event_id") % 2 == half) & F.col("value").isNotNull())
+        .select(
+            "event_type",
+            "event_id",
+            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
+            .cast("long")
+            .alias("cents"),
         )
-        prev = state["path"]
-        if prev is not None:
-            old = batch_df.sparkSession.read.parquet(prev)
-            partial = topk(old.unionByName(partial.select(old.columns)))
-        state["version"] += 1
-        new_path = os.path.join(out_dir, f"state_v{state['version']}")
-        partial.write.parquet(new_path)
-        state["path"] = new_path
-        if prev is not None:
-            shutil.rmtree(prev, ignore_errors=True)
-
-    try:
-        for half in (0, 1):
-            ev = read_events_stream(spark, sf_dir).filter(
-                F.col("event_id") % 2 == half
-            )
-            q = (
-                ev.writeStream.foreachBatch(merge_batch)
-                .trigger(availableNow=True)
-                .option(
-                    "checkpointLocation", os.path.join(out_dir, f"_chk{half}")
-                )
-                .start()
-            )
-            q.awaitTermination()
-        if state["path"] is None:
-            final = spark.createDataFrame(
-                [], "event_type string, event_id bigint, cents bigint"
-            )
-        else:
-            final = spark.read.parquet(state["path"]).localCheckpoint(
-                eager=True
-            )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-    return final.select(
+        for half in (0, 1)
+    ]
+    return fold_stream_state(halves, topk).select(
         "event_type",
         "event_id",
         "cents",

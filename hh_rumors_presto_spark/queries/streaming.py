@@ -27,6 +27,7 @@ from pyspark.sql import Window as W
 from hh_rumors_presto_spark import io
 from hh_rumors_presto_spark.registry import query
 from hh_rumors_presto_spark.streaming import (
+    fold_stream_state,
     read_events_stream,
     run_stream_to_df,
 )
@@ -454,17 +455,8 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batching invariance: ``n_events`` is strictly monotone across the
     micro-batches in which a key updates, so the key's FINAL state is its
     max-``n_events`` snapshot regardless of how the runner batched the
-    source. After two driver-red rounds betting on update-mode
-    memory-sink semantics, the answer path now uses the foreachBatch →
-    persisted-state merge pattern proven green in the same window
-    (stream_rollup_merge): each epoch's emitted snapshots merge into a
-    persisted per-user latest-state parquet (read-modify-write keyed by
-    user_id), and the answer is that persisted state — never sink rows."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
+    source. The answer is that persisted state, folded by
+    ``fold_stream_state`` with ``_latest_snapshot`` — never sink rows."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     ev = read_events_stream(spark, sf_dir)
@@ -479,67 +471,27 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    return _latest_state_answer(spark, out)
+    return fold_stream_state([out], _latest_snapshot)
 
 
-def _latest_state_answer(spark: SparkSession, out: DataFrame) -> DataFrame:
-    """foreachBatch -> persisted-state merge for an update-mode stateful
-    stream emitting per-key running-total snapshots: each epoch merges
-    into a persisted per-user latest-state parquet (max_by n_events —
-    strictly increasing per key, so no ordering ties), and the answer is
-    the persisted state, never sink rows. Shared by stream_stateful and
-    stream_typed_state (identical semantics, different state APIs)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_stateful_{uuid.uuid4().hex[:8]}"
+def _latest_snapshot(snaps: DataFrame) -> DataFrame:
+    """Per-user latest running-total snapshot: max_by n_events, which is
+    strictly increasing per key, so there are no ordering ties. Shared by
+    stream_stateful and stream_typed_state (identical semantics,
+    different state APIs)."""
+    return (
+        snaps.groupBy("user_id")
+        .agg(
+            F.max_by(
+                F.struct("n_events", "total_cents"), F.col("n_events")
+            ).alias("s")
+        )
+        .select(
+            "user_id",
+            F.col("s.n_events").alias("n_events"),
+            F.col("s.total_cents").alias("total_cents"),
+        )
     )
-    state = {"path": None, "version": 0}
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        snap = batch_df.select("user_id", "n_events", "total_cents")
-        prev = state["path"]
-        if prev is not None:
-            old = batch_df.sparkSession.read.parquet(prev)
-            snap = old.unionByName(snap)
-        latest = (
-            snap.groupBy("user_id")
-            .agg(
-                F.max_by(
-                    F.struct("n_events", "total_cents"), F.col("n_events")
-                ).alias("s")
-            )
-            .select(
-                "user_id",
-                F.col("s.n_events").alias("n_events"),
-                F.col("s.total_cents").alias("total_cents"),
-            )
-        )
-        state["version"] += 1
-        new_path = os.path.join(out_dir, f"state_v{state['version']}")
-        latest.write.parquet(new_path)
-        state["path"] = new_path
-        if prev is not None:
-            shutil.rmtree(prev, ignore_errors=True)
-
-    try:
-        q = (
-            out.writeStream.foreachBatch(merge_batch)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(out_dir, "_chk"))
-            .start()
-        )
-        q.awaitTermination()
-        if state["path"] is None:
-            return spark.createDataFrame([], _OUT_SCHEMA)
-        # materialize off the temp dir so finally can remove it all
-        return spark.read.parquet(state["path"]).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 _STATEFUL_ORACLE = """
@@ -561,8 +513,9 @@ def stream_typed_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-server wire format), which this container lacks, so the key
     degrades to the classic GroupState implementation behind an import
     guard: on a real cluster with protobuf installed the typed-state
-    path runs unmodified. Both paths share the foreachBatch
-    persisted-state answer derivation and the same value oracle."""
+    path runs unmodified. Both paths derive the answer with
+    ``fold_stream_state`` and ``_latest_snapshot``, and share the value
+    oracle."""
     try:
         import google.protobuf  # noqa: F401
 
@@ -615,7 +568,7 @@ def stream_typed_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    return _latest_state_answer(spark, out)
+    return fold_stream_state([out], _latest_snapshot)
 
 
 @query(

@@ -6,16 +6,17 @@ windowed aggregation that production pipelines lean on).
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
 from hh_rumors_presto_spark.registry import query
-from hh_rumors_presto_spark.streaming import read_events_stream
+from hh_rumors_presto_spark.streaming import (
+    fold_stream_state,
+    read_events_stream,
+)
 
 
 @query(
@@ -91,18 +92,15 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer (the exactly-once pattern for sinks without a streaming
     connector — idempotent per epochId). The query returns the re-read,
     re-aggregated sink contents."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_feb_{uuid.uuid4().hex[:8]}"
-    )
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.write.mode("append")
-            .parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
-        )
-
     ev = read_events_stream(spark, sf_dir).select("event_id", "event_type")
-    try:
+    with tempfile.TemporaryDirectory(prefix="hh_feb_") as out_dir:
+
+        def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+            (
+                batch_df.write.mode("append")
+                .parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
+            )
+
         q = (
             ev.writeStream.foreachBatch(write_batch)
             .trigger(availableNow=True)
@@ -114,13 +112,12 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sink+checkpoint tree can be removed before returning (repeated
         # verify/fuzz sweeps would otherwise accumulate a dir per call).
         return (
-            spark.read.parquet(os.path.join(out_dir, "epoch=*"))
+            spark.read.schema(ev.schema)
+            .parquet(os.path.join(out_dir, "epoch=*"))
             .groupBy("event_type")
             .agg(F.count("*").alias("n"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 @query(
@@ -136,76 +133,34 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally MAINTAINED hourly rollup (the streaming twin of
-    ts_multires_rollup): each micro-batch reduces to (key, count, exact
-    DECIMAL sum) partial states which MERGE into the persisted rollup —
-    read-modify-write of partials, never a reprocess of raw history. Two
-    separate stream runs feed disjoint halves of the fixture through the
-    same merge function, so the final state really is built by merging
+    ts_multires_rollup): ``fold_stream_state`` reduces each micro-batch
+    together with the persisted rollup to (key, count, exact DECIMAL sum)
+    partials — read-modify-write of partials, never a reprocess of raw
+    history. Two separate stream runs feed disjoint halves of the fixture
+    through the same fold, so the final state really is built by merging
     into existing state; DECIMAL partials make the result independent of
     how history was batched (the oracle aggregates raw directly).
 
     Scale: per refresh, work is O(|batch| + |touched buckets|); state
     rewrite is keyed and could be a partition-scoped MERGE in a lakehouse
     table — the pattern is the same."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_srm_{uuid.uuid4().hex[:8]}"
+    halves = [
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_id") % 2 == half)
+        .select(
+            "event_type",
+            F.date_trunc("hour", "ts").alias("bucket"),
+            F.lit(1).cast("long").alias("n"),
+            F.col("value").cast("decimal(28,10)").alias("tot"),
+        )
+        for half in (0, 1)
+    ]
+    final = fold_stream_state(
+        halves,
+        lambda df: df.groupBy("event_type", "bucket").agg(
+            F.sum("n").alias("n"), F.sum("tot").alias("tot")
+        ),
     )
-    state = {"path": None, "version": 0}
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = batch_df.groupBy(
-            "event_type", F.date_trunc("hour", "ts").alias("bucket")
-        ).agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(28,10)")).alias("tot"),
-        )
-        prev = state["path"]
-        if prev is not None:
-            old = batch_df.sparkSession.read.parquet(prev)
-            partial = (
-                old.unionByName(partial.select(old.columns))
-                .groupBy("event_type", "bucket")
-                .agg(F.sum("n").alias("n"), F.sum("tot").alias("tot"))
-            )
-        state["version"] += 1
-        new_path = os.path.join(out_dir, f"state_v{state['version']}")
-        partial.select("event_type", "bucket", "n", "tot").write.parquet(
-            new_path
-        )
-        state["path"] = new_path
-        # the new version fully supersedes the old one — keep exactly one
-        if prev is not None:
-            shutil.rmtree(prev, ignore_errors=True)
-
-    try:
-        for half in (0, 1):
-            ev = read_events_stream(spark, sf_dir).filter(
-                F.col("event_id") % 2 == half
-            )
-            q = (
-                ev.writeStream.foreachBatch(merge_batch)
-                .trigger(availableNow=True)
-                .option(
-                    "checkpointLocation", os.path.join(out_dir, f"_chk{half}")
-                )
-                .start()
-            )
-            q.awaitTermination()
-
-        if state["path"] is None:
-            final = spark.createDataFrame(
-                [],
-                "event_type string, bucket timestamp, n bigint, "
-                "tot decimal(28,10)",
-            )
-        else:
-            # materialize off the temp dir so finally can remove it all
-            final = spark.read.parquet(state["path"]).localCheckpoint(
-                eager=True
-            )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
     return final.select(
         "event_type",
         "bucket",
@@ -230,21 +185,16 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregation against a single clean pass over the source. This is
     the restart-after-crash contract a 100 TB ingest job leans on:
     reprocessing is governed by the checkpoint, not by operator memory."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_ckpt_{uuid.uuid4().hex[:8]}"
-    )
-    chk = os.path.join(out_dir, "_chk")
     calls = {"nonempty": 0}
+    with tempfile.TemporaryDirectory(prefix="hh_ckpt_") as out_dir:
+        chk, data = os.path.join(out_dir, "_chk"), os.path.join(out_dir, "data")
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        n = batch_df.count()
-        if n:
-            calls["nonempty"] += 1
-            batch_df.write.mode("append").parquet(
-                os.path.join(out_dir, "data")
-            )
+        def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+            n = batch_df.count()
+            if n:
+                calls["nonempty"] += 1
+                batch_df.write.mode("append").parquet(data)
 
-    try:
         for run in (1, 2):
             ev = read_events_stream(spark, sf_dir).select(
                 "event_id", "event_type"
@@ -265,13 +215,12 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the tiny aggregate so the sink + checkpoint tree can
         # be removed before returning
         return (
-            spark.read.parquet(os.path.join(out_dir, "data"))
+            spark.read.schema(ev.schema)
+            .parquet(data)
             .groupBy("event_type")
             .agg(F.count("*").cast("long").alias("n"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 @query(
@@ -390,8 +339,8 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC apply — the incremental twin of the batch
     merge_upsert: each micro-batch's records are keyed upserts for
     user_id ('error' = DELETE tombstone), merged latest-wins by
-    (ts, event_id) into the persisted keyed state via foreachBatch
-    read-modify-write. Tombstones STAY in state so a late-arriving
+    (ts, event_id) into the persisted keyed state by
+    ``fold_stream_state``. Tombstones STAY in state so a late-arriving
     older record can never resurrect a deleted key; they are dropped
     only in the final read-out. Two independent stream runs feed
     disjoint halves of the fixture through the same merge, so the
@@ -403,10 +352,6 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per refresh the work is O(|batch| + |touched keys|); the
     state rewrite is keyed, so on a lakehouse table it becomes the
     exact merge_upsert join, partition-pruned to touched keys."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_smu_{uuid.uuid4().hex[:8]}"
-    )
-    state = {"path": None, "version": 0}
     uts = F.struct(F.col("ts"), F.col("event_id"))
     rec = F.struct(F.col("event_id"), F.col("event_type"), F.col("ts"))
 
@@ -417,55 +362,13 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "rec.event_id", "rec.event_type", "rec.ts")
         )
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = latest_per_key(batch_df)
-        prev = state["path"]
-        if prev is not None:
-            old = batch_df.sparkSession.read.parquet(prev)
-            partial = latest_per_key(
-                old.unionByName(partial.select(old.columns))
-            )
-        state["version"] += 1
-        new_path = os.path.join(out_dir, f"state_v{state['version']}")
-        partial.write.parquet(new_path)
-        state["path"] = new_path
-        # The new version fully supersedes the old one; dropping it here
-        # keeps exactly one state version on disk at any time (repeated
-        # verify/fuzz sweeps would otherwise accumulate every version).
-        if prev is not None:
-            shutil.rmtree(prev, ignore_errors=True)
-
-    try:
-        for half in (0, 1):
-            ev = read_events_stream(spark, sf_dir).filter(
-                F.col("event_id") % 2 == half
-            ).select("user_id", "event_id", "event_type", "ts")
-            q = (
-                ev.writeStream.foreachBatch(merge_batch)
-                .trigger(availableNow=True)
-                .option(
-                    "checkpointLocation", os.path.join(out_dir, f"_chk{half}")
-                )
-                .start()
-            )
-            q.awaitTermination()
-
-        if state["path"] is None:
-            # No micro-batch ever fired (empty source): empty final state.
-            final = spark.createDataFrame(
-                [], "user_id bigint, event_id bigint, event_type string, "
-                "ts timestamp"
-            )
-        else:
-            # Materialize off the temp dir (block manager) so the whole
-            # out_dir — final state included — can be removed in finally
-            # while the returned DataFrame stays readable.
-            final = spark.read.parquet(state["path"]).localCheckpoint(
-                eager=True
-            )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
+    halves = [
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_id") % 2 == half)
+        .select("user_id", "event_id", "event_type", "ts")
+        for half in (0, 1)
+    ]
+    final = fold_stream_state(halves, latest_per_key)
     return (
         final.filter(F.col("event_type") != "error")
         .select(

@@ -219,7 +219,9 @@ def stream_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q2.awaitTermination()
-        got = spark.read.parquet(os.path.join(data, "epoch=*"))
+        got = spark.read.schema(src.schema).parquet(
+            os.path.join(data, "epoch=*")
+        )
         return (
             got.groupBy("event_type")
             .agg(

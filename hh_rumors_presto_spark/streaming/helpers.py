@@ -5,11 +5,19 @@ The fixture is a static parquet file, so streams run with
 materialized result as a batch DataFrame — the same pattern as production
 backfill/replay jobs. In production the source line changes to Kafka/files
 and the trigger to processingTime; every transformation below is unchanged.
+
+``fold_stream_state`` is the foreachBatch partial-state merge: each
+micro-batch folds into one persisted state, and the answer is that state,
+never sink rows.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,8 +48,6 @@ def _split_events_dir(
     fixture's footer ``schema``, so it reads back with that schema too.
     Idempotent per (sf_dir, n)."""
     import hashlib
-    import os
-    import tempfile
 
     # Cache tag includes the fixture's (mtime, size), so a regenerated
     # events.parquet invalidates the split copy.  For a directory of part
@@ -72,7 +78,6 @@ def _split_events_dir(
         # (other tags; the same tag at other n stays valid).  Only dirs
         # untouched for over an hour go, so a session still streaming
         # from an older copy keeps its source.
-        import shutil
         import time
 
         cutoff = time.time() - 3600
@@ -122,8 +127,6 @@ def read_events_stream(
     watermark advance, so their batching must be part of the query, not
     left to the runner (the result is then identical whether or not the
     harness sets HH_STREAM_SPLIT)."""
-    import os
-
     if single_batch and force_split:
         raise ValueError("single_batch and force_split are exclusive")
     split_n = 0 if single_batch else (
@@ -174,8 +177,6 @@ def run_stream_to_df(
     regardless of HH_STATE_STORE — the stream_rocksdb_state key uses it
     so its driver row always exercises the production provider.
     """
-    import os
-
     if state_partitions is None:
         if n_rows is None:
             raise ValueError("run_stream_to_df needs state_partitions or n_rows")
@@ -225,3 +226,53 @@ def run_stream_to_df(
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     return out
+
+
+def fold_stream_state(
+    streams: Sequence[DataFrame], fold: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Run each stream in turn to completion (availableNow, update mode)
+    through foreachBatch; every micro-batch replaces the one persisted
+    state with ``fold(state.unionByName(batch))``.  Return the final
+    state, checkpointed locally so the scratch directory can go.
+
+    ``fold`` must be associative over its own output: fold(a ∪ b) ==
+    fold(fold(a) ∪ b).  The result is then the same however the runner
+    batched the sources.  The state is read back with the schema it was
+    written with, so no inference job runs, and only one state version
+    is kept on disk.  If no micro-batch fires, the answer is ``fold`` of
+    an empty batch of ``streams[0]``'s schema.
+    """
+    spark = streams[0].sparkSession
+    with tempfile.TemporaryDirectory(prefix="hh_fold_") as tmp:
+        # (path, schema) of every state version written; only the last
+        # one is still on disk
+        versions: list[tuple[str, T.StructType]] = []
+
+        def merge(batch: DataFrame, epoch_id: int) -> None:
+            if versions:
+                path, schema = versions[-1]
+                old = batch.sparkSession.read.schema(schema).parquet(path)
+                batch = old.unionByName(batch)
+            state = fold(batch)
+            path = os.path.join(tmp, f"state_{len(versions)}")
+            state.write.parquet(path)
+            versions.append((path, state.schema))
+            if len(versions) > 1:
+                shutil.rmtree(versions[-2][0])
+
+        for i, stream in enumerate(streams):
+            (
+                stream.writeStream.foreachBatch(merge)
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .option("checkpointLocation", os.path.join(tmp, f"chk_{i}"))
+                .start()
+                .awaitTermination()
+            )
+        if not versions:
+            return fold(spark.createDataFrame([], streams[0].schema))
+        path, schema = versions[-1]
+        return spark.read.schema(schema).parquet(path).localCheckpoint(
+            eager=True
+        )

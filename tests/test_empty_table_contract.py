@@ -37,6 +37,8 @@ from hh_rumors_presto_spark.registry import QUERIES, load_all_queries
 
 load_all_queries()
 
+_STATEFUL_SCHEMA = "struct<user_id:bigint,n_events:bigint,total_cents:bigint>"
+
 _TABLES = (
     "region nation customer supplier part orders lineitem events embeddings"
 ).split()
@@ -135,6 +137,27 @@ def test_events_empty_keys_degrade_not_crash(spark, table_empty_sf):
     assert (r.n_rows, r.n_valid, r.k_sum) == (0, 0, 0)
     r = QUERIES["scan_csv_malformed"](spark, d).collect()[0]
     assert (r.n_rows, r.n_corrupt, r.val_sum) == (0, 0, None)
+    # the fold_stream_state keys: no rows, the non-empty result's schema
+    for key, schema in (
+        ("stream_stateful", _STATEFUL_SCHEMA),
+        ("stream_typed_state", _STATEFUL_SCHEMA),
+        (
+            "stream_rollup_merge",
+            "struct<event_type:string,bucket:timestamp,n:bigint,total:double>",
+        ),
+        (
+            "stream_merge_upsert",
+            "struct<user_id:bigint,last_event_id:bigint,last_type:string,"
+            "last_ts:timestamp>",
+        ),
+        (
+            "stream_topk_merge",
+            "struct<event_type:string,event_id:bigint,cents:bigint,rnk:bigint>",
+        ),
+    ):
+        df = QUERIES[key](spark, d)
+        assert df.collect() == [], key
+        assert df.schema.simpleString() == schema, key
 
 
 def test_orders_empty_keys_degrade_not_crash(spark, table_empty_sf):

@@ -110,7 +110,15 @@ def test_invariant_streaming_keys_do_not_move(spark, sf_dir, forced_split):
     invariant by construction; if one moves under the split, the
     one-key pinned list is wrong and env-parity has a new diverger."""
     load_all_queries()
-    for key in ("stream_session_state", "stream_tumbling"):
+    for key in (
+        "stream_session_state",
+        "stream_tumbling",
+        "stream_stateful",
+        "stream_typed_state",
+        "stream_rollup_merge",
+        "stream_merge_upsert",
+        "stream_topk_merge",
+    ):
         os.environ.pop("HH_STREAM_SPLIT", None)
         canon = sorted(map(str, _rows(spark, sf_dir, key)))
         os.environ["HH_STREAM_SPLIT"] = "5"

@@ -90,8 +90,9 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"HashAggregate", "component rollup over checkpointed labels"),
     ],
     # stream_topk_merge / stream_watermark return post-streaming results
-    # (memory-sink materialization) — the streaming plan itself is not
-    # visible in the returned DataFrame; assert the visible merge shape.
+    # (the checkpointed fold state / the memory sink) — the streaming plan
+    # itself is not visible in the returned DataFrame; assert the visible
+    # merge shape.
     "stream_topk_merge": [
         (r"Window", "cross-batch per-key rank merge"),
     ],
