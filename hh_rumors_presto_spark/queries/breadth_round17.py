@@ -4,9 +4,8 @@ outlier peeling.
 
 - ``graph_ppr_seeded`` — personalized PageRank (random walk with
   restart to a seed set): the recommendation / relevance-propagation
-  primitive. Same BIGINT fixed-point discipline as ``graph_pagerank``
-  (graph.py module docstring) so 3 unrolled rounds are bit-identical
-  to the SQL oracle.
+  primitive, on ``graph_pagerank``'s fixed-point walk (graph._rank_walk)
+  with the seeds as the restart set.
 - ``stream_topk_merge`` — a continuously-maintained per-key top-3
   leaderboard folded by ``fold_stream_state``: each micro-batch merges
   with the stored top-k and is cut back to the top-k (insert-only
@@ -28,7 +27,7 @@ from hh_rumors_presto_spark.queries.graph import (
     _DAMP_NUM,
     _GRAPH_SQL,
     _SCALE,
-    _edges_by_dst,
+    _rank_walk,
 )
 from hh_rumors_presto_spark.registry import query
 from hh_rumors_presto_spark.streaming import (
@@ -97,93 +96,15 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to a SEED SET (customers 1..50) instead of uniformly, so the
     stationary ranks measure relevance TO those seeds — the classic
     graph-recommendation primitive (pins-to-boards, who-to-follow).
-    3 rounds in the same BIGINT fixed-point discipline as
-    graph_pagerank (integer multiply, truncating DIV, exact sums):
+    It is graph._rank_walk with the seeds as the restart set: 3 rounds,
     bit-identical to the unrolled-SQL oracle under any partitioning.
-
-    Scale: identical per-round shape to graph_pagerank — dst-partitioned
-    loop-invariant edges (persist keeps the hashpartitioning metadata),
-    node-sized shares/contribs broadcast per round, zero edge-sized
-    shuffles after setup. Sparse restart means unreached nodes carry
-    rank 0 and the vector compresses at web scale."""
-    # r11: same single-exchange dst-partitioned edge prep as
-    # graph_pagerank (graph._edges_by_dst), partition count parameterized.
-    edges = _edges_by_dst(spark, sf_dir).persist()
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("outdeg"))
-        .withColumnRenamed("src", "node")
-        .withColumn(
-            "is_seed",
-            (F.col("node") % 2 == 0)
-            & (F.expr("node DIV 2") <= F.lit(_PPR_MAX_SEED_CUSTKEY)),
-        )
-        .localCheckpoint()
+    Sparse restart means unreached nodes carry rank 0 and the vector
+    compresses at web scale."""
+    seeds = (F.col("node") % 2 == 0) & (
+        F.expr("node DIV 2") <= F.lit(_PPR_MAX_SEED_CUSTKEY)
     )
-    k = deg.filter("is_seed").count()  # scalar seed count, as the oracle's kk
-    if k == 0:
-        # ADVICE r9: distinguish "empty graph" from "non-empty graph with
-        # no seeds". deg empty => the oracle's rank chain is empty too:
-        # return the typed empty frame (guards the teleport division; r9
-        # empty-table audit). deg NON-empty with zero seeds would make
-        # the oracle emit NULL-rank rows (kk=0 -> //0 -> NULL) while this
-        # side returned empty — fail LOUDLY instead of diverging: the
-        # fixture contract places seed customers in every non-empty
-        # graph, so reaching this branch means the contract broke.
-        if deg.limit(1).count() > 0:
-            raise AssertionError(
-                "graph_ppr_seeded: non-empty graph contains no seed "
-                "customers — fixture contract violated (oracle would "
-                "emit NULL rank_fp rows; refusing to diverge silently)"
-            )
-        edges.unpersist()
-        return spark.createDataFrame(
-            [], "node bigint, is_seed boolean, rank_fp bigint"
-        )
-    teleport = (15 * _SCALE) // (100 * k)
-    ranks = deg.select(
-        "node",
-        "outdeg",
-        "is_seed",
-        F.when(F.col("is_seed"), F.lit(_SCALE // k))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank_fp"),
-    )
-    for _ in range(3):
-        shares = ranks.select(
-            "node",
-            F.expr(
-                f"CAST((rank_fp * {_DAMP_NUM}) DIV {_DAMP_DEN} DIV outdeg"
-                " AS BIGINT)"
-            ).alias("share"),
-        )
-        contribs = (
-            edges.join(F.broadcast(shares), edges.src == shares.node)
-            .groupBy("dst")
-            .agg(F.sum("share").cast("long").alias("contrib"))
-        )
-        ranks = (
-            deg.join(F.broadcast(contribs), deg.node == contribs.dst, "left")
-            .select(
-                "node",
-                "outdeg",
-                "is_seed",
-                (
-                    F.when(F.col("is_seed"), F.lit(teleport))
-                    .otherwise(F.lit(0))
-                    + F.coalesce(F.col("contrib"), F.lit(0))
-                )
-                .cast("long")
-                .alias("rank_fp"),
-            )
-            .localCheckpoint()
-        )
-    edges.unpersist()
-    return (
-        ranks.select("node", "is_seed", "rank_fp")
-        .orderBy(F.col("rank_fp").desc(), "node")
-        .limit(100)
+    return _rank_walk(spark, sf_dir, seeds).select(
+        "node", F.col("restart").alias("is_seed"), "rank_fp"
     )
 
 
@@ -249,7 +170,9 @@ def stream_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for half in (0, 1)
     ]
-    return fold_stream_state(halves, topk).select(
+    return fold_stream_state(
+        halves, topk, n_rows=io.table_num_rows(sf_dir, "events")
+    ).select(
         "event_type",
         "event_id",
         "cents",

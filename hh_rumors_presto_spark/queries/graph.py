@@ -16,18 +16,19 @@ That turns an ordinarily rows-only sketch into a full value-hash oracle.
 Scale posture (100 TB): each PageRank/BFS round is one equi-join + one
 hash aggregate on the edge list — the standard Pregel-as-joins shape; no
 collect of edges or ranks, driver holds only the scalar node count.
-``localCheckpoint`` per round truncates the iterative lineage exactly as
-in dedup_clusters (extensions_dedup.py). Edge build is one shuffle join;
+``localCheckpoint`` per round truncates the iterative lineage, as in
+operators.components. Edge build is one shuffle join;
 at cluster scale the edge list would be bucketed by src once and reused
 across all rounds with zero further edge shuffles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.operators.components import connected_components
 from hh_rumors_presto_spark.queries.extensions_dedup import (
     _jaccard_pairs_sql,
     dedup_ngram_jaccard,
@@ -72,15 +73,13 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _edges_by_dst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same bipartite edge list as :func:`_edges`, but built so the
     WHOLE prep pays exactly ONE edge-scale exchange and the output keeps
-    hashpartitioning(dst) (r11, guide §2.4): the raw (pre-distinct) pair
-    stream is mirrored, repartitioned by dst, and deduped AFTER the
-    exchange — hashpartitioning(dst) satisfies the (src, dst) dedup's
-    clustering requirement (dst is a subset of the keys), so
-    dropDuplicates adds no second exchange, where the old shape paid a
-    distinct exchange on (c_node, s_node) AND the dst repartition.
-    Partition count follows default_parallelism(), not a constant, so
-    the driver's lower-core bench runs and cluster deployments both get
-    a scale-appropriate layout. Iterative consumers persist the result
+    hashpartitioning(dst): the raw (pre-distinct) pair stream is
+    mirrored, repartitioned by dst, and deduped AFTER the exchange —
+    hashpartitioning(dst) satisfies the (src, dst) dedup's clustering
+    requirement (dst is a subset of the keys), so dropDuplicates adds no
+    second exchange. Partition count follows default_parallelism(), not
+    a constant, so lower-core runs and cluster deployments both get a
+    scale-appropriate layout. Iterative consumers persist the result
     (hash metadata kept) and their per-round groupBy(dst) fan-in aggs
     stay exchange-free."""
     from hh_rumors_presto_spark.session import default_parallelism
@@ -155,12 +154,31 @@ def _edges_by_dst(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point PageRank, 3 iterations, damping 0.85, on the bipartite
-    order graph. All arithmetic is BIGINT (multiply, truncating DIV, exact
-    sums) so the result is bit-identical to the unrolled-SQL oracle under
-    any partitioning — see module docstring. Top-100 nodes by rank.
+    order graph: :func:`_rank_walk` with every node in the restart set.
+    Top-100 nodes by rank."""
+    return _rank_walk(spark, sf_dir, F.lit(True)).select(
+        "node",
+        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier"))
+        .alias("node_type"),
+        "rank_fp",
+    )
 
-    One join + one agg per round (Pregel-as-joins); ranks/degrees never
-    leave the cluster; the driver holds only the node-count scalar."""
+
+def _rank_walk(spark: SparkSession, sf_dir: str, restart: Column) -> DataFrame:
+    """Top-100 ``(node, restart, rank_fp)`` rows, by rank then node, of a
+    3-round fixed-point random walk with restart (damping 0.85) on the
+    bipartite order graph. ``restart`` is a boolean column over the degree
+    table ``(node, outdeg)``: the walk starts on, and teleports back to,
+    the k nodes where it holds, with r0 = SCALE // k and teleport =
+    15·SCALE // (100·k). ``lit(True)`` makes k = n, which is PageRank.
+
+    All arithmetic is BIGINT (multiply, truncating DIV, exact sums), so
+    ranks are bit-identical to the unrolled-SQL oracles under any
+    partitioning — see module docstring. One join + one agg per round
+    (Pregel-as-joins); the driver holds only the scalar k. An empty graph
+    gives no rows. A non-empty graph with no restart node raises: the
+    oracle would divide by k = 0 and emit NULL ranks."""
     # Pre-partition the (big, loop-invariant) edge list by dst ONCE: every
     # round's fan-in groupBy(dst) then needs no exchange. The per-round
     # node-level tables (shares, contribs — one row per node, vs one per
@@ -174,34 +192,39 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint rewrites the plan as an ExistingRDD with
     # UnknownPartitioning, so every round's groupBy(dst) would re-shuffle;
     # persist keeps the hashpartitioning(dst) metadata and the agg plans
-    # exchange-free. Edges are loop-invariant, so no lineage growth.
-    # r11: _edges_by_dst folds the old distinct+repartition pair into one
-    # exchange and derives the partition count from default_parallelism().
+    # exchange-free. Edges are loop-invariant, so no lineage growth. The
+    # deg aggregation is the first action and populates the cache.
     edges = _edges_by_dst(spark, sf_dir).persist()
-    # no explicit materialize: the deg aggregation below is the first
-    # action and populates the cache as a side effect (one pass, not two)
     deg = (
         edges.groupBy("src")
         .agg(F.count("*").alias("outdeg"))
         .withColumnRenamed("src", "node")
+        .withColumn("restart", restart)
         .localCheckpoint()
     )
-    n = deg.count()  # scalar only; same count the oracle's params CTE takes
-    if n == 0:
-        # empty graph: no ranks exist and the integer teleport below
-        # would divide by zero driver-side; the oracle's r0..r3 chain is
-        # empty too (r9 empty-table audit)
+    k = deg.filter("restart").count()  # as the oracles' params / kk CTEs
+    if k == 0:
+        if deg.limit(1).count() > 0:
+            raise AssertionError(
+                "rank walk: non-empty graph contains no restart node "
+                "(the oracle would emit NULL rank_fp rows; refusing to "
+                "diverge silently)"
+            )
         edges.unpersist()
-        return spark.createDataFrame(
-            [], "node bigint, node_type string, rank_fp bigint"
-        )
-    teleport = (15 * _SCALE) // (100 * n)  # exact integer, matches // in SQL
+        return deg.select("node", "restart", F.lit(0).cast("long").alias("rank_fp"))
+    teleport = (15 * _SCALE) // (100 * k)  # exact integer, matches // in SQL
 
     # ranks carries outdeg through the loop, so each round is exactly TWO
     # joins: node-level shares ⋈ edges (fan-out), then deg ⋈ contribs
     # (fan-in). The per-src share is computed once per node, not per edge.
     ranks = deg.select(
-        "node", "outdeg", F.lit(_SCALE // n).cast("long").alias("rank_fp")
+        "node",
+        "outdeg",
+        "restart",
+        F.when(F.col("restart"), F.lit(_SCALE // k))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("rank_fp"),
     )
     for _ in range(3):
         shares = ranks.select(
@@ -220,24 +243,21 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "node",
                 "outdeg",
-                (F.lit(teleport) + F.coalesce(F.col("contrib"), F.lit(0)))
+                "restart",
+                (
+                    F.when(F.col("restart"), F.lit(teleport)).otherwise(F.lit(0))
+                    + F.coalesce(F.col("contrib"), F.lit(0))
+                )
                 .cast("long")
                 .alias("rank_fp"),
             )
             .localCheckpoint()
         )
-    # final ranks are localCheckpointed (materialized) — the cached edges
-    # are no longer needed; release them so repeated invocations don't
-    # accumulate cache entries
+    # the final ranks are materialized, so the cached edges can go:
+    # repeated invocations don't accumulate cache entries
     edges.unpersist()
     return (
-        ranks.select(
-            "node",
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            "rank_fp",
-        )
+        ranks.select("node", "restart", "rank_fp")
         .orderBy(F.col("rank_fp").desc(), "node")
         .limit(100)
     )
@@ -333,11 +353,6 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangles_oracle() -> str:
-    from hh_rumors_presto_spark.queries.extensions_dedup import (
-    _jaccard_pairs_sql,
-    dedup_ngram_jaccard,
-)
-
     return (
         _jaccard_pairs_sql()
         + """
@@ -404,10 +419,6 @@ def _neardup_tri_frames(
 
 
 def _clustering_oracle() -> str:
-    from hh_rumors_presto_spark.queries.extensions_dedup import (
-        _jaccard_pairs_sql,
-    )
-
     return (
         _jaccard_pairs_sql()
         + """
@@ -745,22 +756,16 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weakly connected components over the REPEAT-TRADE graph: an edge
     per (customer, supplier) pair that traded on >= 2 line items AND
-    shares a nation. Min-label propagation to the fixpoint (the same
-    driver-coordinated loop as dedup_clusters — one equi-join + one hash
-    agg per round, O(diameter) rounds, localCheckpoint truncating the
-    iterative lineage); the answer is the per-component census
-    (n_nodes / n_customers / n_suppliers), all-integer and therefore
-    bit-deterministic under any partitioning.
+    shares a nation. Components come from
+    operators.components.connected_components; the answer is the
+    per-component census (n_nodes / n_customers / n_suppliers),
+    all-integer and therefore bit-deterministic under any partitioning.
 
     Component ids are the min node id in each component. The nation
     blocking is what makes the recursive-CTE oracle tractable: components
     cannot span nations, so the closure's quadratic blowup is bounded by
     the largest within-nation trading cluster (Σ block², never n²) — the
-    same bound argument the blocked dedup family relies on. At cluster
-    scale the edge list is built once (one shuffle), checkpointed, and
-    every round touches only |V| label rows; the two-hop double-step
-    halves the rounds' checkpoint overhead without changing the fixpoint
-    (min-label propagation is monotone, so no oscillation)."""
+    same bound argument the blocked dedup family relies on."""
     li = io.load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
@@ -785,100 +790,14 @@ def graph_wcc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         .filter(F.col("count") >= 2)
         .select("c_node", "s_node")
-    )
-    edges = (
-        pairs.select(F.col("c_node").alias("a"), F.col("s_node").alias("b"))
-        .unionAll(
-            pairs.select(
-                F.col("s_node").alias("a"), F.col("c_node").alias("b")
-            )
-        )
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("a").alias("node"))
+    nodes = (
+        pairs.select(F.col("c_node").alias("node"))
+        .unionAll(pairs.select("s_node"))
         .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint()
     )
-
-    # r11: A/B-tested the dedup_clusters self-loop/quad-step rewrite here
-    # — this graph's trading clusters converge in 2-4 hops, so neither
-    # variant beat the original warm (2.9-3.7 s band in every shape);
-    # the original double-step with merge-back stays.
-    def propagate(lbl: DataFrame) -> DataFrame:
-        neigh = (
-            edges.join(lbl, edges.b == lbl.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component").alias("neigh_min"))
-        )
-        return (
-            lbl.withColumnRenamed("component", "prev")
-            .join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("prev"),
-                    F.coalesce(F.col("neigh_min"), F.col("prev")),
-                ).alias("component"),
-            )
-        )
-
-    # PHASE 1: propagate until a full double-step changes nothing — the
-    # 10-hop horizon resolves the dense trading clusters this graph
-    # actually produces. PHASE 2 (round 7, replacing the old 64-round cap
-    # + RuntimeError): a graph still unconverged past the horizon is
-    # chain-shaped — hand the ORIGINAL edge list to the alternating
-    # large-star/small-star contraction (dedup_clusters' deep-graph
-    # phase), which converges in O(log^2 n) alternations instead of
-    # O(diameter). star_contract loops to its probed fixpoint and RAISES
-    # if its (generous, 1024-round) safety cap is ever exhausted — it
-    # never returns a partial edge list, so this path cannot silently
-    # mislabel components (round-8 fix; the old cap of 12 could).
-    converged = False
-    for _ in range(5):
-        stepped = propagate(propagate(labels.select("node", "component")))
-        merged = (
-            labels.select("node", F.col("component").alias("old_label"))
-            .join(stepped, "node")
-            .select("node", "old_label", "component")
-            .localCheckpoint()
-        )
-        labels = merged.select("node", "component")
-        if (
-            merged.filter(F.col("component") != F.col("old_label"))
-            .limit(1)
-            .count()
-            == 0
-        ):
-            converged = True
-            break
-    if not converged:
-        from hh_rumors_presto_spark.queries.extensions_dedup import (
-            star_contract,
-        )
-
-        stars = star_contract(
-            pairs.select(
-                F.greatest("c_node", "s_node").alias("big"),
-                F.least("c_node", "s_node").alias("small"),
-            )
-        )
-        labels = (
-            edges.select(F.col("a").alias("node"))
-            .distinct()
-            .join(
-                stars.select(
-                    F.col("big").alias("node"),
-                    F.col("small").alias("center"),
-                ),
-                "node",
-                "left",
-            )
-            .select(
-                "node", F.coalesce("center", "node").alias("component")
-            )
-        )
+    labels = connected_components(pairs, nodes)
     return labels.groupBy("component").agg(
         F.count("*").alias("n_nodes"),
         F.sum((F.col("node") % 2 == 0).cast("bigint")).alias("n_customers"),

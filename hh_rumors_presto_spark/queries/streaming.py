@@ -471,7 +471,9 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    return fold_stream_state([out], _latest_snapshot)
+    return fold_stream_state(
+        [out], _latest_snapshot, n_rows=io.table_num_rows(sf_dir, "events")
+    )
 
 
 def _latest_snapshot(snaps: DataFrame) -> DataFrame:
@@ -568,7 +570,9 @@ def stream_typed_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    return fold_stream_state([out], _latest_snapshot)
+    return fold_stream_state(
+        [out], _latest_snapshot, n_rows=io.table_num_rows(sf_dir, "events")
+    )
 
 
 @query(

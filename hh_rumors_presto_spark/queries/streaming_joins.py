@@ -160,6 +160,7 @@ def stream_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda df: df.groupBy("event_type", "bucket").agg(
             F.sum("n").alias("n"), F.sum("tot").alias("tot")
         ),
+        n_rows=io.table_num_rows(sf_dir, "events"),
     )
     return final.select(
         "event_type",
@@ -368,7 +369,9 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_id", "event_type", "ts")
         for half in (0, 1)
     ]
-    final = fold_stream_state(halves, latest_per_key)
+    final = fold_stream_state(
+        halves, latest_per_key, n_rows=io.table_num_rows(sf_dir, "events")
+    )
     return (
         final.filter(F.col("event_type") != "error")
         .select(

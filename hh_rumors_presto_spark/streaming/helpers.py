@@ -17,7 +17,8 @@ import os
 import shutil
 import tempfile
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,19 @@ from hh_rumors_presto_spark.session import default_parallelism, tasks_for_rows
 # 6.5/4.1/3.2/3.9 s and stream_dedup 1.62/1.48/1.34/1.51 s.  So 100k
 # rows run on one partition and 1M rows on four.
 _ROWS_PER_STATE_PARTITION = 250_000
+# The same, for a state kept in a Python worker (applyInPandasWithState,
+# transformWithStateInPandas): there the per-row Python work, not each
+# store's load and commit, dominates.  Medians of 4 warm runs on a
+# 4-core host, 1/2/4 partitions: stream_stateful 1.71/1.70/1.93 s at 1k
+# events, 1.73/1.59/1.77 s at 10k, 3.92/3.12/2.55 s at 100k;
+# stream_session_state 1.46/1.36/1.52 s, 1.82/1.70/1.79 s and
+# 6.76/4.48/3.88 s.  So 1k rows run on one partition, 10k on two and
+# 100k on four.
+_ROWS_PER_PYTHON_STATE_PARTITION = 5_000
+# Logical plan nodes whose state lives in a Python worker.
+_PYTHON_STATE_NODES = frozenset(
+    {"FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark"}
+)
 
 
 def _split_events_dir(
@@ -154,6 +168,80 @@ def read_events_stream(
     return io.events_ts_micros(reader.load(src_dir), schema)
 
 
+def _python_state(df: DataFrame) -> bool:
+    """Whether the logical plan of ``df`` keeps state in a Python worker."""
+    todo = [df._jdf.queryExecution().logical()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() in _PYTHON_STATE_NODES:
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
+@contextmanager
+def _stream_conf(
+    streams: Sequence[DataFrame],
+    n_rows: int | None,
+    state_partitions: int | None = None,
+    state_store: str | None = None,
+) -> Iterator[None]:
+    """Session confs for running ``streams`` synchronously, restored on
+    exit.
+
+    ``spark.sql.shuffle.partitions`` sizes the state store (streaming
+    shuffles have no AQE, so the session's batch-oriented value is wrong
+    for them); a stream fixes the count at its first planning.  It is
+    ``state_partitions`` if given, else one partition per
+    ``_ROWS_PER_STATE_PARTITION`` source rows (per
+    ``_ROWS_PER_PYTHON_STATE_PARTITION`` when a stream keeps its state in
+    a Python worker) capped at the core count (session.tasks_for_rows),
+    where ``n_rows`` bounds the source rows (the footer row count of the
+    source table).  One of the two must be given.
+
+    HH_STATE_STORE=rocksdb, or ``state_store="rocksdb"``, flips every
+    stateful operator to the RocksDB state store (spill-to-disk state,
+    the provider a production cluster runs for large keyed state;
+    rocksdbjni ships in Spark's jars).  Results are provider-invariant —
+    pinned by tests/test_streaming_rocksdb.py.  The default stays the
+    HDFS-backed in-memory provider, right for fixture-sized state."""
+    if state_partitions is None:
+        if n_rows is None:
+            raise ValueError("stream state needs state_partitions or n_rows")
+        per_partition = (
+            _ROWS_PER_PYTHON_STATE_PARTITION
+            if any(map(_python_state, streams))
+            else _ROWS_PER_STATE_PARTITION
+        )
+        state_partitions = tasks_for_rows(
+            n_rows, per_partition, default_parallelism()
+        )
+    spark = streams[0].sparkSession
+    parts_conf = "spark.sql.shuffle.partitions"
+    prov_conf = "spark.sql.streaming.stateStore.providerClass"
+    old_parts = spark.conf.get(parts_conf)
+    old_prov = spark.conf.get(
+        prov_conf,
+        "org.apache.spark.sql.execution.streaming."
+        "state.HDFSBackedStateStoreProvider",
+    )
+    spark.conf.set(parts_conf, str(state_partitions))
+    if (
+        state_store or os.environ.get("HH_STATE_STORE", "")
+    ).lower() == "rocksdb":
+        spark.conf.set(
+            prov_conf,
+            "org.apache.spark.sql.execution.streaming."
+            "state.RocksDBStateStoreProvider",
+        )
+    try:
+        yield
+    finally:
+        spark.conf.set(parts_conf, old_parts)
+        spark.conf.set(prov_conf, old_prov)
+
+
 def run_stream_to_df(
     stream_df: DataFrame,
     output_mode: str = "complete",
@@ -164,63 +252,22 @@ def run_stream_to_df(
     """Drive a streaming DataFrame to completion (availableNow) into a
     memory sink; return the sink contents as a batch DataFrame.
 
-    ``state_partitions`` sizes the state store (streaming shuffles have no
-    AQE, so the session's batch-oriented shuffle.partitions is wrong for
-    them); the count is fixed at first planning.  When it is not given,
-    it is one partition per ``_ROWS_PER_STATE_PARTITION`` source rows,
-    capped at the core count (session.tasks_for_rows), where ``n_rows``
-    bounds the stream's source rows (the footer row count of the source
-    table).  One of the two must be given.  Set around the synchronous
-    run and restored after.
-
-    ``state_store="rocksdb"`` forces the RocksDB provider for THIS query
-    regardless of HH_STATE_STORE — the stream_rocksdb_state key uses it
-    so its driver row always exercises the production provider.
+    ``n_rows``, ``state_partitions`` and ``state_store`` size and pick
+    the state store, as in :func:`_stream_conf`; the
+    ``stream_rocksdb_state`` key passes ``state_store="rocksdb"`` so it
+    always exercises the production provider.
     """
-    if state_partitions is None:
-        if n_rows is None:
-            raise ValueError("run_stream_to_df needs state_partitions or n_rows")
-        state_partitions = tasks_for_rows(
-            n_rows, _ROWS_PER_STATE_PARTITION, default_parallelism()
-        )
     spark = stream_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    # HH_STATE_STORE=rocksdb flips every stateful operator in this query
-    # to the RocksDB state store (spill-to-disk state, the provider a
-    # production cluster runs for large keyed state; rocksdbjni ships in
-    # Spark's jars). Results are provider-invariant — pinned by
-    # tests/test_streaming_rocksdb.py, which hashes a representative of
-    # each stateful family under both providers. Default stays the
-    # HDFS-backed in-memory provider: right for fixture-sized state and
-    # for timing comparability with the recorded BASELINE.md bands.
-    prov_conf = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(
-        prov_conf,
-        "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
-    )
-    if (
-        state_store or os.environ.get("HH_STATE_STORE", "")
-    ).lower() == "rocksdb":
-        spark.conf.set(
-            prov_conf,
-            "org.apache.spark.sql.execution.streaming."
-            "state.RocksDBStateStoreProvider",
-        )
-    try:
-        q = (
+    with _stream_conf([stream_df], n_rows, state_partitions, state_store):
+        (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set(prov_conf, old_prov)
     # the resolved plan reads the sink itself, so the catalog entry can
     # go: otherwise every run keeps its result for the session's life
     out = spark.table(name)
@@ -229,12 +276,17 @@ def run_stream_to_df(
 
 
 def fold_stream_state(
-    streams: Sequence[DataFrame], fold: Callable[[DataFrame], DataFrame]
+    streams: Sequence[DataFrame],
+    fold: Callable[[DataFrame], DataFrame],
+    n_rows: int,
 ) -> DataFrame:
     """Run each stream in turn to completion (availableNow, update mode)
     through foreachBatch; every micro-batch replaces the one persisted
     state with ``fold(state.unionByName(batch))``.  Return the final
     state, checkpointed locally so the scratch directory can go.
+
+    ``n_rows`` bounds the streams' source rows and sizes their state
+    stores, which also follow HH_STATE_STORE (:func:`_stream_conf`).
 
     ``fold`` must be associative over its own output: fold(a ∪ b) ==
     fold(fold(a) ∪ b).  The result is then the same however the runner
@@ -261,15 +313,16 @@ def fold_stream_state(
             if len(versions) > 1:
                 shutil.rmtree(versions[-2][0])
 
-        for i, stream in enumerate(streams):
-            (
-                stream.writeStream.foreachBatch(merge)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", os.path.join(tmp, f"chk_{i}"))
-                .start()
-                .awaitTermination()
-            )
+        with _stream_conf(streams, n_rows):
+            for i, stream in enumerate(streams):
+                (
+                    stream.writeStream.foreachBatch(merge)
+                    .outputMode("update")
+                    .trigger(availableNow=True)
+                    .option("checkpointLocation", os.path.join(tmp, f"chk_{i}"))
+                    .start()
+                    .awaitTermination()
+                )
         if not versions:
             return fold(spark.createDataFrame([], streams[0].schema))
         path, schema = versions[-1]

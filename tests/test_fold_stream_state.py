@@ -83,7 +83,10 @@ def test_two_streams_fold_to_the_batch_aggregate(spark, tmp_path, scratch_tmp):
         on_disk.append(len(glob.glob(str(scratch_tmp / "hh_fold_*/state_*"))))
         return _sum(df)
 
-    got = fold_stream_state([_stream(spark, a), _stream(spark, b)], fold)
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    got = fold_stream_state([_stream(spark, a), _stream(spark, b)], fold, n_rows=6)
+    # the state-store sizing is scoped to the stream runs
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     want = _sum(spark.read.schema(SCHEMA).parquet(a, b))
     assert sorted(got.collect()) == sorted(want.collect())
     assert got.schema.simpleString() == "struct<k:string,v:bigint>"
@@ -102,6 +105,7 @@ def test_no_micro_batch_returns_fold_of_an_empty_batch(
     got = fold_stream_state(
         [_stream(spark, str(empty))],
         lambda df: _sum(df).withColumn("n", F.lit(1)),
+        n_rows=0,
     )
     assert got.collect() == []
     assert got.schema.simpleString() == "struct<k:string,v:bigint,n:int>"
@@ -111,11 +115,11 @@ def test_no_micro_batch_returns_fold_of_an_empty_batch(
 def test_one_driver_job_the_eager_checkpoint(spark, tmp_path, scratch_tmp):
     a = _write_files(tmp_path / "a", [[("x", 1)], [("y", 2)]])
     with _jobs(spark, "fold-state/call") as jobs:
-        fold_stream_state([_stream(spark, a)], _sum)
+        fold_stream_state([_stream(spark, a)], _sum, n_rows=2)
     assert len(jobs) == 1
     # control: an unschematized read of a state-shaped directory runs
     # the schema-inference job the helper avoids
     with _jobs(spark, "fold-state/control") as control:
-        fold_stream_state([_stream(spark, a)], _sum)
+        fold_stream_state([_stream(spark, a)], _sum, n_rows=2)
         spark.read.parquet(a)
     assert len(control) == 2

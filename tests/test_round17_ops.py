@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from hh_rumors_presto_spark.registry import QUERIES, load_all_queries
 
 load_all_queries()
@@ -25,15 +27,22 @@ def _graph(spark, sf_dir):
     return out
 
 
-def test_ppr_matches_python_fixed_point_replay(spark, sf_dir):
+@pytest.mark.parametrize(
+    "key", ["graph_ppr_seeded", "graph_pagerank"], ids=["seeds", "all_nodes"]
+)
+def test_ppr_matches_python_fixed_point_replay(spark, sf_dir, key):
     """Replay 3 rounds of integer fixed-point PPR in Python and compare
-    the top-100 (rank, node, is_seed) rows exactly."""
+    the top-100 rows exactly. graph_pagerank is the same walk with every
+    node in the restart set."""
     SCALE = 1_000_000_000_000
     adj = _graph(spark, sf_dir)
-    seeds = {n for n in adj if n % 2 == 0 and n // 2 <= 50}
-    k = len(seeds)
+    if key == "graph_ppr_seeded":
+        restart = {n for n in adj if n % 2 == 0 and n // 2 <= 50}
+    else:
+        restart = set(adj)
+    k = len(restart)
     teleport = (15 * SCALE) // (100 * k)
-    rank = {n: (SCALE // k if n in seeds else 0) for n in adj}
+    rank = {n: (SCALE // k if n in restart else 0) for n in adj}
     outdeg = {n: len(nbrs) for n, nbrs in adj.items()}
     for _ in range(3):
         contrib = {}
@@ -42,17 +51,17 @@ def test_ppr_matches_python_fixed_point_replay(spark, sf_dir):
             for v in nbrs:
                 contrib[v] = contrib.get(v, 0) + share
         rank = {
-            n: (teleport if n in seeds else 0) + contrib.get(n, 0)
+            n: (teleport if n in restart else 0) + contrib.get(n, 0)
             for n in adj
         }
-    want = set(
-        (n, n in seeds, rank[n])
-        for n in sorted(adj, key=lambda n: (-rank[n], n))[:100]
-    )
-    got = {
-        (r.node, r.is_seed, r.rank_fp)
-        for r in QUERIES["graph_ppr_seeded"](spark, sf_dir).collect()
-    }
+    top = sorted(adj, key=lambda n: (-rank[n], n))[:100]
+    rows = QUERIES[key](spark, sf_dir).collect()
+    if key == "graph_ppr_seeded":
+        want = {(n, n in restart, rank[n]) for n in top}
+        got = {(r.node, r.is_seed, r.rank_fp) for r in rows}
+    else:
+        want = {(n, "customer" if n % 2 == 0 else "supplier", rank[n]) for n in top}
+        got = {(r.node, r.node_type, r.rank_fp) for r in rows}
     assert got == want
 
 

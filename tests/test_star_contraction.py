@@ -1,15 +1,18 @@
-"""Direct drive of the large-star/small-star contraction phase of
-dedup_clusters (extensions_dedup.star_contract) on adversarial graph
+"""Connected components (operators.components) on adversarial graph
 shapes the parquet fixtures never produce — in particular CHAINS far past
-the phase-1 propagation horizon, which is exactly the 100 TB failure mode
-the hybrid exists for (templated/boilerplate near-dup runs whose dup graph
-is near-linear). Ground truth: union-find in Python."""
+the propagation horizon, which is exactly the 100 TB failure mode the
+star-contraction phase exists for (templated/boilerplate near-dup runs
+whose dup graph is near-linear). Ground truth: union-find in Python."""
 
 from __future__ import annotations
 
 import pytest
 
-from hh_rumors_presto_spark.queries.extensions_dedup import star_contract
+from hh_rumors_presto_spark.operators import components
+from hh_rumors_presto_spark.operators.components import (
+    connected_components,
+    star_contract,
+)
 
 
 def _components(edge_list):
@@ -135,3 +138,56 @@ def test_random_graphs_property(spark):
         if not edges:
             continue
         _run(spark, edges)
+
+
+@pytest.fixture()
+def star_spy(monkeypatch):
+    """Record calls of components.star_contract."""
+    calls = []
+    real = components.star_contract
+
+    def spy(edges, *args, **kwargs):
+        calls.append(1)
+        return real(edges, *args, **kwargs)
+
+    monkeypatch.setattr(components, "star_contract", spy)
+    return calls
+
+
+def _cc(spark, edge_list, nodes):
+    edges = spark.createDataFrame(edge_list, "a long, b long")
+    node_df = spark.createDataFrame([(n,) for n in nodes], "node long")
+    out = connected_components(edges, node_df)
+    assert out.columns == ["node", "component"]
+    return {r.node: r.component for r in out.collect()}
+
+
+def test_components_empty_edge_list(spark, star_spy):
+    assert _cc(spark, [], [3, 1, 2]) == {1: 1, 2: 2, 3: 3}
+    assert not star_spy
+
+
+def test_components_isolated_nodes(spark, star_spy):
+    """Nodes without an edge label themselves."""
+    got = _cc(spark, [(9, 5)], [5, 7, 9, 11])
+    assert got == {5: 5, 7: 7, 9: 5, 11: 11}
+    assert not star_spy
+
+
+def test_components_two_components(spark, star_spy):
+    """A triangle and a pair, given in both orientations, with a repeated
+    edge and a self-loop; both resolve inside the propagation horizon."""
+    edges = [(4, 2), (2, 8), (8, 4), (30, 20), (20, 30), (30, 20), (20, 20)]
+    got = _cc(spark, edges, [2, 4, 8, 20, 30])
+    assert got == {2: 2, 4: 2, 8: 2, 20: 20, 30: 20}
+    assert not star_spy
+
+
+def test_components_chain_past_horizon(spark, star_spy):
+    """A 41-node path whose minimum sits at one end is 40 hops deep, past
+    the 12-hop propagation horizon: star contraction finishes it."""
+    n = 40
+    edges = [(i + 1, i) for i in range(n)]
+    got = _cc(spark, edges + [(100, 101)], list(range(n + 1)) + [100, 101, 102])
+    assert star_spy
+    assert got == {**{i: 0 for i in range(n + 1)}, 100: 100, 101: 100, 102: 102}

@@ -1,17 +1,13 @@
 """End-to-end drive of the star-contraction phase THROUGH the composed
-registered queries (`dedup_clusters`, `graph_wcc`) — round-8 closure of
-the round-7 verdict's honesty note: the phase-2 fallback was unit-proven
-on raw edge lists but had never executed inside either registered query
-(the canonical parquet fixtures converge in phase-1 propagation).
-
-These tests synthesize CHAIN-SHAPED adversarial fixtures in a temp
-sf_dir — documents whose bigram-Jaccard near-dup pairs form a >50-hop
-path, and a customer↔supplier trading chain of the same depth — so that
-phase 1's 10-hop propagation horizon provably cannot converge and the
-composed query MUST enter star contraction. A spy wrapper around
-`star_contract` asserts the phase actually ran; results are asserted
-against union-find ground truth (every node labels to the component
-minimum).
+registered queries (`dedup_clusters`, `graph_wcc`). The canonical
+parquet fixtures converge in propagation, so these tests synthesize
+CHAIN-SHAPED adversarial fixtures in a temp sf_dir — documents whose
+bigram-Jaccard near-dup pairs form a >50-hop path, and a
+customer↔supplier trading chain of the same depth — so that the 12-hop
+propagation horizon provably cannot converge and the composed query
+MUST enter star contraction. A spy wrapper around `star_contract`
+asserts the phase actually ran; results are asserted against union-find
+ground truth (every node labels to the component minimum).
 """
 
 from __future__ import annotations
@@ -20,25 +16,25 @@ import os
 
 import pytest
 
-from hh_rumors_presto_spark.queries import extensions_dedup
+from hh_rumors_presto_spark.operators import components
 from hh_rumors_presto_spark.queries.extensions_dedup import dedup_clusters
 from hh_rumors_presto_spark.queries.graph import graph_wcc
 
 
 @pytest.fixture()
 def star_spy(monkeypatch):
-    """Wrap extensions_dedup.star_contract with a call recorder. Both
-    composed queries resolve the function through the extensions_dedup
-    module (graph_wcc imports it lazily inside the function body), so one
-    patch point covers both."""
+    """Wrap components.star_contract with a call recorder. Both composed
+    queries reach it through operators.components.connected_components,
+    which resolves the name in its module at call time, so one patch
+    point covers both."""
     calls = []
-    real = extensions_dedup.star_contract
+    real = components.star_contract
 
     def spy(edges, *args, **kwargs):
         calls.append(1)
         return real(edges, *args, **kwargs)
 
-    monkeypatch.setattr(extensions_dedup, "star_contract", spy)
+    monkeypatch.setattr(components, "star_contract", spy)
     return calls
 
 
@@ -54,13 +50,10 @@ def test_dedup_clusters_enters_star_phase_on_deep_chain(
     """60 admitted docs (doc_id % 5 == 0) whose texts chain: doc i shares
     one 3-token vocabulary block with doc i+1 and NOTHING with any other
     doc, so the Jaccard pair graph is a single 59-hop path — far past the
-    10-hop phase-1 horizon. Expected: phase 2 runs (spy fires) and every
+    12-hop phase-1 horizon. Expected: phase 2 runs (spy fires) and every
     doc clusters to the chain minimum, doc_id 0.
 
-    Depth is overridable: the per-round certification battery re-runs
-    this at HH_STAR_CHAIN_N=201 (a 200-hop chain; VERDICT r8 item 5) —
-    the only code path whose historical failure mode was silently-wrong
-    gets a deeper adversarial drive each round at ~no maintenance cost."""
+    Depth is overridable: HH_STAR_CHAIN_N=201 gives a 200-hop chain."""
     n = int(os.environ.get("HH_STAR_CHAIN_N", "60"))
     docs = []
     for i in range(n):
@@ -85,7 +78,7 @@ def test_dedup_clusters_enters_star_phase_on_deep_chain(
 
     assert star_spy, (
         "phase 2 (star contraction) never ran — the chain fixture was "
-        "expected to defeat the 10-hop propagation horizon"
+        "expected to defeat the 12-hop propagation horizon"
     )
     assert set(out) == {i * 5 for i in range(n)}
     assert all(c == 0 for c in out.values()), {
@@ -100,8 +93,8 @@ def test_graph_wcc_enters_star_phase_on_deep_chain(spark, tmp_path, star_spy):
     runs and the census reports ONE component of 30 customers + 30
     suppliers (plus a detached 2-node pair as a control).
 
-    Depth overridable like the dedup test: the battery re-runs at
-    HH_STAR_CHAIN_K=100 (a 200-node, 199-hop path; VERDICT r8 item 5)."""
+    Depth is overridable: HH_STAR_CHAIN_K=100 gives a 200-node, 199-hop
+    path."""
     k = int(os.environ.get("HH_STAR_CHAIN_K", "30"))
     customers = [(c, f"Customer#{c}", 7, 0.0, "BUILDING") for c in range(1, k + 1)]
     suppliers = [(s, f"Supplier#{s}", 7, 0.0) for s in range(1, k + 1)]
@@ -146,7 +139,7 @@ def test_graph_wcc_enters_star_phase_on_deep_chain(spark, tmp_path, star_spy):
 
     assert star_spy, (
         "phase 2 (star contraction) never ran — the trading-chain fixture "
-        "was expected to defeat the 10-hop propagation horizon"
+        "was expected to defeat the 12-hop propagation horizon"
     )
     # chain component: min node id = 2*1 (customer 1); control: 2*ctl_id
     assert set(rows) == {2, 2 * ctl_id}

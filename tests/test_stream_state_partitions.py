@@ -1,6 +1,7 @@
-"""run_stream_to_df sizes the state store from the source row count
-(session.tasks_for_rows).  Partitioning the state never changes a
-result, and the memory sink's catalog entry does not outlive the call."""
+"""run_stream_to_df and fold_stream_state size the state store from the
+source row count (session.tasks_for_rows).  Partitioning the state never
+changes a result, and the memory sink's catalog entry does not outlive
+the call."""
 
 from __future__ import annotations
 
@@ -45,6 +46,7 @@ class _ShufflePartitions(StreamingQueryListener):
         "stream_tumbling",  # windowed aggregation state
         "stream_join",  # stream-stream join state, both sides
         "stream_dedup",  # dropDuplicates key state
+        "stream_stateful",  # applyInPandasWithState, folded by foreachBatch
     ],
 )
 def test_results_invariant_to_state_partitions(spark, sf_dir, key, monkeypatch):
@@ -56,6 +58,7 @@ def test_results_invariant_to_state_partitions(spark, sf_dir, key, monkeypatch):
         # 1000 source rows: one partition per 10^9 rows -> 1, per row -> 8
         for rows_per, want in ((10**9, 1), (1, 8)):
             monkeypatch.setattr(helpers, "_ROWS_PER_STATE_PARTITION", rows_per)
+            monkeypatch.setattr(helpers, "_ROWS_PER_PYTHON_STATE_PARTITION", rows_per)
             listener.seen.clear()
             results[want] = _rows(ent.queries()[key](spark, sf_dir))
             spark._jsc.sc().listenerBus().waitUntilEmpty()
@@ -64,6 +67,26 @@ def test_results_invariant_to_state_partitions(spark, sf_dir, key, monkeypatch):
         spark.streams.removeListener(listener)
     assert results[1], key
     assert results[1] == results[8], f"{key}: results differ across state partitions"
+
+
+@pytest.mark.parametrize(
+    "key, want", [("stream_stateful", 8), ("stream_tumbling", 1)]
+)
+def test_python_state_has_its_own_row_budget(spark, sf_dir, key, want, monkeypatch):
+    """State kept in a Python worker is sized per
+    _ROWS_PER_PYTHON_STATE_PARTITION, every other state per
+    _ROWS_PER_STATE_PARTITION."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    monkeypatch.setattr(helpers, "_ROWS_PER_STATE_PARTITION", 10**9)
+    monkeypatch.setattr(helpers, "_ROWS_PER_PYTHON_STATE_PARTITION", 1)
+    listener = _ShufflePartitions()
+    spark.streams.addListener(listener)
+    try:
+        ent.queries()[key](spark, sf_dir).collect()
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.seen == {want}, (key, listener.seen)
 
 
 def test_explicit_state_partitions_win(spark, sf_dir):

@@ -22,12 +22,13 @@ rounds of local-green/driver-red rows: it re-runs each key under the
 session variations the external driver plausibly differs in — a fresh
 DEFAULT-conf session (200 shuffle partitions, default AQE), a forced
 multi-file/out-of-order micro-batch streaming source (HH_STREAM_SPLIT),
-a non-UTC session timezone, and sessions at SPARK_GRAFT_CPUS=1 and =8
+a non-UTC session timezone, sessions at SPARK_GRAFT_CPUS=1 and =8
 (local[1] and local[8]; the pair-block count and the streaming state
-partitions follow the core count) — and diffs every variant's value hash
-against the canonical session's. Library versions are printed alongside.
-A key is staging-ready only when canonical == defaults == splitstream ==
-cores1 == cores8; the tz variant is reported separately (informational: a
+partitions follow the core count), one shuffle partition, and AQE off —
+and diffs every variant's value hash against the canonical session's.
+Library versions are printed alongside. A key is staging-ready only when
+canonical == defaults == splitstream == cores1 == cores8 == shuffle1 ==
+aqe_off; the tz variant is reported separately (informational: a
 tz-divergent key is fragile only if the driver ever runs non-UTC).
 
 Usage:
@@ -60,12 +61,19 @@ def value_hash(df) -> str:
     return m.hexdigest()
 
 
-def _session(partitions: int | None, tz: str | None = "UTC", cpus: int = 32):
+def _session(
+    partitions: int | None,
+    tz: str | None = "UTC",
+    cpus: int = 32,
+    aqe: bool = True,
+):
     from pyspark.sql import SparkSession
 
     b = SparkSession.builder.master(f"local[{cpus}]").config(
         "spark.ui.enabled", "false"
     )
+    if not aqe:
+        b = b.config("spark.sql.adaptive.enabled", "false")
     if partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(partitions))
     if tz is not None:
@@ -81,7 +89,9 @@ def _session(partitions: int | None, tz: str | None = "UTC", cpus: int = 32):
 # the streaming file source through 5 interleaved files at one file per
 # micro-batch; "tz" runs the whole surface in a non-UTC session zone;
 # "cores1"/"cores8" run on 1 and 8 local cores with SPARK_GRAFT_CPUS set
-# to match, which moves every fan-out sized from the core count.
+# to match, which moves every fan-out sized from the core count;
+# "shuffle1" plans every batch shuffle into one partition, and "aqe_off"
+# keeps the planned partition counts and join strategies at run time.
 _ENV_VARIANTS = [
     ("canonical", {"partitions": 32, "tz": "UTC"}, {}),
     ("defaults", {"partitions": None, "tz": "UTC"}, {}),
@@ -89,8 +99,12 @@ _ENV_VARIANTS = [
     ("tz", {"partitions": 32, "tz": "America/New_York"}, {}),
     ("cores1", {"partitions": 32, "tz": "UTC", "cpus": 1}, {"SPARK_GRAFT_CPUS": "1"}),
     ("cores8", {"partitions": 32, "tz": "UTC", "cpus": 8}, {"SPARK_GRAFT_CPUS": "8"}),
+    ("shuffle1", {"partitions": 1, "tz": "UTC"}, {}),
+    ("aqe_off", {"partitions": 32, "tz": "UTC", "aqe": False}, {}),
 ]
-_HARD_VARIANTS = ("defaults", "splitstream", "cores1", "cores8")
+_HARD_VARIANTS = (
+    "defaults", "splitstream", "cores1", "cores8", "shuffle1", "aqe_off"
+)
 
 
 def _env_parity(ent, sf: str, keys_arg: list[str], window: int) -> int:
@@ -107,7 +121,9 @@ def _env_parity(ent, sf: str, keys_arg: list[str], window: int) -> int:
     for name, conf, env in _ENV_VARIANTS:
         saved = {k: os.environ.get(k) for k in env}
         os.environ.update(env)
-        spark = _session(conf["partitions"], conf["tz"], conf.get("cpus", 32))
+        spark = _session(
+            conf["partitions"], conf["tz"], conf.get("cpus", 32), conf.get("aqe", True)
+        )
         try:
             q = ent.queries()
             keys = keys_arg or list(q)[:window]
