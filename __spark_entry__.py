@@ -23,133 +23,14 @@ from hh_rumors_presto_spark.registry import ORACLES, QUERIES, load_all_queries
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 
-# The driver evaluates the FIRST 50 registry keys per round (observed in
-# rounds 1-2: CORRECTNESS keys == first 50 in insertion order). Keys listed
-# here are served first so each round's window covers (a) keys whose
-# failures were just fixed and (b) families that have not yet had a driver
-# correctness row. Rotate per round until every oracle-backed key has gone
-# green at least once; keys not listed follow in registration order.
-#
-# The rotation is SELF-ADVANCING — _ordered() derives the window from
-# the committed CORRECTNESS_r*.json ledger: non-green FRONT_KEYS first
-# (reds being re-proven after a fix), then evaluated-but-never-green
-# keys (graduated no_oracle rows), then the never-evaluated remainder
-# in registration order, with ever-green keys last. Green FRONT_KEYS
-# yield their slots automatically (round-5 fix: the previous
-# all-or-nothing gate re-served the whole 50-key round-4 window while
-# ANY front key stayed red, starving the never-evaluated tail).
-# Sanity-check any round with `python tools/rotation_check.py`.
-#
-# ROUND-7 curated window. Round 6 went 50/50 green, so every previous
-# FRONT_KEY yields its slot (they are all in the ledger's green set) and
-# the window is the never-evaluated backlog in registration order — with
-# ONE curated exception per VERDICT.md round-6 item 2:
-# ``stream_watermark`` is the last §2.B contract key without a driver
-# CORRECTNESS row (its oracle graduated in round 6, after its only
-# rows-only row), and it sits deep in the backlog (serving position ~222)
-# because queries/streaming.py registers after the breadth modules. It is
-# fronted here so the §2.B contract closes at 105/105 driver-green this
-# round; the other 49 slots drain the backlog in registration order
-# exactly as _ordered() would serve anyway.
-#
-# ROUND-8 curated window: one exception again, per VERDICT.md round-7
-# item 4 — ``stream_watermark_latedrop``, the new (and only) r8 key (the
-# registry is otherwise frozen at 527+1 until the backlog drains), is the
-# rows-only multi-batch late-drop companion the verdict asked to see
-# driver-green this round; like its parent last round it registers deep
-# in the backlog, so it is fronted. stream_watermark itself went green in
-# r7, so it yields its slot automatically; the other 49 slots drain the
-# never-evaluated backlog in registration order.
-# ROUND-11 curated window: the final 50 never-evaluated backlog keys,
-# pinned EXPLICITLY (= exactly what _ordered() projected at round-10
-# close, tools/rotation_check.py). Pinning matters this round because
-# stream_watermark_latedrop graduated from rows-only to a full hash
-# oracle (round-11; see its docstring) — under the current contract its
-# stale rows-only row re-classifies as a re-prove, which would otherwise
-# jump the queue and push the 50th backlog key out of the window. The
-# backlog drains completely in r11; latedrop's re-prove plus the
-# ten round-11 additions (emb_knn_graph_ann[_recall], sink_txnlog,
-# stream_rocksdb_state, stream_crash_recovery, constraints_infer, and
-# the lakehouse second wave scan_txnlog_timetravel /
-# scan_txnlog_incremental / sink_txnlog_compact / sink_txnlog_vacuum)
-# form the 11-key
-# round-12 window, closing the full 538-key ledger.
-FRONT_KEYS = [
-    "mm_resize_plan", "debug_counters", "dq_drift_psi", "dq_impute",
-    "dq_benford", "dq_freshness", "dq_join_skew", "dq_embedding_drift",
-    "set_intersect_all", "set_except_all", "array_explode",
-    "str_sanitize_html", "scan_partition_pruned", "join_bloom_pruned",
-    "pipeline_rlhf_pairs", "corpus_mix_weights", "sink_parquet_roundtrip",
-    "scan_paged_dsv2", "map_ops", "sink_text_roundtrip", "scan_provenance",
-    "sql_lateral_topk", "win_gaps_islands", "sql_parameterized",
-    "stream_session_state", "stream_join", "stream_foreach_batch",
-    "stream_join_outer", "stream_merge_upsert", "str_like", "str_misc",
-    "null_fns", "sql_tpch_q5", "sql_tpch_q8", "sql_tpch_q13",
-    "sql_tpch_q15", "sql_tpch_q17", "sql_tpch_q19", "sql_tpch_q21",
-    "sql_tpch_q10", "sql_tpch_q14", "sql_tpch_q18", "filter_disjunctive",
-    "win_distribution", "array_set_ops", "sql_tpch_q7", "sql_tpch_q1",
-    "sql_tpch_q6", "udtf_native", "explode_outer_preserve",
-]
-
-
-# Keys with a driver CORRECTNESS row from rounds 1-3 (green, or the
-# declared rows-only approximates). They sort LAST so that, if the driver's
-# window is ever wider than 50, the extra slots go to keys that have never
-# had a driver correctness row rather than re-proving known-green ones.
-# (stream_stateful also has an r3 row — red — so it rides in FRONT_KEYS,
-# which takes precedence over this set.)
-_DRIVER_EVALUATED = frozenset({
-    # round-3 window (all green in CORRECTNESS_r03)
-    "extract_page_items", "scan_http_crawl", "flagship_from_html",
-    "sim_ann_multitable", "sim_ann_recall", "scan_paged_resume",
-    "str_clean", "str_extract_date", "str_escape", "date_arith",
-    "math_basic", "json_extract", "limit_offset", "join_cross",
-    "scan_paged_pushdown", "sink_json", "join_null_safe",
-    "scan_schema_merge", "scan_dpp", "str_extract_all",
-    "sql_tpch_q4", "sql_tpch_q12", "sql_tpch_q22",
-    "stream_sliding", "stream_dedup", "stream_stateful", "stream_ohlc",
-    "win_time_range", "cdc_compact", "snapshot_diff", "agg_partial_merge",
-    "sample_stratified", "text_blocklist", "text_ngram_freq", "dedup_prefix",
-    "emb_normalize", "agg_moments", "agg_two_stage", "text_decontaminate",
-    "dedup_levenshtein", "agg_mode", "text_gopher_rules", "text_repetition",
-    "corpus_domain_cap", "pipeline_pack", "emb_kmeans_assign",
-    "agg_heavy_hitters", "sink_orc_roundtrip", "text_segment_dedup",
-    "curation_quality_rank",
-    # rounds 1-2
-    "agg_approx_distinct", "agg_approx_quantile", "agg_argmax", "agg_basic",
-    "agg_collect", "agg_conditional", "agg_corr", "agg_cube", "agg_distinct",
-    "agg_filtered_q6", "agg_grouping_sets", "agg_histogram",
-    "agg_percentile_exact", "agg_pivot", "agg_rollup", "agg_stats",
-    "agg_string", "array_ops", "case_when", "cohort_retention",
-    "date_parse_fmt", "dedup_clusters", "dedup_embedding", "dedup_exact",
-    "dedup_firstwin", "dedup_minhash", "dedup_ngram_jaccard",
-    "dedup_simhash", "dq_checks", "filter_conj", "flagship_multitag",
-    "flagship_pipeline", "funnel_conversion", "join_anti", "join_asof",
-    "join_broadcast", "join_bucketed", "join_full_outer", "join_merge",
-    "join_outer", "join_range", "join_salted", "join_semi", "join_star",
-    "json_parse_struct", "mm_decode", "mm_frame_sample", "multimodal_join",
-    "pipeline_pretrain", "project_rename", "render_block", "sample_hash",
-    "scan_csv", "scan_json", "scan_paged", "scan_parquet", "scd2_merge",
-    "set_except", "set_intersect", "set_union", "set_union_byname",
-    "set_union_distinct", "sim_ann_lsh", "sim_topk", "sort_multi",
-    "sql_tpch_q3", "str_slugify", "stream_session", "stream_tumbling",
-    "subq_scalar", "text_chunk", "text_fingerprint", "text_langid",
-    "text_quality", "text_stem", "text_tfidf", "text_tokens", "topk",
-    "ts_gapfill", "ts_sessionize", "udaf_grouped", "udf_scalar",
-    "udtf_extract", "win_ffill", "win_frames", "win_laglead", "win_rank",
-    "win_topk",
-})
-
 
 def _driver_ledger() -> tuple[set, set]:
     """(evaluated, green) key sets from the committed CORRECTNESS_r*.json
     rows. green = proven under the key's CURRENT verification contract:
     a value-hash match, or — for keys that STILL have no oracle — any
     crash-free rows-only row. A stale no_oracle row on a key that has
-    since gained an oracle does NOT count, so graduated keys rotate back
-    into the window to be re-proven. Falls back to the hand-maintained
-    _DRIVER_EVALUATED set if the ledger is unreadable, so the ordering
-    degrades to round-3 behavior rather than scrambling."""
+    since gained an oracle does NOT count, so graduated keys are
+    re-proven. Both sets are empty if the ledger cannot be read."""
     evaluated: set = set()
     latest_green: dict = {}
     try:
@@ -162,50 +43,18 @@ def _driver_ledger() -> tuple[set, set]:
                     and row.get("spark_rows") is not None
                     and k not in ORACLES
                 )
-        if not paths:
-            return set(_DRIVER_EVALUATED), set(_DRIVER_EVALUATED)
     except Exception:
-        return set(_DRIVER_EVALUATED), set(_DRIVER_EVALUATED)
+        return set(), set()
     return evaluated, {k for k, g in latest_green.items() if g}
 
 
 def _ordered(d: dict) -> dict:
-    """Serve keys in rotation priority order, derived from the driver's
-    own CORRECTNESS ledger so the 50-key evaluation window advances
-    WITHOUT manual staging each round:
-
-    1. FRONT_KEYS (the curated window) — but ONLY while at least one of
-       them still lacks a green row. Once the whole curated window has
-       gone green, it is ignored: a stale FRONT_KEYS from a previous
-       round can never waste evaluation slots re-proving known greens.
-    2. Evaluated-but-never-green keys (red rows being re-proven after a
-       fix) — highest-information slots.
-    3. Never-evaluated keys, registration order (the staged r5/r6/r7
-       window lists below document the expected contents per round).
-    4. Ever-green keys last.
-    """
+    """Serve keys whose latest driver CORRECTNESS row is not green first
+    (reds re-proven after a fix), then every other key in registration
+    order. With an unreadable ledger this is registration order."""
     evaluated, green = _driver_ledger()
-    # Serve ONLY the non-green curated keys first (reds being re-proven).
-    # Green front keys yield their slots to the never-evaluated remainder —
-    # otherwise one stubborn red would pin all 50 slots on re-proving the
-    # previous round's known-green window and starve the rotation.
-    front = {k: d[k] for k in FRONT_KEYS if k in d and k not in green}
-    red = {
-        k: v
-        for k, v in d.items()
-        if k not in front and k in evaluated and k not in green
-    }
-    untested = {
-        k: v
-        for k, v in d.items()
-        if k not in front and k not in red and k not in evaluated
-    }
-    rest = {
-        k: v
-        for k, v in d.items()
-        if k not in front and k not in red and k not in untested
-    }
-    return {**front, **red, **untested, **rest}
+    red = {k: v for k, v in d.items() if k in evaluated and k not in green}
+    return {**red, **{k: v for k, v in d.items() if k not in red}}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -221,52 +70,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL per query key — complete: every
-    registered key carries an oracle (the last rows-only exemption,
-    stream_watermark_latedrop, graduated in round 11), so the driver
-    hash-verifies the whole surface."""
+    """DuckDB-runnable ANSI SQL per query key; every registered key
+    carries an oracle, so the driver hash-verifies the whole surface."""
     load_all_queries()
     return _ordered(ORACLES)
 
-
-# STAGED ROTATION WINDOWS — documentation of the expected per-round
-# contents. The AUTHORITATIVE order is computed by _ordered() from the
-# committed CORRECTNESS ledger (self-advancing: red/graduated keys
-# first, then the never-evaluated remainder in registration order, so
-# the window rotates correctly even with zero manual staging).
-# Regenerate the picture any time with `python tools/rotation_check.py`.
-#
-# CORRECTION (round 7): the round-6 commits bd080d2/69a6c9a documented
-# projected round-7/8/9 windows starting at `set_except_all` — that list
-# was STALE: it described the never-evaluated tail of the CORE modules
-# (relational/scans/streaming/tpch), but registration order puts the
-# breadth_round* modules first, so the real backlog head after round 6
-# is `feat_hashing_trick ...` (breadth_round11 onward). The keys named
-# in those stale lists are still in the backlog and will be served at
-# their true registration positions (set_except_all ~#207,
-# stream_watermark ~#222 — hence its curated FRONT_KEYS slot this
-# round). The round-6 prevalidation RUNS (double-run idempotency of the
-# whole backlog, env-parity for the first 150) were executed against
-# serving order produced by rotation_check at the time, so the
-# properties hold for the real backlog keys regardless of the mislabeled
-# comment.
-#
-# ROUND-7 STATUS: window = stream_watermark (curated, last §2.B key
-# without a driver row) + the first 49 never-evaluated keys in
-# registration order: feat_hashing_trick aqp_bootstrap_ci
-# text_lm_bigram_backoff recs_item_cf agg_pushdown_join corpus_anneal_mix
-# ml_naive_bayes agg_mutual_info ts_theil_sen graph_triangles
-# graph_clustering_coeff graph_link_predict graph_wcc graph_label_prop
-# recs_covisit_next ts_mann_kendall agg_decay_sum feat_standardize
-# ivm_topk_delta graph_ppr_seeded stream_topk_merge ts_esd_outliers
-# ts_kaplan_meier ab_power_mde dq_change_attribution recs_session_paths
-# scan_log_parse agg_geo_harmonic_mean ab_ratio_delta_method graph_hits
-# text_zipf_fit ts_alert_debounce pipeline_length_buckets
-# text_hapax_ratio ts_sli_burn_rate emb_kcenter_init emb_dim_variance
-# ts_iqr_fence join_sample_consistent agg_growth_accounting
-# dq_chi2_goodness ab_metric_decompose ab_poisson_rate graph_random_walk
-# ml_decision_stump text_ngram_novelty corpus_source_overlap
-# dq_heavy_changers ts_time_to_convert graph_adamic_adar
-# (verified 50/50 green twice locally this round — see BASELINE.md).
-# Backlog after this window: 199 keys; at 50/round every key has a
-# driver row after round 11.

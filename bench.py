@@ -17,18 +17,12 @@ sessions, and headline totals scale ~linearly with parallel32_sec —
 so a BENCH_r{N} total only carries cross-round signal after comparing
 its embedded probes (idle band: ~0.70-0.78 single / ~1.2-1.4 parallel).
 
-Round 8 (VERDICT r7 item 5): the three heavies that historically drew
-ambient-load re-litigation (dedup_clusters, graph_pagerank,
-emb_knn_graph) run TWICE; the recorded per-query timing (and the total)
-uses the MIN, and both raw runs are emitted under "heavy_min_of_2" so
-each heavy carries its own load witness — a wide spread between the two
-runs IS the hypervisor-noise signature, visible per query instead of
-only via the session-level probe pair.
-
-Round 9 (VERDICT r8 item 4): min-of-2 extended to the next noise tier —
-sim_topk, agg_basic, join_star, stream_tumbling showed +26-37%
-probe-correlated swings in the r8 driver reading while staying in-band
-on the idle host; seven keys now emit raw pairs (~6 s extra wall-clock).
+Seven noisy keys run TWICE (dedup_clusters, graph_pagerank,
+emb_knn_graph, sim_topk, agg_basic, join_star, stream_tumbling): the
+recorded per-query timing (and the total) uses the MIN, and both raw runs
+are emitted under "heavy_min_of_2" so each carries its own load witness —
+a wide spread between the two runs is the host-noise signature, visible
+per query instead of only via the session-level probe pair.
 """
 
 from __future__ import annotations
@@ -147,7 +141,6 @@ def main() -> None:
 
     heavy = {
         "dedup_clusters", "graph_pagerank", "emb_knn_graph",
-        # round-9 noise tier (VERDICT r8 item 4)
         "sim_topk", "agg_basic", "join_star", "stream_tumbling",
     }
     timings: dict[str, float] = {}

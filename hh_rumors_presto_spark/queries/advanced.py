@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec, dec_type
 from hh_rumors_presto_spark.registry import query
 
 
@@ -37,17 +38,17 @@ from hh_rumors_presto_spark.registry import query
 def sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 (shipping priority) through the SQL API — text SQL over
     registered views compiles to the same Catalyst plan as the DataFrame
-    form; the segment/date filters push below both joins. Revenue is summed
-    in DECIMAL (order-insensitive) then cast to DOUBLE in the final
-    projection for driver-canonicalizer type stability; the TOP-10 is taken
-    on the exact decimal value before the cast."""
+    form; the segment/date filters push below both joins. Revenue is an
+    exact DECIMAL sum (``functions.exact``) cast to DOUBLE in the final
+    projection; the TOP-10 is taken on the exact decimal value before the
+    cast."""
     io.register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT l_orderkey, CAST(round(revenue, 2) AS DOUBLE) AS revenue, orderdate
         FROM (
             SELECT l.l_orderkey,
-                   sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,4))) AS revenue,
+                   sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS {dec_type(4)})) AS revenue,
                    CAST(o.o_orderdate AS DATE) AS orderdate
             FROM customer c
             JOIN orders o ON c.c_custkey = o.o_custkey
@@ -90,11 +91,7 @@ def agg_filtered_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                        "decimal(28,4)"
-                    )
-                ),
+                F.sum(dec(F.col("l_extendedprice") * F.col("l_discount"), 4)),
                 2,
             ).cast("double").alias("revenue"),
             F.count("*").alias("n_lines"),
@@ -146,7 +143,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
-        .agg(F.sum(F.col("l_quantity").cast("decimal(28,2)")))
+        .agg(F.sum(dec(F.col("l_quantity"), 2)))
     )
     return out.select(
         "l_returnflag",
@@ -258,7 +255,7 @@ def subq_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = io.load_table(spark, sf_dir, "customer")
     nation_avg = cust.groupBy("c_nationkey").agg(
         (
-            F.sum(F.col("c_acctbal").cast("decimal(28,2)")).cast("double")
+            F.sum(dec(F.col("c_acctbal"), 2)).cast("double")
             / F.count("*")
         ).alias("avg_bal")
     )

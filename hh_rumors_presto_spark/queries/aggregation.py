@@ -1,13 +1,9 @@
 """Aggregation operators (SURVEY.md §2.B "Aggregation"; generalizes the
 reference's debug counters #22 and the group-all fold #25).
 
-Float-aggregate parity rule (SURVEY.md §7.4 item 6): SUM over doubles is
-order-dependent, and Spark/DuckDB reduce in different orders. So every money
-sum is computed over DECIMAL (exact, order-insensitive) — per-row doubles
-are cast to decimal first, which both engines do identically for the same
-IEEE value — and averages are derived as double(sum_dec)/count, an identical
-IEEE division in both engines. No tolerance, no rounding: hashes match
-exactly.
+Money sums are exact DECIMAL sums (the parity rule is in
+``functions.exact``); averages are derived as double(sum_dec)/count, an
+identical IEEE division in both engines, so hashes match exactly.
 
 Scale note: all of these are hash aggregates with automatic partial+final
 (map-side combine), so the shuffle carries one row per (group, partition).
@@ -19,11 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec, revenue
 from hh_rumors_presto_spark.registry import query
-
-
-def _dec(c: F.Column, scale: int = 2) -> F.Column:
-    return c.cast(f"decimal(28,{scale})")
 
 
 @query(
@@ -56,32 +49,25 @@ def _dec(c: F.Column, scale: int = 2) -> F.Column:
 def agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: filtered scan -> 2-key hash agg, 8 aggregates.
 
-    Sums are computed in DECIMAL (order-insensitive) but the FINAL projection
-    casts them to DOUBLE: the driver's canonicalizer stringifies Spark
-    decimal.Decimal and DuckDB DECIMAL->float64 differently (r1 hash-fails).
-    High-scale sums are first round(x, 2)-ed: (a) DuckDB's decimal->double
-    goes int128->double / 10^scale, only correctly rounded when the
-    unscaled value fits in 2^53; (b) a bare CAST to DECIMAL(28,2)
-    truncates in DuckDB but HALF_UPs in Spark. round() is
-    half-away-from-zero in BOTH engines (verified), and at low scale the
-    double conversion is exact+correctly rounded, hence bit-identical.
-    PRODUCT casts quantize at their true decimal grid — (28,4) for
-    price x (1-disc), (28,6) with the extra (1+tax) factor — because at
-    scale 10 the two engines' double->DECIMAL conversions can disagree by
-    1e-10 per row and a group sum can straddle a round(...,2)
-    half-boundary (the round-8 fuzz-seed-7 find; see tpch_full._REV_DEC)."""
+    Sums follow ``functions.exact``: exact DECIMAL per row, cast to DOUBLE
+    in the FINAL projection (the driver's canonicalizer stringifies Spark
+    decimal.Decimal and DuckDB DECIMAL->float64 differently), the
+    high-scale product sums round(x, 2)-ed first. ``sum_charge`` casts the
+    raw double product price x (1-disc) x (1+tax) at scale 6, not the
+    scale-4 revenue."""
     li = io.load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    charge = (
+        F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
+    )
     g = (
         li.filter(F.col("l_shipdate").cast("date") <= F.lit("1998-09-02").cast("date"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(_dec(F.col("l_quantity"))).alias("sum_qty"),
-            F.sum(_dec(F.col("l_extendedprice"))).alias("sum_base_price"),
-            F.sum(_dec(disc_price, 4)).alias("sum_disc_price"),
-            F.sum(_dec(charge, 6)).alias("sum_charge"),
-            F.sum(_dec(F.col("l_discount"))).alias("sum_disc"),
+            F.sum(dec(F.col("l_quantity"), 2)).alias("sum_qty"),
+            F.sum(dec(F.col("l_extendedprice"), 2)).alias("sum_base_price"),
+            F.sum(revenue()).alias("sum_disc_price"),
+            F.sum(dec(charge, 6)).alias("sum_charge"),
+            F.sum(dec(F.col("l_discount"), 2)).alias("sum_disc"),
             F.count("*").alias("count_order"),
         )
     )
@@ -176,7 +162,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = io.load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping_id().alias("gid"),
-        F.sum(_dec(F.col("l_quantity"))).cast("double").alias("sum_qty"),
+        F.sum(dec(F.col("l_quantity"), 2)).cast("double").alias("sum_qty"),
         F.count("*").alias("n"),
     ).select("l_returnflag", "l_linestatus", "gid", "sum_qty", "n")
 
@@ -196,7 +182,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = io.load_table(spark, sf_dir, "orders")
     return li.cube("o_orderstatus", "o_orderpriority").agg(
         F.grouping_id().alias("gid"),
-        F.sum(_dec(F.col("o_totalprice"))).cast("double").alias("sum_price"),
+        F.sum(dec(F.col("o_totalprice"), 2)).cast("double").alias("sum_price"),
         F.count("*").alias("n"),
     ).select("o_orderstatus", "o_orderpriority", "gid", "sum_price", "n")
 
@@ -249,12 +235,11 @@ def agg_string(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered/conditional aggregation: sum(CASE WHEN ...)."""
     li = io.load_table(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return li.groupBy("l_linestatus").agg(
         F.round(
             F.sum(
-                F.when(F.col("l_returnflag") == "R", _dec(revenue, 4)).otherwise(
-                    F.lit(0).cast("decimal(28,4)")
+                F.when(F.col("l_returnflag") == "R", revenue()).otherwise(
+                    dec(F.lit(0), 4)
                 )
             ),
             2,
@@ -346,7 +331,7 @@ def agg_mom_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = orders.groupBy(
         "o_orderstatus",
         F.date_trunc("month", F.col("o_orderdate").cast("date")).alias("m"),
-    ).agg(F.sum(F.col("o_totalprice").cast("decimal(28,10)")).alias("tot"))
+    ).agg(F.sum(dec(F.col("o_totalprice"), 10)).alias("tot"))
     w = Window.partitionBy("o_orderstatus").orderBy("m")
     prev = F.lag("tot").over(w)
     return monthly.select(

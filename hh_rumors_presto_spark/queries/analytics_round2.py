@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 
 _BM25_K1, _BM25_B = 1.2, 0.75
@@ -383,9 +384,7 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compacted.agg(
         F.countDistinct("src_file").cast("int").alias("n_files"),
         F.count("*").alias("n_rows"),
-        F.sum(F.col("o_totalprice").cast("decimal(28,2)"))
-        .cast("double")
-        .alias("total"),
+        F.sum(dec(F.col("o_totalprice"), 2)).cast("double").alias("total"),
     )
 
 

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -855,7 +856,7 @@ def ts_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.date_trunc("hour", "ts").alias("bucket")
     ).agg(
         F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(28,10)")).alias("tot"),
+        F.sum(dec(F.col("value"), 10)).alias("tot"),
     )
     coarse = fine.groupBy(
         "event_type", F.date_trunc("day", "bucket").alias("bucket")
@@ -1297,7 +1298,7 @@ def ts_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         (F.sum("us").cast("double") / F.count("*")).alias("mx"),
         (
-            F.sum(F.col("value").cast("decimal(28,10)")).cast("double")
+            F.sum(dec(F.col("value"), 10)).cast("double")
             / F.count("*")
         ).alias("my"),
     )

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.queries.breadth_round6 import (
     _HLL_M,
     _HLL_RANK_HEX,
@@ -277,7 +278,7 @@ def sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(
                 F.count("*").cast("long").alias("n"),
-                F.sum(F.col("o_totalprice").cast("decimal(28,2)"))
+                F.sum(dec(F.col("o_totalprice"), 2))
                 .cast("double")
                 .alias("total_price"),
             )

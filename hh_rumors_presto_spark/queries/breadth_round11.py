@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -101,7 +102,7 @@ def scan_txn_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             snap.groupBy(F.col("o_orderstatus").alias("status"))
             .agg(
                 F.count("*").cast("long").alias("n"),
-                F.sum(F.col("o_totalprice").cast("decimal(28,2)"))
+                F.sum(dec(F.col("o_totalprice"), 2))
                 .cast("double")
                 .alias("total_price"),
             )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -190,7 +191,7 @@ def agg_pushdown_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_supp = li.groupBy("l_suppkey").agg(
         F.sum(
-            F.col("l_extendedprice").cast("decimal(28,2)")
+            dec(F.col("l_extendedprice"), 2)
             * (
                 F.lit(100)
                 - F.floor(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import revenue
 from hh_rumors_presto_spark.registry import query
 
 
@@ -377,9 +378,7 @@ def agg_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = io.load_table(spark, sf_dir, "lineitem")
     sup = io.load_table(spark, sf_dir, "supplier")
     nation = io.load_table(spark, sf_dir, "nation")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,4)"
-    )
+    rev = revenue()
     per_nation = (
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey)

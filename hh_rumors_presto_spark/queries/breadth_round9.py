@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.queries.extensions_dedup import bigram_shingles
 from hh_rumors_presto_spark.registry import query
 
@@ -186,9 +187,7 @@ def join_skew_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim = ev.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_user"),
-        F.sum(F.col("value").cast("decimal(28,2)"))
-        .cast("decimal(38,2)")
-        .alias("v_user"),
+        F.sum(dec(F.col("value"), 2)).cast("decimal(38,2)").alias("v_user"),
     )
     hot_dim = dim.filter(F.col("n_user") >= _HOT_MIN)
     # the cold dim is hinted to SHUFFLE deliberately: the hybrid's premise

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 
 # per-language keep rates for the balanced sample: dominant language
@@ -239,7 +240,7 @@ def agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     with identical association on both engines — so even skewness is
     bit-exact cross-engine, no libm pow() anywhere."""
     li = io.load_table(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity").cast("decimal(28,2)")
+    q = dec(F.col("l_quantity"), 2)
     g = li.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.sum(q).alias("s1d"),
@@ -292,7 +293,7 @@ def agg_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     partial = salted.groupBy("event_type", "salt").agg(
         F.count("*").alias("pn"),
-        F.sum(F.col("value").cast("decimal(28,2)")).alias("psum"),
+        F.sum(dec(F.col("value"), 2)).alias("psum"),
     )
     return partial.groupBy("event_type").agg(
         F.sum("pn").alias("n"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.functions import dot
 from hh_rumors_presto_spark.registry import query
 
@@ -419,9 +420,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n_rows"),
-            F.sum(F.col("l_quantity").cast("decimal(28,2)"))
-            .cast("double")
-            .alias("sum_qty"),
+            F.sum(dec(F.col("l_quantity"), 2)).cast("double").alias("sum_qty"),
         )
     )
 

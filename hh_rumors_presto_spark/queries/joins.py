@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec, revenue
 from hh_rumors_presto_spark.operators import asof_join
 from hh_rumors_presto_spark.registry import query
 
@@ -90,7 +91,6 @@ def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = io.load_table(spark, sf_dir, "customer")
     nation = io.load_table(spark, sf_dir, "nation")
     region = io.load_table(spark, sf_dir, "region")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(
             orders.filter(F.col("o_orderstatus") != "P"),
@@ -104,9 +104,7 @@ def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation_name"),
         )
         .agg(
-            F.round(F.sum(revenue.cast("decimal(28,4)")), 2)
-            .cast("double")
-            .alias("revenue"),
+            F.round(F.sum(revenue()), 2).cast("double").alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -133,8 +131,8 @@ def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("o_orderkey").alias("n_orders"),
             F.coalesce(
-                F.sum(F.col("o_totalprice").cast("decimal(28,2)")),
-                F.lit(0).cast("decimal(28,2)"),
+                F.sum(dec(F.col("o_totalprice"), 2)),
+                dec(F.lit(0), 2),
             ).cast("double").alias("total_spend"),
         )
     )

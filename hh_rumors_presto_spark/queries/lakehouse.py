@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import ORACLES, query
 
 
@@ -277,7 +278,7 @@ def agg_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus", (F.col("o_orderkey") % 4).alias("shard")
     ).agg(
         F.count("*").alias("part_n"),
-        F.sum(F.col("o_totalprice").cast("decimal(28,2)")).alias("part_sum"),
+        F.sum(dec(F.col("o_totalprice"), 2)).alias("part_sum"),
         F.min("o_totalprice").alias("part_min"),
         F.max("o_totalprice").alias("part_max"),
     )
@@ -324,9 +325,7 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("c_nationkey")
             .agg(
                 F.count("*").alias("n"),
-                F.sum(F.col("o_totalprice").cast("decimal(28,10)")).alias(
-                    "tot"
-                ),
+                F.sum(dec(F.col("o_totalprice"), 10)).alias("tot"),
             )
         )
 
@@ -450,7 +449,7 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(28,10)")), 2)
+            F.round(F.sum(dec(F.col("o_totalprice"), 10)), 2)
             .cast("double")
             .alias("spend"),
         )
@@ -543,7 +542,7 @@ def ivm_retract_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df.groupBy("o_orderstatus").agg(
             (F.count("*") * sign).alias("dn"),
             (
-                F.sum(F.col("o_totalprice").cast("decimal(28,10)")) * sign
+                F.sum(dec(F.col("o_totalprice"), 10)) * sign
             ).alias("dtot"),
         )
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 
 
@@ -69,9 +70,7 @@ def _census(back: DataFrame, tag: str) -> DataFrame:
     return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.count("*").cast("long").alias("n"),
         F.sum("o_orderkey").cast("long").alias("key_sum"),
-        F.sum(F.col("o_totalprice").cast("decimal(28,2)"))
-        .cast("double")
-        .alias("total_price"),
+        F.sum(dec(F.col("o_totalprice"), 2)).cast("double").alias("total_price"),
     ).select(F.lit(tag).alias("snapshot"), "*")
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.functions import slugify_expr_ascii
 from hh_rumors_presto_spark.registry import query
 
@@ -160,7 +161,7 @@ def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(c).cast("double").alias("min_val"),
             F.max(c).cast("double").alias("max_val"),
             (
-                F.sum(c.cast("decimal(28,2)")).cast("double") / F.count(c)
+                F.sum(dec(c, 2)).cast("double") / F.count(c)
             ).alias("mean_val"),
         )
 

@@ -78,6 +78,7 @@ def observed_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from hh_rumors_presto_spark import io  # noqa: E402
+from hh_rumors_presto_spark.functions.exact import dec  # noqa: E402
 
 
 @query(
@@ -319,15 +320,13 @@ def dq_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = io.load_table(spark, sf_dir, "lineitem")
     orders = io.load_table(spark, sf_dir, "orders")
     lsum = li.groupBy("l_orderkey").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(28,10)")).alias(
-            "line_total"
-        )
+        F.sum(dec(F.col("l_extendedprice"), 10)).alias("line_total")
     )
     j = orders.join(
         lsum, orders.o_orderkey == lsum.l_orderkey, "left"
     ).select(
         "o_orderstatus",
-        F.col("o_totalprice").cast("decimal(28,10)").alias("header_total"),
+        dec(F.col("o_totalprice"), 10).alias("header_total"),
         "line_total",
     )
     gap = F.abs(F.col("header_total") - F.col("line_total"))
@@ -348,7 +347,7 @@ def dq_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.sum(
                 F.when(F.col("line_total").isNotNull(), gap).otherwise(
-                    F.lit(0).cast("decimal(28,10)")
+                    dec(F.lit(0), 10)
                 )
             ),
             2,

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.functions.html import sanitize_html
 from hh_rumors_presto_spark.functions import clean
 from hh_rumors_presto_spark.registry import query
@@ -114,9 +115,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(
             F.count("*").alias("n_lines"),
-            F.sum(F.col("l_quantity").cast("decimal(28,2)"))
-            .cast("double")
-            .alias("sum_qty"),
+            F.sum(dec(F.col("l_quantity"), 2)).cast("double").alias("sum_qty"),
             F.max("o_totalprice").alias("total"),
         )
     )
@@ -192,5 +191,5 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = probe.join(dim, ["hot_key", "salt"])
     return joined.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(28,2)")).cast("double").alias("total_value"),
+        F.sum(dec(F.col("value"), 2)).cast("double").alias("total_value"),
     )

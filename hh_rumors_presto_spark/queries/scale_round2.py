@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import revenue
 from hh_rumors_presto_spark.registry import query
 
 _BLOOM_CONFS = {
@@ -63,9 +64,7 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("o_totalprice") > 350000)
             .select("o_orderkey")
         )
-        rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-            "decimal(28,4)"
-        )
+        rev = revenue()
         df = (
             li.join(sel, li.l_orderkey == sel.o_orderkey)
             .groupBy("l_returnflag")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 
 _NATION_SCHEMA = T.StructType(
@@ -165,9 +166,7 @@ def scan_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("yr")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(28,2)"))
-            .cast("double")
-            .alias("total"),
+            F.sum(dec(F.col("o_totalprice"), 2)).cast("double").alias("total"),
         )
     )
 
@@ -334,7 +333,7 @@ def scan_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count("*").cast("long").alias("n"),
-                F.round(F.sum(F.col("o_totalprice").cast("decimal(28,10)")), 2)
+                F.round(F.sum(dec(F.col("o_totalprice"), 10)), 2)
                 .cast("double")
                 .alias("total"),
             )

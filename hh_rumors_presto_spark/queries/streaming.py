@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 from hh_rumors_presto_spark.streaming import (
     fold_stream_state,
@@ -52,7 +53,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(28,2)")).alias("total_value"),
+            F.sum(dec(F.col("value"), 2)).alias("total_value"),
         )
     )
     out = run_stream_to_df(
@@ -88,7 +89,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy(F.window("ts", "2 hours", "1 hour")).agg(
         F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(28,2)")).alias("total_value"),
+        F.sum(dec(F.col("value"), 2)).alias("total_value"),
     )
     out = run_stream_to_df(
         agg, output_mode="complete", n_rows=io.table_num_rows(sf_dir, "events")

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.registry import query
 from hh_rumors_presto_spark.streaming import (
     fold_stream_state,
@@ -151,7 +152,7 @@ def stream_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.date_trunc("hour", "ts").alias("bucket"),
             F.lit(1).cast("long").alias("n"),
-            F.col("value").cast("decimal(28,10)").alias("tot"),
+            dec(F.col("value"), 10).alias("tot"),
         )
         for half in (0, 1)
     ]

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.operators.constraints import candidate_keys
 from hh_rumors_presto_spark.registry import query
 from hh_rumors_presto_spark.streaming import (
@@ -107,7 +108,7 @@ def sink_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count("*").cast("long").alias("n"),
                 F.sum("o_orderkey").cast("long").alias("key_sum"),
-                F.sum(F.col("o_totalprice").cast("decimal(28,2)"))
+                F.sum(dec(F.col("o_totalprice"), 2))
                 .cast("double")
                 .alias("total_price"),
             )

@@ -21,15 +21,9 @@ q17 per-part avg join, q21 per-order stats join) are the standard
 shuffle-bounded rewrites of the spec's correlated subqueries — no
 nested-loop or per-row subquery execution anywhere.
 
-Decimal discipline: money sums accumulate in exact DECIMAL
-(reduction-order-insensitive under any partitioning), rounded and cast to
-DOUBLE only in the final projection — in BOTH engines (registry.py rules).
-PRODUCT expressions quantize at their true decimal grid — DECIMAL(28,4)
-for price x (1 - discount) — not at scale 10; see the _REV_DEC note.
-Single 2-dec columns and integer-valued quantities may keep wider scales
-(their nearest-double error is under the scale-10 half-grid, and their
-true sums sit on the 2-dec grid where a round(...,2) boundary cannot
-fire), so those sites are unchanged.
+Decimal discipline: money sums are exact DECIMAL sums, rounded and cast
+to DOUBLE only in the final projection, in both engines; the rule and
+its scales are in ``functions.exact``.
 """
 
 from __future__ import annotations
@@ -38,24 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec, revenue
 from hh_rumors_presto_spark.registry import query
 
-# Revenue quantizes at DECIMAL(28,4) — the PRODUCT's true decimal grid
-# (2-dec price x 2-dec discount factor): a two-op double product can sit
-# ~1.5 ulp (~2e-10 at 5e5) off its grid value, which at scale 10 is wider
-# than the half-grid (5e-11), so Spark's string-mediated and DuckDB's
-# value-mediated double->DECIMAL casts disagree per-row and a group sum
-# can land a round(...,2) half-boundary one cent apart (found by fuzz
-# seed 7, sql_tpch_q10). At scale 4 the grid is 5e-5 — 10^5 wider than
-# the worst-case product error — so BOTH conversion styles provably land
-# the same grid point and sums stay exact and engine-identical.
+# The oracles' revenue term, at the product's true grid (scale 4; see
+# functions.exact, whose ``revenue()`` is the Spark side).
 _REV_DEC = "CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,4))"
-
-
-def _rev() -> F.Column:
-    return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,4)"
-    )
 
 
 @query(
@@ -105,7 +87,7 @@ def sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
-        .agg(F.round(F.sum(_rev()), 2).cast("double").alias("revenue"))
+        .agg(F.round(F.sum(revenue()), 2).cast("double").alias("revenue"))
     )
 
 
@@ -158,7 +140,7 @@ def sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = io.load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
     )
-    zero = F.lit(0).cast("decimal(28,4)")
+    zero = dec(F.lit(0), 4)
     base = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -176,7 +158,7 @@ def sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.year(od).alias("o_year"),
-            _rev().alias("v"),
+            revenue().alias("v"),
             F.col("n2.n_name").alias("nation"),
         )
     )
@@ -259,7 +241,7 @@ def sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (sd < F.lit("1996-04-01").cast("date"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(_rev()).alias("total_revenue"))
+        .agg(F.sum(revenue()).alias("total_revenue"))
     )
     max_rev = revenue0.agg(F.max("total_revenue").alias("max_revenue"))
     supp = io.load_table(spark, sf_dir, "supplier")
@@ -311,9 +293,7 @@ def sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.lit(0.2)
             * (
-                F.sum(F.col("l_quantity").cast("decimal(28,10)")).cast(
-                    "double"
-                )
+                F.sum(dec(F.col("l_quantity"), 10)).cast("double")
                 / F.count("*")
             )
         ).alias("threshold")
@@ -325,7 +305,7 @@ def sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.round(
-                    F.sum(F.col("l_extendedprice").cast("decimal(28,10)")),
+                    F.sum(dec(F.col("l_extendedprice"), 10)),
                     2,
                 ).cast("double")
                 / 7.0
@@ -374,7 +354,7 @@ def sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .filter(cond)
-        .agg(F.round(F.sum(_rev()), 2).cast("double").alias("revenue"))
+        .agg(F.round(F.sum(revenue()), 2).cast("double").alias("revenue"))
     )
 
 

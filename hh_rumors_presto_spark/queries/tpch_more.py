@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec, revenue
 from hh_rumors_presto_spark.registry import query
 
 
@@ -41,15 +42,12 @@ def sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = io.load_table(spark, sf_dir, "customer")
     nation = io.load_table(spark, sf_dir, "nation")
-    revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,4)"
-    )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), F.col("o_custkey") == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(revenue).alias("revenue"))
+        .agg(F.sum(revenue()).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
         .select(
@@ -82,10 +80,8 @@ def sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = io.load_table(spark, sf_dir, "lineitem")
     part = io.load_table(spark, sf_dir, "part")
     sd = F.col("l_shipdate").cast("date")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,4)"
-    )
-    zero = F.lit(0).cast("decimal(28,4)")
+    rev = revenue()
+    zero = dec(F.lit(0), 4)
     agg = (
         li.filter(
             (sd >= F.lit("1995-09-01").cast("date"))
@@ -136,7 +132,7 @@ def sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = io.load_table(spark, sf_dir, "orders")
     cust = io.load_table(spark, sf_dir, "customer")
     qty = li.groupBy("l_orderkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(28,2)")).alias("total_qty")
+        F.sum(dec(F.col("l_quantity"), 2)).alias("total_qty")
     )
     big = qty.filter(F.col("total_qty") > 150)
     return (
@@ -284,9 +280,6 @@ def sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = io.load_table(spark, sf_dir, "nation")
     sn = nation.alias("sn")
     cn = nation.alias("cn")
-    revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,4)"
-    )
     return (
         li.join(F.broadcast(sup), sup.s_suppkey == li.l_suppkey % 10 + 1)
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -303,7 +296,7 @@ def sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cn.n_name").alias("cust_nation"),
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
+        .agg(F.round(F.sum(revenue()), 2).cast("double").alias("revenue"))
     )
 
 
@@ -417,7 +410,7 @@ def sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
         (
-            F.sum(F.col("c_acctbal").cast("decimal(28,2)")).cast("double")
+            F.sum(dec(F.col("c_acctbal"), 2)).cast("double")
             / F.count("*")
         ).alias("v")
     )
@@ -430,7 +423,7 @@ def sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("numcust"),
-            F.round(F.sum(F.col("c_acctbal").cast("decimal(28,2)")), 2)
+            F.round(F.sum(dec(F.col("c_acctbal"), 2)), 2)
             .cast("double")
             .alias("totacctbal"),
         )

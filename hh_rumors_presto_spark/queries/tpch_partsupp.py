@@ -22,11 +22,10 @@ lineitem-spine distinct (the only corpus-scale shuffle each query adds);
 dimensions broadcast; q2's correlated min decorrelates to a keyed
 min-aggregate joined back; q16's NOT IN is a broadcast anti-join; q20's
 correlated availqty threshold decorrelates to a keyed half-sum join.
-Money/profit sums accumulate in DECIMAL(28,4) — the products' true
-decimal grid (2-dec supplycost/price x integer qty / 2-dec discount
-factor), where Spark's string-mediated and DuckDB's value-mediated
-double->DECIMAL casts provably agree (see tpch_full._REV_DEC) —
-rounded and cast to DOUBLE only in the final projection, both engines.
+Money/profit sums are exact DECIMAL sums at the products' true grid,
+scale 4 (2-dec supplycost/price x integer qty / 2-dec discount factor),
+rounded and cast to DOUBLE only in the final projection, both engines
+(``functions.exact``).
 """
 
 from __future__ import annotations
@@ -35,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec, revenue
 from hh_rumors_presto_spark.registry import query
 
 # Shared partsupp CTE (DuckDB side). ps_supplycost lands on two-decimal
@@ -198,11 +198,9 @@ def sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = io.load_table(spark, sf_dir, "supplier")
     nat = io.load_table(spark, sf_dir, "nation")
     orders = io.load_table(spark, sf_dir, "orders")
-    profit_term = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    ).cast("decimal(28,4)") - (
-        F.col("ps_supplycost") * F.col("l_quantity")
-    ).cast("decimal(28,4)")
+    profit_term = revenue() - dec(
+        F.col("ps_supplycost") * F.col("l_quantity"), 4
+    )
     return (
         li.join(
             ps,
@@ -277,9 +275,7 @@ def sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("ps_partkey")
         .agg(
             F.sum(
-                (F.col("ps_supplycost") * F.col("ps_availqty")).cast(
-                    "decimal(28,4)"
-                )
+                dec(F.col("ps_supplycost") * F.col("ps_availqty"), 4)
             ).alias("value_dec")
         )
     )

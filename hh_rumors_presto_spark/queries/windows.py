@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import dec
 from hh_rumors_presto_spark.operators import forward_fill, per_group_top_k
 from hh_rumors_presto_spark.registry import query
 
@@ -151,7 +152,7 @@ def win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_totalprice",
         F.col("o_orderdate").cast("date").alias("od"),
-        F.col("o_totalprice").cast("decimal(28,2)").alias("tp_dec"),
+        dec(F.col("o_totalprice"), 2).alias("tp_dec"),
     )
     w_time = Window.partitionBy("o_custkey").orderBy("od", "o_orderkey")
     w_run = w_time.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -233,7 +234,7 @@ def win_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.count("*").over(w).alias("n_last_hour"),
-        F.round(F.sum(F.col("value").cast("decimal(28,2)")).over(w), 2)
+        F.round(F.sum(dec(F.col("value"), 2)).over(w), 2)
         .cast("double")
         .alias("sum_last_hour"),
     )

@@ -26,7 +26,7 @@ Oracle-parity rules applied throughout (SURVEY.md §7.4):
 - the ``(2000000 * num + den) // (2 * den)`` micro-ratio numerators are
   BIGINT on the Spark side but silently promote to HUGEINT in DuckDB, so
   the engines only agree while ``2000000 * num`` stays under 2^63 —
-  i.e. num < ~4.6e12. ROUND 10: every site whose num is cents-sum-typed,
+  i.e. num < ~4.6e12. Every site whose num is cents-sum-typed,
   a sum of products, or quadratic in an entity count (agg_lorenz_deciles,
   agg_vwap_twap, agg_cvar_es, win_atr, ts_autoperiod, agg_hhi,
   ts_dispersion_test, dq_rank_stability, agg_engagement_gini) is
@@ -38,10 +38,11 @@ Oracle-parity rules applied throughout (SURVEY.md §7.4):
   materialization renders HUGEINT as decimal128 and the hash diverges
   from Spark's LONG — so every micro-ratio is wrapped in
   ``CAST(... AS BIGINT)`` in its final SELECT and
-  tests/test_oracle_types.py gates the whole registry (round 6).
+  tests/test_oracle_types.py gates the whole registry;
+- money sums are exact DECIMAL sums (``functions.exact``).
 
 Both numeric-envelope bounds above are PROPERTY-PINNED by
-tests/test_numeric_envelope.py (round 9): live under/over-bound drives of
+tests/test_numeric_envelope.py: live under/over-bound drives of
 the micro-ratio (bit-exact under 2^63; ANSI ARITHMETIC_OVERFLOW — loud,
 never silent — over it; the DECIMAL(38,0)-widened remedy bit-exact past
 it) and of floor-division (bit-exact under 2^53; the pinned 2^53+1

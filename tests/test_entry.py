@@ -34,29 +34,27 @@ def test_oracle_keys_subset_of_queries():
         assert key in qs
 
 
-def test_front_keys_valid():
-    """The driver samples the first 50 keys. Under the ledger-derived
-    rotation, only NON-GREEN FRONT_KEYS lead (greens yield their slots),
-    followed by other non-green evaluated keys, then the never-evaluated
-    remainder — no ever-green key may occupy a window slot while any
-    never-evaluated key waits."""
-    qs = ent.queries()
-    # Round 7+: FRONT_KEYS carries only curated exceptions (keys that must
-    # jump the registration-order backlog queue), not a full 50-key window.
-    assert 1 <= len(ent.FRONT_KEYS) <= 50
-    assert len(set(ent.FRONT_KEYS)) == len(ent.FRONT_KEYS)
-    missing = [k for k in ent.FRONT_KEYS if k not in qs]
-    assert not missing, missing
+def test_serving_order_reds_first():
+    """The driver samples the first 50 keys. Keys whose latest ledger row
+    is not green lead, in registration order; every other key follows in
+    registration order. The ledger order must not drop or add keys."""
+    from hh_rumors_presto_spark.registry import QUERIES
 
+    served = list(ent.queries())
+    registered = list(QUERIES)
+    assert sorted(served) == sorted(registered)
     evaluated, green = ent._driver_ledger()
-    window = list(qs)[:50]
-    front_live = [k for k in ent.FRONT_KEYS if k not in green]
-    assert window[: len(front_live)] == front_live
-    # greens never starve the never-evaluated tail
-    never = [k for k in qs if k not in evaluated]
-    if len(front_live) + len(never) >= 50:
-        leaked = [k for k in window if k in green]
-        assert not leaked, leaked
+    red = [k for k in registered if k in evaluated and k not in green]
+    assert served == red + [k for k in registered if k not in red]
+    assert list(ent.oracle_sql()) == [k for k in served if k in ent.oracle_sql()]
+
+
+def test_missing_ledger_serves_registration_order(monkeypatch):
+    from hh_rumors_presto_spark.registry import QUERIES
+
+    monkeypatch.setattr(ent, "_REPO_DIR", "/nonexistent")
+    assert ent._driver_ledger() == (set(), set())
+    assert list(ent.queries()) == list(QUERIES)
 
 
 def test_no_driver_hostile_output_types(spark, sf_dir):

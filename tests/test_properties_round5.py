@@ -242,7 +242,7 @@ def test_product_cast_diverges_at_scale_10_agrees_at_grid_scale_4():
     DECIMAL(28,10) in the two engines (half-grid 5e-11 < the product
     error), in both directions. At the product's TRUE grid, scale 4,
     both conversion styles land the exact 4-decimal value, so decimal
-    sums are engine-identical. Query discipline: tpch_full._REV_DEC."""
+    sums are engine-identical. Query discipline: functions.exact."""
     import duckdb
     from decimal import Decimal
 

@@ -24,15 +24,16 @@ DEFAULT-conf session (200 shuffle partitions, default AQE), a forced
 multi-file/out-of-order micro-batch streaming source (HH_STREAM_SPLIT),
 a non-UTC session timezone, sessions at SPARK_GRAFT_CPUS=1 and =8
 (local[1] and local[8]; the pair-block count and the streaming state
-partitions follow the core count), one shuffle partition, and AQE off —
-and diffs every variant's value hash against the canonical session's.
-Library versions are printed alongside. A key is staging-ready only when
+partitions follow the core count), one shuffle partition, AQE off, and
+200 shuffle partitions with AQE off (so none are coalesced) — and diffs
+every variant's value hash against the canonical session's. Library
+versions are printed alongside. A key is staging-ready only when
 canonical == defaults == splitstream == cores1 == cores8 == shuffle1 ==
-aqe_off; the tz variant is reported separately (informational: a
+aqe_off == shuffle_many; the tz variant is reported separately (informational: a
 tz-divergent key is fragile only if the driver ever runs non-UTC).
 
 Usage:
-    python tools/driver_sim.py                 # first 50 (the live window)
+    python tools/driver_sim.py                 # first 50 in serving order
     python tools/driver_sim.py --all           # whole registry
     python tools/driver_sim.py key1 key2 ...   # specific keys
     python tools/driver_sim.py --sf /root/testdata/sf0.001
@@ -90,8 +91,9 @@ def _session(
 # micro-batch; "tz" runs the whole surface in a non-UTC session zone;
 # "cores1"/"cores8" run on 1 and 8 local cores with SPARK_GRAFT_CPUS set
 # to match, which moves every fan-out sized from the core count;
-# "shuffle1" plans every batch shuffle into one partition, and "aqe_off"
-# keeps the planned partition counts and join strategies at run time.
+# "shuffle1" plans every batch shuffle into one partition, "aqe_off"
+# keeps the planned partition counts and join strategies at run time, and
+# "shuffle_many" runs every batch shuffle on 200 uncoalesced partitions.
 _ENV_VARIANTS = [
     ("canonical", {"partitions": 32, "tz": "UTC"}, {}),
     ("defaults", {"partitions": None, "tz": "UTC"}, {}),
@@ -101,9 +103,11 @@ _ENV_VARIANTS = [
     ("cores8", {"partitions": 32, "tz": "UTC", "cpus": 8}, {"SPARK_GRAFT_CPUS": "8"}),
     ("shuffle1", {"partitions": 1, "tz": "UTC"}, {}),
     ("aqe_off", {"partitions": 32, "tz": "UTC", "aqe": False}, {}),
+    ("shuffle_many", {"partitions": 200, "tz": "UTC", "aqe": False}, {}),
 ]
 _HARD_VARIANTS = (
-    "defaults", "splitstream", "cores1", "cores8", "shuffle1", "aqe_off"
+    "defaults", "splitstream", "cores1", "cores8", "shuffle1", "aqe_off",
+    "shuffle_many",
 )
 
 

@@ -278,7 +278,7 @@ def _boundary_price(rng: random.Random) -> float:
     its true 4-decimal grid, wider than the DECIMAL(28,10) half-grid, so
     the engines' casts disagreed per-row and seed 7's sql_tpch_q10 hit a
     round(...,2) half-boundary one cent apart. Product casts now
-    quantize at their true grid (tpch_full._REV_DEC), where both
+    quantize at their true grid (functions.exact), where both
     conversion styles provably agree."""
     r = rng.random()
     if r < 0.10:

@@ -1,9 +1,10 @@
 """Driver-evidence ledger: which registry keys still lack a driver
 CORRECTNESS row, and what the next evaluation window will contain.
 
-The driver evaluates the first 50 registry keys per round, and since
-round 4 the ordering is SELF-ADVANCING (__spark_entry__._ordered derives
-it from the committed CORRECTNESS_r*.json ledger). This tool unions every
+The driver evaluates the first 50 registry keys per round;
+__spark_entry__._ordered serves keys whose latest committed
+CORRECTNESS_r*.json row is not green first, then the rest in
+registration order. This tool unions every
 ledger file, diffs against the live registry, and prints:
 
 - per-round key counts and failures;
