@@ -8,12 +8,16 @@ pruning and partition-parallel scans for free — see SURVEY.md §2.A row 5.
 Footer rule: every fixture scan passes the schema of the table's parquet
 footer (:func:`read_footer`), so no schema-inference job runs while a
 query is built.  The footer is a planner statistic read at every load,
-not a result cache.  Directories that Spark wrote are still inferred.
+not a result cache.  A key that reads back a directory it wrote passes
+the schema it wrote, unless inferring that schema is what the key checks.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -128,19 +132,33 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def scoped_tmp_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
-    """Session- and fixture-scoped scratch directory path for keys that
-    must materialize intermediate files (streaming sources, DSv2 sink
-    roundtrips): /tmp/hh_<tag>_<sf_basename>_<applicationId>. The
-    applicationId keys it to ONE SparkSession (concurrent verifier
-    processes never collide; a driver retry within a session reuses and
-    must rebuild-or-overwrite), the sf basename keys it to the fixture.
-    The single definition of the scoping rule — callers must not
-    hand-roll variants (r11 review: three divergent copies)."""
-    import tempfile
+# Session roots this process made; one atexit hook removes them all.
+_SCRATCH_ROOTS: set[str] = set()
 
+
+def _remove_scratch_roots() -> None:
+    for root in _SCRATCH_ROOTS:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scoped_tmp_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
+    """Scratch directory ``<root>/<tag>_<sf_basename>`` for a key that
+    writes files and reads them back.
+
+    The root, ``<tempfile.gettempdir()>/hh_<applicationId>``, belongs to
+    one SparkSession, so two processes on one host never share a path;
+    within the session, ``tag`` and the fixture basename keep keys and
+    fixtures apart, and a rerun of a key reuses its directory.  The root
+    is made on first use and removed when the process exits, so callers
+    clean up only where clearing the directory is part of the key.
+    Every scratch path in the package comes from here."""
+    root = os.path.join(
+        tempfile.gettempdir(), f"hh_{spark.sparkContext.applicationId}"
+    )
+    if not _SCRATCH_ROOTS:
+        atexit.register(_remove_scratch_roots)
+    _SCRATCH_ROOTS.add(root)
+    os.makedirs(root, exist_ok=True)
     return os.path.join(
-        tempfile.gettempdir(),
-        f"hh_{tag}_{os.path.basename(os.path.abspath(sf_dir))}"
-        f"_{spark.sparkContext.applicationId}",
+        root, f"{tag}_{os.path.basename(os.path.abspath(sf_dir))}"
     )

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -364,21 +363,17 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = io.load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "O"
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"hh_compact_{os.path.basename(os.path.abspath(sf_dir))}"
-    )
-    frag_dir, compact_dir = base + "_frag", base + "_out"
-    for d in (frag_dir, compact_dir):
-        shutil.rmtree(d, ignore_errors=True)
-    orders.select("o_orderkey", "o_totalprice").repartition(32).write.mode(
-        "overwrite"
-    ).parquet(frag_dir)
-    spark.read.parquet(frag_dir).repartitionByRange(4, "o_orderkey").write.mode(
-        "overwrite"
-    ).parquet(compact_dir)
+    base = io.scoped_tmp_dir(spark, "sink_compact", sf_dir)
+    frag_dir, compact_dir = os.path.join(base, "frag"), os.path.join(base, "out")
+    shutil.rmtree(base, ignore_errors=True)
+    frags = orders.select("o_orderkey", "o_totalprice")
+    frags.repartition(32).write.mode("overwrite").parquet(frag_dir)
+    spark.read.schema(frags.schema).parquet(frag_dir).repartitionByRange(
+        4, "o_orderkey"
+    ).write.mode("overwrite").parquet(compact_dir)
     # input_file_name() is non-deterministic, so it must be projected
     # before it can feed an aggregate
-    compacted = spark.read.parquet(compact_dir).select(
+    compacted = spark.read.schema(frags.schema).parquet(compact_dir).select(
         F.input_file_name().alias("src_file"), "o_totalprice"
     )
     return compacted.agg(

@@ -25,8 +25,6 @@ schema evolution, and contrastive-training triplet mining.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -248,8 +246,7 @@ def sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: mergeSchema's footer-union is a listing-time cost, not a
     scan cost; production tables pin the merged schema in a catalog so
-    reads stay one-footer. The write here is per-key-temp-dir and
-    removed in finally (driver-retry safe)."""
+    reads stay one-footer."""
     orders = io.load_table(spark, sf_dir, "orders")
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -259,33 +256,26 @@ def sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.col("o_orderstatus").cast("string").alias("o_orderstatus"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_sink_evo_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
+    out_dir = io.scoped_tmp_dir(spark, "sink_evo", sf_dir)
+    v1.write.mode("overwrite").parquet(os.path.join(out_dir, "b=1"))
+    v2.write.mode("overwrite").parquet(os.path.join(out_dir, "b=2"))
+    merged = spark.read.option("mergeSchema", True).parquet(
+        os.path.join(out_dir, "b=1"), os.path.join(out_dir, "b=2")
     )
-    try:
-        v1.write.mode("overwrite").parquet(os.path.join(out_dir, "b=1"))
-        v2.write.mode("overwrite").parquet(os.path.join(out_dir, "b=2"))
-        merged = spark.read.option("mergeSchema", True).parquet(
-            os.path.join(out_dir, "b=1"), os.path.join(out_dir, "b=2")
+    return (
+        merged.groupBy(
+            F.coalesce(
+                F.col("o_orderstatus"), F.lit("(pre-evolution)")
+            ).alias("status")
         )
-        return (
-            merged.groupBy(
-                F.coalesce(
-                    F.col("o_orderstatus"), F.lit("(pre-evolution)")
-                ).alias("status")
-            )
-            .agg(
-                F.count("*").cast("long").alias("n"),
-                F.sum(dec(F.col("o_totalprice"), 2))
-                .cast("double")
-                .alias("total_price"),
-            )
-            .localCheckpoint(eager=True)
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(dec(F.col("o_totalprice"), 2))
+            .cast("double")
+            .alias("total_price"),
         )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        .localCheckpoint(eager=True)
+    )
 
 
 # --------------------------------------------------------------------------

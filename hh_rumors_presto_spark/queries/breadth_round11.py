@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -62,54 +61,48 @@ def scan_txn_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     not data). The data scan itself is an ordinary pruned parquet
     read."""
     orders = io.load_table(spark, sf_dir, "orders")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_txn_log_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = io.scoped_tmp_dir(spark, "txn_log", sf_dir)
     data, logd = os.path.join(out_dir, "data"), os.path.join(out_dir, "log")
-    try:
-        sel = lambda m: orders.filter(  # noqa: E731
-            F.col("o_orderkey") % 3 == m
-        ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-        sel(0).write.mode("overwrite").parquet(f"{data}/A")
-        sel(1).write.mode("overwrite").parquet(f"{data}/B")
-        sel(1).withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
-        ).write.mode("overwrite").parquet(f"{data}/C")
-        # file D: written to the directory but never logged — a reader
-        # that lists the directory instead of the log would see it
-        sel(2).write.mode("overwrite").parquet(f"{data}/D")
-        os.makedirs(logd, exist_ok=True)
-        with open(os.path.join(logd, "00000.json"), "w") as fh:
-            fh.write('{"version": 0, "action": "add", "path": "A"}\n')
-            fh.write('{"version": 0, "action": "add", "path": "B"}\n')
-        with open(os.path.join(logd, "00001.json"), "w") as fh:
-            fh.write('{"version": 1, "action": "remove", "path": "B"}\n')
-            fh.write('{"version": 1, "action": "add", "path": "C"}\n')
-        log = spark.read.schema("version LONG, action STRING, path STRING").json(
-            logd
+    shutil.rmtree(out_dir, ignore_errors=True)
+    sel = lambda m: orders.filter(  # noqa: E731
+        F.col("o_orderkey") % 3 == m
+    ).select("o_orderkey", "o_orderstatus", "o_totalprice")
+    sel(0).write.mode("overwrite").parquet(f"{data}/A")
+    sel(1).write.mode("overwrite").parquet(f"{data}/B")
+    sel(1).withColumn(
+        "o_totalprice", F.col("o_totalprice") * 2
+    ).write.mode("overwrite").parquet(f"{data}/C")
+    # file D: written to the directory but never logged — a reader
+    # that lists the directory instead of the log would see it
+    sel(2).write.mode("overwrite").parquet(f"{data}/D")
+    os.makedirs(logd, exist_ok=True)
+    with open(os.path.join(logd, "00000.json"), "w") as fh:
+        fh.write('{"version": 0, "action": "add", "path": "A"}\n')
+        fh.write('{"version": 0, "action": "add", "path": "B"}\n')
+    with open(os.path.join(logd, "00001.json"), "w") as fh:
+        fh.write('{"version": 1, "action": "remove", "path": "B"}\n')
+        fh.write('{"version": 1, "action": "add", "path": "C"}\n')
+    log = spark.read.schema("version LONG, action STRING, path STRING").json(
+        logd
+    )
+    w = Window.partitionBy("path").orderBy(F.col("version").desc())
+    live = (
+        log.withColumn("r", F.row_number().over(w))
+        .filter((F.col("r") == 1) & (F.col("action") == "add"))
+        .select("path")
+    )
+    paths = [f"{data}/{r.path}" for r in live.collect()]
+    snap = spark.read.schema(sel(0).schema).parquet(*sorted(paths))
+    return (
+        snap.groupBy(F.col("o_orderstatus").alias("status"))
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(dec(F.col("o_totalprice"), 2))
+            .cast("double")
+            .alias("total_price"),
         )
-        w = Window.partitionBy("path").orderBy(F.col("version").desc())
-        live = (
-            log.withColumn("r", F.row_number().over(w))
-            .filter((F.col("r") == 1) & (F.col("action") == "add"))
-            .select("path")
-        )
-        paths = [f"{data}/{r.path}" for r in live.collect()]
-        snap = spark.read.parquet(*sorted(paths))
-        return (
-            snap.groupBy(F.col("o_orderstatus").alias("status"))
-            .agg(
-                F.count("*").cast("long").alias("n"),
-                F.sum(dec(F.col("o_totalprice"), 2))
-                .cast("double")
-                .alias("total_price"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        .localCheckpoint(eager=True)
+    )
 
 
 # --------------------------------------------------------------------------

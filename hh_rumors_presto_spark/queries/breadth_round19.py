@@ -18,10 +18,6 @@ and exact geometric/harmonic means.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -172,8 +168,7 @@ def scan_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: text scans split by line ranges like any file source; the
     regexp projection is a pure narrow codegen map; the aggregate is
-    a standard partial hash agg. The temp file is applicationId-keyed
-    against concurrent runs (sink_text_roundtrip's discipline)."""
+    a standard partial hash agg."""
     orders = io.load_table(spark, sf_dir, "orders")
     line = F.concat(
         F.lit("10.0.0."),
@@ -185,40 +180,33 @@ def scan_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" "),
         (F.col("o_orderkey") % 10000).cast("string"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_log_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
+    out_dir = io.scoped_tmp_dir(spark, "log", sf_dir)
+    orders.select(line.alias("value")).write.mode("overwrite").text(
+        out_dir
     )
-    try:
-        orders.select(line.alias("value")).write.mode("overwrite").text(
-            out_dir
+    raw = spark.read.text(out_dir)
+    parsed = raw.select(
+        F.regexp_extract("value", r"^10\.0\.0\.(\d+) ", 1)
+        .cast("long")
+        .alias("ip_suffix"),
+        F.regexp_extract("value", r'HTTP/1\.1" (\d+) ', 1)
+        .cast("long")
+        .alias("status"),
+        F.regexp_extract("value", r" (\d+)$", 1)
+        .cast("long")
+        .alias("bytes"),
+    )
+    return (
+        parsed.groupBy("status")
+        .agg(
+            F.count("*").cast("long").alias("n_requests"),
+            F.sum("bytes").cast("long").alias("total_bytes"),
+            F.count_distinct("ip_suffix").cast("long").alias(
+                "n_client_ips"
+            ),
         )
-        raw = spark.read.text(out_dir)
-        parsed = raw.select(
-            F.regexp_extract("value", r"^10\.0\.0\.(\d+) ", 1)
-            .cast("long")
-            .alias("ip_suffix"),
-            F.regexp_extract("value", r'HTTP/1\.1" (\d+) ', 1)
-            .cast("long")
-            .alias("status"),
-            F.regexp_extract("value", r" (\d+)$", 1)
-            .cast("long")
-            .alias("bytes"),
-        )
-        return (
-            parsed.groupBy("status")
-            .agg(
-                F.count("*").cast("long").alias("n_requests"),
-                F.sum("bytes").cast("long").alias("total_bytes"),
-                F.count_distinct("ip_suffix").cast("long").alias(
-                    "n_client_ips"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        .localCheckpoint(eager=True)
+    )
 
 
 # --------------------------------------------------------------------------

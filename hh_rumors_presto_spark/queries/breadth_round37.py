@@ -19,9 +19,6 @@ and nested-schema pruning.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -233,20 +230,14 @@ def scan_nested_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     the I/O; the aggregate itself is a plain map-side-combined
     groupBy."""
     ev = io.load_events(spark, sf_dir)
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_nested_{os.path.basename(sf_dir)}",
+    out_dir = io.scoped_tmp_dir(spark, "nested", sf_dir)
+    nested = ev.select(
+        "event_id",
+        F.struct("user_id", "ts").alias("who"),
+        F.struct("event_type", "value", "props").alias("what"),
     )
-    (
-        ev.select(
-            "event_id",
-            F.struct("user_id", "ts").alias("who"),
-            F.struct("event_type", "value", "props").alias("what"),
-        )
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    nested = spark.read.parquet(out_dir)
+    nested.write.mode("overwrite").parquet(out_dir)
+    nested = spark.read.schema(nested.schema).parquet(out_dir)
     return (
         nested.select(F.col("who.user_id").alias("user_id"))
         .groupBy("user_id")

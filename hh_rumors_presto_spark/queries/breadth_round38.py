@@ -22,8 +22,7 @@ partition overwrite, and the Hill tail-index estimator.
 
 from __future__ import annotations
 
-import os
-import tempfile
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -228,10 +227,8 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_dynover_{os.path.basename(sf_dir)}",
-    )
+    out_dir = io.scoped_tmp_dir(spark, "dynover", sf_dir)
+    shutil.rmtree(out_dir, ignore_errors=True)
     prev = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     )

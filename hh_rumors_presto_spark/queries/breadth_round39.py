@@ -18,9 +18,6 @@ file-sizing sink contract, and the Wald–Wolfowitz runs test.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -215,10 +212,7 @@ def sink_file_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: file sizing is a pure write-side concern — the query cost
     is one re-read census with map-side partials."""
     ev = io.load_events(spark, sf_dir).select("event_id", "event_type")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_filesz_{os.path.basename(sf_dir)}",
-    )
+    out_dir = io.scoped_tmp_dir(spark, "filesz", sf_dir)
     (
         ev.repartition("event_type")
         .write.mode("overwrite")

@@ -20,9 +20,6 @@ cross-correlation scan, and multi-character-delimiter CSV.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -292,10 +289,7 @@ def scan_csv_multichar_delim(
     ev = io.load_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type"
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_mcd_{os.path.basename(sf_dir)}",
-    )
+    out_dir = io.scoped_tmp_dir(spark, "mcd", sf_dir)
     (
         ev.select(
             F.concat_ws(

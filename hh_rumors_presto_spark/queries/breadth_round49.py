@@ -18,9 +18,6 @@ contract, and TOST equivalence testing.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -129,16 +126,13 @@ def sink_zstd_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = io.load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_zstd_{os.path.basename(sf_dir)}",
-    )
+    out_dir = io.scoped_tmp_dir(spark, "zstd", sf_dir)
     (
         orders.write.mode("overwrite")
         .option("compression", "zstd")
         .parquet(out_dir)
     )
-    back = spark.read.parquet(out_dir)
+    back = spark.read.schema(orders.schema).parquet(out_dir)
     # codec assertion: every data file carries the zstd suffix
     bad = (
         back.select(F.col("_metadata.file_path").alias("fp"))

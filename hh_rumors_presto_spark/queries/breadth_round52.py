@@ -19,9 +19,6 @@ typing contract, and HHI concentration.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -130,10 +127,7 @@ def sink_decimal_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(14,2)")
         .alias("price_dec"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_decimal_{os.path.basename(sf_dir)}",
-    )
+    out_dir = io.scoped_tmp_dir(spark, "decimal", sf_dir)
     orders.write.mode("overwrite").parquet(out_dir)
     back = spark.read.parquet(out_dir)
     dt = dict(back.dtypes)["price_dec"]

@@ -20,7 +20,6 @@ file lookup, and the NPS readout.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -186,10 +185,7 @@ def scan_recursive_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = io.load_events(spark, sf_dir).select(
         "event_id", "event_type"
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_recur_{os.path.basename(sf_dir)}",
-    )
+    base = io.scoped_tmp_dir(spark, "recur", sf_dir)
     # three nested, non-partition paths (no key=value components)
     (
         ev.filter(F.col("event_id") % 3 == 0)
@@ -208,6 +204,7 @@ def scan_recursive_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     back = (
         spark.read.option("recursiveFileLookup", "true")
+        .schema(ev.schema)
         .parquet(base)
     )
     return back.groupBy("event_type").agg(

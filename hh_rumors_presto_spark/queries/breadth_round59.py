@@ -20,9 +20,6 @@ Range, and source-diversity entropy.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -72,10 +69,7 @@ def scan_csv_null_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long"),
         ).alias("cents"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_csvnull_{os.path.basename(sf_dir)}",
-    )
+    out_dir = io.scoped_tmp_dir(spark, "csvnull", sf_dir)
     (
         ev.write.mode("overwrite")
         .option("nullValue", _NC_MARK)

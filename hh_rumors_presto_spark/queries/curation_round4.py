@@ -366,46 +366,35 @@ def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest is one keyed aggregate over the written data, and the
     additive checksum means shard manifests can also be merged upward
     into a corpus-level manifest without re-reading."""
-    import os
-    import shutil
-    import tempfile
-
     docs = io.load_table(spark, sf_dir, "documents")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_shards_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
+    out_dir = io.scoped_tmp_dir(spark, "shards", sf_dir)
+    (
+        docs.withColumn("shard", F.col("doc_id") % 8)
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .parquet(out_dir)
     )
-    try:
-        (
-            docs.withColumn("shard", F.col("doc_id") % 8)
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(out_dir)
-        )
-        # Explicit schema on the re-read: production manifests pin their
-        # schema rather than infer it, and an EMPTY corpus writes zero
-        # part files — inference then raises UNABLE_TO_INFER_SCHEMA while
-        # the oracle returns an empty manifest (r9 sf0 audit). The pinned
-        # schema is exactly what inference yields on non-empty data
-        # (partition column `shard` inferred as int), so canonical
-        # results are bit-identical.
-        from pyspark.sql.types import IntegerType, StructField, StructType
+    # Explicit schema on the re-read: production manifests pin their
+    # schema rather than infer it, and an EMPTY corpus writes zero
+    # part files — inference then raises UNABLE_TO_INFER_SCHEMA while
+    # the oracle returns an empty manifest (r9 sf0 audit). The pinned
+    # schema is exactly what inference yields on non-empty data
+    # (partition column `shard` inferred as int), so canonical
+    # results are bit-identical.
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
-        manifest_schema = StructType(
-            list(docs.schema.fields)
-            + [StructField("shard", IntegerType())]
-        )
-        written = spark.read.schema(manifest_schema).parquet(out_dir)
-        h = (
-            F.conv(F.substring(F.md5("text"), 1, 10), 16, 10)
-            .cast("decimal(38,0)")
-        )
-        return written.groupBy("shard").agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum(F.size(F.split("text", " "))).cast("long").alias("n_tokens"),
-            F.sum(F.length("text")).cast("long").alias("n_chars"),
-            F.sum(h).cast("decimal(38,0)").cast("string").alias("checksum"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    manifest_schema = StructType(
+        list(docs.schema.fields)
+        + [StructField("shard", IntegerType())]
+    )
+    written = spark.read.schema(manifest_schema).parquet(out_dir)
+    h = (
+        F.conv(F.substring(F.md5("text"), 1, 10), 16, 10)
+        .cast("decimal(38,0)")
+    )
+    return written.groupBy("shard").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum(F.size(F.split("text", " "))).cast("long").alias("n_tokens"),
+        F.sum(F.length("text")).cast("long").alias("n_chars"),
+        F.sum(h).cast("decimal(38,0)").cast("string").alias("checksum"),
+    ).localCheckpoint(eager=True)

@@ -10,9 +10,6 @@ oracle reproduces, so the exotic syntax is value-hash-verified, not just
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,48 +38,36 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     survived the roundtrip byte-for-byte.
 
     Shape at scale: XML read is a distributed file-per-split scan like
-    any text source; the explicit schema keeps it single-pass. The
-    applicationId-keyed path prevents two concurrent sessions racing on
-    overwrite-then-read; the tiny aggregate is materialized off the temp
-    dir so it can be removed before returning (no per-session buildup)."""
-    import shutil
-
+    any text source; the explicit schema keeps it single-pass."""
     docs = io.load_table(spark, sf_dir, "documents")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_sink_xml_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
+    out_dir = io.scoped_tmp_dir(spark, "sink_xml", sf_dir)
+    (
+        docs.select("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rowTag", "doc")
+        .save(out_dir)
     )
-    try:
-        (
-            docs.select("doc_id", "text", "lang", "source", "n_chars")
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rowTag", "doc")
-            .save(out_dir)
-        )
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-                T.StructField("lang", T.StringType()),
-                T.StructField("source", T.StringType()),
-                T.StructField("n_chars", T.LongType()),
-            ]
-        )
-        back = (
-            spark.read.format("xml")
-            .option("rowTag", "doc")
-            .schema(schema)
-            .load(out_dir)
-        )
-        return back.groupBy("lang", "source").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-            F.sum(F.length("text")).alias("sum_len"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("lang", T.StringType()),
+            T.StructField("source", T.StringType()),
+            T.StructField("n_chars", T.LongType()),
+        ]
+    )
+    back = (
+        spark.read.format("xml")
+        .option("rowTag", "doc")
+        .schema(schema)
+        .load(out_dir)
+    )
+    return back.groupBy("lang", "source").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_chars").alias("sum_chars"),
+        F.sum(F.length("text")).alias("sum_len"),
+    ).localCheckpoint(eager=True)
 
 
 @query(

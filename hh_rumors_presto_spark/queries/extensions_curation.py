@@ -17,10 +17,6 @@ uses the (count desc, value asc) total order (same convention as
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -405,18 +401,13 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection as ORC, read it back, aggregate. Proves the ORC codepath
     preserves values exactly."""
     li = io.load_table(spark, sf_dir, "lineitem")
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_sink_orc_{os.path.basename(sf_dir)}"
+    out_dir = io.scoped_tmp_dir(spark, "sink_orc", sf_dir)
+    sink = li.filter(F.col("l_discount") > 0.05).select(
+        "l_returnflag", "l_quantity"
     )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    (
-        li.filter(F.col("l_discount") > 0.05)
-        .select("l_returnflag", "l_quantity")
-        .write.mode("overwrite")
-        .orc(out_dir)
-    )
+    sink.write.mode("overwrite").orc(out_dir)
     return (
-        spark.read.orc(out_dir)
+        spark.read.schema(sink.schema).orc(out_dir)
         .groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n_rows"),

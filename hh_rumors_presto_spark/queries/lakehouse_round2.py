@@ -11,9 +11,8 @@ and compaction is just an overwrite whose input is the table itself
 distributed machinery: the data path stays one-task-per-file parallel
 in both directions, only the KB-sized JSON log is driver-side.
 
-Each key rebuilds its own applicationId-scoped table from the orders
-fixture (io.scoped_tmp_dir), so driver double-runs get fresh identical
-state and concurrent verifier processes never collide.
+Each key rebuilds its own table from the orders fixture, so driver
+double-runs get fresh identical state.
 
 Reference scope note: the reference (fetchRumors.js:211-226) persists
 one JSON snapshot with no history; these keys generalize its sink into

@@ -5,10 +5,6 @@ column-profiling operator.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,11 +99,10 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     orders = io.load_table(spark, sf_dir, "orders")
-    # key by a hash of the full fixture path and clear any previous run:
-    # dynamic overwrite only replaces partitions present in THIS batch, so a
-    # stale dir from different data would leak rows into the read-back.
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), f"hh_sink_part_{digest}")
+    # clear any previous run: dynamic overwrite only replaces partitions
+    # present in THIS batch, so a stale dir would leak rows into the
+    # read-back.
+    out_dir = io.scoped_tmp_dir(spark, "sink_part", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

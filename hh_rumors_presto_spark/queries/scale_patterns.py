@@ -15,7 +15,6 @@ plan-shape claims are pinned in tools/explain_audit.py.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,10 +58,6 @@ def str_sanitize_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", sanitize_html(raw).alias("sanitized"))
 
 
-def _bucketed_dir() -> str:
-    return os.path.join(tempfile.gettempdir(), "hh_bucketed_warehouse")
-
-
 @query(
     "join_bucketed",
     oracle="""
@@ -79,27 +74,22 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between re-shuffling the fact table per query and never
     shuffling it at all. The follow-up groupBy on the same key also rides
     the bucketing."""
-    import shutil
-
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
     )
-    spark.sql("CREATE DATABASE IF NOT EXISTS hh_buckets")
+    warehouse = io.scoped_tmp_dir(spark, "buckets", sf_dir)
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS hh_buckets LOCATION '{warehouse}'")
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
 
     def ensure_bucketed(table: str, src: str, key: str, cols: list[str]):
         tbl = f"hh_buckets.{table}_{tag}"
         if not spark.catalog.tableExists(tbl):
-            # external table at an explicit /tmp location; clear any stale
-            # directory left by a previous session whose catalog is gone
-            path = os.path.join(_bucketed_dir(), f"{table}_{tag}")
-            shutil.rmtree(path, ignore_errors=True)
             (
                 io.load_table(spark, sf_dir, src)
                 .select(*cols)
                 .write.bucketBy(N_BUCKETS, key)
                 .sortBy(key)
-                .option("path", path)
+                .option("path", os.path.join(warehouse, table))
                 .mode("overwrite")
                 .saveAsTable(tbl)
             )
@@ -134,16 +124,9 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the status predicate becomes a PartitionFilter, so non-matching
     directories are never listed or read — the parquet analog of the
     reference's bounded page crawl (scan only what the query needs)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(tempfile.gettempdir(), f"hh_part_orders_{tag}")
-    marker = os.path.join(out_dir, "_SUCCESS")
+    out_dir = io.scoped_tmp_dir(spark, "part_orders", sf_dir)
     orders = io.load_table(spark, sf_dir, "orders")
-    if not os.path.exists(marker):
-        (
-            orders.write.partitionBy("o_orderstatus")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
+    orders.write.partitionBy("o_orderstatus").mode("overwrite").parquet(out_dir)
     # pinned read schema (the source table's own): an empty table writes
     # zero partition dirs and inference raises UNABLE_TO_INFER_SCHEMA
     # while the oracle's filtered scan is empty (r9 empty-table audit).

@@ -3,9 +3,6 @@ generalizes the reference's HTTP scan #5 and JSON sink #21)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,9 +44,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON scan with an explicit schema (no inference): round-trips region
     through a JSON directory and reads it back typed."""
     region = io.load_table(spark, sf_dir, "region")
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_scan_json_{os.path.basename(sf_dir)}"
-    )
+    out_dir = io.scoped_tmp_dir(spark, "scan_json", sf_dir)
     region.write.mode("overwrite").json(out_dir)
     return spark.read.schema(_REGION_SCHEMA).json(out_dir).select(
         "r_regionkey", "r_name"
@@ -68,16 +63,12 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet sink: write a filtered projection, read it back — the sink
     half of the reference's scan->sink pipeline with a columnar target."""
     orders = io.load_table(spark, sf_dir, "orders")
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_sink_parquet_{os.path.basename(sf_dir)}"
+    out_dir = io.scoped_tmp_dir(spark, "sink_parquet", sf_dir)
+    sink = orders.filter(F.col("o_orderstatus") == "O").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
     )
-    (
-        orders.filter(F.col("o_orderstatus") == "O")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    return spark.read.parquet(out_dir)
+    sink.write.mode("overwrite").parquet(out_dir)
+    return spark.read.schema(sink.schema).parquet(out_dir)
 
 
 @query(

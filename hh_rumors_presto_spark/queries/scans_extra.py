@@ -4,7 +4,6 @@ functions over parsed JSON (SURVEY.md §2.B scans + map/JSON rows)."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,9 +27,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV scan with an explicit schema (no inference pass — one read, typed
     at the source): round-trips nation through a CSV directory."""
     nation = io.load_table(spark, sf_dir, "nation")
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hh_scan_csv_{os.path.basename(sf_dir)}"
-    )
+    out_dir = io.scoped_tmp_dir(spark, "scan_csv", sf_dir)
     nation.write.mode("overwrite").option("header", "true").csv(out_dir)
     return (
         spark.read.schema(_NATION_SCHEMA)
@@ -84,13 +81,9 @@ def scan_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: schema merge happens at footer level (per-file schemas union in
     the driver); data is never rewritten."""
     import shutil
-    import tempfile
 
     orders = io.load_table(spark, sf_dir, "orders")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_schema_merge_{os.path.basename(os.path.abspath(sf_dir))}",
-    )
+    base = io.scoped_tmp_dir(spark, "schema_merge", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     v1 = orders.filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -130,24 +123,15 @@ def scan_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact scan at runtime, so only matching partitions are read even though
     the fact-side filter is not a literal (plan shows
     ``PartitionFilters: [dynamicpruning#...]``). THE mechanism that makes
-    star-schema queries touch 1% of a 100 TB fact table.
-
-    The partitioned copy is written once per fixture dir and reused."""
-    import tempfile
-
+    star-schema queries touch 1% of a 100 TB fact table."""
     orders = io.load_table(spark, sf_dir, "orders")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_dpp_{os.path.basename(os.path.abspath(sf_dir))}",
-    )
-    fact_dir = os.path.join(base, "orders_by_yr")
+    fact_dir = io.scoped_tmp_dir(spark, "dpp", sf_dir)
     fact_cols = orders.select(
         "o_orderkey",
         "o_totalprice",
         F.year(F.col("o_orderdate").cast("date")).cast("int").alias("yr"),
     )
-    if not os.path.isdir(fact_dir):  # build the partitioned layout once
-        fact_cols.write.mode("overwrite").partitionBy("yr").parquet(fact_dir)
+    fact_cols.write.mode("overwrite").partitionBy("yr").parquet(fact_dir)
     # pinned read schema (identical to what inference yields on non-empty
     # data): an empty source writes zero part files and inference would
     # raise UNABLE_TO_INFER_SCHEMA while the oracle scans empty rows
@@ -184,33 +168,18 @@ def sink_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from. Write one delimited line per region row, read the lines back as
     a single `value` string column — parsing from there is the
     split/from_csv path covered by the scalar keys."""
-    import os
-    import tempfile
-
-    import shutil
-
     region = io.load_table(spark, sf_dir, "region")
-    # applicationId keys the path per session: two concurrent runs against
-    # same-named fixture dirs must not race on overwrite-then-read. The
-    # re-read rows are materialized so the dir can go before returning.
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_sink_text_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    try:
-        (
-            region.select(
-                F.concat_ws(
-                    "|", F.col("r_regionkey").cast("string"), F.col("r_name")
-                ).alias("value")
-            )
-            .write.mode("overwrite")
-            .text(out_dir)
+    out_dir = io.scoped_tmp_dir(spark, "sink_text", sf_dir)
+    (
+        region.select(
+            F.concat_ws(
+                "|", F.col("r_regionkey").cast("string"), F.col("r_name")
+            ).alias("value")
         )
-        return spark.read.text(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        .write.mode("overwrite")
+        .text(out_dir)
+    )
+    return spark.read.text(out_dir).localCheckpoint(eager=True)
 
 
 @query(
@@ -236,31 +205,22 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_regionkey").cast("string"),
         ).alias("note"),
     )
-    import shutil
-
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_sink_csv_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
+    out_dir = io.scoped_tmp_dir(spark, "sink_csv", sf_dir)
+    nat.write.mode("overwrite").option("header", True).csv(out_dir)
+    schema = T.StructType(
+        [
+            T.StructField("n_nationkey", T.LongType()),
+            T.StructField("n_name", T.StringType()),
+            T.StructField("n_regionkey", T.LongType()),
+            T.StructField("note", T.StringType()),
+        ]
     )
-    try:
-        nat.write.mode("overwrite").option("header", True).csv(out_dir)
-        schema = T.StructType(
-            [
-                T.StructField("n_nationkey", T.LongType()),
-                T.StructField("n_name", T.StringType()),
-                T.StructField("n_regionkey", T.LongType()),
-                T.StructField("note", T.StringType()),
-            ]
-        )
-        return (
-            spark.read.schema(schema)
-            .option("header", True)
-            .csv(out_dir)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return (
+        spark.read.schema(schema)
+        .option("header", True)
+        .csv(out_dir)
+        .localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -288,59 +248,51 @@ def scan_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a 100 TB table's manifest is a few thousand rows; pruning
     happens before any data I/O. The oracle is the plain filtered scan —
     skipping must be invisible to results."""
-    import shutil
-
-    base_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_fileskip_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
+    base_dir = io.scoped_tmp_dir(spark, "fileskip", sf_dir)
+    orders = io.load_table(spark, sf_dir, "orders")
+    by_month = orders.withColumn(
+        "month", F.date_format(F.col("o_orderdate").cast("date"), "yyyy-MM")
     )
-    try:
-        orders = io.load_table(spark, sf_dir, "orders")
-        (
-            orders.withColumn(
-                "month", F.date_format(F.col("o_orderdate").cast("date"), "yyyy-MM")
-            )
-            .repartition("month")
-            .write.mode("overwrite")
-            .partitionBy("month")
-            .parquet(base_dir)
+    (
+        by_month.repartition("month")
+        .write.mode("overwrite")
+        .partitionBy("month")
+        .parquet(base_dir)
+    )
+    # the manifest: per file-group min/max of the skip column
+    manifest = [
+        (r.month, r.min_d, r.max_d)
+        for r in spark.read.schema(by_month.schema)
+        .parquet(base_dir)
+        .groupBy("month")
+        .agg(
+            F.min(F.col("o_orderdate").cast("date")).alias("min_d"),
+            F.max(F.col("o_orderdate").cast("date")).alias("max_d"),
         )
-        # the manifest: per file-group min/max of the skip column
-        manifest = [
-            (r.month, r.min_d, r.max_d)
-            for r in spark.read.parquet(base_dir)
-            .groupBy("month")
-            .agg(
-                F.min(F.col("o_orderdate").cast("date")).alias("min_d"),
-                F.max(F.col("o_orderdate").cast("date")).alias("max_d"),
-            )
-            .collect()
-        ]
-        from datetime import date
+        .collect()
+    ]
+    from datetime import date
 
-        lo, hi = date(1997, 6, 1), date(1997, 9, 1)
-        live = sorted(m for m, mn, mx in manifest if mx >= lo and mn < hi)
-        assert len(live) < len(manifest), "skipping must prune something"
-        pruned = spark.read.parquet(
-            *[os.path.join(base_dir, f"month={m}") for m in live]
+    lo, hi = date(1997, 6, 1), date(1997, 9, 1)
+    live = sorted(m for m, mn, mx in manifest if mx >= lo and mn < hi)
+    assert len(live) < len(manifest), "skipping must prune something"
+    pruned = spark.read.schema(orders.schema).parquet(
+        *[os.path.join(base_dir, f"month={m}") for m in live]
+    )
+    return (
+        pruned.filter(
+            (F.col("o_orderdate").cast("date") >= F.lit(lo))
+            & (F.col("o_orderdate").cast("date") < F.lit(hi))
         )
-        return (
-            pruned.filter(
-                (F.col("o_orderdate").cast("date") >= F.lit(lo))
-                & (F.col("o_orderdate").cast("date") < F.lit(hi))
-            )
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").cast("long").alias("n"),
-                F.round(F.sum(dec(F.col("o_totalprice"), 10)), 2)
-                .cast("double")
-                .alias("total"),
-            )
-            .localCheckpoint(eager=True)
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.round(F.sum(dec(F.col("o_totalprice"), 10)), 2)
+            .cast("double")
+            .alias("total"),
         )
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
+        .localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -370,35 +322,26 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_id") % 100).cast("string")
         ),
     )
-    import shutil
-
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"hh_badcsv_{os.path.basename(sf_dir)}"
-        f"_{spark.sparkContext.applicationId}",
+    out_dir = io.scoped_tmp_dir(spark, "badcsv", sf_dir)
+    ev.select(line.alias("value")).write.mode("overwrite").text(out_dir)
+    schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("val", T.IntegerType()),
+            T.StructField("_corrupt", T.StringType()),
+        ]
     )
-    try:
-        ev.select(line.alias("value")).write.mode("overwrite").text(out_dir)
-        schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("val", T.IntegerType()),
-                T.StructField("_corrupt", T.StringType()),
-            ]
-        )
-        read = (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt")
-            .csv(out_dir)
-        )
-        return read.agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.count("_corrupt").cast("long").alias("n_corrupt"),
-            F.sum(F.coalesce("val", F.lit(0))).cast("long").alias("val_sum"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    read = (
+        spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt")
+        .csv(out_dir)
+    )
+    return read.agg(
+        F.count("*").cast("long").alias("n_rows"),
+        F.count("_corrupt").cast("long").alias("n_corrupt"),
+        F.sum(F.coalesce("val", F.lit(0))).cast("long").alias("val_sum"),
+    ).localCheckpoint(eager=True)
 
 
 @query(

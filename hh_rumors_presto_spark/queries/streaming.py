@@ -233,9 +233,8 @@ def _mod5_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     for THEIR aggregates, but useless for a drop census whose value IS
     the batching). Files are mtime-staggered so FileStreamSource (order:
     modification time, then path) serves them in m-order, one per
-    trigger. Rebuilt per call under an applicationId-scoped dir —
-    pennies at fixture scale, and a driver double-run gets a fresh,
-    identical source. The files are ``ev`` written back, so the stream
+    trigger. Rebuilt per call — pennies at fixture scale, and a driver
+    double-run gets a fresh, identical source. The files are ``ev`` written back, so the stream
     reads them with ``ev.schema``."""
     import os
     import shutil

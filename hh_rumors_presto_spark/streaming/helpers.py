@@ -54,57 +54,17 @@ def _split_events_dir(
     spark: SparkSession, sf_dir: str, n: int, schema: T.StructType
 ) -> str:
     """Materialize the events fixture as ``n`` interleaved parquet files
-    (keyed by event_id % n) under a deterministic temp dir, so a stream
-    with maxFilesPerTrigger=1 is forced through n out-of-order
-    micro-batches — the environment-parity knob driver_sim --env-parity
-    turns (the driver's micro-batching is outside our control; every
-    streaming key must be invariant to it). The copy is written with the
-    fixture's footer ``schema``, so it reads back with that schema too.
-    Idempotent per (sf_dir, n)."""
-    import hashlib
-
-    # Cache tag includes the fixture's (mtime, size), so a regenerated
-    # events.parquet invalidates the split copy.  For a directory of part
-    # files, stat the newest part: the directory's own stat does not
-    # change when a part is rewritten.
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    if os.path.isdir(src):
-        parts = [
-            os.path.join(src, f)
-            for f in os.listdir(src)
-            if f.endswith(".parquet")
-        ]
-        if parts:
-            st = max((os.stat(p) for p in parts), key=lambda s: s.st_mtime_ns)
-    ident = f"{os.path.abspath(sf_dir)}|{st.st_mtime_ns}|{st.st_size}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:8]
-    # Prefix keyed by sf_dir so superseded split copies of the SAME
-    # fixture can be pruned when a new tag appears (regeneration would
-    # otherwise accumulate stale hh_evsplit_* dirs across a session).
-    prefix = "hh_evsplit_%s_" % hashlib.md5(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:6]
-    tmp = tempfile.gettempdir()
-    out = os.path.join(tmp, f"{prefix}{tag}_{n}")
+    (keyed by event_id % n) in a scratch dir, so a stream with
+    maxFilesPerTrigger=1 is forced through n out-of-order micro-batches —
+    the environment-parity knob driver_sim --env-parity turns (the
+    driver's micro-batching is outside our control; every streaming key
+    must be invariant to it). The copy is written with the fixture's
+    footer ``schema``, so it reads back with that schema too. Written
+    once per (fixture basename, n) in a session: a restarted stream must
+    see the same files."""
+    out = io.scoped_tmp_dir(spark, f"evsplit{n}", sf_dir)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        # Best-effort prune of superseded split copies of this fixture
-        # (other tags; the same tag at other n stays valid).  Only dirs
-        # untouched for over an hour go, so a session still streaming
-        # from an older copy keeps its source.
-        import time
-
-        cutoff = time.time() - 3600
-        for d in os.listdir(tmp):
-            if not d.startswith(prefix) or d.startswith(f"{prefix}{tag}_"):
-                continue
-            p = os.path.join(tmp, d)
-            try:
-                if os.path.getmtime(p) < cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
-        ev = spark.read.schema(schema).parquet(src)
+        ev = spark.read.schema(schema).parquet(io.table_path(sf_dir, "events"))
         ev.repartition(n, F.col("event_id") % n).write.mode(
             "overwrite"
         ).parquet(out)
