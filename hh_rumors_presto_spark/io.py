@@ -15,6 +15,7 @@ the schema it wrote, unless inferring that schema is what the key checks.
 from __future__ import annotations
 
 import atexit
+import hashlib
 import os
 import shutil
 import tempfile
@@ -141,13 +142,22 @@ def _remove_scratch_roots() -> None:
         shutil.rmtree(root, ignore_errors=True)
 
 
+def fixture_tag(sf_dir: str) -> str:
+    """``<basename>_<digest>`` naming one fixture directory: the digest is
+    taken over its real path, so two fixtures that share a basename get
+    different tags and every spelling of one path gets the same tag."""
+    real = os.path.realpath(sf_dir)
+    digest = hashlib.md5(real.encode()).hexdigest()[:8]
+    return f"{os.path.basename(real)}_{digest}"
+
+
 def scoped_tmp_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
-    """Scratch directory ``<root>/<tag>_<sf_basename>`` for a key that
-    writes files and reads them back.
+    """Scratch directory ``<root>/<tag>_<fixture_tag(sf_dir)>`` for a key
+    that writes files and reads them back.
 
     The root, ``<tempfile.gettempdir()>/hh_<applicationId>``, belongs to
     one SparkSession, so two processes on one host never share a path;
-    within the session, ``tag`` and the fixture basename keep keys and
+    within the session, ``tag`` and the fixture's real path keep keys and
     fixtures apart, and a rerun of a key reuses its directory.  The root
     is made on first use and removed when the process exits, so callers
     clean up only where clearing the directory is part of the key.
@@ -159,6 +169,4 @@ def scoped_tmp_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
         atexit.register(_remove_scratch_roots)
     _SCRATCH_ROOTS.add(root)
     os.makedirs(root, exist_ok=True)
-    return os.path.join(
-        root, f"{tag}_{os.path.basename(os.path.abspath(sf_dir))}"
-    )
+    return os.path.join(root, f"{tag}_{fixture_tag(sf_dir)}")

@@ -98,10 +98,10 @@ def bucketed_rank_cumsum(
     """
     # the ONE-ROW bounds table rides a conditionless broadcast join —
     # Catalyst plans it as BroadcastNestedLoopJoin, which against a
-    # 1-row build side is exactly a broadcast variable, the repo's
-    # sanctioned one-row-fold shape (tools/explain_audit.py FORBIDDEN
-    # allowlists the operator's consumers; a constant equi-key doesn't
-    # help — Catalyst constant-folds it back to the nested loop)
+    # global aggregate (static maxRows 1) is exactly a broadcast
+    # variable and meets tools/explain_audit.py's nested-loop row-bound
+    # rule (a constant equi-key doesn't help — Catalyst constant-folds
+    # it back to the nested loop)
     bounds = df.agg(
         F.min(order_key).alias("__lo"), F.max(order_key).alias("__hi")
     )

@@ -9,7 +9,12 @@ def load() -> None:
     global _LOADED
     if _LOADED:
         return
-    # Import order is irrelevant; each module only registers keys.
+    # Import order is registration order, and the driver serves keys in
+    # registration order after any key whose ledger row is not green
+    # (__spark_entry__._ordered). A module registers its keys when first
+    # imported: here, or earlier if another module imports it first.
+    # tests/test_entry.py pins list(QUERIES) by md5, so a module move that
+    # reorders serving fails there.
     from hh_rumors_presto_spark.queries import (  # noqa: F401
         advanced,
         aggregation,

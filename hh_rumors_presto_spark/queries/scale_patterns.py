@@ -1,7 +1,8 @@
 """Scale-pattern demonstrators: the physical-layout techniques that carry
 the engine from local[32] to a 1000-executor cluster (SURVEY.md "optimize
 for scale" mandate). Each is a real runnable key with a value oracle; the
-plan-shape claims are pinned in tools/explain_audit.py.
+plan-shape claims are pinned by tools/explain_audit.py's CHECKS and
+NO_EXCHANGE_KEYS (tests/test_plans.py).
 
 - bucketed co-located join: both sides pre-bucketed on the key -> join with
   ZERO Exchange (the 100 TB answer to repeated fact⋈fact joins);
@@ -79,7 +80,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     warehouse = io.scoped_tmp_dir(spark, "buckets", sf_dir)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS hh_buckets LOCATION '{warehouse}'")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = io.fixture_tag(sf_dir).replace(".", "_")
 
     def ensure_bucketed(table: str, src: str, key: str, cols: list[str]):
         tbl = f"hh_buckets.{table}_{tag}"

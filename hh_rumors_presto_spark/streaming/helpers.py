@@ -60,7 +60,7 @@ def _split_events_dir(
     driver's micro-batching is outside our control; every streaming key
     must be invariant to it). The copy is written with the fixture's
     footer ``schema``, so it reads back with that schema too. Written
-    once per (fixture basename, n) in a session: a restarted stream must
+    once per (fixture path, n) in a session: a restarted stream must
     see the same files."""
     out = io.scoped_tmp_dir(spark, f"evsplit{n}", sf_dir)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):

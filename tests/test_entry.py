@@ -2,7 +2,22 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
+import pytest
+from pyspark.sql import types as T
+
 import __spark_entry__ as ent
+from tools.explain_audit import UNBOUNDED_NLJ, unbounded_nested_loops
+
+# md5 of "\n".join(QUERIES) after load_all_queries() in a fresh
+# interpreter: the registration order.
+REGISTRATION_ORDER_MD5 = "c5627a47e762fcff1fbd7db7c6c41e7c"
+
+# Final-schema types the driver's result canonicalizer cannot compare.
+_HOSTILE = (T.ArrayType, T.MapType, T.StructType, T.DecimalType)
 
 
 def test_entry_returns_rows(spark):
@@ -19,13 +34,86 @@ def test_entry_returns_rows(spark):
     }
 
 
-def test_every_query_has_callable_and_runs_smoke(spark, sf_dir):
-    qs = ent.queries()
-    assert qs, "registry is empty"
-    for name, fn in qs.items():
-        df = fn(spark, sf_dir)
-        # schema resolves lazily; force analysis without full execution
-        assert df.columns, name
+@pytest.fixture(scope="module")
+def registry_pass(spark, sf_dir) -> dict[str, dict]:
+    """Build every key once, in serving order, and record what the
+    registry-wide checks read: its columns, the driver-hostile fields of
+    its final schema, and the nested-loop joins that break the row-bound
+    rule (or the error that stopped the build)."""
+    built = {}
+    for name, fn in ent.queries().items():
+        try:
+            df = fn(spark, sf_dir)
+            built[name] = {
+                "columns": df.columns,
+                "hostile": [
+                    f"{f.name}: {f.dataType}"
+                    for f in df.schema.fields
+                    if isinstance(f.dataType, _HOSTILE)
+                ],
+                "nested_loops": unbounded_nested_loops(df),
+            }
+        except Exception as e:  # reported by the smoke test
+            built[name] = {"error": repr(e)}
+    return built
+
+
+def test_every_query_has_callable_and_runs_smoke(registry_pass):
+    assert registry_pass, "registry is empty"
+    errors = {k: b["error"] for k, b in registry_pass.items() if "error" in b}
+    assert not errors, errors
+    # schema resolves lazily; building a key forces analysis only
+    assert not [k for k, b in registry_pass.items() if not b["columns"]]
+
+
+def test_no_driver_hostile_output_types(registry_pass):
+    """The driver's canonicalizer chokes on array/map/struct cells
+    (unhashable in its pandas sort) and stringifies Decimal differently per
+    engine — so no query may emit them in its FINAL schema (r1 lesson:
+    text_stem/agg_approx_quantile err'd, 7 decimal keys hash-failed)."""
+    offenders = [
+        f"{name}.{field}"
+        for name, b in registry_pass.items()
+        for field in b.get("hostile", ())
+    ]
+    assert not offenders, offenders
+
+
+def test_nested_loops_have_a_static_row_bound(registry_pass):
+    """Every key's nested-loop joins meet explain_audit's NLJ_MAX_ROWS
+    rule, except the keys in UNBOUNDED_NLJ, and each of those still plans
+    an unbounded one (a key that no longer does leaves the dict)."""
+    found = {k: b["nested_loops"] for k, b in registry_pass.items() if b.get("nested_loops")}
+    unlisted = {k: v for k, v in found.items() if k not in UNBOUNDED_NLJ}
+    assert not unlisted, f"nested loops without a static row bound: {unlisted}"
+    errored = {k for k, b in registry_pass.items() if "error" in b}
+    stale = sorted(set(UNBOUNDED_NLJ) - set(found) - errored)
+    assert not stale, f"UNBOUNDED_NLJ keys that plan no unbounded nested loop: {stale}"
+    assert all(reason.strip() for reason in UNBOUNDED_NLJ.values())
+
+
+def test_registration_order_is_pinned():
+    """Keys register in module import order, and the driver serves them in
+    registration order after the non-green ones; a family move that
+    reorders the registry changes this digest. It is taken in a fresh
+    interpreter, as the driver loads the registry: in this session, tests
+    that import a query module directly have registered its keys early."""
+    code = (
+        "import hashlib\n"
+        "from hh_rumors_presto_spark.registry import QUERIES, load_all_queries\n"
+        "load_all_queries()\n"
+        "print(len(QUERIES), hashlib.md5('\\n'.join(QUERIES).encode()).hexdigest())"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    n_keys, digest = out.stdout.split()
+    assert digest == REGISTRATION_ORDER_MD5, f"{n_keys} keys: {digest}"
 
 
 def test_oracle_keys_subset_of_queries():
@@ -55,20 +143,3 @@ def test_missing_ledger_serves_registration_order(monkeypatch):
     monkeypatch.setattr(ent, "_REPO_DIR", "/nonexistent")
     assert ent._driver_ledger() == (set(), set())
     assert list(ent.queries()) == list(QUERIES)
-
-
-def test_no_driver_hostile_output_types(spark, sf_dir):
-    """The driver's canonicalizer chokes on array/map/struct cells
-    (unhashable in its pandas sort) and stringifies Decimal differently per
-    engine — so no query may emit them in its FINAL schema (r1 lesson:
-    text_stem/agg_approx_quantile err'd, 7 decimal keys hash-failed)."""
-    from pyspark.sql import types as T
-
-    banned = (T.ArrayType, T.MapType, T.StructType, T.DecimalType)
-    offenders = []
-    for name, fn in ent.queries().items():
-        df = fn(spark, sf_dir)
-        for field in df.schema.fields:
-            if isinstance(field.dataType, banned):
-                offenders.append(f"{name}.{field.name}: {field.dataType}")
-    assert not offenders, offenders

@@ -1,15 +1,18 @@
 """Physical-plan regression gate: the scale-critical plan properties from
 tools/explain_audit.py must hold (pushdown, pruning, broadcast, top-k
-rewrites, partial aggregation)."""
+rewrites, partial aggregation), and its nested-loop row-bound rule must
+judge synthetic plans correctly. tests/test_entry.py applies that rule to
+every registry key."""
 
 from __future__ import annotations
 
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as ent
-from tools.explain_audit import CHECKS, FORBIDDEN, NO_EXCHANGE_KEYS
+from tools.explain_audit import CHECKS, NO_EXCHANGE_KEYS, unbounded_nested_loops
 
 
 def _plan(spark, key, sf_dir):
@@ -24,15 +27,58 @@ def test_plan_properties(spark, sf_dir, key):
     plan = _plan(spark, key, sf_dir)
     for pattern, label in CHECKS[key]:
         assert re.search(pattern, plan, re.DOTALL), f"{key}: missing {label}\n{plan[:3000]}"
-    for bad, allowed in FORBIDDEN:
-        if key not in allowed:
-            assert bad not in plan, f"{key}: contains {bad}"
 
 
 @pytest.mark.parametrize("key", NO_EXCHANGE_KEYS)
 def test_zero_shuffle_plans(spark, sf_dir, key):
     plan = _plan(spark, key, sf_dir)
     assert "Exchange" not in plan, f"{key}: bucketing failed to co-locate\n{plan[:3000]}"
+
+
+def _nested_loop_fixture(spark, sf_dir):
+    """An unbounded lineitem side, a one-row aggregate over it and an
+    unbounded filter of orders, whose Catalyst maxRows are None, 1, None."""
+    from hh_rumors_presto_spark import io
+
+    big = io.load_table(spark, sf_dir, "lineitem")
+    one_row = big.agg(F.count("*").alias("n"))
+    unbounded = io.load_table(spark, sf_dir, "orders").filter("o_totalprice > 0")
+    return big, one_row, unbounded
+
+
+def _plans(df, name):
+    return name in df._jdf.queryExecution().sparkPlan().toString()
+
+
+def test_nested_loop_rule_passes_a_one_row_side(spark, sf_dir):
+    big, one_row, _ = _nested_loop_fixture(spark, sf_dir)
+    df = big.crossJoin(one_row)
+    assert _plans(df, "BroadcastNestedLoopJoin")
+    assert unbounded_nested_loops(df) == []
+    cartesian = big.hint("shuffle_replicate_nl").crossJoin(one_row)
+    assert _plans(cartesian, "CartesianProduct")
+    assert unbounded_nested_loops(cartesian) == []
+
+
+def test_nested_loop_rule_flags_an_unbounded_side(spark, sf_dir):
+    big, _, unbounded = _nested_loop_fixture(spark, sf_dir)
+    assert unbounded_nested_loops(big.crossJoin(F.broadcast(unbounded))) == [
+        "BroadcastNestedLoopJoin BuildRight maxRows=None"
+    ]
+    cartesian = big.hint("shuffle_replicate_nl").crossJoin(unbounded)
+    assert unbounded_nested_loops(cartesian) == [
+        "CartesianProduct maxRows=(None, None)"
+    ]
+
+
+def test_nested_loop_rule_walks_subqueries(spark, sf_dir):
+    big, _, unbounded = _nested_loop_fixture(spark, sf_dir)
+    inner = big.crossJoin(F.broadcast(unbounded)).agg(F.count("*"))
+    df = spark.range(1).select(inner.scalar().alias("n"))
+    assert not _plans(df, "BroadcastNestedLoopJoin")
+    assert unbounded_nested_loops(df) == [
+        "BroadcastNestedLoopJoin BuildRight maxRows=None"
+    ]
 
 
 def test_checks_literal_has_no_duplicate_keys():

@@ -5,8 +5,9 @@ a root that belongs to one SparkSession and goes when the process exits.
 The AST scan fails if a module under ``hh_rumors_presto_spark/`` other
 than ``io.py`` calls ``gettempdir()`` or spells a ``"/tmp`` path;
 ``tempfile.TemporaryDirectory`` blocks stay allowed, since they clean up
-after themselves.  No Spark session is needed: the helper reads only
-``spark.sparkContext.applicationId``.
+after themselves.  The helper reads only ``spark.sparkContext.applicationId``,
+so most checks run against a stub; one builds ``join_bucketed`` on two
+fixtures that share a basename.
 """
 
 from __future__ import annotations
@@ -19,6 +20,8 @@ import subprocess
 import sys
 import tempfile
 import types
+
+from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
 
@@ -99,9 +102,49 @@ def test_roots_are_per_session_and_follow_tempdir(tmp_path, monkeypatch):
     root_a, root_b = os.path.dirname(a), os.path.dirname(b)
     assert root_a == str(tmp_path / "hh_local-1")
     assert root_b == str(tmp_path / "hh_local-2")
-    assert os.path.basename(a) == os.path.basename(b) == "t_sf0.001"
+    assert os.path.basename(a) == os.path.basename(b)
+    assert os.path.basename(a).startswith("t_sf0.001_")
     # the root exists; the key's own directory is left to the caller
     assert os.path.isdir(root_a) and not os.path.exists(a)
+
+
+def test_same_basename_fixtures_get_their_own_dirs(tmp_path, monkeypatch):
+    """Within one session a fixture's scratch dir follows its real path,
+    not its basename: a second ``sfx`` must not reuse the first's data."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    first, second = tmp_path / "a" / "sfx", tmp_path / "b" / "sfx"
+    first.mkdir(parents=True)
+    second.mkdir(parents=True)
+    (tmp_path / "link").symlink_to(first)
+    spark = _stub("local-1")
+    a = io.scoped_tmp_dir(spark, "t", str(first))
+    assert a != io.scoped_tmp_dir(spark, "t", str(second))
+    assert a == io.scoped_tmp_dir(spark, "t", f"{first}/")
+    assert a == io.scoped_tmp_dir(spark, "t", str(tmp_path / "link"))
+    assert os.path.basename(a).startswith("t_sfx_")
+
+
+def test_join_bucketed_reads_each_same_basename_fixture(spark, sf_dir, tmp_path):
+    """join_bucketed keeps its bucketed copies as catalog tables for the
+    session; two fixtures named ``sfx`` with different lineitem rows must
+    each join their own rows."""
+    import pyarrow.parquet as pq
+
+    from hh_rumors_presto_spark.registry import QUERIES, load_all_queries
+
+    load_all_queries()
+    lineitem = pq.read_table(io.table_path(sf_dir, "lineitem"))
+    for parent, rows in (("a", lineitem.num_rows), ("b", 100)):
+        d = tmp_path / parent / "sfx"
+        d.mkdir(parents=True)
+        pq.write_table(lineitem.slice(0, rows), str(d / "lineitem.parquet"))
+        (d / "orders.parquet").symlink_to(io.table_path(sf_dir, "orders"))
+        df = QUERIES["join_bucketed"](spark, str(d))
+        joined = io.load_table(spark, str(d), "lineitem").join(
+            io.load_table(spark, str(d), "orders"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        assert df.agg(F.sum("n_lines")).first()[0] == joined.count(), parent
 
 
 def test_root_is_removed_at_exit(tmp_path):

@@ -5,7 +5,9 @@ properties the engine promises at scale (SURVEY.md "optimize for scale"):
 - dimension joins are BroadcastHashJoin (no fact-side shuffle);
 - rank<=k windows use WindowGroupLimit (per-partition top-k);
 - sort+limit plans as TakeOrderedAndProject (no global sort);
-- no CartesianProduct anywhere except the intentional tiny cross join.
+- every nested-loop join has a side with a small static row bound
+  (``unbounded_nested_loops``), except the keys named in UNBOUNDED_NLJ.
+  tests/test_entry.py checks that rule for every registry key.
 
 Usage: python tools/explain_audit.py [key ...]
 Prints PASS/WARN per assertion plus the formatted plan on WARN.
@@ -359,7 +361,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
          "wedge closure via equi-joins (degree-bounded, no all-pairs)"),
         (r"partial_count", "per-node triangle counts partially aggregated"),
     ],
-    # round-3 additions
     "extract_page_items": [
         (r"ArrowEvalPython|EvalPython", "page parse is Arrow-batched (one UDF pass over pages)"),
         (r"HashAggregate", "page assembly is a keyed hash aggregate"),
@@ -373,7 +374,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"BroadcastHashJoin", "per-method candidate sets broadcast-joined"),
         (r"partial_count", "recall counts partially aggregated map-side"),
     ],
-    # round-4 additions
     "ts_ewma": [
         (r"hashpartitioning\(user_id", "one keyed shuffle for the lag window"),
         (r"lag\(value", "EWMA unrolled to constant-state lags (no unbounded frame)"),
@@ -524,7 +524,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
          "pair join blocked per event_type, never all-pairs"),
         (r"partial_sum", "daily cents partials map-side combined"),
     ],
-    # round-15 batch
     # graph_label_prop's per-round join+argmax plans are truncated by the
     # per-round localCheckpoint (as in graph_pagerank); the returned plan
     # shows only the final community-size window, which must be keyed.
@@ -542,7 +541,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
          "pair join blocked per event_type, never all-pairs"),
         (r"partial_sum", "daily cents partials map-side combined"),
     ],
-    # round-16 batch
     "agg_decay_sum": [
         (r"partial_sum", "decayed integer partials map-side combined"),
     ],
@@ -561,7 +559,7 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     ],
     # ts_esd_outliers' per-round plans are truncated by localCheckpoint;
     # the final plan is the 3-round union of checkpointed picks — assert
-    # the union shape (and, via FORBIDDEN, no nested-loop anywhere)
+    # the union shape
     "ts_esd_outliers": [
         (r"Union", "3 peel rounds unioned from checkpointed picks"),
     ],
@@ -588,7 +586,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "dq_change_attribution": [
         (r"partial_sum", "period sums map-side combined"),
     ],
-    # round-19 batch
     "recs_session_paths": [
         (r"hashpartitioning\(user_id",
          "session windows keyed by user (no single-partition window)"),
@@ -611,7 +608,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "text_zipf_fit": [
         (r"partial_count", "vocab counts map-side combined"),
     ],
-    # round-21 batch
     "ts_alert_debounce": [
         (r"hashpartitioning\(event_type",
          "lag/rank windows keyed by event_type (crossings pre-pruned)"),
@@ -635,7 +631,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_sum", "per-dim moment partials map-side combined"),
         (r"Generate.*posexplode", "narrow dim fan-out, no UDF"),
     ],
-    # round-23 batch
     "ts_iqr_fence": [
         (r"BroadcastHashJoin", "fence table broadcast onto the daily series"),
     ],
@@ -670,7 +665,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"hashpartitioning\(doc_id",
          "trigram window keyed by doc (no single-partition window)"),
     ],
-    # round-26 batch
     "corpus_source_overlap": [
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "source pairs meet through the token equi-join, never all-pairs"),
@@ -681,7 +675,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "ts_time_to_convert": [
         (r"partial_min", "first-view/first-buy partials map-side combined"),
     ],
-    # round-27 batch
     # r12: the supplier-keyed pair self-join + 83M-group aggregate moved
     # inside the blocked pair workers (stacked GEMM per block-pair);
     # only per-worker top-k survivors reach the final rank.
@@ -700,7 +693,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "win_rolling_corr": [
         (r"partial_sum", "daily (x, y) partials map-side combined"),
     ],
-    # round-28 batch
     "feat_woe_iv": [
         (r"BroadcastHashJoin", "customer dim broadcast to the fact"),
         (r"partial_sum", "per-segment label counts map-side combined"),
@@ -715,7 +707,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"WindowGroupLimit|TakeOrderedAndProject",
          "top-k admission as a partial rank"),
     ],
-    # round-29 batch
     "funnel_window": [
         (r"hashpartitioning\(user_id",
          "chain windows keyed by user, never global"),
@@ -730,7 +721,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"hashpartitioning\(event_type",
          "rank window keyed by group"),
     ],
-    # round-30 batch
     # eval_bradley_terry's match-construction lag window is keyed by
     # user but sits behind the localCheckpoint that truncates the MM
     # lineage, so the final plan only shows the item-sized iteration
@@ -746,7 +736,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "win_rsi": [
         (r"partial_sum", "daily cents partials map-side combined"),
     ],
-    # round-31 batch
     "eval_auc_roc": [
         (r"partial_sum|partial_count",
          "per-distinct-score counts map-side combined"),
@@ -761,7 +750,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"WindowGroupLimit|hashpartitioning\(user_id",
          "per-user top-10 as a keyed group-limited window"),
     ],
-    # round-32 batch
     "eval_calibration_ece": [
         (r"partial_sum|partial_count",
          "per-bin counts map-side combined"),
@@ -774,7 +762,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_sum|partial_count",
          "contingency counts map-side combined"),
     ],
-    # round-33 batch
     # graph_coreness's per-node h-index windows sit behind the
     # per-round localCheckpoints that truncate the iterative lineage,
     # so the final plan only shows the census fold
@@ -792,7 +779,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"WindowGroupLimit|hashpartitioning\(cust",
          "per-customer top-10 as a keyed group-limited window"),
     ],
-    # round-34 batch
     "olap_market_basket": [
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "pairs form inside order baskets via the equi-join"),
@@ -809,7 +795,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_count|partial_sum",
          "(lhs, rhs) counts map-side combined per declared FD"),
     ],
-    # round-35 batch
     "agg_bitmap_segments": [
         (r"partial_bit_or|bit_or",
          "per-word segment bitmaps built by bit_or aggregation"),
@@ -822,7 +807,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "corpus_temperature_mix": [
         (r"partial_sum", "per-language token masses map-side combined"),
     ],
-    # round-36 batch
     "ml_knn_classifier": [
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "pairs form inside hash blocks via the equi-join"),
@@ -836,7 +820,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"hashpartitioning\(user_id",
          "island window keyed by user, never global"),
     ],
-    # round-37 batch
     "eval_brier_score": [
         (r"partial_sum", "squared-error moments map-side combined"),
     ],
@@ -848,7 +831,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"ReadSchema: struct<who:struct<user_id:bigint>>",
          "nested projection pruned to the single who.user_id leaf"),
     ],
-    # round-38 batch
     "win_hampel": [
         (r"hashpartitioning\(day",
          "median/MAD selections keyed per center day"),
@@ -861,7 +843,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_sum|HashAggregate",
          "k-row estimator fold after the partial rank"),
     ],
-    # round-39 batch
     "eval_confusion_multiclass": [
         (r"partial_count|partial_sum",
          "(actual, pred) counts map-side combined"),
@@ -873,7 +854,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "agg_runs_test": [
         (r"partial_sum", "daily totals map-side combined"),
     ],
-    # round-40 batch
     "feat_lag_matrix": [
         (r"hashpartitioning\(user_id",
          "feature/label windows keyed by user, never global"),
@@ -886,7 +866,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_sum|partial_count",
          "per-doc token stats map-side combined"),
     ],
-    # round-41 batch
     "graph_assortativity": [
         (r"BroadcastHashJoin",
          "node-sized degree table broadcast to the edge list"),
@@ -899,7 +878,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "ts_granger_lite": [
         (r"partial_sum", "daily (y, v) partials map-side combined"),
     ],
-    # round-42 batch
     "text_burstiness": [
         (r"partial_count|partial_sum",
          "(token, doc) counts map-side combined"),
@@ -914,7 +892,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"BroadcastHashJoin",
          "distinct-value midrank tables broadcast back"),
     ],
-    # round-43 batch
     "agg_session_depth": [
         (r"hashpartitioning\(user_id",
          "sessionizing windows keyed by user, never global"),
@@ -926,7 +903,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "eval_mcnemar": [
         (r"partial_sum", "2x2 discordance cells map-side combined"),
     ],
-    # round-44 batch
     "ts_changepoint_binseg": [
         (r"partial_sum", "daily totals map-side combined"),
     ],
@@ -938,7 +914,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "pairs form inside (user, dollar) blocks via the equi-join"),
     ],
-    # round-45 batch
     "graph_truss_support": [
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "triangles via canonical forward-edge equi-joins"),
@@ -953,7 +928,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"WindowGroupLimit|TakeOrderedAndProject",
          "top-20 head as a partial rank"),
     ],
-    # round-46 batch
     "agg_cvar_es": [
         (r"partial_sum", "tail moments map-side combined"),
         (r"windowspecdefinition\(__bucket#\d+L?, cents#",
@@ -967,7 +941,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_sum|partial_count",
          "re-read census map-side combined"),
     ],
-    # round-47 batch
     "agg_lorenz_deciles": [
         (r"partial_sum", "per-customer revenue map-side combined"),
     ],
@@ -981,7 +954,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"WindowGroupLimit|hashpartitioning\(q",
          "doc/term cuts as keyed group-limited ranks"),
     ],
-    # round-48 batch
     "ab_did_estimator": [
         (r"partial_sum|partial_count",
          "2x2 cell counts map-side combined"),
@@ -994,7 +966,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"WindowGroupLimit|TakeOrderedAndProject",
          "shrunk leaderboard as a partial rank"),
     ],
-    # round-49 batch
     "graph_transitivity": [
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "triangles via canonical forward-edge equi-joins"),
@@ -1006,7 +977,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "ab_tost_equivalence": [
         (r"partial_sum", "per-arm moments map-side combined"),
     ],
-    # round-50 batch
     "win_underwater_spell": [
         (r"partial_sum", "daily totals map-side combined"),
     ],
@@ -1019,7 +989,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"WindowGroupLimit|TakeOrderedAndProject",
          "top-10 distances as a partial rank"),
     ],
-    # round-51 batch
     "sim_hamming_topk": [
         (r"WindowGroupLimit|hashpartitioning\(qid",
          "per-query top-k as a keyed group-limited window"),
@@ -1033,7 +1002,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_count|partial_sum",
          "24x2 hour histogram map-side combined"),
     ],
-    # round-52 batch
     "text_script_mix": [
         (r"partial_sum|partial_count",
          "per-language script counts map-side combined"),
@@ -1045,7 +1013,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "agg_hhi": [
         (r"partial_sum", "supplier revenue partials map-side combined"),
     ],
-    # round-53 batch
     "pipeline_split_leakage": [
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "gram fingerprints via keyed adjacent-position equi-joins"),
@@ -1058,7 +1025,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_count|partial_sum",
          "hourly counts map-side combined"),
     ],
-    # round-54 batch
     "ts_markov_entropy_rate": [
         (r"hashpartitioning\(user_id",
          "transition window keyed by user, never global"),
@@ -1088,7 +1054,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_sum|partial_count",
          "per-arm counts map-side combined"),
     ],
-    # round-56 batch
     "text_template_mining": [
         (r"partial_count",
          "template counts map-side combined"),
@@ -1103,7 +1068,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_count|partial_max",
          "user lifetimes map-side combined"),
     ],
-    # round-57 batch
     "eval_cost_curve": [
         (r"BroadcastHashJoin|BroadcastNestedLoopJoin",
          "3-row threshold table broadcast over one fact pass"),
@@ -1115,7 +1079,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "agg_nps": [
         (r"partial_count", "segment counts map-side combined"),
     ],
-    # round-58 batch
     "agg_dau_mau": [
         (r"partial_count|HashAggregate",
          "distinct (user, day) collapse map-side combined"),
@@ -1130,7 +1093,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "half-to-half pairing as a supplier equi-join"),
     ],
-    # round-59 batch
     "scan_csv_null_contract": [
         (r"partial_sum|partial_count",
          "null/cents census map-side combined"),
@@ -1142,7 +1104,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "corpus_source_entropy": [
         (r"partial_count", "source counts map-side combined"),
     ],
-    # round-60 batch
     "text_burrows_delta": [
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "source pairs blocked by word over the profile table"),
@@ -1155,7 +1116,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"hashpartitioning\(event_type",
          "gap lag and rank windows keyed per feed"),
     ],
-    # round-61 batch
     "ts_records_test": [
         (r"partial_sum", "daily totals map-side combined"),
     ],
@@ -1183,7 +1143,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "agg_backlog_curve": [
         (r"partial_count", "daily in/out counts map-side combined"),
     ],
-    # round-63 batch
     "ts_seasonal_strength": [
         (r"partial_sum", "daily totals map-side combined"),
         (r"BroadcastHashJoin", "7-row weekday means broadcast back"),
@@ -1195,7 +1154,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "agg_price_endings": [
         (r"partial_count", "ending histogram map-side combined"),
     ],
-    # round-64 batch
     "eval_average_precision": [
         (r"windowspecdefinition\(__bucket#\d+L?, neg_s#",
          "rank+positives cumsum from the bucket-partitioned two-pass"),
@@ -1212,7 +1170,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_sum|partial_count",
          "GROUP BY ALL resolves to a plain hash aggregate"),
     ],
-    # round-65 batch
     "eval_distinct_n": [
         (r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
          "n-grams via keyed adjacent-position equi-joins"),
@@ -1225,7 +1182,6 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"partial_count|HashAggregate",
          "three fingerprint folds map-side combined"),
     ],
-    # round-66 batch
     "agg_engagement_gini": [
         (r"HashAggregate",
          "Gini/top-share folds over the checkpointed rank table"),
@@ -1254,192 +1210,93 @@ NO_EXCHANGE_KEYS = (
     "pipeline_fim_format",
 )
 
-FORBIDDEN = (
-    ("CartesianProduct", {"join_cross"}),  # allowed only for the tiny demo
-    # brute-force cosine top-k intentionally scores every (query, corpus)
-    # pair against a tiny broadcast query side — BNLJ is that exact plan.
-    # q22's BNLJ is the ONE-ROW scalar-threshold broadcast (how Catalyst
-    # executes an uncorrelated scalar subquery). Everywhere else a nested
-    # loop is a scale bug.
-    # agg_share_of_total broadcasts its ONE-ROW global total the same way.
-    # dq_impute, dq_drift_psi, text_lm_score, and dq_benford broadcast
-    # ONE-ROW global aggregates too.
-    # sim_ann_recall crossJoins its TWO-ROW method list (and embeds
-    # sim_topk's broadcast query side).
-    ("BroadcastNestedLoopJoin",
-     {"sim_topk", "sql_tpch_q22", "agg_share_of_total", "corpus_mix_weights",
-      "dq_impute", "dq_drift_psi", "text_lm_score", "dq_benford",
-      "sim_ann_recall", "ts_cusum", "text_tfidf",
-      # dedup_minhash_recall crossJoins its three ONE-ROW count aggregates
-      "dedup_minhash_recall",
-      # sketch_hist_quantile probes 3 rank rows against the constant-size
-      # bucket histogram (>= theta join, both sides bounded)
-      "sketch_hist_quantile",
-      # sim_ivfpq_recall's exact-truth side broadcasts the 5-row query
-      # set over the corpus (sim_topk's sanctioned brute-force shape)
-      "sim_ivfpq_recall",
-      # dedup_semantic's assignment broadcasts the k-ROW centroid set over
-      # a single corpus scan (emb_kmeans_assign's sanctioned shape); the
-      # pair join itself is the cluster equi-join, never a nested loop
-      "dedup_semantic",
-      # ts_seasonal_decompose's grid is |event_types| x |hours| — two tiny
-      # dimension sides (independent of the fact row count) crossed to
-      # densify the series; feat_target_encode broadcasts its ONE-ROW
-      # global prior; corpus_ccnet_buckets broadcasts its ONE-ROW corpus
-      # total and ONE-ROW tertile cuts
-      "ts_seasonal_decompose", "feat_target_encode",
-      "corpus_ccnet_buckets",
-      # ml_logreg_gd chains ONE-ROW weight/gradient tables through the
-      # iterations — 3 doubles of broadcast state per pass over the data;
-      # emb_pca_power broadcasts its ONE-ROW norm scalar per iteration
-      "ml_logreg_gd", "emb_pca_power",
-      # text_collocations_pmi broadcasts its ONE-ROW unigram/bigram totals
-      "text_collocations_pmi",
-      # dq_join_skew crossJoins its ONE-ROW stats with the partial top-1
-      # hottest key; sketch_hll_setops crossJoins four ONE-ROW estimate/
-      # truth aggregates
-      "dq_join_skew", "sketch_hll_setops",
-      # agg_engagement_gini crossJoins its ONE-ROW gini fold with the
-      # ONE-ROW top-1% share fold (same sanctioned one-row-fold shape)
-      "agg_engagement_gini",
-      # round-6 full-registry sweep (first FORBIDDEN pass over all 527
-      # keys) — each audited to the sanctioned bounded-side shapes:
-      # text_bm25 broadcasts its ONE-ROW (N, avgdl) corpus stats;
-      # ts_forecast_backtest / corpus_epoch_expand / dq_freshness /
-      # sql_tpch_q11 broadcast ONE-ROW global aggregates (max ts, totals,
-      # the q11 scalar threshold); graph_modularity broadcasts the
-      # ONE-ROW 2m edge total; agg_heavy_hitters its ONE-ROW count total;
-      # emb_kmeans_assign / sim_ivf broadcast the k-ROW (k<=16) centroid
-      # table — the map-side flat loop a cluster kmeans does; join_cross
-      # is the deliberate cross-join demo (also the CartesianProduct
-      # allowlist) whose broadcast variant plans as BNLJ.
-      "text_bm25", "ts_forecast_backtest", "graph_modularity",
-      "corpus_epoch_expand", "emb_kmeans_assign", "agg_heavy_hitters",
-      "sim_ivf", "dq_freshness", "sql_tpch_q11", "join_cross",
-      # dedup_simhash_recall crossJoins its three ONE-ROW count aggregates
-      # (same shape as dedup_minhash_recall)
-      "dedup_simhash_recall",
-      # emb_truncate_quality broadcasts its 20-row query set over the
-      # corpus (sim_topk's sanctioned brute-force-baseline shape);
-      # sim_ivfpq_stages crossJoins five ONE-ROW stage-checksum aggregates
-      "emb_truncate_quality", "sim_ivfpq_stages",
-      # aqp_bootstrap_ci crossJoins its ONE-ROW point estimate with the
-      # 32-row replica ranking; text_lm_bigram_backoff crossJoins its
-      # ONE-ROW corpus token total (same shape as text_lm_score)
-      "aqp_bootstrap_ci", "text_lm_bigram_backoff",
-      # dq_ks_test crossJoins its ONE-ROW (n_a, n_b) totals with the
-      # distinct-value CDF (same shape as agg_share_of_total)
-      "dq_ks_test",
-      # corpus_anneal_mix crossJoins its ONE-ROW corpus total;
-      # agg_mutual_info its ONE-ROW N; ml_naive_bayes broadcasts the
-      # K-row prior/class-total model and ONE-ROW vocab scalar over the
-      # token stream (the model IS tiny; the count join is a hash join)
-      "corpus_anneal_mix", "agg_mutual_info", "ml_naive_bayes",
-      # agg_decay_sum crossJoins its ONE-ROW reference-day max
-      "agg_decay_sum",
-      # ab_welch_ttest crossJoins its two ONE-ROW variant-moment rows;
-      # ab_cuped_adjust crossJoins its ONE-ROW theta onto a 2-row table;
-      # ab_power_mde the same 2x ONE-ROW shape; ts_kaplan_meier and
-      # dq_change_attribution broadcast ONE-ROW horizon/midpoint scalars
-      "ab_welch_ttest", "ab_cuped_adjust", "ab_power_mde",
-      "ts_kaplan_meier", "dq_change_attribution",
-      # ab_ratio_delta_method crossJoins its two ONE-ROW variant rows
-      "ab_ratio_delta_method",
-      # ts_sli_burn_rate crossJoins its ONE-ROW stream-start hour;
-      # emb_kcenter_init broadcasts ONE center row per round;
-      # agg_growth_accounting crossJoins its ONE-ROW stream-start day
-      "ts_sli_burn_rate", "emb_kcenter_init",
-      "agg_growth_accounting",
-      # round-24: one-row / k-row broadcast folds
-      "dq_chi2_goodness", "ab_metric_decompose", "ab_poisson_rate",
-      # ml_decision_stump crossJoins its ONE-ROW (n, p) total;
-      # dq_heavy_changers broadcasts its ONE-ROW midpoint
-      "ml_decision_stump", "dq_heavy_changers",
-      # round-28: feat_woe_iv crossJoins its ONE-ROW smoothed totals;
-      # ts_dft_power crossJoins its ONE-ROW bounds and the 8-row
-      # harmonic list onto the calendar-sized daily series;
-      # corpus_dsir_select crossJoins its ONE-ROW LM totals onto the
-      # |V|-sized vocab (the token-stream join is a hash join)
-      "feat_woe_iv", "ts_dft_power", "corpus_dsir_select",
-      # eval_bradley_terry crossJoins its ONE-ROW normalizer onto the
-      # item-vocabulary table each MM round (ml_logreg_gd's shape);
-      # eval_f1_threshold crossJoins its THREE-ROW threshold table;
-      # recs_coverage_diversity crossJoins its ONE-ROW coverage and
-      # catalog-size aggregates onto the one-row ILD fold
-      "eval_bradley_terry", "eval_f1_threshold",
-      "recs_coverage_diversity",
-      # olap_market_basket and feat_rfm_segmentation crossJoin their
-      # ONE-ROW order-count / corpus-max aggregates;
-      # corpus_temperature_mix crossJoins its ONE-ROW totals onto the
-      # language-cardinality table
-      "olap_market_basket", "feat_rfm_segmentation",
-      "corpus_temperature_mix",
-      # eval_lm_heldout_ppl crossJoins its ONE-ROW LM constants onto
-      # the held-out token stream (text_lm_score's sanctioned shape);
-      # agg_tail_index_hill crossJoins its ONE-ROW x_(k+1) reference
-      # onto the k-row top list
-      "eval_lm_heldout_ppl", "agg_tail_index_hill",
-      # text_burstiness crossJoins its ONE-ROW doc count onto the
-      # 50-row vocabulary head; ts_autoperiod crossJoins its ONE-ROW
-      # bounds/denominator and the 3-row candidate list onto the
-      # calendar-sized series; text_lm_kneser_ney crossJoins its
-      # ONE-ROW distinct-bigram total
-      "text_burstiness", "ts_autoperiod", "text_lm_kneser_ney",
-      # ts_xcorr_lead_scan crossJoins its 15-row lag list and ONE-ROW
-      # bounds/denominator onto the calendar-sized series; agg_cvar_es
-      # crossJoins its ONE-ROW VaR cut row
-      "ts_xcorr_lead_scan", "agg_cvar_es",
-      # text_prf_expansion crossJoins its ONE-ROW doc count onto the
-      # query postings and expansion folds; ab_eb_shrinkage and
-      # ab_did_estimator crossJoin ONE-ROW prior/bounds rows
-      "text_prf_expansion", "ab_eb_shrinkage",
-      "ab_did_estimator",
-      # graph_transitivity crossJoins its two ONE-ROW wedge/triangle
-      # aggregates; eval_roc_points its 9-row threshold table;
-      # dq_mahalanobis_outliers its ONE-ROW covariance moments
-      "graph_transitivity", "eval_roc_points",
-      "dq_mahalanobis_outliers",
-      # sim_hamming_topk broadcasts its 5-ROW query signatures over
-      # one corpus scan (sim_topk's sanctioned brute-force shape);
-      # curation_quality_residual its ONE-ROW OLS fit; dq_tz_shift
-      # its 24-ROW shift list onto the 24-row histogram
-      "sim_hamming_topk", "curation_quality_residual",
-      "dq_tz_shift",
-      # eval_gains_chart broadcasts its 10-row decile list over the
-      # ranked fact (a <= range join, eval_f1_threshold's shape)
-      "eval_gains_chart",
-      # ts_markov_entropy_rate crossJoins its ONE-ROW transition total
-      # onto the |types|^2 term table; ab_sprt_boundary and
-      # ts_page_hinkley left-join their ONE-ROW first-crossing/alarm
-      # rows onto the one-row summary (lit(True) joins)
-      "ts_markov_entropy_rate", "ab_sprt_boundary",
-      "ts_page_hinkley",
-      # agg_hazard_curve and emb_anisotropy crossJoin ONE-ROW
-      # stream-start / vector-count aggregates; eval_cost_curve its
-      # 3-row threshold table (eval_f1_threshold's shape);
-      # dq_rank_stability its ONE-ROW date bounds;
-      # corpus_source_entropy its ONE-ROW corpus totals
-      "agg_hazard_curve", "emb_anisotropy", "eval_cost_curve",
-      "dq_rank_stability", "corpus_source_entropy",
-      # eval_selective_risk its 10-row coverage deciles; the burrows
-      # profile grid crossJoins the 30-row word list onto sources
-      "eval_selective_risk", "text_burrows_delta",
-      # pipeline_early_stopping left-joins its ONE-ROW stop marker
-      # and crossJoins the ONE-ROW horizon (lit(True) joins);
-      # ts_seasonal_strength crossJoins its ONE-ROW grand totals
-      "pipeline_early_stopping", "ts_seasonal_strength",
-      # dq_null_rate_trend crossJoins its ONE-ROW bounds and the
-      # one-row half-delta onto the day-grain census;
-      # agg_lorenz_deciles broadcasts its 10-row decile list onto
-      # the ranked customer table (non-equi on a computed rank)
-      "dq_null_rate_trend", "agg_lorenz_deciles",
-      # round-10 bucketed_rank_cumsum consumers: the operator attaches
-      # its ONE-ROW min/max bounds via a conditionless broadcast join
-      # (the sanctioned one-row-fold shape; a constant equi-key gets
-      # constant-folded back to the nested loop, so BNLJ is the plan)
-      "ts_time_to_convert", "ab_propensity_strata", "agg_abc_analysis",
-      "agg_abc_xyz", "eval_average_precision"}),
-)
+# A BroadcastNestedLoopJoin replays its build side for every streamed
+# row, and a CartesianProduct pairs every row of one side with every row
+# of the other. Either stays safe at any data size only when Catalyst
+# proves a small static row bound (LogicalPlan.maxRows) on the build side,
+# or for a CartesianProduct on at least one side.
+NLJ_MAX_ROWS = 1024
+
+# Keys whose plans hold a nested loop with no such bound; one-line reason
+# each. A key leaves only through a rewrite that gives the side a static
+# bound, adds no Exchange and keeps its result hashes.
+UNBOUNDED_NLJ: dict[str, str] = {
+    "ab_metric_decompose": "one-arm moment row from a per-variant grouped aggregate",
+    "ab_poisson_rate": "one-arm count row from a per-variant grouped aggregate",
+    "ab_power_mde": "one-arm moment row from a per-variant grouped aggregate",
+    "ab_ratio_delta_method": "one-arm moment row from a per-variant grouped aggregate",
+    "ab_welch_ttest": "one-arm moment row from a per-variant grouped aggregate",
+    "agg_cvar_es": "one-row VaR cut picked by a rank equi-join",
+    "emb_kmeans_assign": "8-row centroid set is a vec_id filter",
+    "emb_truncate_quality": "20-row query set is a vec_id filter",
+    "eval_cost_curve": "3-row threshold table joined out of range(3) by rank",
+    "eval_f1_threshold": "3-row threshold table joined out of range(3) by rank",
+    "eval_roc_points": "9-row threshold table joined out of range(9) by rank",
+    "join_cross": "the region x region cross-join demo",
+    "ml_naive_bayes": "class prior table: one row per language, grouped",
+    "sim_ann_recall": "2-row method list from a local RDD; sim_topk's query set",
+    "sim_hamming_topk": "5-row query signature set is a vec_id filter",
+    "sim_ivf": "16-row centroid set is a vec_id filter",
+    "sim_ivfpq_recall": "5-row exact-truth query set is a vec_id filter",
+    "sim_topk": "10-row query set is a vec_id filter",
+    "sketch_hist_quantile": "histogram bucket cumsum: one row per price bucket",
+    "sketch_hll_setops": "one-row-per-set HLL estimates from grouped aggregates",
+    "ts_forecast_backtest": "hour grid exploded from the events' min/max span",
+    "ts_seasonal_decompose": "hour grid exploded from the events' min/max span",
+}
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _max_rows(node) -> int | None:
+    """Static row bound of a physical node's logical link; None when the
+    node has no link or Catalyst derives no bound."""
+    link = node.logicalLink()
+    if link.isEmpty():
+        return None
+    rows = link.get().maxRows()
+    return None if rows.isEmpty() else int(rows.get())
+
+
+def _bounded(rows: int | None) -> bool:
+    return rows is not None and rows <= NLJ_MAX_ROWS
+
+
+def unbounded_nested_loops(df) -> list[str]:
+    """One line per nested-loop join in ``df``'s physical plan, subquery
+    plans included, that breaks the NLJ_MAX_ROWS rule; empty when none
+    does. Plans without executing anything."""
+    jvm = df.sparkSession._jvm
+    logical = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.plans.logical.LogicalPlan"
+    )
+    planner = df.sparkSession._jsparkSession.sessionState().planner()
+    found = []
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "BroadcastNestedLoopJoin":
+            side = node.buildSide().toString()
+            rows = _max_rows(node.right() if side == "BuildRight" else node.left())
+            if not _bounded(rows):
+                found.append(f"{name} {side} maxRows={rows}")
+        elif name == "CartesianProduct":
+            rows = (_max_rows(node.left()), _max_rows(node.right()))
+            if not any(map(_bounded, rows)):
+                found.append(f"{name} maxRows={rows}")
+        stack.extend(_seq(node.children()))
+        # a physical plan carries its subqueries as logical plans until
+        # execution prepares it, so plan them the way execution will
+        for sub in _seq(node.subqueries()):
+            if logical.isInstance(sub):
+                sub = planner.plan(
+                    jvm.org.apache.spark.sql.catalyst.plans.logical.ReturnAnswer(sub)
+                ).next()
+            stack.append(sub)
+    return found
 
 
 def main() -> int:
@@ -1466,10 +1323,10 @@ def main() -> int:
                 n_warn += 1
                 print(f"WARN  {key}: MISSING {label}")
                 print(plan[:4000])
-        for bad, allowed in FORBIDDEN:
-            if key not in allowed and bad in plan:
+        if key not in UNBOUNDED_NLJ:
+            for line in unbounded_nested_loops(df):
                 n_warn += 1
-                print(f"WARN  {key}: contains {bad}")
+                print(f"WARN  {key}: {line}")
         if key in NO_EXCHANGE_KEYS:
             if "Exchange" in plan:
                 n_warn += 1
