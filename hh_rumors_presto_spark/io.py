@@ -2,8 +2,12 @@
 
 Analog of the reference's paginated HTTP scan stage
 (/root/reference/netlify/functions/fetchRumors.js:14-30,126-151) generalized
-to columnar sources: ``spark.read.parquet`` gives predicate pushdown, column
-pruning and partition-parallel scans for free — see SURVEY.md §2.A row 5.
+to columnar sources: ``spark.read.parquet`` gives predicate pushdown and
+column pruning — see SURVEY.md §2.A row 5.  Scan parallelism is not free:
+a parquet split never divides a row group, and every fixture is one row
+group, so a plain scan (and all per-row work fused above it) runs in one
+task.  :func:`load_spread` hash-repartitions a large one-row-group scan
+over the cores before that per-row work.
 
 Footer rule: every fixture scan passes the schema of the table's parquet
 footer (:func:`read_footer`), so no schema-inference job runs while a
@@ -24,6 +28,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from hh_rumors_presto_spark.session import default_parallelism, tasks_for_rows
 
 TABLES = (
     "region",
@@ -92,23 +98,63 @@ def table_num_rows(sf_dir: str, name: str) -> int:
     return read_footer(table_path(sf_dir, name)).num_rows
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table with its footer schema; ``events`` goes
-    through :func:`load_events`. Lazy: no Spark job runs here."""
+def load_table(
+    spark: SparkSession, sf_dir: str, name: str, footer: Footer | None = None
+) -> DataFrame:
+    """Scan one fixture table with its footer schema (``footer``, when the
+    caller has read it already); ``events`` gets ``ts`` as a microsecond
+    TimestampType (:func:`events_ts_micros`). Lazy: no Spark job runs
+    here."""
+    if footer is None:
+        footer = _table_footer(sf_dir, name)
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(footer.schema).parquet(table_path(sf_dir, name))
+    return events_ts_micros(df, footer.schema) if name == "events" else df
+
+
+def _table_footer(sf_dir: str, name: str) -> Footer:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        return load_events(spark, sf_dir)
-    path = table_path(sf_dir, name)
-    return spark.read.schema(read_footer(path).schema).parquet(path)
+    return read_footer(table_path(sf_dir, name))
+
+
+# Rows per task when a scan is spread (load_spread).  On a 4-core host, at
+# 600k lineitem / 150k orders rows, 100k was as fast as 50k and faster
+# than 200k, which leaves the orders scan in one task; 50k also spreads
+# sf0.01's 60k lineitem rows, for no gain beyond that input's run-to-run
+# spread (CHANGES.md).
+_ROWS_PER_SCAN_TASK = 100_000
+
+
+def scan_fanout(num_rows: int, num_row_groups: int, cores: int) -> int:
+    """Hash-partition count that :func:`load_spread` spreads a scan of
+    ``num_rows`` rows in ``num_row_groups`` row groups over, or 1 to keep
+    the plain scan: ``tasks_for_rows`` sizes the task count, and the scan
+    is spread only when that count exceeds the row groups, the most tasks
+    a parquet scan can split into."""
+    n = tasks_for_rows(num_rows, _ROWS_PER_SCAN_TASK, cores)
+    return n if n > num_row_groups else 1
+
+
+def load_spread(
+    spark: SparkSession, sf_dir: str, name: str, *by: str
+) -> DataFrame:
+    """:func:`load_table`, hash-repartitioned on ``by`` into
+    :func:`scan_fanout` tasks when that is more than one, so per-row work
+    above a one-row-group scan runs on every core.  Otherwise the plain
+    scan, with the plan text of :func:`load_table`.  Filters and column
+    pruning above the result still reach the scan; a later operator
+    clustered on ``by`` (a window, an aggregate) reuses the exchange."""
+    footer = _table_footer(sf_dir, name)
+    df = load_table(spark, sf_dir, name, footer)
+    n = scan_fanout(footer.num_rows, footer.num_row_groups, default_parallelism())
+    return df if n == 1 else df.repartition(n, *by)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan the events table with ``ts`` as a microsecond TimestampType."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    schema = read_footer(path).schema
-    return events_ts_micros(spark.read.schema(schema).parquet(path), schema)
+    return load_table(spark, sf_dir, "events")
 
 
 def events_ts_micros(df: DataFrame, schema: T.StructType) -> DataFrame:

@@ -54,8 +54,11 @@ def agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal.Decimal and DuckDB DECIMAL->float64 differently), the
     high-scale product sums round(x, 2)-ed first. ``sum_charge`` casts the
     raw double product price x (1-disc) x (1+tax) at scale 6, not the
-    scale-4 revenue."""
-    li = io.load_table(spark, sf_dir, "lineitem")
+    scale-4 revenue.  The lineitem scan is spread on ``l_orderkey``
+    (``io.load_spread``), so the per-row DECIMAL sums of the partial
+    aggregate run on every core, not in the one task of a one-row-group
+    scan."""
+    li = io.load_spread(spark, sf_dir, "lineitem", "l_orderkey")
     charge = (
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
     )

@@ -83,10 +83,13 @@ def join_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-way star join (TPC-H Q5 shape): one shuffle join on the fact
-    spine (lineitem⋈orders), then broadcast joins up the dimension chain —
-    customer/nation/region never shuffle lineitem again."""
-    li = io.load_table(spark, sf_dir, "lineitem")
+    """Multi-way star join (TPC-H Q5 shape): lineitem probes the filtered
+    orders, then customer, nation and region.  At every fixture scale each
+    of those is under the broadcast threshold, so the plan is four
+    broadcast hash joins and lineitem is never shuffled by a join.  The
+    lineitem scan is spread on ``l_orderkey`` (``io.load_spread``), so
+    the probes and the DECIMAL revenue sums run on every core."""
+    li = io.load_spread(spark, sf_dir, "lineitem", "l_orderkey")
     orders = io.load_table(spark, sf_dir, "orders")
     cust = io.load_table(spark, sf_dir, "customer")
     nation = io.load_table(spark, sf_dir, "nation")

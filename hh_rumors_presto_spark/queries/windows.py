@@ -190,8 +190,10 @@ def win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k (ref #12 per-page cap / #13 per-tag cap). Catalyst
     rewrites rank<=k filters into per-partition top-k (WindowGroupLimit), so
-    no group ever materializes fully."""
-    orders = io.load_table(spark, sf_dir, "orders")
+    no group ever materializes fully.  The orders scan is spread on
+    ``o_custkey`` (``io.load_spread``), the window's own clustering, so
+    that one exchange both feeds every core and serves the window."""
+    orders = io.load_spread(spark, sf_dir, "orders", "o_custkey")
     out = per_group_top_k(
         orders,
         partition_by=["o_custkey"],
