@@ -107,7 +107,8 @@ def load_table(
     here."""
     if footer is None:
         footer = _table_footer(sf_dir, name)
-    if name == "events":
+    if name == "events" and isinstance(footer.schema["ts"].dataType, T.LongType):
+        # TIMESTAMP(NANOS) reads only as LONG (events_ts_micros)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.schema(footer.schema).parquet(table_path(sf_dir, name))
     return events_ts_micros(df, footer.schema) if name == "events" else df

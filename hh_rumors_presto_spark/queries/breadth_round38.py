@@ -9,7 +9,7 @@ partition overwrite, and the Hill tail-index estimator.
   the very outliers it hunts (a z-score filter gets dragged by
   them).
 - ``sink_dynamic_overwrite`` — the lakehouse partition-replace
-  semantics (spark.sql.sources.partitionOverwriteMode=dynamic):
+  semantics (the writer option partitionOverwriteMode=dynamic):
   rewrite ONLY the partitions present in the incoming batch, leave
   every other partition untouched — verified by reading the whole
   table back after replacing one partition.
@@ -216,7 +216,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partition replace is THE idempotent-backfill primitive —
     re-running a day's pipeline rewrites that day's partitions only;
-    the conf is restored in a finally so the session stays clean."""
+    the mode is a writer option, so the session conf is untouched."""
     ev = (
         io.load_events(spark, sf_dir)
         .filter(F.col("value").isNotNull())
@@ -229,38 +229,23 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out_dir = io.scoped_tmp_dir(spark, "dynover", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
+    for batch in (
+        ev,
+        ev.filter((F.col("event_type") == "purchase") & (F.col("cents") >= 5000)),
+    ):
+        (
+            batch.write.option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .partitionBy("event_type")
+            .parquet(out_dir)
+        )
+    # pinned read schema: an empty event feed writes zero part files
+    # and inference raises; the oracle census is empty (r9 audit)
+    back = spark.read.schema(ev.schema).parquet(out_dir)
+    return back.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.sum("cents").cast("long").alias("cents_sum"),
     )
-    try:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        (
-            ev.write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(out_dir)
-        )
-        (
-            ev.filter(
-                (F.col("event_type") == "purchase")
-                & (F.col("cents") >= 5000)
-            )
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(out_dir)
-        )
-        # pinned read schema: an empty event feed writes zero part files
-        # and inference raises; the oracle census is empty (r9 audit)
-        back = spark.read.schema(ev.schema).parquet(out_dir)
-        return back.groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.sum("cents").cast("long").alias("cents_sum"),
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev
-        )
 
 
 # --------------------------------------------------------------------------

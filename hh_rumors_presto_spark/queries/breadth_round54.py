@@ -1,5 +1,5 @@
 """Round-54 breadth batch: Markov entropy rate, Tukey median
-polish, and conf-driven join-strategy control.
+polish, and hint-driven join-strategy control.
 
 - ``ts_markov_entropy_rate`` — the sequence-predictability number:
   entropy rate H = -Σ π(v) Σ p(w|v) ln p(w|v) of the per-user
@@ -11,12 +11,11 @@ polish, and conf-driven join-strategy control.
   effects, then column effects of the residuals — the robust
   two-way decomposition that a single fat-finger day cannot drag,
   unlike the mean-based ANOVA decomposition.
-- ``hint_no_broadcast`` — the join-strategy control surface:
-  autoBroadcastJoinThreshold=-1 must flip the customer-dim join
-  from BroadcastHashJoin to a shuffle join (plan-gated), with the
-  conf restored in a finally — the knob you reach for when a
-  "small" dim stops being small and executors start OOMing on
-  broadcasts.
+- ``hint_no_broadcast`` — the join-strategy control surface: a
+  ``merge`` hint must flip the customer-dim join from
+  BroadcastHashJoin to a SortMergeJoin (plan-gated) — the knob you
+  reach for when a "small" dim stops being small and executors start
+  OOMing on broadcasts.
 """
 
 from __future__ import annotations
@@ -252,52 +251,35 @@ def ts_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hint_no_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-strategy control: with autoBroadcastJoinThreshold=-1 the
-    customer-dim join MUST planwise fall back from BroadcastHashJoin
-    to a shuffle join (SortMergeJoin/ShuffledHashJoin — asserted
-    in-code against the physical plan), and the result must be
-    byte-identical either way. This is the escape hatch for the day
-    a "small" dimension grows past executor memory and broadcast
-    builds start OOMing — and the proof that correctness never
-    depended on the strategy.
+    """Join-strategy control: a ``merge`` hint on the customer side
+    MUST planwise turn the customer-dim join from BroadcastHashJoin
+    into a SortMergeJoin (asserted in-code against the physical plan),
+    and the result must be byte-identical either way. This is the
+    escape hatch for the day a "small" dimension grows past executor
+    memory and broadcast builds start OOMing — and the proof that
+    correctness never depended on the strategy.
 
     Scale: strategy choice changes shuffle topology, not semantics;
-    the conf is restored in a finally so the session stays clean."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        orders = io.load_table(spark, sf_dir, "orders")
-        cust = io.load_table(spark, sf_dir, "customer")
-        out = (
-            orders.join(
-                cust, orders.o_custkey == cust.c_custkey
+    the hint binds this join alone, so the session conf is untouched."""
+    orders = io.load_table(spark, sf_dir, "orders")
+    cust = io.load_table(spark, sf_dir, "customer").hint("merge")
+    out = (
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
+        .groupBy(F.col("c_mktsegment").alias("segment"))
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.sum(
+                F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long")
             )
-            .groupBy(F.col("c_mktsegment").alias("segment"))
-            .agg(
-                F.count("*").alias("n_orders"),
-                F.sum(
-                    F.floor(
-                        F.col("o_totalprice") * 100.0 + 0.5
-                    ).cast("long")
-                )
-                .cast("long")
-                .alias("cents_sum"),
-            )
+            .cast("long")
+            .alias("cents_sum"),
         )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        if "BroadcastHashJoin" in plan:
-            raise AssertionError(
-                "autoBroadcastJoinThreshold=-1 did not disable the "
-                "broadcast join"
-            )
-        if not any(
-            j in plan for j in ("SortMergeJoin", "ShuffledHashJoin")
-        ):
-            raise AssertionError(
-                "expected a shuffle join in the physical plan"
-            )
-        # force evaluation while the conf is still in effect
-        out = out.localCheckpoint()
-        return out
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    if "BroadcastHashJoin" in plan:
+        raise AssertionError(
+            "the merge hint did not turn off the broadcast join"
+        )
+    if "SortMergeJoin" not in plan:
+        raise AssertionError("expected a SortMergeJoin in the physical plan")
+    return out

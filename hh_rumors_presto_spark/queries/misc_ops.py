@@ -93,9 +93,9 @@ def str_slugify_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-partition sink: write orders partitioned by year (the layout
     that gives every later reader partition pruning), then read back only
-    the pruned years. partitionOverwriteMode=dynamic replaces exactly the
-    partitions present in the batch — the idempotent re-run behavior
-    backfills need."""
+    the pruned years. The writer option partitionOverwriteMode=dynamic
+    replaces exactly the partitions present in the batch — the idempotent
+    re-run behavior backfills need."""
     import shutil
 
     orders = io.load_table(spark, sf_dir, "orders")
@@ -104,17 +104,17 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read-back.
     out_dir = io.scoped_tmp_dir(spark, "sink_part", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     staged = orders.select(
         "o_orderkey",
         "o_totalprice",
         F.year("o_orderdate").cast("int").alias("yr"),
     )
-    try:
-        staged.write.partitionBy("yr").mode("overwrite").parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    (
+        staged.write.option("partitionOverwriteMode", "dynamic")
+        .partitionBy("yr")
+        .mode("overwrite")
+        .parquet(out_dir)
+    )
     # pinned read schema: empty source -> zero part files -> inference
     # raises; the oracle reads empty rows (r9 empty-table audit)
     return (

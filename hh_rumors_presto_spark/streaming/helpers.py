@@ -160,10 +160,10 @@ def _stream_conf(
     where ``n_rows`` bounds the source rows (the footer row count of the
     source table).  One of the two must be given.
 
-    HH_STATE_STORE=rocksdb, or ``state_store="rocksdb"``, flips every
-    stateful operator to the RocksDB state store (spill-to-disk state,
-    the provider a production cluster runs for large keyed state;
-    rocksdbjni ships in Spark's jars).  Results are provider-invariant —
+    ``state_store="rocksdb"`` flips every stateful operator to the
+    RocksDB state store (spill-to-disk state, the provider a production
+    cluster runs for large keyed state; rocksdbjni ships in Spark's
+    jars).  Results are provider-invariant —
     pinned by tests/test_streaming_rocksdb.py.  The default stays the
     HDFS-backed in-memory provider, right for fixture-sized state."""
     if state_partitions is None:
@@ -187,9 +187,7 @@ def _stream_conf(
         "state.HDFSBackedStateStoreProvider",
     )
     spark.conf.set(parts_conf, str(state_partitions))
-    if (
-        state_store or os.environ.get("HH_STATE_STORE", "")
-    ).lower() == "rocksdb":
+    if state_store == "rocksdb":
         spark.conf.set(
             prov_conf,
             "org.apache.spark.sql.execution.streaming."
@@ -246,7 +244,7 @@ def fold_stream_state(
     state, checkpointed locally so the scratch directory can go.
 
     ``n_rows`` bounds the streams' source rows and sizes their state
-    stores, which also follow HH_STATE_STORE (:func:`_stream_conf`).
+    stores (:func:`_stream_conf`).
 
     ``fold`` must be associative over its own output: fold(a ∪ b) ==
     fold(fold(a) ∪ b).  The result is then the same however the runner

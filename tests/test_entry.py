@@ -8,9 +8,11 @@ import sys
 
 import pytest
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.conf import RuntimeConfig
 
 import __spark_entry__ as ent
-from tools.explain_audit import UNBOUNDED_NLJ, unbounded_nested_loops
+from tools.explain_audit import UNBOUNDED_NLJ, UNBOUNDED_WINDOW, unbounded_nodes
 
 # md5 of "\n".join(QUERIES) after load_all_queries() in a fresh
 # interpreter: the registration order.
@@ -38,23 +40,38 @@ def test_entry_returns_rows(spark):
 def registry_pass(spark, sf_dir) -> dict[str, dict]:
     """Build every key once, in serving order, and record what the
     registry-wide checks read: its columns, the driver-hostile fields of
-    its final schema, and the nested-loop joins that break the row-bound
-    rule (or the error that stopped the build)."""
+    its final schema, and the nested-loop joins and unpartitioned windows
+    that break the row-bound rule, in its plan or in any frame it
+    checkpoints while it builds (or the error that stopped the build)."""
+    unbounded: list[str] = []
+    local_checkpoint = ClassicDataFrame.localCheckpoint
+
+    def checked(self, *args, **kwargs):
+        unbounded.extend(unbounded_nodes(self))
+        return local_checkpoint(self, *args, **kwargs)
+
     built = {}
-    for name, fn in ent.queries().items():
-        try:
-            df = fn(spark, sf_dir)
-            built[name] = {
-                "columns": df.columns,
-                "hostile": [
-                    f"{f.name}: {f.dataType}"
-                    for f in df.schema.fields
-                    if isinstance(f.dataType, _HOSTILE)
-                ],
-                "nested_loops": unbounded_nested_loops(df),
-            }
-        except Exception as e:  # reported by the smoke test
-            built[name] = {"error": repr(e)}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClassicDataFrame, "localCheckpoint", checked)
+        for name, fn in ent.queries().items():
+            unbounded.clear()
+            try:
+                df = fn(spark, sf_dir)
+                unbounded.extend(unbounded_nodes(df))
+                built[name] = {
+                    "columns": df.columns,
+                    "hostile": [
+                        f"{f.name}: {f.dataType}"
+                        for f in df.schema.fields
+                        if isinstance(f.dataType, _HOSTILE)
+                    ],
+                    "windows": [u for u in unbounded if u.startswith("Window")],
+                    "nested_loops": [
+                        u for u in unbounded if not u.startswith("Window")
+                    ],
+                }
+            except Exception as e:  # reported by the smoke test
+                built[name] = {"error": repr(e)}
     return built
 
 
@@ -79,17 +96,50 @@ def test_no_driver_hostile_output_types(registry_pass):
     assert not offenders, offenders
 
 
+def _assert_row_bound(registry_pass, field: str, allowed: dict[str, str]):
+    """Keys whose ``field`` findings are non-empty are exactly the keys in
+    ``allowed``, each listed with a reason."""
+    found = {k: b[field] for k, b in registry_pass.items() if b.get(field)}
+    unlisted = {k: v for k, v in found.items() if k not in allowed}
+    assert not unlisted, f"{field} without a static row bound: {unlisted}"
+    errored = {k for k, b in registry_pass.items() if "error" in b}
+    stale = sorted(set(allowed) - set(found) - errored)
+    assert not stale, f"listed keys that plan no unbounded {field}: {stale}"
+    assert all(reason.strip() for reason in allowed.values())
+
+
 def test_nested_loops_have_a_static_row_bound(registry_pass):
-    """Every key's nested-loop joins meet explain_audit's NLJ_MAX_ROWS
+    """Every key's nested-loop joins meet explain_audit's MAX_STATIC_ROWS
     rule, except the keys in UNBOUNDED_NLJ, and each of those still plans
     an unbounded one (a key that no longer does leaves the dict)."""
-    found = {k: b["nested_loops"] for k, b in registry_pass.items() if b.get("nested_loops")}
-    unlisted = {k: v for k, v in found.items() if k not in UNBOUNDED_NLJ}
-    assert not unlisted, f"nested loops without a static row bound: {unlisted}"
-    errored = {k for k, b in registry_pass.items() if "error" in b}
-    stale = sorted(set(UNBOUNDED_NLJ) - set(found) - errored)
-    assert not stale, f"UNBOUNDED_NLJ keys that plan no unbounded nested loop: {stale}"
-    assert all(reason.strip() for reason in UNBOUNDED_NLJ.values())
+    _assert_row_bound(registry_pass, "nested_loops", UNBOUNDED_NLJ)
+
+
+def test_unpartitioned_windows_have_a_static_row_bound(registry_pass):
+    """Every key's windows with no PARTITION BY, which run in one task,
+    read an input within explain_audit's MAX_STATIC_ROWS rule, except the
+    keys in UNBOUNDED_WINDOW, and each of those still plans an unbounded
+    one. Frames a key checkpoints while it builds count too: their
+    windows are gone from the plan the key returns."""
+    _assert_row_bound(registry_pass, "windows", UNBOUNDED_WINDOW)
+
+
+def test_keys_leave_the_session_conf_alone(spark, sf_dir, monkeypatch):
+    """These keys pick their join strategy and overwrite mode per
+    operation, with a join hint and a writer option, so building and
+    collecting them sets no session conf that a query running beside
+    them would see."""
+    calls = []
+    set_conf = RuntimeConfig.set
+
+    def recorded(self, key, value):
+        calls.append((key, value))
+        return set_conf(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recorded)
+    for key in ("hint_no_broadcast", "sink_partitioned", "sink_dynamic_overwrite"):
+        ent.queries()[key](spark, sf_dir).collect()
+    assert calls == []
 
 
 def test_registration_order_is_pinned():

@@ -1,18 +1,19 @@
 """Physical-plan regression gate: the scale-critical plan properties from
 tools/explain_audit.py must hold (pushdown, pruning, broadcast, top-k
-rewrites, partial aggregation), and its nested-loop row-bound rule must
-judge synthetic plans correctly. tests/test_entry.py applies that rule to
-every registry key."""
+rewrites, partial aggregation), and its row-bound rule for nested-loop
+joins and unpartitioned windows must judge synthetic plans correctly.
+tests/test_entry.py applies that rule to every registry key."""
 
 from __future__ import annotations
 
 import re
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import __spark_entry__ as ent
-from tools.explain_audit import CHECKS, NO_EXCHANGE_KEYS, unbounded_nested_loops
+from tools.explain_audit import CHECKS, NO_EXCHANGE_KEYS, unbounded_nodes
 
 
 def _plan(spark, key, sf_dir):
@@ -35,7 +36,7 @@ def test_zero_shuffle_plans(spark, sf_dir, key):
     assert "Exchange" not in plan, f"{key}: bucketing failed to co-locate\n{plan[:3000]}"
 
 
-def _nested_loop_fixture(spark, sf_dir):
+def _row_bound_fixture(spark, sf_dir):
     """An unbounded lineitem side, a one-row aggregate over it and an
     unbounded filter of orders, whose Catalyst maxRows are None, 1, None."""
     from hh_rumors_presto_spark import io
@@ -50,35 +51,48 @@ def _plans(df, name):
     return name in df._jdf.queryExecution().sparkPlan().toString()
 
 
+def _numbered(df, col):
+    """``df`` with a row number over the whole frame: one Window node with
+    no PARTITION BY, whose input is ``df``."""
+    return df.withColumn("rn", F.row_number().over(Window.orderBy(col)))
+
+
 def test_nested_loop_rule_passes_a_one_row_side(spark, sf_dir):
-    big, one_row, _ = _nested_loop_fixture(spark, sf_dir)
+    big, one_row, _ = _row_bound_fixture(spark, sf_dir)
     df = big.crossJoin(one_row)
     assert _plans(df, "BroadcastNestedLoopJoin")
-    assert unbounded_nested_loops(df) == []
+    assert unbounded_nodes(df) == []
     cartesian = big.hint("shuffle_replicate_nl").crossJoin(one_row)
     assert _plans(cartesian, "CartesianProduct")
-    assert unbounded_nested_loops(cartesian) == []
+    assert unbounded_nodes(cartesian) == []
+    for window in (_numbered(spark.range(10), "id"), _numbered(big.limit(5), "l_orderkey")):
+        assert _plans(window, "Window")
+        assert unbounded_nodes(window) == []
 
 
 def test_nested_loop_rule_flags_an_unbounded_side(spark, sf_dir):
-    big, _, unbounded = _nested_loop_fixture(spark, sf_dir)
-    assert unbounded_nested_loops(big.crossJoin(F.broadcast(unbounded))) == [
+    big, _, unbounded = _row_bound_fixture(spark, sf_dir)
+    assert unbounded_nodes(big.crossJoin(F.broadcast(unbounded))) == [
         "BroadcastNestedLoopJoin BuildRight maxRows=None"
     ]
     cartesian = big.hint("shuffle_replicate_nl").crossJoin(unbounded)
-    assert unbounded_nested_loops(cartesian) == [
+    assert unbounded_nodes(cartesian) == [
         "CartesianProduct maxRows=(None, None)"
     ]
+    assert unbounded_nodes(_numbered(big, "l_orderkey")) == ["Window maxRows=None"]
 
 
 def test_nested_loop_rule_walks_subqueries(spark, sf_dir):
-    big, _, unbounded = _nested_loop_fixture(spark, sf_dir)
+    big, _, unbounded = _row_bound_fixture(spark, sf_dir)
     inner = big.crossJoin(F.broadcast(unbounded)).agg(F.count("*"))
     df = spark.range(1).select(inner.scalar().alias("n"))
     assert not _plans(df, "BroadcastNestedLoopJoin")
-    assert unbounded_nested_loops(df) == [
+    assert unbounded_nodes(df) == [
         "BroadcastNestedLoopJoin BuildRight maxRows=None"
     ]
+    inner = _numbered(big, "l_orderkey").agg(F.max("rn"))
+    df = spark.range(1).select(inner.scalar().alias("n"))
+    assert unbounded_nodes(df) == ["Window maxRows=None"]
 
 
 def test_checks_literal_has_no_duplicate_keys():
@@ -116,57 +130,6 @@ def test_checks_literal_has_no_duplicate_keys():
     raise AssertionError("CHECKS literal not found")
 
 
-# ---------------------------------------------------------------------------
-# Unpartitioned-window ledger gate (round-10, VERDICT r9 item 2): every
-# `Window.orderBy(` / `Window.partitionBy()` site in the package must be
-# classified, entity-grain sites must name their scale remedy, and the
-# bucketed two-pass cumsum exemplar must actually plan bucket-partitioned.
-# ---------------------------------------------------------------------------
-
-from tools.window_ledger import (  # noqa: E402
-    ENTITY_REMEDY_MARKERS,
-    LEDGER,
-    VALID_CLASSES,
-    scan_sites,
-)
-
-
-def test_window_ledger_complete():
-    """Every unpartitioned-window site is classified; no stale entries.
-
-    A new `Window.orderBy(...)` site anywhere in the package fails this
-    test until it is added to tools/window_ledger.py with an honest
-    class — which forces the single-partition scale conversation at
-    review time instead of at 100 TB."""
-    sites = scan_sites()
-    missing = sorted(set(sites) - set(LEDGER))
-    stale = sorted(set(LEDGER) - set(sites))
-    assert not missing, f"unclassified unpartitioned-window sites: {missing}"
-    assert not stale, f"stale ledger entries (site gone): {stale}"
-    bad = {k: v for k, v in LEDGER.items() if v not in VALID_CLASSES}
-    assert not bad, f"invalid classes: {bad}"
-
-
-def test_window_ledger_entity_sites_name_remedy():
-    """Transitional contract for entity-grain global windows: the
-    docstring must name the scale remedy (bucketed two-pass cumsum,
-    mergeable quantile sketch, or a per-key split) so the fix is
-    designed, not deferred. The exemplar class proves the bucketed
-    remedy is implementable bit-exactly."""
-    sites = scan_sites()
-    offenders = []
-    for key, cls in LEDGER.items():
-        if cls != "entity":
-            continue
-        doc = " ".join(sites.get(key, "").split())  # unwrap line breaks
-        if not any(m in doc for m in ENTITY_REMEDY_MARKERS):
-            offenders.append(key)
-    assert not offenders, (
-        f"entity-grain window sites whose docstring names no scale remedy "
-        f"(add one of {ENTITY_REMEDY_MARKERS}): {offenders}"
-    )
-
-
 def test_bucketed_cumsum_exemplar_plan(spark, sf_dir):
     """agg_lorenz_deciles (the converted exemplar) must plan its
     data-scaled rank/cumsum window partitioned by the range bucket;
@@ -179,18 +142,4 @@ def test_bucketed_cumsum_exemplar_plan(spark, sf_dir):
     assert not re.search(r"windowspecdefinition\(cents#", plan), (
         "data-scaled unpartitioned window over the entity sort key:\n"
         + plan[:3000]
-    )
-
-
-def test_window_ledger_entity_class_retired():
-    """Round 10 converted every entity-grain single-partition window
-    to the bucketed two-pass cumsum; this gate keeps the class at
-    zero. A new entity-grain ordered scan must be written with
-    operators/windows.py:bucketed_rank_cumsum (rank, running sum) or
-    ntile_from_rank (quantile scores) — not Window.orderBy over
-    data-scaled input."""
-    entity = sorted(k for k, v in LEDGER.items() if v == "entity")
-    assert not entity, (
-        "entity-grain single-partition windows reintroduced "
-        f"(use bucketed_rank_cumsum instead): {entity}"
     )

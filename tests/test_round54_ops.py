@@ -106,5 +106,5 @@ def test_no_broadcast_matches_and_restores_conf(spark, sf_dir):
     }
     after = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     assert got == per
-    # the finally must restore whatever was set before
+    # the merge hint leaves the session's broadcast threshold alone
     assert after == before

@@ -6,8 +6,12 @@ properties the engine promises at scale (SURVEY.md "optimize for scale"):
 - rank<=k windows use WindowGroupLimit (per-partition top-k);
 - sort+limit plans as TakeOrderedAndProject (no global sort);
 - every nested-loop join has a side with a small static row bound
-  (``unbounded_nested_loops``), except the keys named in UNBOUNDED_NLJ.
-  tests/test_entry.py checks that rule for every registry key.
+  (``unbounded_nodes``), except the keys named in UNBOUNDED_NLJ;
+- every window with no PARTITION BY, which runs in one task, reads an
+  input with a small static row bound (``unbounded_nodes``), except the
+  keys named in UNBOUNDED_WINDOW.
+  tests/test_entry.py checks both rules for every registry key, on the
+  returned frame and on every frame checkpointed while the key builds.
 
 Usage: python tools/explain_audit.py [key ...]
 Prints PASS/WARN per assertion plus the formatted plan on WARN.
@@ -1033,11 +1037,8 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         (r"hashpartitioning\(dow|hashpartitioning\(wk",
          "median selections keyed by grid row/column"),
     ],
-    # hint_no_broadcast's shuffle-join assertion runs in-code against
-    # the live plan (the localCheckpoint hides it from this audit)
     "hint_no_broadcast": [
-        (r"Scan ExistingRDD|HashAggregate",
-         "checkpointed census scan (join asserted in-code pre-checkpoint)"),
+        (r"SortMergeJoin", "merge hint shuffles the customer-dim join"),
     ],
     # round-55 batch — the daily partial-sum stages sit behind the
     # localCheckpoints that truncate the path lineage, so the final
@@ -1211,15 +1212,17 @@ NO_EXCHANGE_KEYS = (
 )
 
 # A BroadcastNestedLoopJoin replays its build side for every streamed
-# row, and a CartesianProduct pairs every row of one side with every row
-# of the other. Either stays safe at any data size only when Catalyst
-# proves a small static row bound (LogicalPlan.maxRows) on the build side,
-# or for a CartesianProduct on at least one side.
-NLJ_MAX_ROWS = 1024
+# row, a CartesianProduct pairs every row of one side with every row of
+# the other, and a Window with no PARTITION BY sends its whole input to
+# one task. Each stays safe at any data size only when Catalyst proves a
+# small static row bound (LogicalPlan.maxRows): on the build side, on at
+# least one side of a CartesianProduct, on the input of a Window.
+MAX_STATIC_ROWS = 1024
 
-# Keys whose plans hold a nested loop with no such bound; one-line reason
-# each. A key leaves only through a rewrite that gives the side a static
-# bound, adds no Exchange and keeps its result hashes.
+# Keys whose plans, or the frames they checkpoint while they build, hold a
+# nested loop with no such bound; one-line reason each. A key leaves only
+# through a rewrite that gives the side a static bound, adds no Exchange
+# and keeps its result hashes.
 UNBOUNDED_NLJ: dict[str, str] = {
     "ab_metric_decompose": "one-arm moment row from a per-variant grouped aggregate",
     "ab_poisson_rate": "one-arm count row from a per-variant grouped aggregate",
@@ -1227,6 +1230,8 @@ UNBOUNDED_NLJ: dict[str, str] = {
     "ab_ratio_delta_method": "one-arm moment row from a per-variant grouped aggregate",
     "ab_welch_ttest": "one-arm moment row from a per-variant grouped aggregate",
     "agg_cvar_es": "one-row VaR cut picked by a rank equi-join",
+    "dedup_semantic": "k-row centroid set is a vec_id filter, in a checkpoint",
+    "emb_kcenter_init": "each round's one-row center is read back from a checkpoint",
     "emb_kmeans_assign": "8-row centroid set is a vec_id filter",
     "emb_truncate_quality": "20-row query set is a vec_id filter",
     "eval_cost_curve": "3-row threshold table joined out of range(3) by rank",
@@ -1246,6 +1251,75 @@ UNBOUNDED_NLJ: dict[str, str] = {
 }
 
 
+# Keys whose plans, or the frames they checkpoint while they build, hold
+# an unpartitioned window over an input with no such bound; one-line
+# reason each. A key leaves only through a rewrite that bounds the input
+# or partitions the window and keeps its result hashes.
+UNBOUNDED_WINDOW: dict[str, str] = {
+    "ab_bayes_posterior": "windows over the two per-arm rows of a grouped aggregate",
+    "ab_did_estimator": "windows over the 2x2 cell rows of a grouped aggregate",
+    "ab_propensity_strata": "bucketed_rank_cumsum's 32 bucket rows; 5 strata rows",
+    "ab_sprt_boundary": "running log-likelihood over one row per day, in a checkpoint",
+    "agg_abc_analysis": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "agg_abc_xyz": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "agg_backlog_curve": "cumulative backlog and peak rank over one row per day",
+    "agg_cvar_es": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "agg_engagement_gini": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "agg_hazard_curve": "reverse cumulative sum over one row per tenure week",
+    "agg_lorenz_deciles": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "agg_mutual_info": "totals over the |X| x |Y| cell table of a grouped aggregate",
+    "agg_nps": "shares over the 3 segment rows of a grouped aggregate",
+    "agg_price_endings": "share over the <=100 price-ending rows, grouped",
+    "agg_repeat_purchase_curve": "lag and max over the <=10 repeat-count rows, grouped",
+    "agg_runs_test": "lag over one row per day",
+    "agg_session_depth": "share over one row per session depth",
+    "aqp_bootstrap_ci": "rank over the 32 bootstrap replica rows, grouped",
+    "corpus_token_budget": "prefix sums over one row per quality bucket",
+    "dq_change_attribution": "share and rank over one row per event type",
+    "dq_ks_test": "running sums over one row per distinct cent value",
+    "dq_tz_shift": "argmax over the 24 hour-shift rows of a grouped aggregate",
+    "emb_dim_variance": "rank over one row per embedding dimension",
+    "eval_auc_roc": "cumulative counts over one row per distinct score",
+    "eval_average_precision": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "eval_bradley_terry": "rank over the item vocabulary, read back from a checkpoint",
+    "eval_calibration_ece": "totals over the 10 bin rows of a grouped aggregate",
+    "eval_confusion_multiclass": "macro fold over one row per class",
+    "eval_cost_curve": "bucketed_rank_cumsum's 32 bucket rows; a 3-row argmin",
+    "eval_f1_threshold": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "eval_gains_chart": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "eval_roc_points": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "eval_selective_risk": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "eval_spearman_rho": "midranks over one row per distinct signal value",
+    "feat_rfm_segmentation": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "global_row_number": "prefix sums over one row per range bucket",
+    "ml_decision_stump": "running counts over one row per distinct feature value",
+    "pipeline_early_stopping": "running minima over one row per day, in a checkpoint",
+    "recs_session_paths": "rank over one row per distinct session path",
+    "sim_rank_fusion": "ranks every document on two orderings: document grain",
+    "sketch_hist_quantile": "cumulative counts over one row per price bucket",
+    "text_char_coverage": "total and rank over one row per character",
+    "text_ngram_novelty": "cumulative counts over one row per period",
+    "text_template_mining": "total and rank over one row per template",
+    "ts_autoperiod": "argmax over one row per candidate period",
+    "ts_changepoint_binseg": "prefix sums over one row per day",
+    "ts_dft_power": "total power over one row per frequency",
+    "ts_dow_profile": "totals over the 7 weekday rows of a grouped aggregate",
+    "ts_granger_lite": "lags over one row per day",
+    "ts_kaplan_meier": "cumulative survival over one row per distinct lifetime",
+    "ts_page_hinkley": "running sums and minima over one row per day, in a checkpoint",
+    "ts_records_test": "running maximum over one row per day",
+    "ts_sli_burn_rate": "6-hour range window over one row per hour",
+    "ts_time_to_convert": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "ts_xcorr_lead_scan": "argmax over one row per candidate lag",
+    "win_atr": "lag and rolling sums over one row per day",
+    "win_gaps_islands": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "win_hampel": "day numbering over one row per day, in a checkpoint",
+    "win_rolling_corr": "rolling moments over one row per day",
+    "win_rsi": "lag and rolling sums over one row per day",
+    "win_underwater_spell": "running maximum and islands over one row per day",
+}
+
+
 def _seq(s) -> list:
     return [s.apply(i) for i in range(s.size())]
 
@@ -1261,13 +1335,14 @@ def _max_rows(node) -> int | None:
 
 
 def _bounded(rows: int | None) -> bool:
-    return rows is not None and rows <= NLJ_MAX_ROWS
+    return rows is not None and rows <= MAX_STATIC_ROWS
 
 
-def unbounded_nested_loops(df) -> list[str]:
-    """One line per nested-loop join in ``df``'s physical plan, subquery
-    plans included, that breaks the NLJ_MAX_ROWS rule; empty when none
-    does. Plans without executing anything."""
+def unbounded_nodes(df) -> list[str]:
+    """One line per nested-loop join or unpartitioned window in ``df``'s
+    physical plan, subquery plans included, that breaks the
+    MAX_STATIC_ROWS rule; empty when none does. Each line starts with the
+    operator's node name. Plans without executing anything."""
     jvm = df.sparkSession._jvm
     logical = jvm.java.lang.Class.forName(
         "org.apache.spark.sql.catalyst.plans.logical.LogicalPlan"
@@ -1286,6 +1361,10 @@ def unbounded_nested_loops(df) -> list[str]:
         elif name == "CartesianProduct":
             rows = (_max_rows(node.left()), _max_rows(node.right()))
             if not any(map(_bounded, rows)):
+                found.append(f"{name} maxRows={rows}")
+        elif name == "Window" and node.partitionSpec().isEmpty():
+            rows = _max_rows(node.child())
+            if not _bounded(rows):
                 found.append(f"{name} maxRows={rows}")
         stack.extend(_seq(node.children()))
         # a physical plan carries its subqueries as logical plans until
@@ -1323,8 +1402,9 @@ def main() -> int:
                 n_warn += 1
                 print(f"WARN  {key}: MISSING {label}")
                 print(plan[:4000])
-        if key not in UNBOUNDED_NLJ:
-            for line in unbounded_nested_loops(df):
+        for line in unbounded_nodes(df):
+            allowed = UNBOUNDED_WINDOW if line.startswith("Window") else UNBOUNDED_NLJ
+            if key not in allowed:
                 n_warn += 1
                 print(f"WARN  {key}: {line}")
         if key in NO_EXCHANGE_KEYS:
