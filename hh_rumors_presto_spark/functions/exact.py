@@ -1,5 +1,5 @@
-"""Exact DECIMAL money sums: the one place Spark code spells the per-row
-exact type.
+"""Exact values: the one place Spark code spells the per-row exact
+DECIMAL type and the half-up BIGINT fixed point.
 
 SUM over doubles depends on reduction order, and Spark and DuckDB reduce
 in different orders, so every money sum runs over DECIMAL, which gives the
@@ -18,6 +18,10 @@ same value under any partitioning:
   decimal->double is correctly rounded only while the unscaled value fits
   in 2^53, and a bare cast to a lower scale truncates in DuckDB but rounds
   half-up in Spark.
+
+Values that sum or compare as integers instead round half up to a BIGINT
+fixed point at ``scale`` decimals (:func:`half_up`): integer sums are
+exact in any order, and integer results compare exactly across engines.
 
 Oracles spell the same casts in their own SQL; they are the reference.
 """
@@ -41,3 +45,16 @@ def dec(c: Column, scale: int) -> Column:
 def revenue() -> Column:
     """``l_extendedprice * (1 - l_discount)`` exact at scale 4."""
     return dec(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
+
+
+def half_up(c: Column, scale: int) -> Column:
+    """``c`` rounded half up to a BIGINT at ``scale`` decimals:
+    ``floor(double(c) * 10^scale + 0.5)``, the oracles'
+    ``CAST(floor(CAST(x AS DOUBLE) * 100.0 + 0.5) AS BIGINT)`` at scale 2.
+
+    The floor is explicit because the bare cast differs: CAST(double AS
+    BIGINT) rounds to nearest in DuckDB but truncates toward zero in
+    Spark.  Both engines multiply the same DOUBLE by the same power of
+    ten, so a value stored just under a half step (1.005 is 1.00499...
+    in binary, and 1.005 * 100 is 100.49999...) rounds down in both."""
+    return F.floor(c.cast("double") * float(10**scale) + 0.5)

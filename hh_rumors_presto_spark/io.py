@@ -107,9 +107,8 @@ def load_table(
     here."""
     if footer is None:
         footer = _table_footer(sf_dir, name)
-    if name == "events" and isinstance(footer.schema["ts"].dataType, T.LongType):
-        # TIMESTAMP(NANOS) reads only as LONG (events_ts_micros)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if name == "events":
+        read_nanos_as_long(spark, footer.schema)
     df = spark.read.schema(footer.schema).parquet(table_path(sf_dir, name))
     return events_ts_micros(df, footer.schema) if name == "events" else df
 
@@ -156,6 +155,15 @@ def load_spread(
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan the events table with ``ts`` as a microsecond TimestampType."""
     return load_table(spark, sf_dir, "events")
+
+
+def read_nanos_as_long(spark: SparkSession, schema: T.StructType) -> None:
+    """Let ``spark`` read the events ``ts`` of footer ``schema`` when it is
+    TIMESTAMP(NANOS), which Spark reads only as LONG, under
+    ``spark.sql.legacy.parquet.nanosAsLong`` (:func:`events_ts_micros`).
+    A microsecond ``ts`` needs no conf, so none is set."""
+    if isinstance(schema["ts"].dataType, T.LongType):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def events_ts_micros(df: DataFrame, schema: T.StructType) -> DataFrame:

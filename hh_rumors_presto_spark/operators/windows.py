@@ -142,6 +142,9 @@ def bucketed_rank_cumsum(
         )
     # B-row bucket summary; the windows below run over <= n_buckets rows
     # (constant-bounded), which is the whole point of the two-pass split.
+    # The limit states that bound to Catalyst (a static maxRows, which
+    # tools/explain_audit.py's window rule reads); it never cuts a row,
+    # since every bucket id lies in [0, n_buckets).
     wb = Window.orderBy("__bucket").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -163,7 +166,7 @@ def bucketed_rank_cumsum(
             ),
             F.sum("__bsum").over(wt).alias("total"),
         ]
-    offsets = b.groupBy("__bucket").agg(*aggs).select(*cols)
+    offsets = b.groupBy("__bucket").agg(*aggs).limit(n_buckets).select(*cols)
     out = local.join(F.broadcast(offsets), "__bucket").withColumn(
         rank_col, F.col("__lrk") + F.col("__rows_before")
     )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 _NT = 4
@@ -559,9 +560,7 @@ def sketch_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = orders.select(
         (F.col("o_orderkey") % 4).alias("shard"),
-        F.floor(F.round("o_totalprice", 2) * 100 + 0.5)
-        .cast("long")
-        .alias("c"),
+        half_up(F.round("o_totalprice", 2), 2).alias("c"),
     )
     shard_hist = (
         cents.select("shard", F.expr("c DIV 100000").alias("bucket"))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -117,9 +118,7 @@ def aqp_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = io.load_events(spark, sf_dir).filter(F.col("value").isNotNull())
     rows_in = ev.select(
         "event_id",
-        F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("value"), 2).alias("cents"),
     )
     reps = rows_in.withColumn(
         "b", F.explode(F.array(*[F.lit(i) for i in range(_BS_B)]))
@@ -305,7 +304,7 @@ def text_lm_bigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    term = F.floor(logp * 1000000.0 + 0.5).cast("long")
+    term = half_up(logp, 6)
     return joined.groupBy("doc_id").agg(
         F.sum(term).cast("long").alias("score_micro"),
         F.count("*").cast("long").alias("n_tokens"),

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
-from hh_rumors_presto_spark.functions.exact import dec
+from hh_rumors_presto_spark.functions.exact import dec, half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -194,9 +194,7 @@ def agg_pushdown_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec(F.col("l_extendedprice"), 2)
             * (
                 F.lit(100)
-                - F.floor(
-                    F.col("l_discount").cast("double") * 100 + 0.5
-                ).cast("long")
+                - half_up(F.col("l_discount"), 2)
             )
         ).alias("rev_c")
     )

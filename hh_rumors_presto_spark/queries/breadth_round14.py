@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -105,31 +106,22 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(classes.agg(F.sum("n_docs").alias("tot_docs")))
     ).select(
         "cls",
-        F.floor(
-            F.log(F.col("n_docs").cast("double") / F.col("tot_docs"))
-            * 1000000.0
-            + 0.5
-        )
-        .cast("long")
-        .alias("prior_mnat"),
+        half_up(
+            F.log(F.col("n_docs").cast("double") / F.col("tot_docs")), 6
+        ).alias("prior_mnat"),
     )
     vocab = tok.agg(F.count_distinct("tok").alias("v"))
     cnt = train.groupBy(F.col("lang").alias("cls"), "tok").agg(
         F.count("*").alias("n_ct")
     )
     ctot = cnt.groupBy("cls").agg(F.sum("n_ct").alias("n_c"))
-    term = (
-        F.floor(
-            F.log(
-                (F.coalesce(F.col("n_ct"), F.lit(0)) + 1).cast("double")
-                / (F.col("n_c") + F.col("v")).cast("double")
-            )
-            * 1000000.0
-            + 0.5
-        )
-        .cast("long")
-        .alias("term_mnat")
-    )
+    term = half_up(
+        F.log(
+            (F.coalesce(F.col("n_ct"), F.lit(0)) + 1).cast("double")
+            / (F.col("n_c") + F.col("v")).cast("double")
+        ),
+        6,
+    ).alias("term_mnat")
     scored = (
         tok.crossJoin(F.broadcast(prior.join(ctot, "cls")))
         .crossJoin(F.broadcast(vocab))
@@ -227,16 +219,13 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x",
             "y",
             "n_xy",
-            F.floor(
+            half_up(
                 F.log(
                     (F.col("n_xy") * F.col("n")).cast("double")
                     / (F.col("n_x") * F.col("n_y")).cast("double")
-                )
-                * 1000000.0
-                + 0.5
-            )
-            .cast("long")
-            .alias("pmi_mnat"),
+                ),
+                6,
+            ).alias("pmi_mnat"),
         )
     )
     return pmi.select(
@@ -317,9 +306,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
     )

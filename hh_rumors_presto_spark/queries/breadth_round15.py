@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.queries.graph import _GRAPH_SQL, _edges
 from hh_rumors_presto_spark.registry import query
 
@@ -275,9 +276,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
         .localCheckpoint()

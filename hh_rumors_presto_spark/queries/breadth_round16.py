@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -78,9 +79,7 @@ def agg_decay_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
             F.col("ts").cast("date").alias("day"),
         )
     )
@@ -157,9 +156,7 @@ def feat_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "event_type",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
     )
     stats = ev.groupBy("event_type").agg(
@@ -237,9 +234,7 @@ def ivm_topk_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = io.load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         "o_orderkey",
-        F.floor(F.col("o_totalprice").cast("double") * 100.0 + 0.5)
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice"), 2).alias("cents"),
     )
     base = orders.filter(F.col("o_orderkey") % 10 != 0)
     delta = orders.filter(F.col("o_orderkey") % 10 == 0)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.queries.graph import (
     _DAMP_DEN,
     _DAMP_NUM,
@@ -164,9 +165,7 @@ def stream_topk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "event_id",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
         for half in (0, 1)
     ]
@@ -261,9 +260,7 @@ def ts_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
         .localCheckpoint()

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -142,14 +143,13 @@ def ts_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("d") == 0, F.lit(0))
         .when(
             F.col("n_risk") > F.col("d"),
-            F.floor(
+            half_up(
                 F.log(
                     (F.col("n_risk") - F.col("d")).cast("double")
                     / F.col("n_risk")
-                )
-                * 1000000.0
-                + 0.5
-            ).cast("long"),
+                ),
+                6,
+            ),
         )
         .otherwise(F.lit(None).cast("long"))
     )
@@ -231,9 +231,7 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
         .select((F.col("user_id") % 2).alias("variant"), "cents")
@@ -344,9 +342,7 @@ def dq_change_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.col("ts").cast("date").alias("day"),
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
     )
     span = ev.agg(

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -256,15 +257,11 @@ def agg_geo_harmonic_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
         .filter(F.col("cents") > 0)
     )
-    ln_mnat = F.floor(
-        F.log(F.col("cents").cast("double")) * 1000000.0 + 0.5
-    ).cast("long")
+    ln_mnat = half_up(F.log(F.col("cents").cast("double")), 6)
     recip_q = F.expr("1000000000000 DIV cents")
     return ev.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),

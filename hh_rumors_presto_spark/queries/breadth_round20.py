@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.queries.graph import _GRAPH_SQL, _edges
 from hh_rumors_presto_spark.registry import query
 
@@ -89,9 +90,7 @@ def ab_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("value"), 2)
             ).alias("x"),
             F.count("*").alias("y"),
         )
@@ -344,12 +343,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy(F.col("cnt").desc(), "tok")),
     ).filter(F.col("rnk") <= _ZIPF_TOP)
     pts = ranked.select(
-        F.floor(F.log(F.col("rnk").cast("double")) * 1000000.0 + 0.5)
-        .cast("long")
-        .alias("x"),
-        F.floor(F.log(F.col("cnt").cast("double")) * 1000000.0 + 0.5)
-        .cast("long")
-        .alias("y"),
+        half_up(F.log(F.col("rnk").cast("double")), 6).alias("x"),
+        half_up(F.log(F.col("cnt").cast("double")), 6).alias("y"),
     )
     m = pts.agg(
         F.count("*").alias("n"),

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -78,9 +79,7 @@ def ts_alert_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "event_id",
             F.unix_micros(F.col("ts")).alias("us"),
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
     )
     w = Window.partitionBy("event_type").orderBy("us", "event_id")

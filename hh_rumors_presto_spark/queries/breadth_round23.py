@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -90,9 +91,7 @@ def ts_iqr_fence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
         .localCheckpoint()
@@ -218,9 +217,7 @@ def join_sample_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("o_orderkey").cast("long").alias("n_orders"),
             F.count("*").cast("long").alias("n_lineitems"),
             F.sum(
-                F.floor(
-                    F.col("l_extendedprice").cast("double") * 100.0 + 0.5
-                ).cast("long")
+                half_up(F.col("l_extendedprice"), 2)
             )
             .cast("long")
             .alias("revenue_c"),

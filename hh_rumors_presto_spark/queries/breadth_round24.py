@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -136,9 +137,7 @@ def ab_metric_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.floor(
-                        F.col("value").cast("double") * 100.0 + 0.5
-                    ).cast("long"),
+                    half_up(F.col("value"), 2),
                 ).otherwise(F.lit(0))
             ).alias("buy_cents"),
             F.max(

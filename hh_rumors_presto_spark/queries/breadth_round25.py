@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.queries.graph import _GRAPH_SQL, _edges
 from hh_rumors_presto_spark.registry import query
 
@@ -224,9 +225,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         io.load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("x"),
+            half_up(F.col("value"), 2).alias("x"),
             F.when(F.col("event_type") == "purchase", 1)
             .otherwise(0)
             .alias("y"),

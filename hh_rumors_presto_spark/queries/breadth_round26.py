@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.registry import query
 
@@ -164,9 +165,7 @@ def dq_heavy_changers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             F.col("ts").cast("date").alias("day"),
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
     )
     span = ev.agg(F.min("day").alias("lo"), F.max("day").alias("hi")).select(

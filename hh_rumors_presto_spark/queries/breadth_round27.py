@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.queries.graph import _GRAPH_SQL, _edges
 from hh_rumors_presto_spark.registry import query
 
@@ -268,17 +269,13 @@ def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "view",
-                    F.floor(
-                        F.col("value").cast("double") * 100.0 + 0.5
-                    ).cast("long"),
+                    half_up(F.col("value"), 2),
                 ).otherwise(F.lit(0))
             ).alias("x"),
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.floor(
-                        F.col("value").cast("double") * 100.0 + 0.5
-                    ).cast("long"),
+                    half_up(F.col("value"), 2),
                 ).otherwise(F.lit(0))
             ).alias("y"),
         )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -203,12 +204,8 @@ def ts_dft_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k",
             "n_span",
             (F.col("x") * F.col("d_obs") - F.col("s")).alias("xc"),
-            F.floor(F.cos(angle) * 1000000.0 + 0.5)
-            .cast("long")
-            .alias("wc"),
-            F.floor(F.sin(angle) * 1000000.0 + 0.5)
-            .cast("long")
-            .alias("ws"),
+            half_up(F.cos(angle), 6).alias("wc"),
+            half_up(F.sin(angle), 6).alias("ws"),
         )
     )
     spec = terms.groupBy("k").agg(
@@ -329,9 +326,7 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab.crossJoin(F.broadcast(tot))
         .select(
             "tok",
-            F.floor(1000000.0 * F.log(p_tgt / p_raw) + 0.5)
-            .cast("long")
-            .alias("w_micro"),
+            half_up(F.log(p_tgt / p_raw), 6).alias("w_micro"),
         )
     )
     scored = (

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -245,18 +246,14 @@ def eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("double")
         fail = factor if fail is None else fail * factor
     scored = prob.select(
-        F.floor(
-            1000000.0
-            * (F.col("c").cast("double") / F.col("n").cast("double"))
-            + 0.5
-        )
-        .cast("long")
-        .alias("p1_micro"),
+        half_up(
+            F.col("c").cast("double") / F.col("n").cast("double"), 6
+        ).alias("p1_micro"),
         F.when(
             F.col("n") - F.col("c") < _PK_K, F.lit(1000000).cast("long")
         )
         .otherwise(
-            F.floor(1000000.0 * (F.lit(1.0) - fail) + 0.5).cast("long")
+            half_up(F.lit(1.0) - fail, 6)
         )
         .alias("p5_micro"),
     )
@@ -335,9 +332,7 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
             "event_id",
         )
     )

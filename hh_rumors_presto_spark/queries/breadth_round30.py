@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -156,9 +157,7 @@ def eval_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             "ts",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -240,16 +239,11 @@ def eval_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(dens), items.item == dens.i
         ).select(
             "item",
-            F.floor(
-                1000000000.0
-                * (
-                    F.col("w").cast("double")
-                    / (F.col("den").cast("double") / 1000000.0)
-                )
-                + 0.5
-            )
-            .cast("long")
-            .alias("t_nano"),
+            half_up(
+                F.col("w").cast("double")
+                / (F.col("den").cast("double") / 1000000.0),
+                9,
+            ).alias("t_nano"),
         )
         tot = raw.agg(
             F.sum("t_nano").cast("double").alias("t_sum")
@@ -430,8 +424,7 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
     )

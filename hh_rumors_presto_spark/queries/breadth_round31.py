@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -76,9 +77,7 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("event_type").isin("purchase", "view")
         )
         .select(
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("s"),
+            half_up(F.col("value"), 2).alias("s"),
             F.when(F.col("event_type") == "purchase", 1)
             .otherwise(0)
             .alias("y"),
@@ -159,9 +158,7 @@ def _user_topk(spark: SparkSession, sf_dir: str):
         .select(
             "user_id",
             "event_id",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
             F.when(F.col("event_type") == "purchase", 1)
             .otherwise(0)
             .alias("rel"),

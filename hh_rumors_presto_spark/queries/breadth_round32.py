@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.registry import query
 
@@ -77,8 +78,7 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             (
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
                 % 100
             ).alias("conf_pct"),
             F.when(F.col("event_type") == "purchase", 1)
@@ -197,9 +197,7 @@ def eval_f1_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("event_type").isin("purchase", "view")
         )
         .select(
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("s"),
+            half_up(F.col("value"), 2).alias("s"),
             F.when(F.col("event_type") == "purchase", 1)
             .otherwise(0)
             .alias("y"),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.queries.graph import _GRAPH_SQL, _edges
 from hh_rumors_presto_spark.registry import query
@@ -181,8 +182,7 @@ def agg_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_partkey").alias("part"))
         .agg(
             F.sum(
-                F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("l_extendedprice"), 2)
             ).alias("cents")
         )
         .withColumn("neg", -F.col("cents"))
@@ -289,8 +289,7 @@ def recs_coverage_diversity(
         )
         .agg(
             F.sum(
-                F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("l_extendedprice"), 2)
             ).alias("cents")
         )
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import (
     bucketed_rank_cumsum,
     ntile_from_rank,
@@ -238,9 +239,7 @@ def feat_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recency_days"),
             F.count("*").alias("frequency"),
             F.sum(
-                F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("o_totalprice"), 2)
             ).alias("monetary_cents"),
         )
     )

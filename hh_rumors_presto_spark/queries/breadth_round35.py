@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -197,9 +198,7 @@ def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_type",
-        F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("value"), 2).alias("cents"),
     )
     midx = F.floor(
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-05")) / 7
@@ -295,11 +294,7 @@ def corpus_temperature_mix(
     s = lt.select(
         "lang",
         "n_tokens",
-        F.floor(
-            1000000.0 * F.sqrt(F.col("n_tokens").cast("double")) + 0.5
-        )
-        .cast("long")
-        .alias("s_micro"),
+        half_up(F.sqrt(F.col("n_tokens").cast("double")), 6).alias("s_micro"),
     )
     tot = s.agg(
         F.sum("n_tokens").alias("n"), F.sum("s_micro").alias("s_sum")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
 from hh_rumors_presto_spark.functions import cosine_sql
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.cosblocks import block_topk_fn
 from hh_rumors_presto_spark.registry import query
 
@@ -183,9 +184,7 @@ def agg_vwap_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     instrument key at fleet scale); nothing else."""
     t = io.load_table(spark, sf_dir, "lineitem").select(
         F.col("l_shipdate").cast("date").alias("day"),
-        F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("l_extendedprice"), 2).alias("cents"),
         F.floor(F.col("l_quantity") + 0.5).cast("long").alias("qty"),
     )
     # integral `div` (matches DuckDB //): the VWAP numerator passes

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -73,8 +74,7 @@ def eval_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             (
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
                 % 100
             ).alias("conf_pct"),
             F.when(F.col("event_type") == "purchase", 1)
@@ -181,9 +181,7 @@ def eval_lm_heldout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = held.select(
         F.when(F.col("c").isNull(), 1).otherwise(0).alias("oov"),
-        F.floor(1000000.0 * F.log(p) + 0.5)
-        .cast("long")
-        .alias("nll_micro"),
+        half_up(F.log(p), 6).alias("nll_micro"),
     )
     return scored.agg(
         F.count("*").alias("n_tokens"),

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -111,8 +112,7 @@ def win_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
     )
@@ -222,9 +222,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
     )
     out_dir = io.scoped_tmp_dir(spark, "dynover", sf_dir)
@@ -300,9 +298,7 @@ def agg_tail_index_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
     The rank window over the fact at this scale is the fixture-
     honest form; a quantile-sketch threshold replaces it at 100 TB."""
     vals = io.load_table(spark, sf_dir, "orders").select(
-        F.floor(F.col("o_totalprice") * 100.0 + 0.5)
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice"), 2).alias("cents"),
         "o_orderkey",
     )
     wr = Window.orderBy(F.col("cents").desc(), "o_orderkey")
@@ -316,15 +312,9 @@ def agg_tail_index_hill(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.filter(F.col("rk") <= _HILL_K)
         .crossJoin(F.broadcast(xk1))
         .select(
-            F.floor(
-                1000000.0
-                * F.log(
-                    F.col("cents").cast("double") / F.col("x_ref")
-                )
-                + 0.5
-            )
-            .cast("long")
-            .alias("r_micro"),
+            half_up(
+                F.log(F.col("cents").cast("double") / F.col("x_ref")), 6
+            ).alias("r_micro"),
             "x_ref",
         )
     )

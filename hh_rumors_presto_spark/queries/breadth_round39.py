@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -104,9 +105,7 @@ def eval_confusion_multiclass(
         .filter(F.col("value").isNotNull())
         .select(
             F.col("event_type").alias("actual"),
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
         .select(
             "actual",
@@ -305,8 +304,7 @@ def agg_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
     )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -222,9 +223,7 @@ def emb_centroid_classifier(
         "vec_id",
         "label",
         (F.col("dim0") + 1).alias("dim"),
-        F.floor(F.col("val").cast("double") * 1000000.0 + 0.5)
-        .cast("long")
-        .alias("x"),
+        half_up(F.col("val"), 6).alias("x"),
     )
     cent = (
         comp.filter(F.col("vec_id") % 2 == 0)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -227,11 +228,11 @@ def ts_autoperiod(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_span").alias("n_span"),
             F.sum(
                 F.col("xc")
-                * F.floor(F.cos(angle) * 1000000.0 + 0.5).cast("long")
+                * half_up(F.cos(angle), 6)
             ).alias("sc"),
             F.sum(
                 F.col("xc")
-                * F.floor(F.sin(angle) * 1000000.0 + 0.5).cast("long")
+                * half_up(F.sin(angle), 6)
             ).alias("ss"),
         )
     )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.queries.extensions_dedup import (
     _jaccard_pairs_sql,
 )
@@ -261,23 +262,12 @@ def text_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
             "v",
             "w",
             "c",
-            F.floor(
-                1000000.0
-                * (
-                    F.greatest(
-                        F.col("c") - _KN_D, F.lit(0.0)
-                    )
-                    / F.col("cv")
-                    + (_KN_D * F.col("n1p_fwd") / F.col("cv"))
-                    * (
-                        F.col("n1p_bwd").cast("double")
-                        / F.col("n_bi")
-                    )
-                )
-                + 0.5
-            )
-            .cast("long")
-            .alias("p_kn_micro"),
+            half_up(
+                F.greatest(F.col("c") - _KN_D, F.lit(0.0)) / F.col("cv")
+                + (_KN_D * F.col("n1p_fwd") / F.col("cv"))
+                * (F.col("n1p_bwd").cast("double") / F.col("n_bi")),
+                6,
+            ).alias("p_kn_micro"),
         )
     )
     rw = Window.orderBy(F.col("c").desc(), "v", "w")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.registry import query
 
@@ -78,9 +79,7 @@ def agg_cvar_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch is the even-cheaper cut at fleet scale). The tail fold is
     rank-pruned to 5% of rows."""
     vals = io.load_table(spark, sf_dir, "orders").select(
-        F.floor(F.col("o_totalprice") * 100.0 + 0.5)
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("o_totalprice"), 2).alias("cents"),
         "o_orderkey",
     )
     ranked = bucketed_rank_cumsum(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.registry import query
 
@@ -81,9 +82,7 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(
             F.sum(
-                F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("o_totalprice"), 2)
             ).alias("cents")
         )
     )

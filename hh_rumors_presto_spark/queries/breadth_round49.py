@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.queries.graph import _GRAPH_SQL, _edges
 from hh_rumors_presto_spark.registry import query
 
@@ -147,7 +148,7 @@ def sink_zstd_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
         F.sum(
-            F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long")
+            half_up(F.col("o_totalprice"), 2)
         )
         .cast("long")
         .alias("cents_sum"),
@@ -228,9 +229,7 @@ def ab_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             (F.col("user_id") % 2).alias("arm"),
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
     )
     m = arms.groupBy("arm").agg(

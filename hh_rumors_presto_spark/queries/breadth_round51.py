@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -227,9 +228,7 @@ def curation_quality_residual(
         "doc_id",
         F.col("x").alias("n_chars"),
         F.col("y").alias("distinct_tokens"),
-        F.floor(1000000.0 * resid + 0.5)
-        .cast("long")
-        .alias("resid_micro"),
+        half_up(resid, 6).alias("resid_micro"),
         F.abs(resid).alias("absr"),
     )
     wr = Window.orderBy(F.col("absr").desc(), "doc_id")

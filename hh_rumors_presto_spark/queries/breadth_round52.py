@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -121,7 +122,7 @@ def sink_decimal_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderstatus",
         (
-            F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long")
+            half_up(F.col("o_totalprice"), 2)
             / 100.0
         )
         .cast("decimal(14,2)")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.registry import query
 
@@ -247,9 +248,7 @@ def eval_gains_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("event_type").isin("purchase", "view")
         )
         .select(
-            (-F.floor(F.col("value").cast("double") * 100.0 + 0.5))
-            .cast("long")
-            .alias("neg_s"),
+            (-half_up(F.col("value"), 2)).alias("neg_s"),
             F.when(F.col("event_type") == "purchase", 1)
             .otherwise(0)
             .alias("y"),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -192,8 +193,7 @@ def ts_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
     )
@@ -269,7 +269,7 @@ def hint_no_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_orders"),
             F.sum(
-                F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("long")
+                half_up(F.col("o_totalprice"), 2)
             )
             .cast("long")
             .alias("cents_sum"),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -254,17 +255,10 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = pre.select(
         "day",
-        F.floor(
-            1000000.0
-            * (
-                F.col("x")
-                - F.col("s").cast("double") / F.col("t")
-                - _PH_DELTA
-            )
-            + 0.5
-        )
-        .cast("long")
-        .alias("term_micro"),
+        half_up(
+            F.col("x") - F.col("s").cast("double") / F.col("t") - _PH_DELTA,
+            6,
+        ).alias("term_micro"),
     )
     path = terms.select(
         "day", F.sum("term_micro").over(wcum).alias("m")
@@ -380,9 +374,7 @@ def ab_bayes_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n"),
         F.col("alpha").cast("long").alias("post_alpha"),
         F.col("beta").cast("long").alias("post_beta"),
-        F.floor(1000000.0 * F.col("mu") + 0.5)
-        .cast("long")
-        .alias("mean_micro"),
+        half_up(F.col("mu"), 6).alias("mean_micro"),
         F.round(F.sqrt(F.col("var")), 6).alias("sd"),
         F.round((mu_t - mu_c) / F.sqrt(v_t + v_c), 4).alias(
             "z_t_gt_c"

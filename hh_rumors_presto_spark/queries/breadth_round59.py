@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -65,8 +66,7 @@ def scan_csv_null_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.when(
             F.col("value").isNotNull(),
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long"),
+            half_up(F.col("value"), 2),
         ).alias("cents"),
     )
     out_dir = io.scoped_tmp_dir(spark, "csvnull", sf_dir)
@@ -172,9 +172,7 @@ def win_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("ts").cast("date").alias("day"),
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
             "ts",
             "event_id",
         )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.registry import query
 
@@ -268,9 +269,7 @@ def eval_selective_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
         io.load_events(spark, sf_dir)
         .filter(F.col("value").isNotNull())
         .select(
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
             "event_type",
             "event_id",
         )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.registry import query
 
@@ -88,8 +89,7 @@ def ts_records_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("ts").cast("date").alias("day"))
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
     )
@@ -202,9 +202,7 @@ def join_role_playing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_lines"),
             F.sum(
-                F.floor(
-                    F.col("l_extendedprice") * 100.0 + 0.5
-                ).cast("long")
+                half_up(F.col("l_extendedprice"), 2)
             )
             .cast("long")
             .alias("cents_sum"),
@@ -289,9 +287,7 @@ def agg_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 9-cell census."""
     li = io.load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("part"),
-        F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("l_extendedprice"), 2).alias("cents"),
         F.floor(F.col("l_quantity") + 0.5).cast("long").alias("qty"),
         F.floor(
             F.datediff(

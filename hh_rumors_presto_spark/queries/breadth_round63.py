@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -102,8 +103,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
     )
@@ -229,9 +229,7 @@ def eval_win_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             "ts",
-            F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-            .cast("long")
-            .alias("cents"),
+            half_up(F.col("value"), 2).alias("cents"),
         )
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -321,8 +319,7 @@ def agg_price_endings(spark: SparkSession, sf_dir: str) -> DataFrame:
         io.load_table(spark, sf_dir, "orders")
         .groupBy(
             (
-                F.floor(F.col("o_totalprice") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("o_totalprice"), 2)
                 % 100
             ).alias("cent_ending")
         )

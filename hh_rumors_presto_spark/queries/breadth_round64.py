@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.windows import bucketed_rank_cumsum
 from hh_rumors_presto_spark.registry import query
 
@@ -86,9 +87,7 @@ def eval_average_precision(
             & F.col("event_type").isin("purchase", "view")
         )
         .select(
-            (-F.floor(F.col("value").cast("double") * 100.0 + 0.5))
-            .cast("long")
-            .alias("neg_s"),
+            (-half_up(F.col("value"), 2)).alias("neg_s"),
             F.when(F.col("event_type") == "purchase", 1)
             .otherwise(0)
             .alias("y"),
@@ -185,9 +184,7 @@ def agg_newsvendor_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     over each part's weekly rows."""
     li = io.load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("part"),
-        F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-        .cast("long")
-        .alias("cents"),
+        half_up(F.col("l_extendedprice"), 2).alias("cents"),
         F.floor(F.col("l_quantity") + 0.5).cast("long").alias("qty"),
         F.floor(
             F.datediff(

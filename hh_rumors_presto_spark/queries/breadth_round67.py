@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -252,8 +253,7 @@ def ts_forecast_dow_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-                .cast("long")
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
     )

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.queries.analytics_round4 import _quantized
 from hh_rumors_presto_spark.registry import query
 
@@ -201,9 +202,7 @@ def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = io.load_events(spark, sf_dir).filter(F.col("value").isNotNull())
     base = ev.select(
         "user_id",
-        F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-        .cast("long")
-        .alias("xc"),
+        half_up(F.col("value"), 2).alias("xc"),
         "ts",
         "event_id",
     )
@@ -296,9 +295,7 @@ def ts_paa_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = Window.partitionBy("user_id").orderBy("ts", "event_id")
     base = ev.select(
         "user_id",
-        F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-        .cast("long")
-        .alias("xc"),
+        half_up(F.col("value"), 2).alias("xc"),
         F.row_number().over(wt).alias("t"),
     )
     eligible = (

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -87,9 +88,7 @@ def dq_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("value").isNotNull()
     )
     pts = ev.select(
-        F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-        .cast("long")
-        .alias("xc"),
+        half_up(F.col("value"), 2).alias("xc"),
         (F.col("event_type") == _KS_A).cast("long").alias("in_a"),
         (F.col("event_type") == _KS_B).cast("long").alias("in_b"),
     )
@@ -237,9 +236,7 @@ def ts_dtw_paa(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = Window.partitionBy("user_id").orderBy("ts", "event_id")
     base = ev.select(
         "user_id",
-        F.floor(F.col("value").cast("double") * 100.0 + 0.5)
-        .cast("long")
-        .alias("xc"),
+        half_up(F.col("value"), 2).alias("xc"),
         F.row_number().over(wt).alias("t"),
     )
     eligible = (

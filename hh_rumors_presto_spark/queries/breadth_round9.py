@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
-from hh_rumors_presto_spark.functions.exact import dec
+from hh_rumors_presto_spark.functions.exact import dec, half_up
 from hh_rumors_presto_spark.queries.extensions_dedup import bigram_shingles
 from hh_rumors_presto_spark.registry import query
 
@@ -291,9 +291,7 @@ def layout_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = io.load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
     )
-    cents = (
-        F.floor(F.col("value").cast("double") * 100.0 + 0.5).cast("long")
-    )
+    cents = half_up(F.col("value"), 2)
     base = ev.select(
         "user_id",
         cents.alias("cents"),

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.registry import query
 
 _USER_CENTS_SQL = """
@@ -87,9 +88,7 @@ def ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.sum(
-                F.floor(F.col("value").cast("double") * 100.0 + 0.5).cast(
-                    "long"
-                )
+                half_up(F.col("value"), 2)
             ).alias("cents")
         )
         .select((F.col("user_id") % 2).alias("variant"), "cents")
@@ -263,17 +262,13 @@ def ab_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.floor(
-                        F.col("value").cast("double") * 100.0 + 0.5
-                    ).cast("long"),
+                    half_up(F.col("value"), 2),
                 ).otherwise(F.lit(0))
             ).alias("y"),
             F.sum(
                 F.when(
                     F.col("event_type") == "view",
-                    F.floor(
-                        F.col("value").cast("double") * 100.0 + 0.5
-                    ).cast("long"),
+                    half_up(F.col("value"), 2),
                 ).otherwise(F.lit(0))
             ).alias("x"),
         )

@@ -26,6 +26,7 @@ from hh_rumors_presto_spark.functions import (
     dot,
     l2_norm,
 )
+from hh_rumors_presto_spark.functions.exact import half_up
 from hh_rumors_presto_spark.operators.cosblocks import (
     block_thresh_pairs_fn,
     cosine_chunks,
@@ -835,7 +836,7 @@ def emb_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         mse.alias("mse"),
         cosine_similarity(v, r).alias("cos_vr"),
     )
-    mse_q = F.floor(F.col("mse") * 1e15 + 0.5).cast("long")
+    mse_q = half_up(F.col("mse"), 15)
     return per_vec.groupBy("label").agg(
         F.round(
             F.sum(mse_q).cast("double") / F.count("*") / 1e15, 9

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hh_rumors_presto_spark import io
-from hh_rumors_presto_spark.functions.exact import dec, revenue
+from hh_rumors_presto_spark.functions.exact import dec, half_up, revenue
 from hh_rumors_presto_spark.operators import asof_join
 from hh_rumors_presto_spark.registry import query
 
@@ -445,7 +445,7 @@ def join_hinted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_orders"),
             F.sum(
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
+                half_up(F.col("o_totalprice"), 2)
             ).cast("long").alias("cents"),
         )
     )

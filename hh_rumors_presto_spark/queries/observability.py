@@ -78,7 +78,7 @@ def observed_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from hh_rumors_presto_spark import io  # noqa: E402
-from hh_rumors_presto_spark.functions.exact import dec  # noqa: E402
+from hh_rumors_presto_spark.functions.exact import dec, half_up  # noqa: E402
 
 
 @query(
@@ -248,10 +248,7 @@ def dq_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = io.load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 0
     )
-    # floor(x + 0.5) before the integer cast: CAST(double AS BIGINT) rounds
-    # to nearest in DuckDB but truncates toward zero in Spark, so the
-    # half-up rounding must be explicit and identical on both sides.
-    cents = F.floor(F.round(F.col("o_totalprice"), 2) * 100 + 0.5)
+    cents = half_up(F.round(F.col("o_totalprice"), 2), 2)
     digit = F.substring(
         F.regexp_extract(
             cents.cast("bigint").cast("string"), r"[1-9]", 0
@@ -527,7 +524,7 @@ def dq_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "half",
         (F.col("pos") + 1).alias("dim"),
-        F.floor(F.col("val") * 1000000 + 0.5).cast("long").alias("val_q"),
+        half_up(F.col("val"), 6).alias("val_q"),
     )
     cent = lng.groupBy("label", "half", "dim").agg(
         (F.sum("val_q").cast("double") / F.count("*")).alias("mu_q")

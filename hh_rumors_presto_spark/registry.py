@@ -39,7 +39,9 @@ Oracle-parity rules applied throughout (SURVEY.md §7.4):
   from Spark's LONG — so every micro-ratio is wrapped in
   ``CAST(... AS BIGINT)`` in its final SELECT and
   tests/test_oracle_types.py gates the whole registry;
-- money sums are exact DECIMAL sums (``functions.exact``).
+- money sums are exact DECIMAL sums, and values summed or compared as
+  integers round half up to a BIGINT fixed point with ``half_up``
+  (both in ``functions.exact``).
 
 Both numeric-envelope bounds above are PROPERTY-PINNED by
 tests/test_numeric_envelope.py: live under/over-bound drives of

@@ -71,10 +71,19 @@ def _split_events_dir(
     return out
 
 
+def _stream_split() -> int:
+    """File count of the split source from $HH_STREAM_SPLIT (0, no split,
+    when unset or empty).  A non-integer or negative value raises here,
+    where the query is built, instead of deep inside a stream."""
+    raw = os.environ.get("HH_STREAM_SPLIT") or "0"
+    if not raw.isdecimal():
+        raise ValueError(f"HH_STREAM_SPLIT must be an integer >= 0, got {raw!r}")
+    return int(raw)
+
+
 def read_events_stream(
     spark: SparkSession,
     sf_dir: str,
-    max_files_per_trigger: int | None = None,
     single_batch: bool = False,
     force_split: int | None = None,
 ) -> DataFrame:
@@ -103,28 +112,18 @@ def read_events_stream(
     harness sets HH_STREAM_SPLIT)."""
     if single_batch and force_split:
         raise ValueError("single_batch and force_split are exclusive")
-    split_n = 0 if single_batch else (
-        force_split
-        or int(os.environ.get("HH_STREAM_SPLIT", "0") or 0)
-    )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    split_n = 0 if single_batch else (force_split or _stream_split())
     schema = io.read_footer(io.table_path(sf_dir, "events")).schema
+    io.read_nanos_as_long(spark, schema)
+    reader = spark.readStream.schema(schema).format("parquet")
     if split_n > 1:
-        src_dir, glob_filter = (
-            _split_events_dir(spark, sf_dir, split_n, schema),
-            "*.parquet",
+        src_dir = _split_events_dir(spark, sf_dir, split_n, schema)
+        reader = reader.option("pathGlobFilter", "*.parquet").option(
+            "maxFilesPerTrigger", "1"
         )
-        if max_files_per_trigger is None:
-            max_files_per_trigger = 1
     else:
-        src_dir, glob_filter = sf_dir, "events.parquet"
-    reader = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", glob_filter)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+        src_dir = sf_dir
+        reader = reader.option("pathGlobFilter", "events.parquet")
     return io.events_ts_micros(reader.load(src_dir), schema)
 
 
@@ -142,10 +141,7 @@ def _python_state(df: DataFrame) -> bool:
 
 @contextmanager
 def _stream_conf(
-    streams: Sequence[DataFrame],
-    n_rows: int | None,
-    state_partitions: int | None = None,
-    state_store: str | None = None,
+    streams: Sequence[DataFrame], n_rows: int, state_store: str | None = None
 ) -> Iterator[None]:
     """Session confs for running ``streams`` synchronously, restored on
     exit.
@@ -153,12 +149,11 @@ def _stream_conf(
     ``spark.sql.shuffle.partitions`` sizes the state store (streaming
     shuffles have no AQE, so the session's batch-oriented value is wrong
     for them); a stream fixes the count at its first planning.  It is
-    ``state_partitions`` if given, else one partition per
-    ``_ROWS_PER_STATE_PARTITION`` source rows (per
+    one partition per ``_ROWS_PER_STATE_PARTITION`` source rows (per
     ``_ROWS_PER_PYTHON_STATE_PARTITION`` when a stream keeps its state in
     a Python worker) capped at the core count (session.tasks_for_rows),
     where ``n_rows`` bounds the source rows (the footer row count of the
-    source table).  One of the two must be given.
+    source table).
 
     ``state_store="rocksdb"`` flips every stateful operator to the
     RocksDB state store (spill-to-disk state, the provider a production
@@ -166,17 +161,14 @@ def _stream_conf(
     jars).  Results are provider-invariant —
     pinned by tests/test_streaming_rocksdb.py.  The default stays the
     HDFS-backed in-memory provider, right for fixture-sized state."""
-    if state_partitions is None:
-        if n_rows is None:
-            raise ValueError("stream state needs state_partitions or n_rows")
-        per_partition = (
-            _ROWS_PER_PYTHON_STATE_PARTITION
-            if any(map(_python_state, streams))
-            else _ROWS_PER_STATE_PARTITION
-        )
-        state_partitions = tasks_for_rows(
-            n_rows, per_partition, default_parallelism()
-        )
+    per_partition = (
+        _ROWS_PER_PYTHON_STATE_PARTITION
+        if any(map(_python_state, streams))
+        else _ROWS_PER_STATE_PARTITION
+    )
+    state_partitions = tasks_for_rows(
+        n_rows, per_partition, default_parallelism()
+    )
     spark = streams[0].sparkSession
     parts_conf = "spark.sql.shuffle.partitions"
     prov_conf = "spark.sql.streaming.stateStore.providerClass"
@@ -202,22 +194,21 @@ def _stream_conf(
 
 def run_stream_to_df(
     stream_df: DataFrame,
+    n_rows: int,
     output_mode: str = "complete",
-    state_partitions: int | None = None,
     state_store: str | None = None,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Drive a streaming DataFrame to completion (availableNow) into a
     memory sink; return the sink contents as a batch DataFrame.
 
-    ``n_rows``, ``state_partitions`` and ``state_store`` size and pick
-    the state store, as in :func:`_stream_conf`; the
+    ``n_rows`` and ``state_store`` size and pick the state store, as in
+    :func:`_stream_conf`; the
     ``stream_rocksdb_state`` key passes ``state_store="rocksdb"`` so it
     always exercises the production provider.
     """
     spark = stream_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    with _stream_conf([stream_df], n_rows, state_partitions, state_store):
+    with _stream_conf([stream_df], n_rows, state_store):
         (
             stream_df.writeStream.format("memory")
             .queryName(name)

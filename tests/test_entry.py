@@ -12,6 +12,7 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.conf import RuntimeConfig
 
 import __spark_entry__ as ent
+from hh_rumors_presto_spark import io
 from tools.explain_audit import UNBOUNDED_NLJ, UNBOUNDED_WINDOW, unbounded_nodes
 
 # md5 of "\n".join(QUERIES) after load_all_queries() in a fresh
@@ -124,11 +125,9 @@ def test_unpartitioned_windows_have_a_static_row_bound(registry_pass):
     _assert_row_bound(registry_pass, "windows", UNBOUNDED_WINDOW)
 
 
-def test_keys_leave_the_session_conf_alone(spark, sf_dir, monkeypatch):
-    """These keys pick their join strategy and overwrite mode per
-    operation, with a join hint and a writer option, so building and
-    collecting them sets no session conf that a query running beside
-    them would see."""
+@pytest.fixture
+def conf_sets(monkeypatch):
+    """(key, value) of every RuntimeConfig.set call the test makes."""
     calls = []
     set_conf = RuntimeConfig.set
 
@@ -137,9 +136,27 @@ def test_keys_leave_the_session_conf_alone(spark, sf_dir, monkeypatch):
         return set_conf(self, key, value)
 
     monkeypatch.setattr(RuntimeConfig, "set", recorded)
+    return calls
+
+
+def test_keys_leave_the_session_conf_alone(spark, sf_dir, conf_sets):
+    """These keys pick their join strategy and overwrite mode per
+    operation, with a join hint and a writer option, so building and
+    collecting them sets no session conf that a query running beside
+    them would see."""
     for key in ("hint_no_broadcast", "sink_partitioned", "sink_dynamic_overwrite"):
         ent.queries()[key](spark, sf_dir).collect()
-    assert calls == []
+    assert conf_sets == []
+
+
+def test_microsecond_event_stream_sets_no_nanos_conf(spark, sf_dir, conf_sets):
+    """A stream over microsecond events reads ``ts`` as stored, so it sets
+    no nanosAsLong conf; nanosecond files are covered in test_footer_io.py
+    and test_streaming.py."""
+    ts = io.read_footer(io.table_path(sf_dir, "events")).schema["ts"]
+    assert not isinstance(ts.dataType, T.LongType), "fixture ts is not µs"
+    ent.queries()["stream_tumbling"](spark, sf_dir).collect()
+    assert [k for k, _ in conf_sets if "nanosAsLong" in k] == []
 
 
 def test_registration_order_is_pinned():

@@ -1,10 +1,11 @@
-"""Exact money sums have one Spark-side spelling: ``functions.exact``.
+"""Exact values have one Spark-side spelling: ``functions.exact``.
 
-The AST scan fails if any string literal passed to ``.cast(`` or
-``.sql(`` under ``hh_rumors_presto_spark/`` spells ``decimal(28,`` outside
-the helper module. Oracle SQL strings are not such arguments, and
-``tests/`` keeps its own hand-written reference casts, so neither is
-scanned.
+Two AST scans over ``hh_rumors_presto_spark/`` fail on a copy outside the
+helper module: any string literal passed to ``.cast(`` or ``.sql(`` that
+spells ``decimal(28,``, and any ``F.floor(x * 10^s + 0.5)`` (either
+operand order), the half-up fixed point that ``half_up`` spells. Oracle
+SQL strings are not such arguments, and ``tests/`` keeps its own
+hand-written reference casts, so neither is scanned.
 """
 
 from __future__ import annotations
@@ -13,10 +14,12 @@ import ast
 import pathlib
 import re
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hh_rumors_presto_spark.functions.exact import dec, revenue
+from hh_rumors_presto_spark.functions.exact import dec, half_up, revenue
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "hh_rumors_presto_spark"
 HELPER = PKG / "functions" / "exact.py"
@@ -43,13 +46,17 @@ def _decimal_literal_lines(path: pathlib.Path) -> list[int]:
     return lines
 
 
-def test_decimal28_spelled_only_in_helper():
-    offenders = [
+def _outside_helper(scan) -> list[str]:
+    return [
         f"{path.relative_to(PKG)}:{line}"
         for path in sorted(PKG.rglob("*.py"))
         if path != HELPER
-        for line in _decimal_literal_lines(path)
+        for line in scan(path)
     ]
+
+
+def test_decimal28_spelled_only_in_helper():
+    offenders = _outside_helper(_decimal_literal_lines)
     assert not offenders, offenders
 
 
@@ -62,6 +69,69 @@ def test_scan_sees_literal_and_fstring_casts(tmp_path):
         'c.cast("decimal(38,2)")\n'
     )
     assert _decimal_literal_lines(src) == [1, 2, 3]
+
+
+_POWERS_OF_TEN = {10**s for s in range(1, 19)}
+
+
+def _power_of_ten(node: ast.expr) -> bool:
+    return isinstance(node, ast.Constant) and node.value in _POWERS_OF_TEN
+
+
+def _half_up_lines(path: pathlib.Path) -> list[int]:
+    """Lines of ``F.floor(x * 10^s + 0.5)`` and ``F.floor(10^s * x + 0.5)``;
+    NumPy code in Python workers (``np.floor``) is not Spark-side."""
+    lines = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        match node:
+            case ast.Call(
+                func=ast.Attribute(value=ast.Name(id="F"), attr="floor"),
+                args=[
+                    ast.BinOp(
+                        left=ast.BinOp(op=ast.Mult(), left=a, right=b),
+                        op=ast.Add(),
+                        right=ast.Constant(value=0.5),
+                    )
+                ],
+            ) if _power_of_ten(a) or _power_of_ten(b):
+                lines.append(node.lineno)
+    return sorted(lines)
+
+
+def test_half_up_spelled_only_in_helper():
+    offenders = _outside_helper(_half_up_lines)
+    assert not offenders, offenders
+
+
+def test_scan_sees_both_operand_orders(tmp_path):
+    src = tmp_path / "m.py"
+    src.write_text(
+        'F.floor(F.col("v") * 100.0 + 0.5).cast("long")\n'
+        "F.floor(1000000.0 * F.log(p) + 0.5)\n"
+        "F.floor(x * 1e6 + 0.5)\n"
+        'F.floor(1000000.0 * F.col("n") * q / d + 0.5)\n'
+        "F.floor(x * 3.0 + 0.5)\n"
+        'F.floor(F.col("l_quantity") + 0.5)\n'
+        "np.floor(v * 100.0 + 0.5)\n"
+    )
+    assert _half_up_lines(src) == [1, 2, 3]
+
+
+@pytest.mark.parametrize("scale", [2, 6])
+def test_half_up_matches_duckdb(spark, scale):
+    """Boundary inputs round as the oracles' floor(x * 10^s + 0.5) does,
+    1.005 (stored just under a half step) and a value near 1e12 included."""
+    xs = [1.005, 2.675, -1.005, -0.5, 0.0, 999999999999.995]
+    df = spark.createDataFrame(list(enumerate(xs)), "i int, x double").select(
+        "i", half_up(F.col("x"), scale).alias("q")
+    )
+    assert df.schema["q"].dataType == T.LongType()
+    rows = ", ".join(f"({i}, {x!r}::DOUBLE)" for i, x in enumerate(xs))
+    want = duckdb.sql(
+        f"SELECT i, CAST(floor(CAST(x AS DOUBLE) * {10**scale}.0 + 0.5) AS BIGINT)"
+        f" FROM (VALUES {rows}) t(i, x) ORDER BY i"
+    ).fetchall()
+    assert sorted(tuple(r) for r in df.collect()) == want
 
 
 def test_helper_types(spark):

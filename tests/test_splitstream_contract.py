@@ -37,6 +37,7 @@ import pytest
 
 from hh_rumors_presto_spark.registry import QUERIES, load_all_queries
 from hh_rumors_presto_spark.session import SPLITSTREAM_SENSITIVE_KEYS
+from hh_rumors_presto_spark.streaming.helpers import read_events_stream
 
 
 def test_canonical_runs_are_single_batch():
@@ -128,3 +129,12 @@ def test_invariant_streaming_keys_do_not_move(spark, sf_dir, forced_split):
             f"session.SPLITSTREAM_SENSITIVE_KEYS and its oracle contract "
             f"needs the stream_join_outer treatment"
         )
+
+
+@pytest.mark.parametrize("raw", ["x", "-2"])
+def test_malformed_split_fails_at_build(spark, sf_dir, monkeypatch, raw):
+    """A non-integer or negative HH_STREAM_SPLIT raises, naming the
+    variable, when a stream is built."""
+    monkeypatch.setenv("HH_STREAM_SPLIT", raw)
+    with pytest.raises(ValueError, match="HH_STREAM_SPLIT must be an integer"):
+        read_events_stream(spark, sf_dir)

@@ -89,20 +89,6 @@ def test_python_state_has_its_own_row_budget(spark, sf_dir, key, want, monkeypat
     assert listener.seen == {want}, (key, listener.seen)
 
 
-def test_explicit_state_partitions_win(spark, sf_dir):
-    listener = _ShufflePartitions()
-    spark.streams.addListener(listener)
-    try:
-        agg = helpers.read_events_stream(spark, sf_dir).groupBy("event_type").count()
-        helpers.run_stream_to_df(agg, state_partitions=3, n_rows=10**9).collect()
-        spark._jsc.sc().listenerBus().waitUntilEmpty()
-    finally:
-        spark.streams.removeListener(listener)
-    assert listener.seen == {3}
-    with pytest.raises(ValueError, match="state_partitions or n_rows"):
-        helpers.run_stream_to_df(agg)
-
-
 def test_stream_sink_view_is_dropped(spark, sf_dir):
     got = ent.queries()["stream_tumbling"](spark, sf_dir)
     assert not [

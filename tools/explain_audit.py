@@ -1258,15 +1258,10 @@ UNBOUNDED_NLJ: dict[str, str] = {
 UNBOUNDED_WINDOW: dict[str, str] = {
     "ab_bayes_posterior": "windows over the two per-arm rows of a grouped aggregate",
     "ab_did_estimator": "windows over the 2x2 cell rows of a grouped aggregate",
-    "ab_propensity_strata": "bucketed_rank_cumsum's 32 bucket rows; 5 strata rows",
+    "ab_propensity_strata": "totals over the 5 strata rows of a grouped aggregate",
     "ab_sprt_boundary": "running log-likelihood over one row per day, in a checkpoint",
-    "agg_abc_analysis": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
-    "agg_abc_xyz": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
     "agg_backlog_curve": "cumulative backlog and peak rank over one row per day",
-    "agg_cvar_es": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
-    "agg_engagement_gini": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
     "agg_hazard_curve": "reverse cumulative sum over one row per tenure week",
-    "agg_lorenz_deciles": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
     "agg_mutual_info": "totals over the |X| x |Y| cell table of a grouped aggregate",
     "agg_nps": "shares over the 3 segment rows of a grouped aggregate",
     "agg_price_endings": "share over the <=100 price-ending rows, grouped",
@@ -1280,17 +1275,11 @@ UNBOUNDED_WINDOW: dict[str, str] = {
     "dq_tz_shift": "argmax over the 24 hour-shift rows of a grouped aggregate",
     "emb_dim_variance": "rank over one row per embedding dimension",
     "eval_auc_roc": "cumulative counts over one row per distinct score",
-    "eval_average_precision": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
     "eval_bradley_terry": "rank over the item vocabulary, read back from a checkpoint",
     "eval_calibration_ece": "totals over the 10 bin rows of a grouped aggregate",
     "eval_confusion_multiclass": "macro fold over one row per class",
-    "eval_cost_curve": "bucketed_rank_cumsum's 32 bucket rows; a 3-row argmin",
-    "eval_f1_threshold": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
-    "eval_gains_chart": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
-    "eval_roc_points": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
-    "eval_selective_risk": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
+    "eval_cost_curve": "argmin over the 3 quartile-threshold rows, grouped",
     "eval_spearman_rho": "midranks over one row per distinct signal value",
-    "feat_rfm_segmentation": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
     "global_row_number": "prefix sums over one row per range bucket",
     "ml_decision_stump": "running counts over one row per distinct feature value",
     "pipeline_early_stopping": "running minima over one row per day, in a checkpoint",
@@ -1309,10 +1298,8 @@ UNBOUNDED_WINDOW: dict[str, str] = {
     "ts_page_hinkley": "running sums and minima over one row per day, in a checkpoint",
     "ts_records_test": "running maximum over one row per day",
     "ts_sli_burn_rate": "6-hour range window over one row per hour",
-    "ts_time_to_convert": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
     "ts_xcorr_lead_scan": "argmax over one row per candidate lag",
     "win_atr": "lag and rolling sums over one row per day",
-    "win_gaps_islands": "bucketed_rank_cumsum's prefix sums over 32 bucket rows",
     "win_hampel": "day numbering over one row per day, in a checkpoint",
     "win_rolling_corr": "rolling moments over one row per day",
     "win_rsi": "lag and rolling sums over one row per day",
